@@ -3,7 +3,7 @@
 Usage:
     spark-submit --master local[N] --py-files warcbase_spark.zip \
         jobs/frontier_crawl.py --corpus <dir> --state <dir> \
-        [--max-rounds R] [--no-bloom] [--bloom-mode jvm|sharded|cogrouped|cuckoo] \
+        [--max-rounds R] [--no-bloom] [--bloom-mode jvm|cogrouped|cuckoo] \
         [--salt-k K] [--gen-docs N]
 
 ``--gen-docs N`` synthesizes the deterministic fixture corpus (seed=42)
@@ -30,7 +30,7 @@ def main() -> None:
     ap.add_argument(
         "--bloom-mode",
         default="jvm",
-        choices=["jvm", "sharded", "cogrouped", "cuckoo"],
+        choices=["jvm", "cogrouped", "cuckoo"],
         help="URL-seen prefilter structure (north rule: bloom/cuckoo)",
     )
     ap.add_argument("--gen-docs", type=int, default=0)

@@ -4,29 +4,40 @@ Membership truth-table style mirrors UrlMappingTest.java:57-137
 (present→hit, absent→usually miss; never a false negative)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.operators.seen import (
     BloomParams,
-    build_bloom,
+    CogroupedBloom,
+    CuckooParams,
+    build_bloom_jvm,
+    build_bloom_shards,
+    build_cuckoo,
     dedup_against_seen,
-    probe_bloom,
+    probe_bloom_cogrouped,
 )
 
 
 def test_no_false_negatives_and_bounded_fpp(spark):
+    """The cogrouped sharded Bloom against the exact present set: every
+    present key probes positive, and absent keys stay near the sized fpp."""
     n = 5000
     present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    absent = spark.range(n, 2 * n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
     params = BloomParams.size(n, fpp=0.01, n_shards=8)
-    bloom = build_bloom(present, params)
-
-    probed_in = probe_bloom(spark, present, bloom)
-    assert probed_in.filter(~F.col("maybe_seen")).count() == 0  # zero false negatives
-
-    probed_out = probe_bloom(spark, absent, bloom)
-    fp = probed_out.filter(F.col("maybe_seen")).count()
-    assert fp / n < 0.05  # sized for 1%, generous margin
+    shards = build_bloom_shards(present, params).cache()
+    try:
+        cand = spark.range(2 * n).select(
+            F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
+            (F.col("id") < n).alias("is_present"),
+        )
+        rows = probe_bloom_cogrouped(cand, shards, params).collect()
+        assert len(rows) == 2 * n
+        assert all(r["maybe_seen"] for r in rows if r["is_present"])  # zero false negatives
+        fp = sum(r["maybe_seen"] for r in rows if not r["is_present"])
+        assert fp / n < 0.05  # sized for 1%, generous margin
+    finally:
+        shards.unpersist()
 
 
 def test_shard_count_power_of_two():
@@ -34,69 +45,68 @@ def test_shard_count_power_of_two():
     assert BloomParams.size(100, n_shards=32).n_shards == 32
 
 
-def test_dedup_exact_semantics(spark):
-    """Bloom is a prefilter only: result equals plain anti-join exactly
-    (the reference's fst.getID != -1 gate, ExtractLinksWac.java:159,177)."""
+def _jvm(seen):
+    return build_bloom_jvm(seen, 400)
+
+
+def _cogrouped(seen):
+    params = BloomParams.size(400, 0.01, 8)
+    return CogroupedBloom(params, build_bloom_shards(seen, params))
+
+
+def _cuckoo(seen):
+    return build_cuckoo(seen, CuckooParams.size(400, n_shards=8))
+
+
+@pytest.mark.parametrize(
+    "build", [_jvm, _cogrouped, _cuckoo], ids=["jvm", "cogrouped", "cuckoo"]
+)
+def test_dedup_exact_semantics(spark, build):
+    """Every filter is a prefilter only: the result equals the plain
+    anti-join exactly (the reference's fst.getID != -1 gate,
+    ExtractLinksWac.java:159,177)."""
     cand = spark.range(1000).select(F.concat(F.lit("com.test/c/"), "id").alias("url_key"))
     seen = spark.range(0, 1000, 3).select(
         F.concat(F.lit("com.test/c/"), "id").alias("url_key"),
         F.xxhash64(F.concat(F.lit("com.test/c/"), "id")).alias("url_hash"),
         F.lit(0).alias("first_round"),
     )
-    bloom = build_bloom(seen, BloomParams.size(400, 0.01, 8))
-    fresh, _ = dedup_against_seen(spark, cand, seen, bloom)
+    reg = []
+    fresh, _ = dedup_against_seen(spark, cand, seen, build(seen), cache_registry=reg)
     expected = cand.join(seen.select("url_key"), "url_key", "left_anti")
     got = sorted(r["url_key"] for r in fresh.collect())
     exp = sorted(r["url_key"] for r in expected.collect())
+    for df in reg:
+        df.unpersist()
     assert got == exp
 
 
-def test_cogrouped_probe_matches_broadcast_probe(spark):
+def test_cogrouped_probe_missing_shard_and_passthrough(spark):
     """probe_bloom_cogrouped (the 10^10-key path: shard bitmaps cogrouped by
-    hash route, nothing broadcast) must agree bit-for-bit with the broadcast
-    probe, including shards with no bitmap (all-fresh) and extra columns."""
-    from warcbase_spark.operators.seen import bloom_shards_df, probe_bloom_cogrouped
-
+    hash route, nothing broadcast): a shard with no bitmap row probes
+    definitely-fresh, every other present key probes positive, and extra
+    candidate columns pass through unchanged."""
     n = 4000
     present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
     params = BloomParams.size(n, fpp=0.01, n_shards=8)
-    bloom = build_bloom(present, params)
-    # drop one shard bitmap → its candidates must probe definitely-fresh
-    partial = dict(bloom.shards)
-    dropped_shard = sorted(partial)[0]
-    del partial[dropped_shard]
-    from warcbase_spark.operators.seen import ShardedBloom
-
-    pbloom = ShardedBloom(params, partial)
-
-    cand = spark.range(0, 2 * n, 1).select(
-        F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
-        (F.col("id") % 7).alias("extra"),
-    )
-    want = {
-        (r["url_key"], r["extra"]): r["maybe_seen"]
-        for r in probe_bloom(spark, cand, pbloom).collect()
-    }
-    got = {
-        (r["url_key"], r["extra"]): r["maybe_seen"]
-        for r in probe_bloom_cogrouped(
-            cand, bloom_shards_df(spark, pbloom), params
-        ).collect()
-    }
-    assert got == want and len(got) == 2 * n
-
-
-def test_merge_vectorized_contains():
-    params = BloomParams.size(100, 0.01, 4)
-    from warcbase_spark.operators.seen import ShardedBloom, _set_bits
-
-    bm = np.zeros(params.bits_per_shard // 8, dtype=np.uint8)
-    h1 = np.array([8, 12], dtype=np.int64)  # shard 0 for n_shards=4
-    h2 = np.array([7, 9], dtype=np.int64)
-    _set_bits(bm, h1, h2, params)
-    b = ShardedBloom(params, {0: bm})
-    assert b.contains_vec(h1, h2).all()
-    assert not b.contains_vec(np.array([16], dtype=np.int64), np.array([5], dtype=np.int64)).all() or True
+    shards = build_bloom_shards(present, params).cache()
+    try:
+        dropped = sorted(r["shard"] for r in shards.select("shard").collect())[0]
+        partial = shards.filter(F.col("shard") != dropped)
+        # "extra" (the key's id) and "s" (its shard route) must pass through
+        cand = spark.range(2 * n).select(
+            F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
+            F.col("id").alias("extra"),
+        ).withColumn("s", F.pmod(F.xxhash64("url_key"), F.lit(params.n_shards)))
+        rows = probe_bloom_cogrouped(cand, partial, params).collect()
+    finally:
+        shards.unpersist()
+    assert sorted(r["extra"] for r in rows) == list(range(2 * n))
+    assert all(r["url_key"] == f"org.example/k/{r['extra']}" for r in rows)
+    in_dropped = [r for r in rows if r["s"] == dropped]
+    assert in_dropped and not any(r["maybe_seen"] for r in in_dropped)
+    kept_present = [r for r in rows if r["s"] != dropped and r["extra"] < n]
+    assert kept_present and all(r["maybe_seen"] for r in kept_present)
 
 
 def test_observation_null_safe_on_empty_candidates(spark):
@@ -167,25 +177,6 @@ def test_cuckoo_delete_unsees(spark):
     after = cuckoo.contains_vec(h1, h2)
     assert not after[:100].any()   # un-seen
     assert after[100:].all()       # everyone else still present
-
-
-def test_cuckoo_dedup_exact_semantics(spark):
-    """Like the Bloom modes, the cuckoo filter is a PREFILTER: the
-    dedup result must equal the plain anti-join exactly."""
-    from warcbase_spark.operators.seen import CuckooParams, build_cuckoo
-
-    cand = spark.range(1000).select(F.concat(F.lit("com.test/c/"), "id").alias("url_key"))
-    seen = spark.range(0, 1000, 3).select(
-        F.concat(F.lit("com.test/c/"), "id").alias("url_key"),
-        F.xxhash64(F.concat(F.lit("com.test/c/"), "id")).alias("url_hash"),
-        F.lit(0).alias("first_round"),
-    )
-    cuckoo = build_cuckoo(seen, CuckooParams.size(400, n_shards=8))
-    fresh, _ = dedup_against_seen(spark, cand, seen, cuckoo)
-    expected = cand.join(seen.select("url_key"), "url_key", "left_anti")
-    assert sorted(r["url_key"] for r in fresh.collect()) == sorted(
-        r["url_key"] for r in expected.collect()
-    )
 
 
 def test_cuckoo_saturation_stays_safe():

@@ -71,14 +71,20 @@ def test_resume_exactness(spark, corpus_dir, crawl, sim):
     assert got_seen == sim.seen
 
 
-@pytest.mark.parametrize("mode", ["sharded", "cogrouped", "cuckoo"])
+@pytest.mark.parametrize("mode", ["cogrouped", "cuckoo"])
 def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
     """Every bloom mode is only a PREFILTER — the exact anti-join fixes any
-    false positives — so the full crawl must be bit-identical across modes.
+    false positives — so the full crawl must be bit-identical across modes,
+    including across a crash after round 1 and a resume in a fresh object.
     'cogrouped' is the 10^10-key path (shard bitmaps never transit the
-    driver); 'sharded' is the collected+broadcast numpy path."""
+    driver); 'cuckoo' is the deletion-capable filter."""
     state = f"/tmp/warcbase_spark_testfix/crawlstate_{mode}"
     shutil.rmtree(state, ignore_errors=True)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50, bloom_mode=mode)
+    fc.run(max_rounds=2)  # simulated crash after round 1
+    assert fc.load_manifest()["last_committed_round"] == 1
+    del fc
+    # fresh object = fresh process; the filter must rebuild from committed state
     fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50, bloom_mode=mode)
     fc.run()
     got = sorted(
@@ -91,6 +97,17 @@ def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
     got_seen = {r["url_key"]: r["first_round"] for r in fc.url_seen().collect()}
     ref_seen = {r["url_key"]: r["first_round"] for r in crawl.url_seen().collect()}
     assert got_seen == ref_seen
+
+
+@pytest.mark.parametrize("mode", ["sharded", "cukoo"])
+def test_unknown_bloom_mode_rejected(spark, corpus_dir, mode):
+    """A removed or misspelled bloom_mode must fail loudly, not silently run
+    some other filter."""
+    with pytest.raises(ValueError, match="jvm, cogrouped, cuckoo"):
+        FrontierCrawl(
+            spark, corpus_dir, "/tmp/warcbase_spark_testfix/crawlstate_badmode",
+            bloom_mode=mode,
+        )
 
 
 def test_round_job_budget(spark, corpus_dir):
@@ -180,110 +197,3 @@ def test_broadcast_gate_crawl_parity(spark, corpus_dir, crawl):
     assert {r["url_key"] for r in fc.url_seen().collect()} == {
         r["url_key"] for r in crawl.url_seen().collect()
     }
-
-
-def test_seen_layout_bucketed_parity_and_resume(spark, corpus_dir, crawl):
-    """seen_layout='bucketed' (the incremental partitioned+bucketed catalog
-    table; each round commit rewrites ONLY the delta's bucket-partitions)
-    must produce a bit-identical crawl to the default delta-dir layout,
-    AND resume exactly across a simulated crash + fresh process (the
-    in-memory catalog is gone; the table re-registers from its external
-    path and replays the one uncommitted-marker delta idempotently)."""
-    state = "/tmp/warcbase_spark_testfix/crawlstate_bucketed"
-    shutil.rmtree(state, ignore_errors=True)
-    fc = FrontierCrawl(
-        spark, corpus_dir, state, max_rounds=50, seen_layout="bucketed", seen_buckets=8
-    )
-    fc.bootstrap()
-    for r in range(3):
-        fc.run_round(r)  # simulated crash after round 2
-    # fresh object = fresh process: the catalog table must re-register from
-    # the external path and catch up from the manifest marker
-    spark.sql(f"DROP TABLE IF EXISTS {fc._seen_table}")
-    fc2 = FrontierCrawl(
-        spark, corpus_dir, state, max_rounds=50, seen_layout="bucketed", seen_buckets=8
-    )
-    fc2.run()
-    got_sched = sorted(
-        (r["round"], r["seq"], r["url_key"]) for r in fc2.schedule().collect()
-    )
-    ref_sched = sorted(
-        (r["round"], r["seq"], r["url_key"]) for r in crawl.schedule().collect()
-    )
-    assert got_sched == ref_sched
-    got_seen = {r["url_key"]: r["first_round"] for r in fc2.url_seen().collect()}
-    ref_seen = {r["url_key"]: r["first_round"] for r in crawl.url_seen().collect()}
-    assert got_seen == ref_seen
-    # the bucketed table itself must hold exactly the seen set
-    last = fc2.load_manifest()["last_committed_round"]
-    tbl = {
-        r["url_key"]: r["first_round"]
-        for r in fc2._seen_bucketed_df(last).collect()
-    }
-    assert tbl == ref_seen
-    # and preserve the one-file-per-bucket invariant after many upserts
-    from warcbase_spark.operators.sinks import assert_one_file_per_bucket
-
-    assert_one_file_per_bucket(spark, fc2._seen_table)
-    spark.sql(f"DROP TABLE IF EXISTS {fc2._seen_table}")
-
-
-def test_bucketed_marker_hygiene(spark, corpus_dir):
-    """Review findings (r5): (a) non-round commits (recrawl's repair
-    commit) must NOT advance seen_bucketed_round — the table never
-    received those deltas; (b) resuming with a different seen_buckets
-    must trigger a full rebuild (hash(key) % new_n would route keys to
-    the wrong buckets of an old-n table)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    state = "/tmp/warcbase_spark_testfix/crawlstate_bucketed_marker"
-    shutil.rmtree(state, ignore_errors=True)
-    fc = FrontierCrawl(
-        spark, corpus_dir, state, max_rounds=50, seen_layout="bucketed", seen_buckets=8
-    )
-    fc.bootstrap()
-    fc.run_round(0)
-    fc.run_round(1)
-    m = fc.load_manifest()
-    assert m["seen_bucketed_round"] == 1
-    assert m["seen_bucket_count"] == 8
-
-    # (a) recrawl commits (tombstone + frontier swap) must preserve, not
-    # advance, the marker — and unsee must apply the delete to the bucketed
-    # table eagerly (per-bucket rewrite, not wait-for-compaction)
-    # materialize the picked rows FIRST: limit(2) with no ORDER BY is not
-    # stable across re-executions, and recrawl would re-run the lazy plan —
-    # possibly tombstoning different keys than `doomed` asserts on
-    picked = fc.schedule().select("url", "url_key").limit(2).collect()
-    doomed = {r["url_key"] for r in picked}
-    fc.recrawl(spark.createDataFrame([(r["url"],) for r in picked], "url string"))
-    m2 = fc.load_manifest()
-    assert m2["seen_bucketed_round"] == 1, "non-round commit advanced the bucketed marker"
-    in_table = {
-        r["url_key"]
-        for r in spark.table(fc._seen_table).where(
-            F.col("url_key").isin(list(doomed))
-        ).collect()
-    }
-    assert in_table == set(), f"unsee left tombstoned keys in the bucketed table: {in_table}"
-
-    # (b) bucket-count drift on resume → full rebuild under the new count
-    spark.sql(f"DROP TABLE IF EXISTS {fc._seen_table}")
-    fc16 = FrontierCrawl(
-        spark, corpus_dir, state, max_rounds=50, seen_layout="bucketed", seen_buckets=16
-    )
-    nxt = fc16.load_manifest()["last_committed_round"] + 1
-    fc16.run_round(nxt)
-    pdirs = [
-        d for d in os.listdir(fc16._seen_bucketed_path) if d.startswith("pbucket=")
-    ]
-    assert len(pdirs) > 8, f"table not rebuilt under the new bucket count: {pdirs}"
-    assert fc16.load_manifest()["seen_bucket_count"] == 16
-    # the rebuilt table still equals the delta-dir truth
-    last = fc16.load_manifest()["last_committed_round"]
-    tbl = {r["url_key"]: r["first_round"] for r in fc16._seen_bucketed_df(last).collect()}
-    truth = {r["url_key"]: r["first_round"] for r in fc16._seen(last).collect()}
-    assert tbl == truth
-    spark.sql(f"DROP TABLE IF EXISTS {fc16._seen_table}")

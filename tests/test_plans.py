@@ -117,221 +117,6 @@ def test_url_dictionary_no_single_task_window(spark):
     assert keys == sorted(keys)
 
 
-def test_bucketed_seen_join_no_exchange_on_bucketed_side(spark):
-    """write_bucketed persists the seen set hash-bucketed+sorted; the
-    recurring candidate anti-join must plan with NO Exchange (and no Sort)
-    on the bucketed side — the amortized co-located-join layout for a seen
-    set probed by every crawl round."""
-    from pyspark.sql import functions as F
-
-    from warcbase_spark.operators.sinks import bucketed_anti_join, write_bucketed
-
-    seen = spark.range(20000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("url_key"), F.col("id").alias("first_round")
-    )
-    write_bucketed(seen, "seen_bucketed_testtbl", key="url_key", n_buckets=8)
-    cand = spark.range(3000).select(F.concat(F.lit("k"), F.col("id") * 9).alias("url_key"))
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = bucketed_anti_join(cand, "seen_bucketed_testtbl")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan
-        # exactly one Exchange AND one Sort: the candidate side shuffling
-        # (and sorting) INTO the table's bucketing; the bucketed scan is
-        # pre-bucketed AND pre-sorted (write_bucketed repartitions to one
-        # file per bucket, which the outputOrdering flag requires)
-        assert plan.count("Exchange") == 1
-        assert plan.count("Sort [") == 1
-        # correctness: keys k0,k9,... up to id<20000 are seen; the rest fresh
-        expect = sum(1 for i in range(3000) if i * 9 >= 20000)
-        assert out.count() == expect
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS seen_bucketed_testtbl")
-
-
-def test_bucketed_guard_refuses_multi_file_buckets(spark):
-    """Negative guard for the session-wide legacy outputOrdering flag: a
-    bucketed table where some bucket has >1 file (here: a raw bucketBy
-    write from 4 input partitions, skipping write_bucketed's repartition)
-    is NOT globally sorted per bucket — a sort-merge join trusting the
-    flag would be silently WRONG. bucketed_anti_join must refuse it, and
-    write_bucketed must refuse mode='append' (each append adds a file per
-    bucket)."""
-    import pytest as _pytest
-
-    from warcbase_spark.operators.sinks import bucketed_anti_join, write_bucketed
-
-    seen = spark.range(8000).repartition(4).select(
-        F.concat(F.lit("k"), F.col("id")).alias("url_key")
-    )
-    spark.sql("DROP TABLE IF EXISTS seen_multifile_testtbl")
-    (
-        seen.write.bucketBy(4, "url_key")
-        .sortBy("url_key")
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable("seen_multifile_testtbl")
-    )
-    cand = spark.range(10).select(F.concat(F.lit("k"), F.col("id")).alias("url_key"))
-    try:
-        with _pytest.raises(AssertionError, match="one-file-per-bucket"):
-            bucketed_anti_join(cand, "seen_multifile_testtbl")
-        with _pytest.raises(ValueError, match="overwrite"):
-            write_bucketed(seen, "seen_multifile_testtbl", key="url_key", mode="append")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS seen_multifile_testtbl")
-
-    # a data file with NO bucket suffix (a non-bucketed writer touched the
-    # table location) is not bucket-aligned AT ALL — the guard must refuse
-    import os
-    import shutil
-
-    from warcbase_spark.operators.sinks import assert_one_file_per_bucket
-
-    spark.sql("DROP TABLE IF EXISTS seen_rogue_testtbl")
-    write_bucketed(
-        spark.range(100).select(F.concat(F.lit("k"), F.col("id")).alias("url_key")),
-        "seen_rogue_testtbl", key="url_key", n_buckets=4,
-    )
-    loc = (
-        spark.sql("DESCRIBE TABLE EXTENDED seen_rogue_testtbl")
-        .where(F.col("col_name") == "Location")
-        .collect()[0]["data_type"]
-    ).removeprefix("file:")
-    rogue_src = "/tmp/warcbase_spark_testfix/rogue_plain_parquet"
-    shutil.rmtree(rogue_src, ignore_errors=True)
-    spark.range(5).select(F.concat(F.lit("x"), F.col("id")).alias("url_key")).coalesce(
-        1
-    ).write.parquet(rogue_src)
-    rogue = next(f for f in os.listdir(rogue_src) if f.startswith("part-"))
-    try:
-        shutil.copy(os.path.join(rogue_src, rogue), os.path.join(loc, rogue))
-        with _pytest.raises(AssertionError, match="no bucket suffix"):
-            assert_one_file_per_bucket(spark, "seen_rogue_testtbl")
-    finally:
-        spark.sql("DROP TABLE IF EXISTS seen_rogue_testtbl")
-        shutil.rmtree(rogue_src, ignore_errors=True)
-
-
-def test_incremental_bucketed_layout_plan_and_updates(spark):
-    """The incremental partitioned+bucketed seen layout: dynamic partition
-    overwrite must rewrite ONLY the delta's bucket-partitions, preserve
-    one-file-per-bucket, and the anti-join must stay Exchange-free and
-    Sort-free on the table side (identical plan guarantees as the flat
-    write_bucketed table)."""
-    import os
-    import shutil
-
-    from warcbase_spark.operators.sinks import (
-        assert_one_file_per_bucket,
-        upsert_bucketed_incremental,
-        write_bucketed_incremental_init,
-    )
-
-    path = "/tmp/warcbase_spark_testfix/inc_bucketed_tbl"
-    shutil.rmtree(path, ignore_errors=True)
-    tbl = "inc_bucketed_testtbl"
-    base = spark.range(5000).select(F.concat(F.lit("k"), F.col("id")).alias("url_key"))
-    write_bucketed_incremental_init(base, tbl, path, key="url_key", n_buckets=8)
-    try:
-        mtimes = {
-            p: os.path.getmtime(f"{path}/{p}")
-            for p in os.listdir(path)
-            if p.startswith("pbucket=")
-        }
-        import time
-
-        time.sleep(1.1)
-        delta = spark.range(9000, 9003).select(
-            F.concat(F.lit("k"), F.col("id")).alias("url_key")
-        )
-        affected = upsert_bucketed_incremental(spark, tbl, delta, key="url_key", n_buckets=8)
-        changed = sorted(
-            int(p.split("=")[1])
-            for p in os.listdir(path)
-            if p.startswith("pbucket=") and os.path.getmtime(f"{path}/{p}") != mtimes[p]
-        )
-        assert changed == affected  # ONLY the delta's buckets were rewritten
-        assert len(affected) < 8
-        assert_one_file_per_bucket(spark, tbl)
-        # idempotency: re-applying the same delta must not duplicate rows
-        upsert_bucketed_incremental(spark, tbl, delta, key="url_key", n_buckets=8)
-        assert spark.table(tbl).count() == 5003
-        # Exchange-free anti-join on the table side
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            cand = spark.range(1000).select(
-                F.concat(F.lit("k"), F.col("id") * 11).alias("url_key")
-            )
-            out = cand.join(spark.table(tbl).select("url_key"), "url_key", "left_anti")
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "Bucketed: true" in plan
-            assert plan.count("Exchange") == 1  # candidate side only
-            assert plan.count("Sort [") == 1
-            seen = {f"k{i}" for i in range(5000)} | {"k9000", "k9001", "k9002"}
-            expect = sum(1 for i in range(1000) if f"k{i * 11}" not in seen)
-            assert out.count() == expect
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def test_delete_bucketed_incremental_including_emptied_buckets(spark):
-    """Per-bucket deletion for the incremental layout: only affected
-    buckets rewrite; a bucket whose rows are ALL deleted must actually
-    disappear (dynamic overwrite alone would leave its old file — deleted
-    rows would resurrect, and a later MSCK re-registration would
-    resurrect a merely-catalog-dropped partition too)."""
-    import os
-    import shutil
-
-    from warcbase_spark.operators.sinks import (
-        assert_one_file_per_bucket,
-        delete_bucketed_incremental,
-        register_bucketed_incremental,
-        write_bucketed_incremental_init,
-    )
-
-    path = "/tmp/warcbase_spark_testfix/inc_bucketed_del"
-    shutil.rmtree(path, ignore_errors=True)
-    tbl = "inc_bucketed_del_testtbl"
-    base = spark.range(400).select(F.concat(F.lit("k"), F.col("id")).alias("url_key"))
-    write_bucketed_incremental_init(base, tbl, path, key="url_key", n_buckets=4)
-    try:
-        rows = spark.table(tbl).collect()
-        by_bucket: dict = {}
-        for r in rows:
-            by_bucket.setdefault(r["pbucket"], []).append(r["url_key"])
-        # delete EVERY key of one bucket + a few keys of another
-        full_b = min(by_bucket, key=lambda b: len(by_bucket[b]))
-        partial_b = next(b for b in by_bucket if b != full_b)
-        doomed = list(by_bucket[full_b]) + by_bucket[partial_b][:3]
-        keys = spark.createDataFrame([(k,) for k in doomed], "url_key string")
-        affected = delete_bucketed_incremental(spark, tbl, keys, key="url_key", n_buckets=4)
-        assert set(affected) == {full_b, partial_b}
-        left = {r["url_key"] for r in spark.table(tbl).collect()}
-        assert left == {r["url_key"] for r in rows} - set(doomed)
-        assert not os.path.isdir(f"{path}/pbucket={full_b}")  # files gone too
-        assert_one_file_per_bucket(spark, tbl)
-        # idempotent: re-deleting the same keys is a no-op
-        delete_bucketed_incremental(spark, tbl, keys, key="url_key", n_buckets=4)
-        assert spark.table(tbl).count() == len(left)
-        # resume re-registration (MSCK) must NOT resurrect the emptied bucket
-        spark.sql(f"DROP TABLE {tbl}")
-        register_bucketed_incremental(
-            spark, tbl, path, "url_key STRING", key="url_key", n_buckets=4
-        )
-        assert {r["url_key"] for r in spark.table(tbl).collect()} == left
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def test_ivf_cell_partitioned_store_prunes(spark):
     """The IVF docstrings claim 'cell is the vector table's partition key
     at cluster scale' — prove the shape: store embeddings partitioned by

@@ -554,6 +554,26 @@ def test_ivf_batch_matches_per_query_and_no_collect(spark):
         assert got[qid] == [(r["vec_id"], r["sim"]) for r in single.collect()], qid
 
 
+def test_ivf_batch_query_filter_on_non_id_column(spark):
+    """query_filter may name any column of the input table, not only the
+    id: the predicate must be evaluated before the projection that keeps
+    only the id and the vector."""
+    from warcbase_spark.operators.similarity import ivf_topk_batch
+
+    rng = np.random.RandomState(12)
+    vecs = rng.randn(80, 8).astype("float32")
+    rows = [(i, [float(x) for x in vecs[i]], "q" if i % 20 == 0 else "c") for i in range(80)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>, split string")
+
+    def run(flt):
+        res = ivf_topk_batch(e, query_filter=flt, k=5, n_cells=4, nprobe=2, dim=8, seed=13)
+        return sorted((r["query_id"], r["vec_id"], r["sim"]) for r in res.collect())
+
+    by_split = run(F.col("split") == "q")
+    assert {qid for qid, _, _ in by_split} == {0, 20, 40, 60}
+    assert by_split == run(F.col("vec_id") % 20 == 0)
+
+
 def test_connected_components_labels_and_fixed_iters(spark):
     from warcbase_spark.operators.components import (
         component_sizes,

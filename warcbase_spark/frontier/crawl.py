@@ -43,8 +43,6 @@ from warcbase_spark.operators.seen import (
     BloomParams,
     CogroupedBloom,
     CuckooParams,
-    ShardedBloom,
-    build_bloom,
     build_bloom_jvm,
     build_bloom_shards,
     build_cuckoo,
@@ -78,6 +76,10 @@ class RoundMetrics:
     invalid_urls: int = 0
 
 
+# seen-set filter per scale regime (FrontierCrawl's bloom_mode)
+BLOOM_MODES = ("jvm", "cogrouped", "cuckoo")
+
+
 class FrontierCrawl:
     """Drives the crawl over a documents corpus directory
     (documents/seeds/politeness/robots parquet, fixtures.py layout)."""
@@ -96,8 +98,6 @@ class FrontierCrawl:
         compact_every: int = 8,
         broadcast_row_limit: int = 2_000_000,
         winner_broadcast_limit: int | None = None,
-        seen_layout: str = "deltas",
-        seen_buckets: int = 32,
     ) -> None:
         self.spark = spark
         self.corpus_dir = corpus_dir
@@ -124,30 +124,17 @@ class FrontierCrawl:
             if winner_broadcast_limit is None
             else winner_broadcast_limit
         )
-        self.bloom_mode = bloom_mode  # "jvm" (bloom_filter_agg/might_contain,
-        # zero Python in the probe), "sharded" (numpy ShardedBloom, collected
-        # + broadcast), "cogrouped" (the 10^10-key path: the shard-bitmap
-        # table never transits the driver — candidates are routed to their
-        # shard's bitmap by hash and probed cogrouped), or "cuckoo"
-        # (deletion-capable ShardedCuckoo, the north rule's named
+        # the seen-set filter: "jvm" (bloom_filter_agg/might_contain, zero
+        # Python in the probe), "cogrouped" (the 10^10-key path: the
+        # shard-bitmap table never transits the driver — candidates are
+        # routed to their shard's bitmap by hash and probed cogrouped), or
+        # "cuckoo" (deletion-capable ShardedCuckoo, the north rule's named
         # alternative; broadcast probe)
-        self._bloom: ShardedBloom | None = None
-        # seen_layout: "deltas" (default — the gate anti-joins the
-        # base+delta parquet dirs) or "bucketed" — the gate probes an
-        # incrementally-maintained partitioned+bucketed catalog table
-        # (sinks.upsert_bucketed_incremental): each round commit rewrites
-        # ONLY the bucket-partitions the round's delta touches, and the
-        # exact anti-join plans with NO Exchange and NO Sort on the seen
-        # side (the amortized co-located layout for a set probed by every
-        # round). The delta dirs stay the durable source of truth either
-        # way — resume semantics are identical.
-        if seen_layout not in ("deltas", "bucketed"):
-            raise ValueError(f"seen_layout must be 'deltas' or 'bucketed', got {seen_layout!r}")
-        self.seen_layout = seen_layout
-        self.seen_buckets = seen_buckets
-        import hashlib as _hashlib
-
-        self._seen_table = "seen_bkt_" + _hashlib.md5(state_dir.encode()).hexdigest()[:8]
+        if bloom_mode not in BLOOM_MODES:
+            raise ValueError(
+                f"bloom_mode must be one of {', '.join(BLOOM_MODES)}, got {bloom_mode!r}"
+            )
+        self.bloom_mode = bloom_mode
         os.makedirs(state_dir, exist_ok=True)
 
         self.politeness = spark.read.parquet(f"{corpus_dir}/politeness.parquet")
@@ -169,7 +156,6 @@ class FrontierCrawl:
         seen_base: int | None = None,
         scheduled_delta: int = 0,
         seen_rows_before: int | None = None,
-        seen_bucketed_round: int | None = None,
     ) -> None:
         m = self.load_manifest() or {}
         if seen_base is None:
@@ -180,7 +166,7 @@ class FrontierCrawl:
         # counter) must be seeded from an exact count, not 0 — otherwise the
         # committed total undercounts forever and every later Bloom is sized
         # far below the true seen set (fpp blowout). run_round passes the
-        # count it already took (jvm/cogrouped modes); otherwise count once
+        # count it already took (to size the bloom); otherwise count once
         # here — the field exists in every manifest written after this.
         if seen_rows_before is None:
             if "seen_rows" in m:
@@ -196,18 +182,6 @@ class FrontierCrawl:
             "seen_base_round": seen_base,
             "seen_rows": seen_rows,
         }
-        if seen_bucketed_round is not None:
-            # ONLY run_round passes this, after it actually synced the
-            # bucketed table to this round; every other commit (recrawl,
-            # stale-counter repair, bootstrap) preserves the existing
-            # marker — stamping blindly here would claim deltas the table
-            # never received (a permanent hole in the bucketed seen set)
-            manifest["seen_bucketed_round"] = seen_bucketed_round
-            manifest["seen_bucket_count"] = self.seen_buckets
-        else:
-            for k in ("seen_bucketed_round", "seen_bucket_count"):
-                if k in m:
-                    manifest[k] = m[k]
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -281,77 +255,6 @@ class FrontierCrawl:
             )
         return seen
 
-    # ---------------- bucketed seen layout ----------------
-
-    @property
-    def _seen_bucketed_path(self) -> str:
-        return f"{self.state_dir}/seen_bucketed"
-
-    def _rebuild_seen_bucketed(self, upto_round: int) -> None:
-        from warcbase_spark.operators.sinks import write_bucketed_incremental_init
-
-        write_bucketed_incremental_init(
-            self._seen(upto_round),
-            self._seen_table,
-            self._seen_bucketed_path,
-            key="url_key",
-            n_buckets=self.seen_buckets,
-        )
-
-    def _sync_seen_bucketed(self, rnd: int) -> None:
-        """Bring the incremental bucketed table up to round ``rnd``. The
-        manifest's ``seen_bucketed_round`` names the last delta REFLECTED at
-        commit time; the upsert is idempotent (delta keys replace existing
-        rows), so re-applying round ``rnd`` after a crash-resume converges.
-        A missing table dir (first run / layout switch) triggers one full
-        build; afterwards each round costs only its affected buckets."""
-        from warcbase_spark.operators.sinks import (
-            register_bucketed_incremental,
-            upsert_bucketed_incremental,
-        )
-
-        m = self.load_manifest() or {}
-        sbr = m.get("seen_bucketed_round")
-        if (
-            sbr is None
-            or not os.path.isdir(self._seen_bucketed_path)
-            # bucket-count drift: a resume with a different seen_buckets
-            # would re-declare the old files under a new bucket spec —
-            # hash(key) % new_n routes keys to the wrong buckets and the
-            # gate silently re-crawls seen URLs. Rebuild under the current
-            # count instead (the delta dirs are the durable truth).
-            or m.get("seen_bucket_count") != self.seen_buckets
-        ):
-            self._rebuild_seen_bucketed(rnd)
-            return
-        if not self.spark.catalog.tableExists(self._seen_table):
-            register_bucketed_incremental(
-                self.spark,
-                self._seen_table,
-                self._seen_bucketed_path,
-                "url_key STRING, url_hash BIGINT, first_round INT",
-                key="url_key",
-                n_buckets=self.seen_buckets,
-            )
-        for r in range(sbr + 1, rnd + 1):
-            if os.path.exists(self._p("seen", r)):
-                delta = self.spark.read.parquet(self._p("seen", r))
-                upsert_bucketed_incremental(
-                    self.spark, self._seen_table, delta,
-                    key="url_key", n_buckets=self.seen_buckets,
-                )
-
-    def _seen_bucketed_df(self, upto_round: int) -> DataFrame:
-        """The seen set served from the bucketed table: same rows as
-        ``_seen(upto_round)``, but the scan is catalog-bucketed — the gate's
-        exact anti-join plans Exchange-free and Sort-free on this side."""
-        seen = (
-            self.spark.table(self._seen_table)
-            .where(F.col("first_round") <= upto_round)
-            .drop("pbucket")
-        )
-        return self._apply_tombstones(seen)
-
     def _tombstone_dirs(self, upto_round: int | None = None) -> list[str]:
         root = f"{self.state_dir}/tombstones"
         if not os.path.isdir(root):
@@ -382,14 +285,6 @@ class FrontierCrawl:
         out = f"{self.state_dir}/seen_base/round={rnd:05d}"
         self._seen(rnd).sortWithinPartitions("url_key").write.mode("overwrite").parquet(out)
         return rnd
-
-    def _rebuild_bloom(self, upto_round: int, expected_extra: int = 0) -> ShardedBloom | None:
-        if not self.use_bloom:
-            return None
-        seen = self._seen(upto_round)
-        n = seen.count() + expected_extra
-        params = BloomParams.size(max(n * 4, 4096), self.bloom_fpp, self.bloom_shards)
-        return build_bloom(seen, params) if n else ShardedBloom(params, {})
 
     # ---------------- round 0 bootstrap ----------------
 
@@ -542,57 +437,34 @@ class FrontierCrawl:
         )
 
         # URL-seen gate: Bloom prefilter + exact anti-join (incl. this round)
-        if self.seen_layout == "bucketed":
-            self._sync_seen_bucketed(rnd)
-            seen = self._seen_bucketed_df(rnd)
-        else:
-            seen = self._seen(rnd)
+        seen = self._seen(rnd)
         seen_rows_before: int | None = None  # legacy-manifest seed for _commit
-
-        def _n_seen_pre() -> int:
+        if not self.use_bloom:
+            bloom = None
+        else:
             # Sizing comes from the manifest's running seen_rows counter
             # (deltas are disjoint by the seen gate itself), not a per-round
             # count() job; legacy manifests count once and pass the result
             # through to _commit so the committed counter is re-seeded
             # correctly (not reset to this round's delta).
-            nonlocal seen_rows_before
-            mft = self.load_manifest() or {}
-            n = mft.get("seen_rows")
-            if n is None:  # legacy manifest — count once
-                n = self._seen(rnd - 1).count() if rnd > 0 else 0
-                seen_rows_before = n
-            return n
-
-        if not self.use_bloom:
-            bloom = None
-        elif self.bloom_mode == "jvm":
-            # stateless per-round build: one distributed partial-agg pass
-            # over the committed seen deltas (checkpoint-friendly — resume
-            # needs no filter state)
-            n_seen = _n_seen_pre() + m.scheduled
-            bloom = build_bloom_jvm(seen, max(n_seen * 2, 4096), self.bloom_fpp)
-        elif self.bloom_mode == "cogrouped":
-            # stateless per-round distributed build, same sizing source as
-            # the jvm mode; the (shard, bitmap) table stays executor-side
-            # end-to-end (build agg → shuffle-on-shard cogroup probe)
-            n_seen = _n_seen_pre() + m.scheduled
-            params = BloomParams.size(
-                max(n_seen * 2, 4096), self.bloom_fpp, self.bloom_shards
-            )
-            bloom = CogroupedBloom(params, build_bloom_shards(seen, params))
-        elif self.bloom_mode == "cuckoo":
-            # the north rule's named alternative: deletion-capable filter
-            # (recrawl-after-TTL un-sees URLs); stateless per-round build,
-            # same sizing source as the jvm mode
-            n_seen = _n_seen_pre() + m.scheduled
-            bloom = build_cuckoo(seen, CuckooParams.size(max(n_seen * 2, 4096), self.bloom_shards))
-        else:
-            if self._bloom is None:
-                self._bloom = self._rebuild_bloom(rnd - 1, expected_extra=m.scheduled)
-            if self._bloom is not None:
-                newly = build_bloom(scheduled.select("url_key"), self._bloom.params)
-                self._bloom = _merge_blooms(self._bloom, newly)
-            bloom = self._bloom
+            n_seen = (self.load_manifest() or {}).get("seen_rows")
+            if n_seen is None:  # legacy manifest — count once
+                n_seen = seen_rows_before = self._seen(rnd - 1).count() if rnd > 0 else 0
+            # every mode is a stateless per-round build over the committed
+            # seen deltas (checkpoint-friendly — resume needs no filter state)
+            n_expected = max((n_seen + m.scheduled) * 2, 4096)
+            if self.bloom_mode == "jvm":
+                # one distributed partial-agg pass; zero Python in the probe
+                bloom = build_bloom_jvm(seen, n_expected, self.bloom_fpp)
+            elif self.bloom_mode == "cogrouped":
+                # the (shard, bitmap) table stays executor-side end-to-end
+                # (build agg → shuffle-on-shard cogroup probe)
+                params = BloomParams.size(n_expected, self.bloom_fpp, self.bloom_shards)
+                bloom = CogroupedBloom(params, build_bloom_shards(seen, params))
+            else:
+                # "cuckoo": deletion-capable filter (recrawl-after-TTL
+                # un-sees URLs)
+                bloom = build_cuckoo(seen, CuckooParams.size(n_expected, self.bloom_shards))
         obs_dedup = Observation()
         fresh, _maybe = dedup_against_seen(
             spark, cand, seen, bloom,
@@ -637,33 +509,12 @@ class FrontierCrawl:
             self._p("metrics", rnd)
         )
         new_base = self._maybe_compact_seen(rnd)
-        if new_base is not None and self.seen_layout == "bucketed":
-            # compaction prunes consumed tombstone dirs below — rebuild the
-            # bucketed table first so tombstoned rows are physically gone
-            # from it (read-side filtering can no longer hide them once the
-            # dirs are pruned); compaction is already a full-rewrite event
-            self._rebuild_seen_bucketed(rnd)
-        elif new_base is not None and os.path.isdir(self._seen_bucketed_path):
-            # compacting under the DELTAS layout while a bucketed table dir
-            # exists from earlier bucketed rounds: the pruned tombstones are
-            # about to become invisible to _apply_tombstones, so the stale
-            # derived table could resurrect dead rows on a later layout
-            # switch. Delete it — it's a derived layout; the next bucketed
-            # run rebuilds from the delta dirs (the durable truth).
-            import shutil as _shutil
-
-            _shutil.rmtree(self._seen_bucketed_path, ignore_errors=True)
-            # also drop the in-session catalog entry: a registered table
-            # pointing at a deleted location errors/misleads later
-            # same-session spark.table()/tableExists calls
-            spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
         self._commit(
             rnd,
             n_frontier,
             seen_base=new_base,
             scheduled_delta=m.scheduled,
             seen_rows_before=seen_rows_before,
-            seen_bucketed_round=rnd if self.seen_layout == "bucketed" else None,
         )
         if new_base is not None:
             # tombstones ≤ the committed base round are fully reflected in
@@ -687,16 +538,15 @@ class FrontierCrawl:
 
     def run(self, max_rounds: int | None = None) -> list[RoundMetrics]:
         """Run (or resume) to completion. Resumption reads the manifest and
-        continues from the first uncommitted round; the Bloom filter is
-        rebuilt from the committed seen deltas (deterministic)."""
+        continues from the first uncommitted round. Every bloom mode rebuilds
+        its filter from the committed seen deltas each round, so no filter
+        state needs restoring."""
         max_rounds = max_rounds if max_rounds is not None else self.max_rounds
         manifest = self.load_manifest()
         if manifest is None:
             self.bootstrap()
             manifest = self.load_manifest()
         start = manifest["last_committed_round"] + 1
-        if start > 0 and self.use_bloom and self.bloom_mode not in ("jvm", "cogrouped", "cuckoo"):
-            self._bloom = self._rebuild_bloom(start - 1)
         out: list[RoundMetrics] = []
         rnd = start
         while rnd < max_rounds:
@@ -774,36 +624,6 @@ class FrontierCrawl:
             # append, not overwrite: two unsee() calls in the same round must
             # both survive (duplicate keys are harmless — max ts_round wins)
             keys.write.mode("append").parquet(out)
-            m_bkts = (self.load_manifest() or {}).get("seen_bucket_count")
-            if (
-                self.seen_layout == "bucketed"
-                and os.path.isdir(self._seen_bucketed_path)
-                and m_bkts == self.seen_buckets  # drift → next sync rebuilds anyway
-            ):
-                # apply the delete to the bucketed layout eagerly (per-bucket
-                # rewrite) — every current row of these keys has
-                # first_round <= last, so dropping the keys outright equals the
-                # tombstone rule; a later re-discovery re-upserts with a newer
-                # first_round that the read-side filter keeps. The tombstone
-                # dirs remain the durable truth: a crash between the append
-                # above and this delete is covered by _apply_tombstones, and
-                # re-running unsee re-deletes (no-op). Without this, deleted
-                # rows linger (read-filtered) until the compaction rebuild.
-                from warcbase_spark.operators.sinks import (
-                    delete_bucketed_incremental,
-                    register_bucketed_incremental,
-                )
-
-                if not self.spark.catalog.tableExists(self._seen_table):
-                    register_bucketed_incremental(
-                        self.spark, self._seen_table, self._seen_bucketed_path,
-                        "url_key STRING, url_hash BIGINT, first_round INT",
-                        key="url_key", n_buckets=self.seen_buckets,
-                    )
-                delete_bucketed_incremental(
-                    self.spark, self._seen_table, keys.select("url_key"),
-                    key="url_key", n_buckets=self.seen_buckets,
-                )
         finally:
             keys.unpersist()
         return n
@@ -887,9 +707,3 @@ class FrontierCrawl:
         if not os.path.exists(path) and os.path.exists(path + ".new"):
             os.rename(path + ".new", path)
 
-
-def _merge_blooms(a: ShardedBloom, b: ShardedBloom) -> ShardedBloom:
-    shards = dict(a.shards)
-    for sid, bm in b.shards.items():
-        shards[sid] = (shards[sid] | bm) if sid in shards else bm
-    return ShardedBloom(a.params, shards)

@@ -10,16 +10,14 @@ Unlike the reference — which uses TWO canonicalizers (UrlUtils on ingest,
 wayback's AggressiveUrlCanonicalizer on the query path,
 WarcbaseResourceIndex.java:77) — this engine uses exactly one everywhere.
 
-Hot path is the Arrow-vectorized pandas UDF ``canonicalize_udf`` (no per-row
-Python UDFs anywhere).  ``url_hash`` is computed JVM-side with ``xxhash64``
-over the canonical key (64-bit; the reference's 32-bit ``url.hashCode``
-vertex id at ExtractGraph.scala:35-37 is collision-prone at 10^10 scale,
-which is why we widen).
-
-For *synthetic-oracle* queries (DuckDB-comparable) there is also a pure
-Column-expression canonicalizer ``url_to_key_col`` that handles the
-well-formed URLs our fixtures emit entirely JVM-side (split/reverse/concat —
-whole-stage-codegen friendly, zero Python).
+The Spark surface is ONE Arrow-vectorized struct UDF, ``canon_struct_udf``
+(via ``canonical_cols``): a single ArrowEvalPython stage per row batch that
+returns (url_key, host), with no per-row Python UDFs anywhere.  ``url_hash``
+is computed JVM-side with ``xxhash64`` over the canonical key (64-bit; the
+reference's 32-bit ``url.hashCode`` vertex id at ExtractGraph.scala:35-37 is
+collision-prone at 10^10 scale, which is why we widen).  The per-row
+functions below (``canonicalize``, ``url_to_key``, ...) are the reference
+semantics that ``canonical_batch`` falls back to and is tested against.
 """
 
 from __future__ import annotations
@@ -187,31 +185,7 @@ def get_file_type(url: str | None) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized (Arrow) pandas UDFs — the only Python on the hot path
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(canonicalize, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def url_to_key_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(url_to_key, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def key_to_url_udf(keys: pd.Series) -> pd.Series:
-    return keys.map(key_to_url, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
-def host_of_key_udf(keys: pd.Series) -> pd.Series:
-    return keys.map(host_of_key, na_action="ignore")
-
-
-# ---------------------------------------------------------------------------
-# Column-expression variants (JVM-side, codegen'd) for well-formed URLs
+# Column-expression helpers (JVM-side, codegen'd) for domain extraction
 # ---------------------------------------------------------------------------
 
 def strip_scheme_col(url: Column) -> Column:
@@ -223,77 +197,14 @@ def host_col(url: Column) -> Column:
     return F.lower(F.split(strip_scheme_col(url), "[/:?#]").getItem(0))
 
 
-def url_to_key_col(url: Column) -> Column:
-    """Column-only urlToKey for well-formed ``scheme://host/path`` URLs.
-
-    Pure built-ins (split / reverse / concat_ws / substring_index) so the
-    whole expression stays inside WholeStageCodegen and is mirrored 1:1 by
-    the DuckDB oracle SQL.  Drops ?query handling nuances of the full
-    canonicalizer — fixture URLs carry none.
-    """
-    rest = F.lower(strip_scheme_col(url))
-    host = F.split(rest, "/").getItem(0)
-    path = F.substring(rest, F.length(host) + F.lit(1), F.lit(1 << 30))
-    rev = F.concat_ws(".", F.reverse(F.split(host, r"\.")))
-    return F.concat(rev, F.when(path == "", "/").otherwise(path))
-
-
-def url_hash_col(url_key: Column) -> Column:
-    """64-bit id of a canonical key (xxhash64; see module docstring)."""
-    return F.xxhash64(url_key)
-
-
-# ---------------------------------------------------------------------------
-# Hybrid canonicalizer: JVM fast path + Arrow UDF slow path.
-#
-# The fast path is a pure Column expression (WholeStageCodegen, zero Python)
-# that is provably equivalent to ``url_to_key`` on its eligibility domain:
-# lowercase scheme/host, no port, no userinfo, no percent-escapes, no
-# query/fragment, no dot segments or empty path segments. Rows outside the
-# domain go through the pandas UDF — but the UDF input is NULLed for fast
-# rows, so (with na_action='ignore') no Python executes for them. On real
-# crawl frontiers ≥95% of URLs take the fast path.
-# ---------------------------------------------------------------------------
-
-def fast_key_eligible_col(url: Column) -> Column:
-    rest = F.regexp_replace(url, r"^[a-z]+://", "")
-    host = F.split(rest, "/").getItem(0)
-    # \z (Java regex) = absolute end of input: `$` would match before a
-    # trailing '\n', letting "http://a.com\n" onto the fast path with a
-    # corrupt key/host while the slow path strips it — breaking the
-    # fast/slow equivalence contract (seen-set dedup + politeness joins).
-    return (
-        url.rlike(r"^(http|https|ftp)://[a-z0-9][a-z0-9._\-]*(/[^\s?#%]*)?\z")
-        & ~host.contains("..")
-        & ~host.endswith(".")
-        & ~rest.rlike(r"//|/\./|/\.\./")
-        & ~rest.rlike(r"/\.\.?$")
-    )
-
-
-def url_to_key_fast_col(url: Column) -> Column:
-    """urlToKey for eligible URLs, JVM-side. Host is lowercased (identity on
-    the eligibility domain); path case is preserved (matching
-    ``canonicalize``, which never touches path case)."""
-    rest = F.regexp_replace(url, r"^[a-z]+://", "")
-    host = F.lower(F.split(rest, "/").getItem(0))
-    path = F.substring(rest, F.length(host) + F.lit(1), F.lit(1 << 30))
-    rev = F.concat_ws(".", F.reverse(F.split(host, r"\.")))
-    return F.concat(rev, F.when(path == "", "/").otherwise(path))
-
-
-def url_to_key_hybrid(url: Column) -> Column:
-    fast = fast_key_eligible_col(url)
-    slow = url_to_key_udf(F.when(~fast, url))  # NULL for fast rows → no Python
-    return F.when(fast, url_to_key_fast_col(url)).otherwise(slow)
-
-
 _CANON_STRUCT = T.StructType(
     [T.StructField("url_key", T.StringType()), T.StructField("host", T.StringType())]
 )
 
 # \Z = absolute end (Python): `$` would match before a trailing newline,
-# admitting "http://a.com\n" to the fast path (see fast_key_eligible_col).
+# admitting "http://a.com\n" to the fast path with a corrupt key/host, while
+# the slow path strips it — breaking the fast/slow equivalence contract that
+# the seen-set dedup and politeness joins rely on.
 _ELIG_RE = re.compile(r"^(http|https|ftp)://[a-z0-9][a-z0-9._\-]*(/[^\s?#%]*)?\Z")
 
 
@@ -303,7 +214,8 @@ def canonical_batch(urls: pd.Series) -> pd.DataFrame:
     Fast path — URLs with lowercase scheme/host, no port/userinfo/percent/
     query/fragment/dot-segments — is pure pandas str kernels; only the
     residue takes the per-row ``url_to_key`` reference implementation. The
-    two paths are equivalence-tested in tests/test_urls_hybrid.py.
+    two paths are equivalence-tested in tests/test_urls.py and
+    tests/test_urls_property.py.
     """
     s = urls
     keys = pd.Series(None, index=s.index, dtype=object)
@@ -354,18 +266,11 @@ def canonical_cols(url: Column) -> tuple[Column, Column]:
 
     One self-contained Arrow UDF (vectorized fast path INSIDE Python):
     downstream consumers (xxhash64, bloom hashes, joins) then reference the
-    UDF's output attribute. Splitting the hybrid across JVM expressions
-    instead makes Catalyst's projection collapse inline the whole
-    regex+UDF tree once per consumer — measured 6× slower on the frontier
-    pipeline.
+    UDF's output attribute. Splitting the fast path out into JVM Column
+    expressions instead makes Catalyst's projection collapse inline the
+    whole regex+UDF tree once per consumer — measured 6× slower on the
+    frontier pipeline.
     """
     s = canon_struct_udf(url)
     return s["url_key"], s["host"]
 
-
-def host_of_key_hybrid(key: Column) -> Column:
-    rev = F.split(key, "/").getItem(0)
-    simple = key.isNotNull() & (rev != "") & ~rev.contains(":")
-    slow = host_of_key_udf(F.when(~simple, key))
-    fwd = F.concat_ws(".", F.reverse(F.split(rev, r"\.")))
-    return F.when(simple, fwd).otherwise(slow)

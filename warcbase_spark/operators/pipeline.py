@@ -252,6 +252,24 @@ def decontaminate(
 # ---------------------------------------------------------------------------
 
 
+def _bucket_offsets(d: DataFrame, total: Column) -> DataFrame:
+    """(_bkt, _off): the exclusive running sum of each ``_bkt`` bucket's
+    ``total`` in bucket order — level 2 of the two-level prefix sums below.
+    The table has one row per bucket; its window has no partition key, so
+    Spark plans it as one task behind an ``Exchange SinglePartition`` and
+    logs a "No Partition Defined for Window" warning (a constant partition
+    key such as ``lit(0)`` is optimized away and does not avoid either)."""
+    prev = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        d.groupBy("_bkt")
+        .agg(total.alias("_btot"))
+        .select(
+            "_bkt",
+            F.coalesce(F.sum("_btot").over(prev), F.lit(0)).cast("long").alias("_off"),
+        )
+    )
+
+
 def add_global_cumsum(
     df: DataFrame,
     order_col: str,
@@ -266,10 +284,10 @@ def add_global_cumsum(
     deterministic across re-evaluations, unlike repartitionByRange's
     sampled boundaries) and a per-bucket window cumsum (shuffle keyed by
     bucket). Level 2: per-bucket totals get their own cumulative offsets
-    via a window over the tiny bucket table (n_buckets rows — single-task
-    but trivially small), broadcast-joined back. No collect, no sampled
-    boundaries, fully in-plan; at 1000 executors each bucket is an
-    independent task and the offset table stays KB-sized.
+    (``_bucket_offsets``: a window over the tiny bucket table, n_buckets
+    rows — single-task but trivially small), broadcast-joined back. No
+    collect, no sampled boundaries, fully in-plan; at 1000 executors each
+    bucket is an independent task and the offset table stays KB-sized.
 
     Requires ``order_col`` to be unique non-negative integers (doc ids).
     """
@@ -279,25 +297,7 @@ def add_global_cumsum(
         "_lcum",
         F.sum("_w").over(Window.partitionBy("_bkt").orderBy(order_col)),
     )
-    offsets = (
-        d.groupBy("_bkt")
-        .agg(F.sum("_w").alias("_btot"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_btot").over(
-                    # partitionBy(lit(0)): same single-partition plan over
-                    # the tiny offset table, but no "No Partition Defined
-                    # for Window" warning — that warning is the signature
-                    # of the bug class this engine eliminated, and spraying
-                    # it from a documented-tiny window cries wolf
-                    Window.partitionBy(F.lit(0)).orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("_bkt", "_off")
-    )
+    offsets = _bucket_offsets(d, F.sum("_w"))
     return (
         local.join(F.broadcast(offsets), "_bkt")
         .withColumn(out_col, (F.col("_off") + F.col("_lcum")).cast("long"))
@@ -427,22 +427,7 @@ def global_shuffle(
     local = d.withColumn(
         "_lpos", F.row_number().over(Window.partitionBy("_bkt").orderBy("_h", id_col))
     )
-    offsets = (
-        d.groupBy("_bkt")
-        .agg(F.count("*").alias("_bn"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_bn").over(
-                    # lit(0) partition: silence the benign single-partition
-                    # warning on this documented-tiny offset table
-                    Window.partitionBy(F.lit(0)).orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ).cast("long"),
-        )
-        .select("_bkt", "_off")
-    )
+    offsets = _bucket_offsets(d, F.count("*"))
     return (
         local.join(F.broadcast(offsets), "_bkt")
         .withColumn("shuffle_pos", (F.col("_off") + F.col("_lpos")).cast("long"))
@@ -476,11 +461,14 @@ def training_pipeline(
     and the shuffle-position checksum (sum of the survivors' permutation
     positions — any divergence in ANY upstream stage changes it).
 
-    ``minhash_hash_mode`` defaults to the ``'fast'`` xxhash64 kernel — the
-    engine/production mode (r5-measured 2.6× over md5 at 1M docs,
-    bit-identical pipeline output on the stress corpus); oracle-checked
-    callers (the pipeline_e2e query) pass ``'md5'`` explicitly so the
-    DuckDB twin hashes identically.
+    ``minhash_hash_mode`` defaults to ``'fast'`` (the xxhash64 kernel), not
+    ``'md5'`` — the engine/production mode (r5-measured 2.6× over md5 at
+    1M docs; bit-identical pipeline output on the stress corpus). The two
+    kernels hash shingles differently, so on another corpus the MinHash
+    near-dup components, and with them this function's output, may differ
+    from the md5 DuckDB oracle twin. Oracle-checked callers (the
+    pipeline_e2e query) pass ``'md5'`` explicitly so the twin hashes
+    identically.
 
     Composition is the surface this function exists to test: every stage
     is green in isolation; chaining them exercises column contracts,

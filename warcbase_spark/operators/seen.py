@@ -1,4 +1,4 @@
-"""Partitioned Bloom URL-seen structure.
+"""URL-seen structures: one prefilter per scale regime.
 
 Replaces the reference's memory-mapped FST URL dictionary shipped to every
 node via DistributedCache (UrlMapping.java:43-105; cached at
@@ -7,14 +7,17 @@ Semantics are *exact-set membership*: the Bloom filter is only a prefilter —
 every positive is verified with an exact anti-join against the seen table
 (SURVEY §7.1.2), so false positives can never drop a URL.
 
-Scale design (10^10 keys): the filter is SHARDED by ``h1 mod n_shards``.
-Each executor builds only its shard (map-side, one bitmap per shard via
-applyInPandas), so no single task ever materializes the whole filter. At
-sandbox scale the shards are collected and broadcast for an Arrow-batched
-vectorized probe; at 10^10 scale (total ≈ 12 GB at 1% fpp) the probe
-switches to the cogrouped form (``probe_bloom_cogrouped``) where candidate
-rows are routed to their shard's bitmap by the same hash — a shuffle on an
-evenly-distributed hash, no broadcast of the full filter.
+Three filters, each built fresh from the seen set every round:
+
+- JVM Bloom (``build_bloom_jvm``/``probe_bloom_jvm``, the default broadcast
+  regime): Spark's own bloom_filter_agg and might_contain, zero Python.
+- Cogrouped sharded Bloom (``build_bloom_shards``/``probe_bloom_cogrouped``,
+  the 10^10-key regime): the filter is SHARDED by ``h1 mod n_shards``, each
+  executor builds only its shard (one bitmap per shard via applyInPandas),
+  and candidate rows are routed to their shard's bitmap by the same hash —
+  a shuffle on an evenly-distributed hash; the whole filter (≈ 12 GB at 1%
+  fpp) is never materialized in one place or broadcast.
+- Sharded cuckoo filter (``build_cuckoo``, deletion-capable).
 
 Hashing: double hashing idx_i = (h1 + i*h2) mod m_shard with h1 =
 xxhash64(url_key), h2 = xxhash64(url_key, salt) — both computed JVM-side.
@@ -56,32 +59,6 @@ class BloomParams:
         return cls(n_shards=n_shards, bits_per_shard=bits, k=k)
 
 
-@dataclass
-class ShardedBloom:
-    params: BloomParams
-    shards: dict[int, np.ndarray]  # shard id → uint8 bitmap
-
-    def contains_vec(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        p = self.params
-        shard = np.mod(h1, p.n_shards).astype(np.int64)
-        out = np.ones(len(h1), dtype=bool)
-        base = np.mod(h1 // p.n_shards, p.bits_per_shard)
-        step = np.mod(h2, p.bits_per_shard)
-        for sid in np.unique(shard):
-            bm = self.shards.get(int(sid))
-            mask = shard == sid
-            if bm is None:
-                out[mask] = False
-                continue
-            hit = np.ones(mask.sum(), dtype=bool)
-            b, s = base[mask], step[mask]
-            for i in range(p.k):
-                idx = np.mod(b + i * s, p.bits_per_shard)
-                hit &= (bm[idx >> 3] & (1 << (idx & 7).astype(np.uint8))) != 0
-            out[mask] = hit
-        return out
-
-
 def _set_bits(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, p: BloomParams) -> None:
     base = np.mod(h1 // p.n_shards, p.bits_per_shard)
     step = np.mod(h2, p.bits_per_shard)
@@ -113,14 +90,6 @@ def build_bloom_shards(df: DataFrame, params: BloomParams, key_col: str = "url_k
     return hashed.groupBy("shard").applyInPandas(per_shard, schema="shard int, bitmap binary")
 
 
-def build_bloom(df: DataFrame, params: BloomParams, key_col: str = "url_key") -> ShardedBloom:
-    """Broadcast-regime build: the distributed shard build, then collect the
-    (small) per-shard bitmaps — collected volume = n_shards × bits_per_shard/8
-    regardless of key count."""
-    rows = build_bloom_shards(df, params, key_col).collect()
-    return ShardedBloom(params, {r["shard"]: np.frombuffer(r["bitmap"], dtype=np.uint8).copy() for r in rows})
-
-
 @dataclass
 class CogroupedBloom:
     """A sharded Bloom filter kept as a DataFrame — never driver-held, never
@@ -128,15 +97,6 @@ class CogroupedBloom:
     ``build_bloom_shards`` (or read back from parquet)."""
     params: BloomParams
     shards: DataFrame
-
-
-def bloom_shards_df(spark: SparkSession, bloom: ShardedBloom) -> DataFrame:
-    """The sharded filter as a (shard, bitmap) table. At sandbox scale this
-    comes straight from the in-memory shards; at 10^10-key scale the build
-    job writes it as parquet (n_shards small rows of bits/8 bytes each) and
-    the probe reads it back — the filter never transits the driver."""
-    rows = [(int(sid), bytearray(bm.tobytes())) for sid, bm in bloom.shards.items()]
-    return spark.createDataFrame(rows, "shard int, bitmap binary")
 
 
 def probe_bloom_cogrouped(
@@ -150,8 +110,8 @@ def probe_bloom_cogrouped(
     ``h1 mod n_shards`` (an evenly-distributed hash — no skew) and cogrouped
     with that shard's bitmap row, so each task holds exactly ONE shard
     bitmap (total ≈ 12 GB at 1% fpp never materializes in one place, and
-    nothing is broadcast). Same double-hash kernel as the broadcast probe —
-    parity-tested in test_bloom.py."""
+    nothing is broadcast). Same double-hash kernel as ``_set_bits`` —
+    no-false-negative and fpp tested in test_bloom.py."""
     p = params
     cols = df.columns
     hashed = with_bloom_hashes(df, key_col).select(
@@ -188,28 +148,6 @@ def probe_bloom_cogrouped(
         .applyInPandas(probe, out_schema)
         .drop("shard")
     )
-
-
-def probe_bloom(
-    spark: SparkSession, df: DataFrame, bloom: ShardedBloom, key_col: str = "url_key",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Broadcast probe (sandbox/default): Arrow-vectorized membership test.
-    Adds boolean ``out_col``. Hashes computed JVM-side; only the bitmap
-    lookup runs in numpy."""
-    bc = spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf("boolean")
-    def _probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        b = bc.value
-        return pd.Series(
-            b.contains_vec(h1.to_numpy(np.int64), h2.to_numpy(np.int64))
-        )
-
-    hashed = with_bloom_hashes(df, key_col)
-    h1 = F.pmod(F.col("h1"), F.lit(1 << 62))
-    h2 = F.pmod(F.col("h2"), F.lit(1 << 62))
-    return hashed.withColumn(out_col, _probe(h1, h2)).drop("h1", "h2")
 
 
 # ---------------------------------------------------------------------------
@@ -569,7 +507,8 @@ def probe_cuckoo(
     spark: SparkSession, df: DataFrame, cuckoo: ShardedCuckoo, key_col: str = "url_key",
     out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """Arrow-vectorized membership probe, same shape as ``probe_bloom``."""
+    """Arrow-vectorized broadcast membership probe: hashes JVM-side, only
+    the bucket lookup runs in numpy."""
     bc = spark.sparkContext.broadcast(cuckoo)
 
     @F.pandas_udf("boolean")
@@ -588,20 +527,20 @@ def probe_cuckoo(
 #
 # Spark's bloom_filter_agg is a declarative aggregate: every task builds a
 # partial filter over its partition and the partials OR-merge up the agg
-# tree, so the build is as distributed as the sharded numpy variant. The
-# probe (might_contain over a binary literal) is pure JVM — measured: the
+# tree, so the build is as distributed as the sharded numpy build. The
+# probe (might_contain over a binary literal) is pure JVM — measured: a
 # pandas-UDF probe chained after the canonicalize UDF doubled the Python
 # worker pool (2 ArrowEvalPython nodes/stage → 2×cores processes) and
-# oversubscribed the box, INVERTING 8→32-core scaling. numpy ShardedBloom
-# remains the 10^10-key path where one filter exceeds a single buffer
-# (probe_bloom_cogrouped routes rows to shard bitmaps by hash).
+# oversubscribed the box, INVERTING 8→32-core scaling. The sharded numpy
+# bitmaps remain the 10^10-key path where one filter exceeds a single
+# buffer (probe_bloom_cogrouped routes rows to shard bitmaps by hash).
 # ---------------------------------------------------------------------------
 
 def build_bloom_jvm(df: DataFrame, n_expected: int, fpp: float = 0.01,
                     key_col: str = "url_key") -> bytes:
     """Distributed JVM build over xxhash64(key): ``DataFrameStatFunctions.
     bloomFilter`` aggregates per-partition sketches and merges them (same
-    build topology as the sharded numpy variant), serialized to bytes so it
+    build topology as ``build_bloom_shards``), serialized to bytes so it
     rides the physical plan to every task."""
     hashed = df.select(F.xxhash64(F.col(key_col)).alias("h"))
     jbf = hashed._jdf.stat().bloomFilter("h", max(int(n_expected), 1), fpp)
@@ -637,7 +576,7 @@ def dedup_against_seen(
     spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: "ShardedBloom | CogroupedBloom | ShardedCuckoo | bytes | None",
+    bloom: "CogroupedBloom | ShardedCuckoo | bytes | None",
     key_col: str = "url_key",
     observation=None,
     cache_registry: "list[DataFrame] | None" = None,
@@ -692,10 +631,8 @@ def dedup_against_seen(
             )
     elif isinstance(bloom, CogroupedBloom):
         probed = probe_bloom_cogrouped(candidates, bloom.shards, bloom.params, key_col)
-    elif isinstance(bloom, ShardedCuckoo):
-        probed = probe_cuckoo(spark, candidates, bloom, key_col)
     else:
-        probed = probe_bloom(spark, candidates, bloom, key_col)
+        probed = probe_cuckoo(spark, candidates, bloom, key_col)
     if observation is not None:
         probed = probed.observe(
             observation,

@@ -423,8 +423,9 @@ def ivf_topk_batch(
 ) -> DataFrame:
     """Batch IVF ANN — the shape a training pipeline actually runs
     (retrieval for a FULL query set, not one point lookup): every vector
-    gets its argmax cell, every query row (``query_filter`` selects them
-    from the same table) gets its nprobe best cells via ``ivf_probe_cells``
+    gets its argmax cell, every query row (``query_filter``, a predicate
+    over any column of ``emb_df``, selects them from the same table) gets
+    its nprobe best cells via ``ivf_probe_cells``
     (no driver collect anywhere), and candidates meet queries in ONE join
     on ``cell``. Per-query top-k is a window over (sim DESC, vec_id).
 
@@ -437,9 +438,12 @@ def ivf_topk_batch(
     from warcbase_spark.functions.layout import spread_scan
 
     v = as_double(F.col(emb_col))
+    # the query predicate is evaluated against the caller's columns before
+    # the projection narrows them, and carried as a flag
     base = spread_scan(emb_df).select(
         F.col(id_col).alias("vec_id"), v.alias("v"),
         quantize_q(F.col(emb_col)).alias("_q"),
+        query_filter.alias("_is_query"),
     )
     # fixed-point vector and norm are materialized ONCE per row; the cell
     # assignment / probe ranking run as Arrow-vectorized int64 matmul
@@ -454,7 +458,7 @@ def ivf_topk_batch(
         F.sqrt(dot(F.col("v"), F.col("v"))).alias("_n"),
     )
     q = (
-        base.filter(query_filter)
+        base.filter(F.col("_is_query"))
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("qv"),

@@ -67,269 +67,3 @@ def merged_json_file(df: DataFrame, path: str, order: list) -> str:
     os.rmdir(tmp)
     return path
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 256,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a hash-BUCKETED, per-bucket-sorted catalog table
-    (``bucketBy(n, key).sortBy(key)``): the cluster-scale layout for any
-    dataset that is repeatedly joined on the same key across jobs — e.g.
-    the crawl's persistent URL-seen set, joined by every round's candidate
-    batch.
-
-    Why it matters at 100 TB: a bucketed scan carries its partitioning in
-    the catalog, so Catalyst plans the recurring join with NO Exchange on
-    the bucketed side (only the incoming batch shuffles, into the table's
-    bucketing) and, being pre-sorted, no per-join Sort either — the
-    table's one-time write cost amortizes over every subsequent round.
-    The parquet-dir round state used by the test-scale crawl keeps exact
-    resume semantics; this is the catalog-table variant of the same seen
-    set for deployments where rounds run as separate Spark apps.
-
-    The pre-write ``repartition(n_buckets, key)`` is load-bearing: Spark
-    only honors ``sortBy`` metadata at read time when each bucket is ONE
-    file, and bucketBy writes one file per (task × bucket). Spark's
-    repartition hash is the same Murmur3-pmod used for bucket assignment,
-    so after it every task holds exactly one bucket — without it a
-    4-partition write yields 4 files/bucket and every later join silently
-    re-Sorts the whole table (verified by plan probe).
-
-    ``mode`` accepts only ``overwrite``: an append writes a SECOND file per
-    bucket (verified empirically — 2 appends × 4 buckets → 8 files), which
-    silently forfeits the sort-free join this function exists to provide
-    (results stay correct, but every later join re-Sorts the full table
-    under the legacy outputOrdering flag). Growing a bucketed set is a
-    read-union-rewrite (the crawl loop's seen-set commit does exactly
-    this); a true incremental layout needs per-bucket rewrite, not append.
-    """
-    if mode != "overwrite":
-        raise ValueError(
-            f"write_bucketed(mode={mode!r}): only 'overwrite' preserves the "
-            "one-file-per-bucket invariant; append breaks the sort-free join"
-        )
-    (
-        df.repartition(n_buckets, F.col(key))
-        .write.bucketBy(n_buckets, key)
-        .sortBy(key)
-        .mode(mode)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def _table_location(spark, table: str) -> str:
-    """Local filesystem path of a catalog table. Refuses non-local URIs:
-    every caller here does os-level file inspection/surgery that only
-    means anything on a local path."""
-    location = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-        .where(F.col("col_name") == "Location")
-        .collect()[0]["data_type"]
-    )
-    if "://" in location and not location.startswith("file:"):
-        raise ValueError(
-            f"table {table} location {location!r} is not a local path; "
-            "file-level bucket surgery/validation requires file:"
-        )
-    return location.removeprefix("file:")
-
-
-def assert_one_file_per_bucket(spark, table: str) -> None:
-    """Read-side guard for the session-wide
-    ``spark.sql.legacy.bucketedTableScan.outputOrdering=true`` flag
-    (session.py): that flag tells Catalyst every bucketed scan is sorted,
-    which is only TRUE when each bucket is one file (write_bucketed's
-    invariant). A multi-file bucket written by any other path would make a
-    sort-merge join silently WRONG, not slow — so fail loudly here instead.
-    Cost: one catalog file listing (driver-side, no Spark job)."""
-    import collections
-    import re
-
-    path = _table_location(spark, table)
-    per_bucket: dict[int, int] = collections.defaultdict(int)
-    unbucketed: list[str] = []
-    # walk: a flat bucketed table keeps files at the root; the incremental
-    # partitioned+bucketed layout keeps them under pbucket=N/ dirs (where
-    # pbucket == the bucket hash, so each bucket id still appears exactly
-    # once table-wide when the invariant holds)
-    for dirpath, dirs, files in os.walk(path):
-        # prune hidden/staging dirs (.spark-staging-*, _temporary): part-
-        # files abandoned by a crashed overwrite job are NOT table data —
-        # counting them would make the guard refuse a valid table forever
-        # (Spark/Hive's invisible-path convention)
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        for fname in files:
-            if not fname.startswith("part-"):
-                continue  # _SUCCESS, checksums, ...
-            m = re.match(r"part-\d+-[0-9a-f-]+_(\d+)", fname)
-            if m:
-                per_bucket[int(m.group(1))] += 1
-            else:
-                # a data file with NO bucket suffix means some non-bucketed
-                # writer touched the table — its rows are not bucket-aligned
-                # at all, the worst violation
-                unbucketed.append(os.path.join(dirpath, fname))
-    bad = {b: c for b, c in per_bucket.items() if c > 1}
-    if bad or unbucketed:
-        raise AssertionError(
-            f"bucketed table {table} violates the one-file-per-bucket "
-            f"invariant (buckets with >1 file: {bad}; files with no bucket "
-            f"suffix: {unbucketed[:3]}); with the legacy outputOrdering "
-            "flag set a sort-merge join on it would return WRONG results — "
-            "rewrite it via write_bucketed"
-        )
-
-
-def bucketed_anti_join(candidates: DataFrame, table: str, key: str = "url_key") -> DataFrame:
-    """Candidates NOT present in a bucketed membership table (the URL-seen
-    dedup shape): left_anti join that exploits the table's bucketing —
-    assert via plan that only the candidate side exchanges. Validates the
-    one-file-per-bucket invariant first (see assert_one_file_per_bucket):
-    the sort-free plan is only CORRECT under that invariant."""
-    spark = candidates.sparkSession
-    assert_one_file_per_bucket(spark, table)
-    return candidates.join(spark.table(table).select(key), key, "left_anti")
-
-# ---------------------------------------------------------------------------
-# Incremental bucketed layout: Hive-partitioned BY the bucket hash AND
-# catalog-bucketed on the key
-# ---------------------------------------------------------------------------
-#
-# The trick: partition column pbucket = pmod(hash(key), n) uses the SAME
-# Murmur3 hash Spark's bucketBy uses for bucket assignment, so partition
-# pbucket=k contains exactly bucket k — one file per bucket overall (the
-# sorted-scan invariant holds) — while dynamic partition overwrite rewrites
-# ONLY the bucket-partitions an update touches. This is the per-bucket
-# incremental rewrite a real Iceberg table gets from file-level manifests,
-# expressed in vanilla Spark catalog primitives: the crawl's URL-seen set
-# grows by a delta each round, and a round commit costs
-# O(|affected buckets|), not a full-table rewrite.
-
-
-def _pbucket_col(key: str, n_buckets: int) -> F.Column:
-    # F.hash == Murmur3Hash(seed 42) == HashPartitioning.partitionIdExpression's
-    # hash — the same function bucketBy assigns buckets with
-    return F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
-
-
-def write_bucketed_incremental_init(
-    df: DataFrame, table: str, path: str, key: str, n_buckets: int = 32
-) -> None:
-    """Create (or fully rewrite) the incremental bucketed table: external
-    (data at ``path`` survives the session's in-memory catalog), Hive-
-    partitioned by pbucket, catalog-bucketed+sorted on ``key``."""
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        df.withColumn("pbucket", _pbucket_col(key, n_buckets))
-        .repartition(n_buckets, F.col(key))
-        .write.partitionBy("pbucket")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def upsert_bucketed_incremental(
-    spark, table: str, delta: DataFrame, key: str, n_buckets: int = 32
-) -> list[int]:
-    """Merge ``delta`` into the incremental bucketed table, rewriting ONLY
-    the bucket-partitions the delta touches (dynamic partition overwrite).
-    IDEMPOTENT: existing rows with a delta key are replaced, so re-applying
-    the same delta after a crash-resume converges to the same table.
-    Returns the affected bucket ids."""
-    d = delta.withColumn("pbucket", _pbucket_col(key, n_buckets)).localCheckpoint(
-        eager=False
-    )
-    affected = sorted(r["pbucket"] for r in d.select("pbucket").distinct().collect())
-    if not affected:
-        return []
-    old = spark.table(table).where(F.col("pbucket").isin(affected))
-    # insertInto matches by POSITION and a USING-column left_anti join moves
-    # the key to column 0 — re-select the table's own column order or a
-    # non-key-first schema gets silently column-swapped
-    cols = spark.table(table).columns
-    merged = old.join(d.select(key), key, "left_anti").unionByName(d).select(*cols)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.repartition(n_buckets, F.col(key)).write.mode("overwrite").insertInto(table)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return affected
-
-
-def register_bucketed_incremental(
-    spark, table: str, path: str, columns_sql: str, key: str, n_buckets: int = 32
-) -> None:
-    """Re-attach an existing incremental bucketed table after a session
-    restart (the default catalog is in-memory; the DATA at ``path`` is
-    durable). ``columns_sql`` lists the non-partition columns, e.g.
-    ``"url_key STRING, url_hash BIGINT, first_round INT"``."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"""CREATE TABLE {table} ({columns_sql}, pbucket INT)
-            USING PARQUET
-            PARTITIONED BY (pbucket)
-            CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS
-            LOCATION '{path}'"""
-    )
-    spark.sql(f"MSCK REPAIR TABLE {table}")
-
-
-def delete_bucketed_incremental(
-    spark, table: str, keys: DataFrame, key: str, n_buckets: int = 32
-) -> list[int]:
-    """Delete ``keys`` from the incremental bucketed table, rewriting ONLY
-    the affected bucket-partitions — the recrawl/tombstone operation for a
-    bucketed membership set (the cuckoo filter's delete, at the durable
-    layout level). Idempotent. Returns the affected bucket ids.
-
-    Edge case that matters: dynamic partition overwrite only rewrites
-    partitions PRESENT in the written data — a bucket whose rows are all
-    deleted would be absent from the output and its old file would
-    SURVIVE (deleted rows resurrect). Such buckets are dropped explicitly
-    (catalog partition + the external dir itself; files must go too or a
-    later MSCK on re-registration would resurrect them).
-    """
-    import shutil
-
-    d = keys.select(key).withColumn("pbucket", _pbucket_col(key, n_buckets)).localCheckpoint(
-        eager=False
-    )
-    affected = sorted(r["pbucket"] for r in d.select("pbucket").distinct().collect())
-    if not affected:
-        return []
-    old = spark.table(table).where(F.col("pbucket").isin(affected))
-    cols = spark.table(table).columns
-    # positional insertInto + USING-join column reorder: see upsert note
-    remaining = (
-        old.join(d.select(key), key, "left_anti").select(*cols).localCheckpoint(eager=False)
-    )
-    keep_buckets = {r["pbucket"] for r in remaining.select("pbucket").distinct().collect()}
-    emptied = [b for b in affected if b not in keep_buckets]
-    if keep_buckets:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            remaining.repartition(n_buckets, F.col(key)).write.mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if emptied:
-        location = _table_location(spark, table)
-        for b in emptied:
-            spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (pbucket={b})")
-            bdir = os.path.join(location, f"pbucket={b}")
-            shutil.rmtree(bdir, ignore_errors=True)
-            if os.path.isdir(bdir):
-                # the files MUST go (the docstring's invariant): a surviving
-                # dir + a later MSCK re-registration resurrects deleted rows
-                raise OSError(f"could not remove emptied bucket dir {bdir}")
-    return affected

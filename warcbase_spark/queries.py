@@ -701,12 +701,13 @@ def recrawl_ttl(spark, sf_dir):
     _WEB_CTE + "SELECT url, url_key FROM w",
 )
 def url_key_udf_parity(spark, sf_dir):
-    """X21 urlToKey as the Arrow pandas UDF, checked against the string
-    construction the oracle uses — proves the canonicalizer agrees with the
-    key algebra on well-formed URLs."""
-    from warcbase_spark.functions.urls import url_to_key_udf
+    """X21 urlToKey through the crawl's canonicalizer (``canonical_cols``,
+    the Arrow struct UDF), checked against the string construction the
+    oracle uses — proves the canonicalizer agrees with the key algebra on
+    well-formed URLs."""
+    from warcbase_spark.functions.urls import canonical_cols
 
-    return web_docs(spark, sf_dir).select("url", url_to_key_udf(F.col("url")).alias("url_key"))
+    return web_docs(spark, sf_dir).select("url", canonical_cols(F.col("url"))[0].alias("url_key"))
 
 
 # ---------------------------------------------------------------------------

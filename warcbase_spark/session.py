@@ -38,12 +38,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Bucketed scans report their per-bucket sort order (disabled by
-        # default since SPARK-28595 because multi-file buckets break it;
-        # sinks.write_bucketed repartitions to exactly one file per bucket,
-        # which is the invariant this flag requires) — recurring joins
-        # against bucketed tables then skip both Exchange AND Sort.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     # Shuffle/spill scratch space. On this sandbox the virtio disk suffers
     # bursty host-side throttling (co-tenant I/O), which serializes shuffle
