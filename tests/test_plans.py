@@ -54,8 +54,14 @@ def test_canonicalize_is_arrow_only(spark):
     plan = plan_of(canonicalize_candidates(urls))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
-    # exactly one Python stage: the struct-returning canonicalizer
+    # exactly one Python stage: the struct-returning canonicalizer, an
+    # arrow_udf (pa.Array in and out, no pandas conversion)
     assert plan.count("ArrowEvalPython") == 1
+    from pyspark.rdd import PythonEvalType
+
+    from warcbase_spark.functions.urls import canon_struct_udf
+
+    assert canon_struct_udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
 def test_dedup_probe_is_jvm_side(spark):

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from warcbase_spark.operators.scheduler import schedule_round
+from warcbase_spark.operators.scheduler import schedule_round, schedule_round_combined
 
 
 def _mk_candidates(spark, n=500, hosts=5):
@@ -142,3 +142,54 @@ def test_newline_urls_through_politeness_and_robots(spark):
     sched, _ = schedule_round(kept, pol)
     hosts = {r["host"] for r in sched.collect()}
     assert hosts == {"h0.org", "h1.org"}  # both hosts matched their budget row
+
+
+def _budgets(spark, rows):
+    from warcbase_spark.operators.scheduler import with_budgets
+
+    cand = spark.createDataFrame([("h0.org",), ("h1.org",)], "host string")
+    pol = spark.createDataFrame(rows, "host string, budget int")
+    return {r["host"]: r["budget"] for r in with_budgets(cand, pol).collect()}
+
+
+def test_with_budgets_default_rows(spark):
+    """The '*' row is the default, 1 when there is none; null hosts never
+    match a candidate (the same rows the `host != '*'` filter used to keep)."""
+    assert _budgets(spark, [("*", 4)]) == {"h0.org": 4, "h1.org": 4}
+    assert _budgets(spark, [("h0.org", 7)]) == {"h0.org": 7, "h1.org": 1}
+    assert _budgets(spark, [("h0.org", 7), (None, 9), ("*", 2)]) == {"h0.org": 7, "h1.org": 2}
+    assert _budgets(spark, []) == {"h0.org": 1, "h1.org": 1}
+
+
+def test_politeness_read_once(spark, tmp_path):
+    """A parquet politeness table is scanned by the budget collect alone:
+    the broadcast side of the budget join is a local relation, so neither
+    the round's output plan nor any other job reads the path again. The
+    candidates come from spark.range, so every parquet scan is politeness."""
+    path = str(tmp_path / "politeness.parquet")
+    _mk_politeness(spark).write.parquet(path)
+    pol = spark.read.parquet(path)
+    cand = _mk_candidates(spark)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_plans():
+        execs = store.executionsList()
+        return {
+            execs.apply(i).executionId(): execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+        }
+
+    before = execution_plans()
+    # with_seq=False keeps the whole lineage in the output plan (the seq
+    # path checkpoints it away)
+    out = schedule_round_combined(cand, pol, with_seq=False)
+    out.write.mode("overwrite").format("noop").save()
+    assert "Scan parquet" not in out._jdf.queryExecution().executedPlan().toString()
+
+    out = schedule_round_combined(cand, pol)
+    out.write.mode("overwrite").format("noop").save()
+    scans = [
+        eid for eid, plan in execution_plans().items()
+        if eid not in before and "Scan parquet" in plan
+    ]
+    assert len(scans) == 2, scans  # one collect per schedule_round_combined call

@@ -1,14 +1,14 @@
 """Canonicalizer unit tests — golden vectors lifted from the reference's
 UrlUtilsTest.java:25-48 semantics (cited, not copied), plus equivalence of
-the vectorized canonicalizer (``canonical_batch`` / ``canonical_cols``) with
+the Arrow canonicalizer (``canonical_arrow`` / ``canonical_cols``) with
 the per-row reference on edge-case and corpus URLs."""
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.functions.urls import (
-    canonical_batch,
+    canonical_arrow,
     canonical_cols,
     canonicalize,
     get_file_type,
@@ -47,7 +47,8 @@ def test_rfc3986_normalization():
 
 def test_invalid_urls_null():
     # invalid → null → counted, mirroring IngestFiles.java:137-141 skip behavior
-    for bad in [None, "", "dns:example.com", "not a url", "mailto:x@y.z", "http://"]:
+    for bad in [None, "", "dns:example.com", "not a url", "mailto:x@y.z", "http://",
+                "http://a/\x1f#", "http://a.b/x\xa0y"]:
         assert url_to_key(bad) is None
 
 
@@ -123,6 +124,26 @@ EDGE_URLS = [
     "http://a.b/x \n",
     "\nhttp://a.b/x",
     "http://a.b/x\t",
+    # upper/mixed-case schemes and hosts take the Arrow fast path unless a
+    # port, a trailing dot or an empty label sends them to the residue
+    "HTTP://A.B:80/x",
+    "HTTPS://A.B./x",
+    "HTTP://A..B/x",
+    "Http://Www.Example.Org/Mixed/Case.html",
+    "hTTps://A.b",
+    "FTP://A.B/x/",
+    # characters where RE2 and Python's \s / str.strip disagree, at both
+    # ends and mid-path
+    *(
+        u
+        for c in "\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0\u2028"
+        for u in (f"http://a.b/x{c}", f"{c}http://a.b/x", f"http://a.b/x{c}y")
+    ),
+    # non-ASCII host and path
+    "http://bücher.example/x",
+    "HTTP://BÜCHER.EXAMPLE/x",
+    "http://a.b/ünïcode/päth.html",
+    "http://例子.测试/路径",
 ]
 
 
@@ -137,12 +158,22 @@ def url_pool(corpus):
     return urls
 
 
-def test_canonical_batch_matches_python(url_pool):
-    out = canonical_batch(pd.Series(url_pool, dtype=object))
-    for u, k, h in zip(url_pool, out["url_key"], out["host"]):
+def _assert_matches_python(urls, out):
+    assert len(out) == len(urls)
+    for u, k, h in zip(urls, out.field("url_key").to_pylist(), out.field("host").to_pylist()):
         ek = url_to_key(u)
         assert k == ek, (u, k, ek)
         assert h == (host_of_key(ek) if ek else None), (u, h)
+
+
+def test_canonical_arrow_matches_python(url_pool):
+    for arrow_type in (pa.string(), pa.large_string()):
+        _assert_matches_python(url_pool, canonical_arrow(pa.array(url_pool, arrow_type)))
+
+
+def test_canonical_arrow_empty_and_null_batches():
+    for urls in ([], [None], [None, None, None]):
+        _assert_matches_python(urls, canonical_arrow(pa.array(urls, pa.string())))
 
 
 def test_canonical_cols_matches_python(spark, url_pool):

@@ -10,14 +10,16 @@ Unlike the reference — which uses TWO canonicalizers (UrlUtils on ingest,
 wayback's AggressiveUrlCanonicalizer on the query path,
 WarcbaseResourceIndex.java:77) — this engine uses exactly one everywhere.
 
-The Spark surface is ONE Arrow-vectorized struct UDF, ``canon_struct_udf``
+The Spark surface is ONE struct-returning ``arrow_udf``, ``canon_struct_udf``
 (via ``canonical_cols``): a single ArrowEvalPython stage per row batch that
-returns (url_key, host), with no per-row Python UDFs anywhere.  ``url_hash``
+runs ``canonical_arrow`` — pyarrow.compute kernels on the ``pa.Array`` Spark
+hands over, no pandas conversion — and returns (url_key, host), with no
+per-row Python UDFs anywhere.  ``url_hash``
 is computed JVM-side with ``xxhash64`` over the canonical key (64-bit; the
 reference's 32-bit ``url.hashCode`` vertex id at ExtractGraph.scala:35-37 is
 collision-prone at 10^10 scale, which is why we widen).  The per-row
 functions below (``canonicalize``, ``url_to_key``, ...) are the reference
-semantics that ``canonical_batch`` falls back to and is tested against.
+semantics that ``canonical_arrow`` falls back to and is tested against.
 """
 
 from __future__ import annotations
@@ -26,13 +28,19 @@ import posixpath
 import re
 from urllib.parse import unquote, urlsplit
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _DEFAULT_PORTS = {"http": 80, "https": 443, "ftp": 21}
 _HOST_RE = re.compile(r"^[a-z0-9.\-_]+$")
+# whitespace left inside a stripped URL makes it malformed; tab, CR and LF
+# are the exception, since urlsplit deletes them. Accepting the rest would
+# break idempotence: "http://a/\x1f#" canonicalizes to "http://a/\x1f",
+# which strip() then shortens to "http://a/".
+_INNER_WS_RE = re.compile(r"[^\S\t\r\n]")
 # RFC 3986 unreserved characters — percent-escapes of these are decoded
 _UNRESERVED = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~")
 
@@ -90,7 +98,7 @@ def canonicalize(url: str | None) -> str | None:
     if url is None:
         return None
     url = url.strip()
-    if not url or " " in url:
+    if not url or _INNER_WS_RE.search(url):
         return None
     try:
         parts = urlsplit(url)
@@ -201,72 +209,66 @@ _CANON_STRUCT = T.StructType(
     [T.StructField("url_key", T.StringType()), T.StructField("host", T.StringType())]
 )
 
-# \Z = absolute end (Python): `$` would match before a trailing newline,
-# admitting "http://a.com\n" to the fast path with a corrupt key/host, while
-# the slow path strips it — breaking the fast/slow equivalence contract that
-# the seen-set dedup and politeness joins rely on.
-_ELIG_RE = re.compile(r"^(http|https|ftp)://[a-z0-9][a-z0-9._\-]*(/[^\s?#%]*)?\Z")
+# One RE2 match decides the fast path and splits it: an http/https/ftp
+# scheme in any case, a host of ASCII letters/digits/``._-`` in any case with
+# no empty label and no trailing dot, and an optional path of printable ASCII
+# without ``?#%`` (so no query, fragment, percent-escape, port, userinfo or
+# whitespace). RE2's ``$`` is the absolute end of the text, so a trailing
+# newline is never admitted. Everything else is the residue.
+_PATH_CHARS = r"\x21\x22\x24\x26-\x3e\x40-\x7e"
+_FAST_RE = (
+    r"^(?i:https?|ftp)://"
+    r"(?P<host>[A-Za-z0-9][A-Za-z0-9_\-]*(?:\.[A-Za-z0-9_\-]+)*)"
+    r"(?:/(?P<path>[" + _PATH_CHARS + r"]*))?$"
+)
+# path forms that dot-segment removal would rewrite: ``//``, ``/./``,
+# ``/../`` and a trailing ``/.`` or ``/..`` (a key's host part has no ``/``,
+# so matching the whole key only ever matches in its path)
+_DOT_PATH_RE = r"//|/\.\.?(?:/|$)"
 
 
-def canonical_batch(urls: pd.Series) -> pd.DataFrame:
-    """Vectorized (url → url_key, host) over a pandas batch.
+def _reverse_labels(host: pa.Array) -> pa.Array:
+    """``www.house.gov`` → ``gov.house.www`` with Arrow kernels: reverse the
+    whole string, split on ``.``, reverse each label back, rejoin."""
+    labels = pc.split_pattern(pc.ascii_reverse(host), ".")
+    fixed = type(labels).from_arrays(
+        labels.offsets, pc.ascii_reverse(labels.values), mask=labels.is_null()
+    )
+    return pc.binary_join(fixed, pa.scalar(".", host.type))
 
-    Fast path — URLs with lowercase scheme/host, no port/userinfo/percent/
-    query/fragment/dot-segments — is pure pandas str kernels; only the
-    residue takes the per-row ``url_to_key`` reference implementation. The
-    two paths are equivalence-tested in tests/test_urls.py and
+
+def canonical_arrow(urls: pa.Array) -> pa.StructArray:
+    """(url_key, host) for an Arrow string array of raw URLs.
+
+    The fast path is pyarrow.compute kernels over the whole batch; only the
+    residue (and nulls) take the per-row ``url_to_key`` reference. The two
+    paths are equivalence-tested in tests/test_urls.py and
     tests/test_urls_property.py.
     """
-    s = urls
-    keys = pd.Series(None, index=s.index, dtype=object)
-    hosts = pd.Series(None, index=s.index, dtype=object)
-
-    elig = s.str.match(_ELIG_RE, na=False)
-    if elig.any():
-        rest = s[elig].str.replace(r"^[a-z]+://", "", regex=True)
-        sp = rest.str.split("/", n=1)
-        host = sp.str[0]
-        path = "/" + sp.str[1].fillna("")
-        bad = (
-            host.str.contains("..", regex=False)
-            | host.str.endswith(".")
-            | path.str.contains("//", regex=False)
-            | path.str.contains("/./", regex=False)
-            | path.str.contains("/../", regex=False)
-            | path.str.endswith("/.")
-            | path.str.endswith("/..")
-        )
-        ok = elig.copy()
-        ok.loc[bad.index[bad]] = False  # bool-into-bool; no dtype-upcast setitem
-        if ok.any():
-            h = host[~bad]
-            rev = h.map(lambda x: ".".join(reversed(x.split("."))))
-            keys[ok] = rev + path[~bad]
-            hosts[ok] = h
-        elig = ok
-
-    slow_mask = ~elig & s.notna()
-    if slow_mask.any():
-        ks = s[slow_mask].map(url_to_key)
-        keys[slow_mask] = ks
-        hosts[slow_mask] = ks.map(host_of_key, na_action="ignore")
-    # NaN (pandas missing) → None so pure-pandas callers see real nulls
-    return pd.DataFrame(
-        {"url_key": keys.where(keys.notna(), None), "host": hosts.where(hosts.notna(), None)}
-    )
+    parts = pc.extract_regex(urls, _FAST_RE)
+    host = pc.ascii_lower(pc.struct_field(parts, "host"))
+    path = pc.struct_field(parts, "path")  # after the host's "/"; "" if none
+    key = pc.binary_join_element_wise(_reverse_labels(host), path, pa.scalar("/", path.type))
+    slow = pc.fill_null(pc.match_substring_regex(key, _DOT_PATH_RE), True)
+    if pc.any(slow).as_py():
+        keys = [url_to_key(u) for u in pc.filter(urls, slow).to_pylist()]
+        key = pc.replace_with_mask(key, slow, pa.array(keys, key.type))
+        hosts = [host_of_key(k) for k in keys]
+        host = pc.replace_with_mask(host, slow, pa.array(hosts, host.type))
+    return pa.StructArray.from_arrays([key, host], names=["url_key", "host"])
 
 
-@F.pandas_udf(_CANON_STRUCT)
-def canon_struct_udf(urls: pd.Series) -> pd.DataFrame:
-    return canonical_batch(urls)
+@F.arrow_udf(_CANON_STRUCT)
+def canon_struct_udf(urls: pa.Array) -> pa.Array:
+    return canonical_arrow(urls)
 
 
 def canonical_cols(url: Column) -> tuple[Column, Column]:
     """(url_key, host) from a raw URL — the frontier hot path.
 
-    One self-contained Arrow UDF (vectorized fast path INSIDE Python):
-    downstream consumers (xxhash64, bloom hashes, joins) then reference the
-    UDF's output attribute. Splitting the fast path out into JVM Column
+    One self-contained Arrow UDF whose fast path is pyarrow.compute kernels
+    (``canonical_arrow``): downstream consumers (xxhash64, bloom hashes,
+    joins) then reference the UDF's output attribute. Splitting the fast path out into JVM Column
     expressions instead makes Catalyst's projection collapse inline the
     whole regex+UDF tree once per consumer — measured 6× slower on the
     frontier pipeline.

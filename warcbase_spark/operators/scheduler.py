@@ -22,8 +22,10 @@ construction. AQE skew-join handling remains on as a backstop.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 DEFAULT_SALT_K = 16
 
@@ -54,29 +56,16 @@ def add_global_seq(
     job fails loudly and retries rather than mis-stamping). On a real
     cluster the durable variant is a checkpoint dir / parquet round-trip —
     the production crawl loop already persists rounds to parquet.
-
-    ``WARC_SEQ_PERSIST`` selects the strategy (``checkpoint`` default,
-    ``checkpoint_eager``, ``cache``) — A/B'd equal within measurement noise
-    on this box (BENCH.md); ``cache`` trades the eviction-recompute
-    guarantee for deserialized in-memory reads and is only for profiling.
     """
-    import os as _os
-
     ranged = (
         df.repartitionByRange(*order)
         .sortWithinPartitions(*order)
         .withColumn("_mid", F.monotonically_increasing_id())
-    )
-    _mode = _os.environ.get("WARC_SEQ_PERSIST", "checkpoint")
-    if _mode == "cache":
-        ranged = ranged.cache()
-    elif _mode == "checkpoint_eager":
-        ranged = ranged.localCheckpoint(eager=True)
-    else:
         # eager=False: the checkpoint is MARKED now and the blocks persist
         # during the first action (the counts job below) — one pass instead
         # of eager's separate materialization job, same recompute-proofness
-        ranged = ranged.localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)
+    )
     pid = F.shiftright("_mid", 33).cast("int")
     counts = {
         r["_pid"]: r["count"]
@@ -97,16 +86,28 @@ def add_global_seq(
 
 
 def with_budgets(candidates: DataFrame, politeness: DataFrame) -> DataFrame:
-    """Attach per-host budget; '*' row is the default. Politeness is a small
-    dimension table → broadcast join, no shuffle of the candidate side; the
-    single default value is collected to the driver and folded as a literal
-    (a 1-row cross join costs a BroadcastNestedLoopJoin pass over every
-    candidate — measured 12s/700k rows)."""
-    default_rows = politeness.filter(F.col("host") == "*").select("budget").collect()
-    default_budget = default_rows[0]["budget"] if default_rows else 1
-    per_host = politeness.filter(F.col("host") != "*")
+    """Attach per-host budget; the '*' row is the default (1 without one).
+
+    The politeness table is read exactly once: its (host, budget) rows are
+    collected, the default is folded as a literal (a 1-row cross join costs
+    a BroadcastNestedLoopJoin pass over every candidate — measured 12s/700k
+    rows), and the per-host rows go back as a DataFrame built from a
+    pyarrow Table (a JVM-side scan, no Python workers) for the broadcast
+    join, so the candidate side is never shuffled. Reading
+    the table again as the broadcast side would rescan a parquet input, or
+    start Python workers for a list-built one, every round. The driver holds
+    the whole table for the broadcast either way."""
+    rows = politeness.select("host", "budget").collect()
+    default_budget = next((r["budget"] for r in rows if r["host"] == "*"), 1)
+    per_host = [r for r in rows if r["host"] is not None and r["host"] != "*"]
+    budget_type = to_arrow_type(politeness.schema["budget"].dataType)
+    table = pa.table({
+        "host": pa.array([r["host"] for r in per_host], pa.string()),
+        "budget": pa.array([r["budget"] for r in per_host], budget_type),
+    })
+    per_host_df = candidates.sparkSession.createDataFrame(table)
     return (
-        candidates.join(F.broadcast(per_host), "host", "left")
+        candidates.join(F.broadcast(per_host_df), "host", "left")
         .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
     )
 
