@@ -3,7 +3,7 @@
 Usage:
     spark-submit --master local[N] --py-files warcbase_spark.zip \
         jobs/frontier_crawl.py --corpus <dir> --state <dir> \
-        [--max-rounds R] [--no-bloom] [--bloom-mode jvm|cogrouped|cuckoo] \
+        [--max-rounds R] [--bloom-mode jvm|cuckoo] \
         [--salt-k K] [--gen-docs N]
 
 ``--gen-docs N`` synthesizes the deterministic fixture corpus (seed=42)
@@ -26,12 +26,12 @@ def main() -> None:
     ap.add_argument("--state", required=True)
     ap.add_argument("--max-rounds", type=int, default=1000)
     ap.add_argument("--salt-k", type=int, default=16)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
         "--bloom-mode",
         default="jvm",
-        choices=["jvm", "cogrouped", "cuckoo"],
-        help="URL-seen prefilter structure (north rule: bloom/cuckoo)",
+        choices=["jvm", "cuckoo"],
+        help="URL-seen prefilter: broadcast JVM Bloom, or the partitioned "
+        "cogrouped cuckoo for seen sets too large to broadcast",
     )
     ap.add_argument("--gen-docs", type=int, default=0)
     ap.add_argument("--fresh", action="store_true", help="wipe state dir first")
@@ -57,7 +57,6 @@ def main() -> None:
         args.state,
         max_rounds=args.max_rounds,
         salt_k=args.salt_k,
-        use_bloom=not args.no_bloom,
         bloom_mode=args.bloom_mode,
     )
     metrics = fc.run()

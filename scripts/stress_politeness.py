@@ -74,21 +74,21 @@ def seen_recrawl_stress(n: int, n_hosts: int) -> None:
     - jvm: exact anti-join removes tombstones from the seen table, then the
       usual build_bloom_jvm prefilter + dedup_against_seen.
     - cuckoo, fully distributed: build_cuckoo_shards (sharded applyInPandas
-      build) → delete_cuckoo_cogrouped(100k tombstones) →
-      probe_cuckoo_cogrouped, positives verified by exact anti-join — the
-      10^10-key shape where neither the key set nor the filter ever
-      transits the driver.
+      build) → delete_cuckoo_cogrouped(100k tombstones) → dedup_against_seen
+      with the CogroupedCuckoo (cogrouped probe, positives verified by exact
+      anti-join) — the 10^10-key shape where neither the key set nor the
+      filter ever transits the driver.
 
     Both modes must schedule EXACTLY the same round (sampled-host seq
     parity + identical counts); tombstoned keys must come back fresh.
     """
     from warcbase_spark.operators.seen import (
+        CogroupedCuckoo,
         CuckooParams,
         build_bloom_jvm,
         build_cuckoo_shards,
         dedup_against_seen,
         delete_cuckoo_cogrouped,
-        probe_cuckoo_cogrouped,
     )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -120,17 +120,12 @@ def seen_recrawl_stress(n: int, n_hosts: int) -> None:
         live_seen = seen.join(tomb, "url_key", "left_anti").localCheckpoint(eager=True)
         if mode == "jvm":
             bloom = build_bloom_jvm(live_seen, max(n_seen - n_tomb, 1), 0.01)
-            fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom)
         else:
             p = CuckooParams.size(n_seen, n_shards=32)
             shards = build_cuckoo_shards(seen, p).localCheckpoint(eager=True)
             shards = delete_cuckoo_cogrouped(shards, tomb, p).localCheckpoint(eager=True)
-            probed = probe_cuckoo_cogrouped(cand_in, shards, p).cache()
-            fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen").unionByName(
-                probed.filter(F.col("maybe_seen"))
-                .drop("maybe_seen")
-                .join(live_seen.select("url_key"), "url_key", "left_anti")
-            )
+            bloom = CogroupedCuckoo(p, shards)
+        fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom)
         fresh = fresh.cache()
         n_fresh = fresh.count()
         sched, _sp = schedule_round(fresh, pol)

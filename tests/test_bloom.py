@@ -1,4 +1,4 @@
-"""Bloom URL-seen structure: exactness guarantees.
+"""URL-seen filters: exactness guarantees.
 
 Membership truth-table style mirrors UrlMappingTest.java:57-137
 (present→hit, absent→usually miss; never a false negative)."""
@@ -8,59 +8,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.operators.seen import (
-    BloomParams,
-    CogroupedBloom,
+    CogroupedCuckoo,
     CuckooParams,
     build_bloom_jvm,
-    build_bloom_shards,
-    build_cuckoo,
+    build_cuckoo_shards,
     dedup_against_seen,
-    probe_bloom_cogrouped,
+    probe_cuckoo_cogrouped,
 )
-
-
-def test_no_false_negatives_and_bounded_fpp(spark):
-    """The cogrouped sharded Bloom against the exact present set: every
-    present key probes positive, and absent keys stay near the sized fpp."""
-    n = 5000
-    present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    params = BloomParams.size(n, fpp=0.01, n_shards=8)
-    shards = build_bloom_shards(present, params).cache()
-    try:
-        cand = spark.range(2 * n).select(
-            F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
-            (F.col("id") < n).alias("is_present"),
-        )
-        rows = probe_bloom_cogrouped(cand, shards, params).collect()
-        assert len(rows) == 2 * n
-        assert all(r["maybe_seen"] for r in rows if r["is_present"])  # zero false negatives
-        fp = sum(r["maybe_seen"] for r in rows if not r["is_present"])
-        assert fp / n < 0.05  # sized for 1%, generous margin
-    finally:
-        shards.unpersist()
-
-
-def test_shard_count_power_of_two():
-    assert BloomParams.size(100, n_shards=20).n_shards == 32
-    assert BloomParams.size(100, n_shards=32).n_shards == 32
 
 
 def _jvm(seen):
     return build_bloom_jvm(seen, 400)
 
 
-def _cogrouped(seen):
-    params = BloomParams.size(400, 0.01, 8)
-    return CogroupedBloom(params, build_bloom_shards(seen, params))
-
-
 def _cuckoo(seen):
-    return build_cuckoo(seen, CuckooParams.size(400, n_shards=8))
+    params = CuckooParams.size(400, n_shards=8)
+    return CogroupedCuckoo(params, build_cuckoo_shards(seen, params))
 
 
-@pytest.mark.parametrize(
-    "build", [_jvm, _cogrouped, _cuckoo], ids=["jvm", "cogrouped", "cuckoo"]
-)
+@pytest.mark.parametrize("build", [_jvm, _cuckoo], ids=["jvm", "cuckoo"])
 def test_dedup_exact_semantics(spark, build):
     """Every filter is a prefilter only: the result equals the plain
     anti-join exactly (the reference's fst.getID != -1 gate,
@@ -82,14 +48,14 @@ def test_dedup_exact_semantics(spark, build):
 
 
 def test_cogrouped_probe_missing_shard_and_passthrough(spark):
-    """probe_bloom_cogrouped (the 10^10-key path: shard bitmaps cogrouped by
-    hash route, nothing broadcast): a shard with no bitmap row probes
+    """probe_cuckoo_cogrouped (the 10^10-key path: shard tables cogrouped by
+    hash route, nothing broadcast): a shard with no table row probes
     definitely-fresh, every other present key probes positive, and extra
     candidate columns pass through unchanged."""
     n = 4000
     present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    params = BloomParams.size(n, fpp=0.01, n_shards=8)
-    shards = build_bloom_shards(present, params).cache()
+    params = CuckooParams.size(n, n_shards=8)
+    shards = build_cuckoo_shards(present, params).cache()
     try:
         dropped = sorted(r["shard"] for r in shards.select("shard").collect())[0]
         partial = shards.filter(F.col("shard") != dropped)
@@ -98,7 +64,7 @@ def test_cogrouped_probe_missing_shard_and_passthrough(spark):
             F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
             F.col("id").alias("extra"),
         ).withColumn("s", F.pmod(F.xxhash64("url_key"), F.lit(params.n_shards)))
-        rows = probe_bloom_cogrouped(cand, partial, params).collect()
+        rows = probe_cuckoo_cogrouped(cand, partial, params).collect()
     finally:
         shards.unpersist()
     assert sorted(r["extra"] for r in rows) == list(range(2 * n))
@@ -115,15 +81,13 @@ def test_observation_null_safe_on_empty_candidates(spark):
     (max()/sum() over zero rows is NULL without coalesce — ADVICE r2)."""
     from pyspark.sql import Observation
 
-    from warcbase_spark.operators.seen import build_bloom_jvm
-
     empty = spark.createDataFrame([], "url_key string, url string")
     seen = spark.range(10).select(
         F.concat(F.lit("com.test/s/"), "id").alias("url_key"),
         F.lit(0).alias("url_hash"),
         F.lit(0).alias("first_round"),
     )
-    for bloom in (None, build_bloom_jvm(seen, 10)):
+    for bloom in (None, _jvm(seen), _cuckoo(seen)):
         obs = Observation()
         fresh, _ = dedup_against_seen(spark, empty, seen, bloom, observation=obs)
         assert fresh.count() == 0
@@ -135,17 +99,18 @@ def test_observation_null_safe_on_empty_candidates(spark):
 # ---------------------------------------------------------------------------
 
 def test_cuckoo_no_false_negatives_and_low_fpp(spark):
-    from warcbase_spark.operators.seen import CuckooParams, build_cuckoo, probe_cuckoo
-
     n = 5000
     present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
     absent = spark.range(n, 2 * n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    cuckoo = build_cuckoo(present, CuckooParams.size(n, n_shards=8))
+    p = CuckooParams.size(n, n_shards=8)
+    shards = build_cuckoo_shards(present, p).cache()
+    try:
+        probed_in = probe_cuckoo_cogrouped(present, shards, p)
+        assert probed_in.filter(~F.col("maybe_seen")).count() == 0  # zero false negatives
 
-    probed_in = probe_cuckoo(spark, present, cuckoo)
-    assert probed_in.filter(~F.col("maybe_seen")).count() == 0  # zero false negatives
-
-    fp = probe_cuckoo(spark, absent, cuckoo).filter(F.col("maybe_seen")).count()
+        fp = probe_cuckoo_cogrouped(absent, shards, p).filter(F.col("maybe_seen")).count()
+    finally:
+        shards.unpersist()
     # 16-bit fingerprints, 2×4 slots → theoretical ~1.2e-4 plus rare
     # saturation; 1% is a very generous bound
     assert fp / n < 0.01, fp
@@ -154,15 +119,11 @@ def test_cuckoo_no_false_negatives_and_low_fpp(spark):
 def test_cuckoo_delete_unsees(spark):
     """The capability Bloom lacks: deleting a key makes it probe-negative
     again (recrawl-after-TTL semantics), without disturbing other keys."""
-    import numpy as np
-
-    from warcbase_spark.operators.seen import (
-        CuckooParams, ShardedCuckoo, build_cuckoo, with_bloom_hashes,
-    )
+    from warcbase_spark.operators.seen import build_cuckoo_collected, with_bloom_hashes
 
     n = 2000
     keys = spark.range(n).select(F.concat(F.lit("com.test/d/"), "id").alias("url_key"))
-    cuckoo = build_cuckoo(keys, CuckooParams.size(n, n_shards=4))
+    cuckoo = build_cuckoo_collected(keys, CuckooParams.size(n, n_shards=4))
 
     hashed = with_bloom_hashes(keys).select(
         F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
@@ -183,9 +144,7 @@ def test_cuckoo_saturation_stays_safe():
     """Overfilled filter: items that fit neither bucket saturate it —
     membership stays 'maybe' (never a false negative), and deletes in
     saturated buckets are refused."""
-    import numpy as np
-
-    from warcbase_spark.operators.seen import CuckooParams, ShardedCuckoo
+    from warcbase_spark.operators.seen import ShardedCuckoo
 
     rng = np.random.RandomState(3)
     n = 4000
@@ -200,24 +159,23 @@ def test_cuckoo_saturation_stays_safe():
 
 
 def test_cuckoo_distributed_build_parity(spark):
-    """`build_cuckoo` (distributed per-shard applyInPandas, collects only
-    the fixed-size shard tables) must produce BIT-IDENTICAL tables to the
-    single-process reference build that collects every (h1, h2) pair —
-    the vectorized placement is a pure function of each shard's key set."""
-    import numpy as np
-
-    from warcbase_spark.operators.seen import (
-        CuckooParams, build_cuckoo, build_cuckoo_collected,
-    )
+    """`build_cuckoo_shards` (distributed per-shard applyInPandas) must
+    produce BIT-IDENTICAL (table, sat) rows to the single-process reference
+    build that collects every (h1, h2) pair — the vectorized placement is a
+    pure function of each shard's key set."""
+    from warcbase_spark.operators.seen import _cuckoo_row_to_shard, build_cuckoo_collected
 
     n = 4000
     keys = spark.range(n).select(F.concat(F.lit("net.par/t/"), "id").alias("url_key"))
     p = CuckooParams.size(n, n_shards=8)
-    dist = build_cuckoo(keys, p)
+    dist = {
+        int(r["shard"]): _cuckoo_row_to_shard(p, r["table"], r["sat"])
+        for r in build_cuckoo_shards(keys, p).collect()
+    }
     ref = build_cuckoo_collected(keys, p)
-    assert set(dist.shards) == set(ref.shards)
+    assert set(dist) == set(ref.shards)
     for sid in ref.shards:
-        dt, ds = dist.shards[sid]
+        dt, ds = dist[sid]
         rt, rs = ref.shards[sid]
         assert np.array_equal(dt, rt), f"shard {sid} table mismatch"
         assert np.array_equal(ds, rs), f"shard {sid} sat mismatch"
@@ -225,44 +183,44 @@ def test_cuckoo_distributed_build_parity(spark):
 
 def test_cuckoo_cogrouped_probe_and_delete_parity(spark):
     """The 10^10-key cuckoo forms: DataFrame-resident shard tables probed
-    cogrouped (parity vs broadcast probe) and deleted cogrouped (parity vs
-    in-memory delete_vec) — the key set and the filter never transit the
-    driver in this path except for the final assert collects."""
-    import numpy as np
-
+    cogrouped (parity vs the reference's contains_vec) and deleted cogrouped
+    (parity vs the reference's delete_vec) — the key set and the filter
+    never transit the driver in this path except for the final assert
+    collects."""
     from warcbase_spark.operators.seen import (
-        CuckooParams, ShardedCuckoo, _cuckoo_row_to_shard, build_cuckoo,
-        build_cuckoo_shards, delete_cuckoo_cogrouped, probe_cuckoo,
-        probe_cuckoo_cogrouped, with_bloom_hashes,
+        _cuckoo_row_to_shard, build_cuckoo_collected, delete_cuckoo_cogrouped,
+        with_bloom_hashes,
     )
+
+    def hashes(df):
+        pdf = with_bloom_hashes(df).select(
+            "url_key",
+            F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
+            F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
+        ).toPandas()
+        return pdf["url_key"], pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64)
 
     n = 3000
     keys = spark.range(n).select(F.concat(F.lit("org.cg/d/"), "id").alias("url_key"))
     absent = spark.range(n, 2 * n).select(F.concat(F.lit("org.cg/d/"), "id").alias("url_key"))
     p = CuckooParams.size(n, n_shards=8)
     shards_df = build_cuckoo_shards(keys, p).cache()
-    mem = build_cuckoo(keys, p)
+    mem = build_cuckoo_collected(keys, p)
 
-    # probe parity (present + absent) vs the broadcast probe
+    # probe parity (present + absent) vs the in-memory reference lookup
     for probe_set in (keys, absent):
         cg = {
             r["url_key"]: r["maybe_seen"]
             for r in probe_cuckoo_cogrouped(probe_set, shards_df, p).collect()
         }
-        bc = {
-            r["url_key"]: r["maybe_seen"]
-            for r in probe_cuckoo(spark, probe_set, mem, "url_key").collect()
-        }
-        assert cg == bc
+        url_keys, h1, h2 = hashes(probe_set)
+        assert cg == dict(zip(url_keys, mem.contains_vec(h1, h2).tolist()))
 
     # delete the first 200 keys cogrouped; compare vs in-memory delete_vec
     dels = keys.limit(200)
     new_shards = delete_cuckoo_cogrouped(shards_df, dels, p)
-    hashed = with_bloom_hashes(dels).select(
-        F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
-        F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
-    ).toPandas()
-    mem.delete_vec(hashed["h1"].to_numpy(np.int64), hashed["h2"].to_numpy(np.int64))
+    _, h1, h2 = hashes(dels)
+    mem.delete_vec(h1, h2)
     got = {
         int(r["shard"]): _cuckoo_row_to_shard(p, r["table"], r["sat"])
         for r in new_shards.collect()
@@ -285,13 +243,9 @@ def test_cuckoo_params_power_of_two_validation():
     """Hand-built CuckooParams must reject non-power-of-two shapes: the JVM
     shard route pmod(raw_h1, n_shards) only agrees with the numpy route
     mod(pmod(raw_h1, 2^62), n_shards) when n_shards divides 2^62."""
-    import pytest as _pytest
-
-    from warcbase_spark.operators.seen import CuckooParams
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         CuckooParams(n_shards=10, buckets_per_shard=64)
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         CuckooParams(n_shards=8, buckets_per_shard=48)
     p = CuckooParams.size(10_000, n_shards=10)  # size() rounds up to 16
     assert p.n_shards == 16

@@ -71,13 +71,13 @@ def test_resume_exactness(spark, corpus_dir, crawl, sim):
     assert got_seen == sim.seen
 
 
-@pytest.mark.parametrize("mode", ["cogrouped", "cuckoo"])
+@pytest.mark.parametrize("mode", ["cuckoo"])
 def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
     """Every bloom mode is only a PREFILTER — the exact anti-join fixes any
     false positives — so the full crawl must be bit-identical across modes,
     including across a crash after round 1 and a resume in a fresh object.
-    'cogrouped' is the 10^10-key path (shard bitmaps never transit the
-    driver); 'cuckoo' is the deletion-capable filter."""
+    'cuckoo' is the 10^10-key path: the deletion-capable filter whose shard
+    tables never transit the driver, probed cogrouped."""
     state = f"/tmp/warcbase_spark_testfix/crawlstate_{mode}"
     shutil.rmtree(state, ignore_errors=True)
     fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50, bloom_mode=mode)
@@ -99,11 +99,11 @@ def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
     assert got_seen == ref_seen
 
 
-@pytest.mark.parametrize("mode", ["sharded", "cukoo"])
+@pytest.mark.parametrize("mode", ["sharded", "cogrouped", "cukoo"])
 def test_unknown_bloom_mode_rejected(spark, corpus_dir, mode):
     """A removed or misspelled bloom_mode must fail loudly, not silently run
     some other filter."""
-    with pytest.raises(ValueError, match="jvm, cogrouped, cuckoo"):
+    with pytest.raises(ValueError, match="jvm, cuckoo"):
         FrontierCrawl(
             spark, corpus_dir, "/tmp/warcbase_spark_testfix/crawlstate_badmode",
             bloom_mode=mode,
@@ -155,10 +155,9 @@ def test_seen_compaction_transparent(crawl):
 
 
 def test_legacy_manifest_seen_rows_reseed(spark, corpus_dir):
-    """A manifest written before the seen_rows counter existed must be
-    re-seeded from an exact count on the next commit — not reset to the
-    current round's delta, which would undersize every later Bloom build
-    (ADVICE r2). The committed counter must equal the true seen-set size."""
+    """A manifest without the seen_rows counter (every commit writes it)
+    is rejected with an error naming the key — resuming from a guessed
+    total would missize every later filter build (ADVICE r2)."""
     import json
     import os
 
@@ -174,10 +173,10 @@ def test_legacy_manifest_seen_rows_reseed(spark, corpus_dir):
     with open(mpath, "w") as f:
         json.dump(m, f)
 
-    fc.run(max_rounds=3)  # round 2 resumes from the legacy manifest
+    with pytest.raises(ValueError, match="seen_rows"):
+        fc.run(max_rounds=3)  # round 2 would resume from the legacy manifest
     with open(mpath) as f:
-        m2 = json.load(f)
-    assert m2["seen_rows"] == fc.url_seen().count()
+        assert json.load(f) == m  # nothing was committed over it
 
 
 def test_broadcast_gate_crawl_parity(spark, corpus_dir, crawl):

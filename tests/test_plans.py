@@ -79,6 +79,32 @@ def test_dedup_probe_is_jvm_side(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_cuckoo_probe_is_cogrouped(spark):
+    """bloom_mode="cuckoo" probes its shard tables cogrouped: no filter is
+    broadcast and no pandas UDF is chained after the canonicalizer, so the
+    canonicalizer stays the only ArrowEvalPython in the probe plan."""
+    from warcbase_spark.frontier.crawl import canonicalize_candidates
+    from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
+
+    urls = spark.range(100).select(
+        F.concat(F.lit("http://h"), F.col("id").cast("string"), F.lit(".com/p.html")).alias("url")
+    )
+    cand = canonicalize_candidates(urls)
+    seen = spark.range(0, 100, 3).select(
+        F.concat(F.lit("com.h"), F.col("id").cast("string"), F.lit(")/p.html")).alias("url_key")
+    )
+    reg = []
+    _, probed = dedup_against_seen(
+        spark, cand, seen, build_seen_filter("cuckoo", seen, 100), cache_registry=reg
+    )
+    plan = plan_of(probed)  # the cached probe pass, shown as its inner plan
+    for df in reg:
+        df.unpersist()
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert plan.count("ArrowEvalPython") == 1  # still just the canonicalizer
+    assert "BatchEvalPython" not in plan
+
+
 def test_scheduler_broadcasts_politeness_and_winners(spark):
     from warcbase_spark.operators.scheduler import schedule_round
 

@@ -163,9 +163,9 @@ def test_with_budgets_default_rows(spark):
 
 def test_politeness_read_once(spark, tmp_path):
     """A parquet politeness table is scanned by the budget collect alone:
-    the broadcast side of the budget join is a local relation, so neither
-    the round's output plan nor any other job reads the path again. The
-    candidates come from spark.range, so every parquet scan is politeness."""
+    the broadcast side of the budget join is a local relation, so no other
+    job of the round reads the path again. The candidates come from
+    spark.range, so every parquet scan is politeness."""
     path = str(tmp_path / "politeness.parquet")
     _mk_politeness(spark).write.parquet(path)
     pol = spark.read.parquet(path)
@@ -180,16 +180,10 @@ def test_politeness_read_once(spark, tmp_path):
         }
 
     before = execution_plans()
-    # with_seq=False keeps the whole lineage in the output plan (the seq
-    # path checkpoints it away)
-    out = schedule_round_combined(cand, pol, with_seq=False)
-    out.write.mode("overwrite").format("noop").save()
-    assert "Scan parquet" not in out._jdf.queryExecution().executedPlan().toString()
-
     out = schedule_round_combined(cand, pol)
     out.write.mode("overwrite").format("noop").save()
     scans = [
         eid for eid, plan in execution_plans().items()
         if eid not in before and "Scan parquet" in plan
     ]
-    assert len(scans) == 2, scans  # one collect per schedule_round_combined call
+    assert len(scans) == 1, scans  # the budget collect, once per call

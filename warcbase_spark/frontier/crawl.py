@@ -40,12 +40,8 @@ from warcbase_spark.functions.urls import canonical_cols
 from warcbase_spark.operators.extract import extract_links
 from warcbase_spark.operators.scheduler import schedule_round_combined
 from warcbase_spark.operators.seen import (
-    BloomParams,
-    CogroupedBloom,
-    CuckooParams,
-    build_bloom_jvm,
-    build_bloom_shards,
-    build_cuckoo,
+    build_seen_filter,
+    check_bloom_mode,
     dedup_against_seen,
 )
 
@@ -76,10 +72,6 @@ class RoundMetrics:
     invalid_urls: int = 0
 
 
-# seen-set filter per scale regime (FrontierCrawl's bloom_mode)
-BLOOM_MODES = ("jvm", "cogrouped", "cuckoo")
-
-
 class FrontierCrawl:
     """Drives the crawl over a documents corpus directory
     (documents/seeds/politeness/robots parquet, fixtures.py layout)."""
@@ -91,9 +83,6 @@ class FrontierCrawl:
         state_dir: str,
         max_rounds: int = 100,
         salt_k: int = 16,
-        use_bloom: bool = True,
-        bloom_fpp: float = 0.01,
-        bloom_shards: int = 32,
         bloom_mode: str = "jvm",
         compact_every: int = 8,
         broadcast_row_limit: int = 2_000_000,
@@ -104,9 +93,6 @@ class FrontierCrawl:
         self.state_dir = state_dir
         self.max_rounds = max_rounds
         self.salt_k = salt_k
-        self.use_bloom = use_bloom
-        self.bloom_fpp = bloom_fpp
-        self.bloom_shards = bloom_shards
         self.compact_every = compact_every
         # fetch-side scheduled∩docs semi-join broadcast gate: an OOM guard
         # (10^10-frontier rounds can schedule millions of URLs); broadcast
@@ -125,16 +111,11 @@ class FrontierCrawl:
             else winner_broadcast_limit
         )
         # the seen-set filter: "jvm" (bloom_filter_agg/might_contain, zero
-        # Python in the probe), "cogrouped" (the 10^10-key path: the
-        # shard-bitmap table never transits the driver — candidates are
-        # routed to their shard's bitmap by hash and probed cogrouped), or
-        # "cuckoo" (deletion-capable ShardedCuckoo, the north rule's named
-        # alternative; broadcast probe)
-        if bloom_mode not in BLOOM_MODES:
-            raise ValueError(
-                f"bloom_mode must be one of {', '.join(BLOOM_MODES)}, got {bloom_mode!r}"
-            )
-        self.bloom_mode = bloom_mode
+        # Python in the probe) or "cuckoo" (the 10^10-key path: the
+        # deletion-capable cuckoo's shard tables never transit the driver —
+        # candidates are routed to their shard's table by hash and probed
+        # cogrouped)
+        self.bloom_mode = check_bloom_mode(bloom_mode)
         os.makedirs(state_dir, exist_ok=True)
 
         self.politeness = spark.read.parquet(f"{corpus_dir}/politeness.parquet")
@@ -155,32 +136,18 @@ class FrontierCrawl:
         frontier_rows: int,
         seen_base: int | None = None,
         scheduled_delta: int = 0,
-        seen_rows_before: int | None = None,
     ) -> None:
         m = self.load_manifest() or {}
         if seen_base is None:
             seen_base = m.get("seen_base_round", -1)
         # running total of seen rows (per-round deltas are disjoint because
-        # the seen gate never re-schedules a key) — sizes the Bloom build
-        # without a count() job per round. A LEGACY manifest (predates the
-        # counter) must be seeded from an exact count, not 0 — otherwise the
-        # committed total undercounts forever and every later Bloom is sized
-        # far below the true seen set (fpp blowout). run_round passes the
-        # count it already took (to size the bloom); otherwise count once
-        # here — the field exists in every manifest written after this.
-        if seen_rows_before is None:
-            if "seen_rows" in m:
-                seen_rows_before = m["seen_rows"]
-            elif rnd > 0:
-                seen_rows_before = self._seen(rnd - 1).count()
-            else:
-                seen_rows_before = 0
-        seen_rows = seen_rows_before + scheduled_delta
+        # the seen gate never re-schedules a key) — sizes the filter build
+        # without a count() job per round
         manifest = {
             "last_committed_round": rnd,
             "next_frontier_rows": frontier_rows,
             "seen_base_round": seen_base,
-            "seen_rows": seen_rows,
+            "seen_rows": m.get("seen_rows", 0) + scheduled_delta,
         }
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
@@ -191,7 +158,15 @@ class FrontierCrawl:
         if not os.path.exists(self._manifest_path):
             return None
         with open(self._manifest_path) as f:
-            return json.load(f)
+            m = json.load(f)
+        if "seen_rows" not in m:
+            # every commit writes the counter; a manifest without it was not
+            # written by this code, and a guessed total would missize the
+            # seen filter for the rest of the crawl
+            raise ValueError(
+                f"{self._manifest_path} has no 'seen_rows' key; not a crawl state dir this code wrote"
+            )
+        return m
 
     # ---------------- derived inputs ----------------
 
@@ -438,33 +413,12 @@ class FrontierCrawl:
 
         # URL-seen gate: Bloom prefilter + exact anti-join (incl. this round)
         seen = self._seen(rnd)
-        seen_rows_before: int | None = None  # legacy-manifest seed for _commit
-        if not self.use_bloom:
-            bloom = None
-        else:
-            # Sizing comes from the manifest's running seen_rows counter
-            # (deltas are disjoint by the seen gate itself), not a per-round
-            # count() job; legacy manifests count once and pass the result
-            # through to _commit so the committed counter is re-seeded
-            # correctly (not reset to this round's delta).
-            n_seen = (self.load_manifest() or {}).get("seen_rows")
-            if n_seen is None:  # legacy manifest — count once
-                n_seen = seen_rows_before = self._seen(rnd - 1).count() if rnd > 0 else 0
-            # every mode is a stateless per-round build over the committed
-            # seen deltas (checkpoint-friendly — resume needs no filter state)
-            n_expected = max((n_seen + m.scheduled) * 2, 4096)
-            if self.bloom_mode == "jvm":
-                # one distributed partial-agg pass; zero Python in the probe
-                bloom = build_bloom_jvm(seen, n_expected, self.bloom_fpp)
-            elif self.bloom_mode == "cogrouped":
-                # the (shard, bitmap) table stays executor-side end-to-end
-                # (build agg → shuffle-on-shard cogroup probe)
-                params = BloomParams.size(n_expected, self.bloom_fpp, self.bloom_shards)
-                bloom = CogroupedBloom(params, build_bloom_shards(seen, params))
-            else:
-                # "cuckoo": deletion-capable filter (recrawl-after-TTL
-                # un-sees URLs)
-                bloom = build_cuckoo(seen, CuckooParams.size(n_expected, self.bloom_shards))
+        # Sizing comes from the manifest's running seen_rows counter (deltas
+        # are disjoint by the seen gate itself), not a per-round count() job.
+        # Every mode is a stateless per-round build over the committed seen
+        # deltas (checkpoint-friendly — resume needs no filter state).
+        n_expected = max((self.load_manifest()["seen_rows"] + m.scheduled) * 2, 4096)
+        bloom = build_seen_filter(self.bloom_mode, seen, n_expected)
         obs_dedup = Observation()
         fresh, _maybe = dedup_against_seen(
             spark, cand, seen, bloom,
@@ -509,13 +463,7 @@ class FrontierCrawl:
             self._p("metrics", rnd)
         )
         new_base = self._maybe_compact_seen(rnd)
-        self._commit(
-            rnd,
-            n_frontier,
-            seen_base=new_base,
-            scheduled_delta=m.scheduled,
-            seen_rows_before=seen_rows_before,
-        )
+        self._commit(rnd, n_frontier, seen_base=new_base, scheduled_delta=m.scheduled)
         if new_base is not None:
             # tombstones ≤ the committed base round are fully reflected in
             # the base snapshot (and idempotent against any later delta:
@@ -538,7 +486,7 @@ class FrontierCrawl:
 
     def run(self, max_rounds: int | None = None) -> list[RoundMetrics]:
         """Run (or resume) to completion. Resumption reads the manifest and
-        continues from the first uncommitted round. Every bloom mode rebuilds
+        continues from the first uncommitted round. Every filter mode rebuilds
         its filter from the committed seen deltas each round, so no filter
         state needs restoring."""
         max_rounds = max_rounds if max_rounds is not None else self.max_rounds
@@ -564,17 +512,7 @@ class FrontierCrawl:
                 n = self.spark.read.parquet(self._p("frontier", rnd)).count()
                 if n == 0:
                     break
-                m = self.load_manifest()
-                last = m["last_committed_round"]
-                # legacy manifests (no seen_rows): the correct total is
-                # count(_seen(last)) — _commit's own fallback counts
-                # _seen(last-1), which drops the last round's delta and
-                # would undersize every later bloom (same guard as
-                # recrawl() above)
-                srb = m.get("seen_rows")
-                if srb is None:
-                    srb = self._seen(last).count() if last >= 0 else 0
-                self._commit(last, n, scheduled_delta=0, seen_rows_before=srb)
+                self._commit(rnd - 1, n)  # rnd - 1 is the last committed round
             out.append(self.run_round(rnd))
             rnd += 1
         return out
@@ -648,8 +586,7 @@ class FrontierCrawl:
         if self.load_manifest() is None:
             self.bootstrap()
         self.unsee(urls, url_col)
-        m = self.load_manifest() or {}
-        last = m.get("last_committed_round", -1)
+        last = self.load_manifest()["last_committed_round"]
         nxt = last + 1
         cand = apply_robots(
             canonicalize_candidates(urls, url_col).filter(F.col("url_key").isNotNull()),
@@ -691,14 +628,7 @@ class FrontierCrawl:
         if os.path.exists(pending_path):
             _shutil.rmtree(pending_path)
         os.rename(new, pending_path)
-        # legacy manifests: the correct pre-recrawl seen total is
-        # count(_seen(last)) — NOT _commit's default count(_seen(last-1)),
-        # which assumes the current round's delta arrives via
-        # scheduled_delta (recrawl adds none)
-        srb = m.get("seen_rows")
-        if srb is None:
-            srb = self._seen(last).count() if last >= 0 else 0
-        self._commit(last, n, scheduled_delta=0, seen_rows_before=srb)
+        self._commit(last, n)
 
     def _heal_frontier(self, rnd: int) -> None:
         """Finish an interrupted ``recrawl`` swap: frontier dir missing but

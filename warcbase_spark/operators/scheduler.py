@@ -143,7 +143,6 @@ def schedule_round_combined(
     candidates: DataFrame,
     politeness: DataFrame,
     salt_k: int = DEFAULT_SALT_K,
-    with_seq: bool = True,
     cache_registry: "list[DataFrame] | None" = None,
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
 ) -> DataFrame:
@@ -154,7 +153,7 @@ def schedule_round_combined(
     materializing `scheduled` and `spilled` as separate queries builds the
     broadcast twice (measured ~10s serial per round at 1M winners)."""
     scheduled, _ = schedule_round(
-        candidates, politeness, salt_k, with_seq, _combined=True,
+        candidates, politeness, salt_k, _combined=True,
         cache_registry=cache_registry, broadcast_row_limit=broadcast_row_limit,
     )
     return scheduled
@@ -164,7 +163,6 @@ def schedule_round(
     candidates: DataFrame,
     politeness: DataFrame,
     salt_k: int = DEFAULT_SALT_K,
-    with_seq: bool = True,
     _combined: bool = False,
     cache_registry: "list[DataFrame] | None" = None,
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
@@ -203,18 +201,13 @@ def schedule_round(
         .select("url_key", "host", "priority")
     )
 
-    n_winners: int | None = None
-    if with_seq:
-        # deterministic global sequence — parity artifact; range-partitioned
-        # rank, never a single-task global window (Σ budgets can be millions
-        # of rows per round at 10^10-frontier scale). Its counts job yields
-        # the exact winner count as a side effect — free broadcast gate.
-        tot: list[int] = []
-        winners = add_global_seq(winners, order, total_out=tot).select("url_key", "seq")
-        n_winners = tot[0]
-    else:
-        winners = winners.select("url_key", F.lit(0).alias("seq"))
-    winners = winners.cache()
+    # deterministic global sequence — parity artifact; range-partitioned
+    # rank, never a single-task global window (Σ budgets can be millions of
+    # rows per round at 10^10-frontier scale). Its counts job yields the
+    # exact winner count as a side effect — free broadcast gate.
+    tot: list[int] = []
+    winners = add_global_seq(winners, order, total_out=tot).select("url_key", "seq").cache()
+    n_winners = tot[0]
     if cache_registry is not None:
         cache_registry.append(winners)
 
@@ -225,17 +218,13 @@ def schedule_round(
     # 10^10-frontier scale Σ budgets can reach millions of hosts × budget
     # rows, where an unconditional broadcast OOMs the driver — past
     # ``broadcast_row_limit`` the join degrades to a shuffle join on
-    # url_key instead (VERDICT r2 #4). When the count is unknown
-    # (with_seq=False), broadcast only if the caller's limit is not 0.
+    # url_key instead (VERDICT r2 #4).
     # NOT cached: callers cache/materialize candidates, so each side is a
     # streaming map-side join over that cache — caching `joined` would
     # re-write every wide row to the block store for no saved work.
-    small = (n_winners is None and broadcast_row_limit > 0) or (
-        n_winners is not None and n_winners <= broadcast_row_limit
-    )
+    small = n_winners <= broadcast_row_limit
     if (
         not small
-        and n_winners is not None
         and broadcast_row_limit > 0
         and n_winners <= BROADCAST_HARD_CAP_ROWS
         and candidates.storageLevel.useMemory
@@ -253,8 +242,6 @@ def schedule_round(
     if _combined:
         return joined, joined.limit(0)
     scheduled = joined.filter(F.col("seq").isNotNull())
-    if not with_seq:
-        scheduled = scheduled.drop("seq")
     spilled = (
         joined.filter(F.col("seq").isNull())
         .drop("seq")

@@ -7,25 +7,25 @@ Semantics are *exact-set membership*: the Bloom filter is only a prefilter —
 every positive is verified with an exact anti-join against the seen table
 (SURVEY §7.1.2), so false positives can never drop a URL.
 
-Three filters, each built fresh from the seen set every round:
+Two filters, one per scale regime, each built fresh from the seen set every
+round (``build_seen_filter`` picks one by mode):
 
 - JVM Bloom (``build_bloom_jvm``/``probe_bloom_jvm``, the default broadcast
   regime): Spark's own bloom_filter_agg and might_contain, zero Python.
-- Cogrouped sharded Bloom (``build_bloom_shards``/``probe_bloom_cogrouped``,
-  the 10^10-key regime): the filter is SHARDED by ``h1 mod n_shards``, each
-  executor builds only its shard (one bitmap per shard via applyInPandas),
-  and candidate rows are routed to their shard's bitmap by the same hash —
-  a shuffle on an evenly-distributed hash; the whole filter (≈ 12 GB at 1%
-  fpp) is never materialized in one place or broadcast.
-- Sharded cuckoo filter (``build_cuckoo``, deletion-capable).
+- Cogrouped sharded cuckoo (``build_cuckoo_shards``/``probe_cuckoo_cogrouped``,
+  the 10^10-key regime, deletion-capable via ``delete_cuckoo_cogrouped``):
+  the filter is SHARDED by ``h1 mod n_shards``, each executor builds only
+  its shard (one bucket table per shard via applyInPandas), and candidate
+  rows are routed to their shard's table by the same hash — a shuffle on an
+  evenly-distributed hash; the whole filter is never materialized in one
+  place, held by the driver, or broadcast.
 
-Hashing: double hashing idx_i = (h1 + i*h2) mod m_shard with h1 =
-xxhash64(url_key), h2 = xxhash64(url_key, salt) — both computed JVM-side.
+Hashing: h1 = xxhash64(url_key), h2 = xxhash64(url_key, salt) — both
+computed JVM-side.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -38,115 +38,6 @@ def with_bloom_hashes(df: DataFrame, key_col: str = "url_key") -> DataFrame:
     """Attach the two 64-bit hashes (JVM-side xxhash64, codegen'd)."""
     return df.withColumn("h1", F.xxhash64(F.col(key_col))).withColumn(
         "h2", F.xxhash64(F.col(key_col), F.lit("\x01"))
-    )
-
-
-@dataclass
-class BloomParams:
-    n_shards: int
-    bits_per_shard: int
-    k: int
-
-    @classmethod
-    def size(cls, n_expected: int, fpp: float = 0.01, n_shards: int = 32) -> "BloomParams":
-        # power-of-two shard count so `mod n_shards` commutes with the
-        # non-negative pmod-2^62 applied to the raw xxhash64 values
-        n_shards = 1 << max(0, (n_shards - 1).bit_length())
-        n_expected = max(n_expected, 1)
-        m_total = int(-n_expected * math.log(fpp) / (math.log(2) ** 2)) + 8
-        k = max(1, round(m_total / n_expected * math.log(2)))
-        bits = max(64, (m_total // n_shards // 8 + 1) * 8)
-        return cls(n_shards=n_shards, bits_per_shard=bits, k=k)
-
-
-def _set_bits(bm: np.ndarray, h1: np.ndarray, h2: np.ndarray, p: BloomParams) -> None:
-    base = np.mod(h1 // p.n_shards, p.bits_per_shard)
-    step = np.mod(h2, p.bits_per_shard)
-    for i in range(p.k):
-        idx = np.mod(base + i * step, p.bits_per_shard)
-        np.bitwise_or.at(bm, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
-
-
-def build_bloom_shards(df: DataFrame, params: BloomParams, key_col: str = "url_key") -> DataFrame:
-    """Fully distributed build: hash JVM-side, route rows to their shard,
-    build each shard's bitmap in one Arrow-batched task. Returns the
-    (shard, bitmap) table WITHOUT collecting — the 10^10-key form, where the
-    filter never transits the driver (pair with ``probe_bloom_cogrouped``).
-    Shuffle volume = 16 bytes/key."""
-    p = params
-
-    def per_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros(p.bits_per_shard // 8, dtype=np.uint8)
-        _set_bits(bm, pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64), p)
-        return pd.DataFrame({"shard": [key[0]], "bitmap": [bm.tobytes()]})
-
-    hashed = with_bloom_hashes(df.select(key_col), key_col)
-    # non-negative hashes so python % semantics match everywhere
-    hashed = hashed.select(
-        F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
-        F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
-        F.pmod(F.col("h1"), F.lit(p.n_shards)).cast("int").alias("shard"),
-    )
-    return hashed.groupBy("shard").applyInPandas(per_shard, schema="shard int, bitmap binary")
-
-
-@dataclass
-class CogroupedBloom:
-    """A sharded Bloom filter kept as a DataFrame — never driver-held, never
-    broadcast. ``shards`` is the (shard, bitmap) table from
-    ``build_bloom_shards`` (or read back from parquet)."""
-    params: BloomParams
-    shards: DataFrame
-
-
-def probe_bloom_cogrouped(
-    df: DataFrame,
-    shards: DataFrame,
-    params: BloomParams,
-    key_col: str = "url_key",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """The 10^10-key probe: candidates are routed to their shard by
-    ``h1 mod n_shards`` (an evenly-distributed hash — no skew) and cogrouped
-    with that shard's bitmap row, so each task holds exactly ONE shard
-    bitmap (total ≈ 12 GB at 1% fpp never materializes in one place, and
-    nothing is broadcast). Same double-hash kernel as ``_set_bits`` —
-    no-false-negative and fpp tested in test_bloom.py."""
-    p = params
-    cols = df.columns
-    hashed = with_bloom_hashes(df, key_col).select(
-        *cols,
-        F.pmod(F.col("h1"), F.lit(1 << 62)).alias("_h1"),
-        F.pmod(F.col("h2"), F.lit(1 << 62)).alias("_h2"),
-        F.pmod(F.col("h1"), F.lit(p.n_shards)).cast("int").alias("shard"),
-    )
-
-    out_schema = hashed.drop("_h1", "_h2").schema.add(out_col, "boolean")
-
-    def probe(cands: pd.DataFrame, bm_rows: pd.DataFrame) -> pd.DataFrame:
-        if cands.empty:
-            return cands.drop(columns=["_h1", "_h2"]).assign(**{out_col: pd.Series(dtype=bool)})
-        h1 = cands["_h1"].to_numpy(np.int64)
-        h2 = cands["_h2"].to_numpy(np.int64)
-        if bm_rows.empty:
-            hit = np.zeros(len(cands), dtype=bool)  # shard absent → definitely fresh
-        else:
-            bm = np.frombuffer(bm_rows["bitmap"].iloc[0], dtype=np.uint8)
-            base = np.mod(h1 // p.n_shards, p.bits_per_shard)
-            step = np.mod(h2, p.bits_per_shard)
-            hit = np.ones(len(cands), dtype=bool)
-            for i in range(p.k):
-                idx = np.mod(base + i * step, p.bits_per_shard)
-                hit &= (bm[idx >> 3] & (1 << (idx & 7)).astype(np.uint8)) != 0
-        out = cands.drop(columns=["_h1", "_h2"]).copy()
-        out[out_col] = hit
-        return out
-
-    return (
-        hashed.groupBy("shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-        .drop("shard")
     )
 
 
@@ -163,7 +54,7 @@ def probe_bloom_cogrouped(
 # with a bucket-saturation fallback — items that fit neither bucket set a
 # saturation bit on their secondary bucket, and lookups in a saturated
 # bucket always answer "maybe" — so false negatives remain impossible (the
-# exact anti-join verifies positives, same contract as the Bloom modes).
+# exact anti-join verifies positives, same contract as the JVM Bloom).
 # At the sized load factor (0.7) saturation is rare, so fpp stays near the
 # theoretical 2b/2^f ≈ 1.2e-4 for b=4, f=16.
 # ---------------------------------------------------------------------------
@@ -339,11 +230,12 @@ class ShardedCuckoo:
         return ok
 
 
-def _cuckoo_hashed(df: DataFrame, params: CuckooParams, key_col: str) -> DataFrame:
-    """(h1, h2, shard) columns, all JVM-side, non-negative so python %
-    semantics match; shard routing key = h1 mod n_shards (power of two,
-    commutes with the pmod)."""
-    return with_bloom_hashes(df.select(key_col), key_col).select(
+def _cuckoo_routed(df: DataFrame, params: CuckooParams, key_col: str, *keep: str) -> DataFrame:
+    """``keep`` columns passed through, plus (h1, h2, shard), all JVM-side
+    and non-negative so python % semantics match; shard routing key =
+    h1 mod n_shards (power of two, commutes with the pmod)."""
+    return with_bloom_hashes(df, key_col).select(
+        *keep,
         F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
         F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
         F.pmod(F.col("h1"), F.lit(params.n_shards)).cast("int").alias("shard"),
@@ -366,19 +258,26 @@ def _cuckoo_row_to_shard(p: CuckooParams, table_bytes: bytes, sat_bytes: bytes):
     return table, sat
 
 
+def _one_shard(p: CuckooParams, shard_rows: pd.DataFrame) -> ShardedCuckoo:
+    """The cogrouped side's single (shard, table, sat) row as a filter."""
+    sid = int(shard_rows["shard"].iloc[0])
+    table, sat = _cuckoo_row_to_shard(p, shard_rows["table"].iloc[0], shard_rows["sat"].iloc[0])
+    return ShardedCuckoo(p, {sid: (table, sat)})
+
+
 _CUCKOO_SHARD_SCHEMA = "shard int, table binary, sat binary"
 
 
 def build_cuckoo_shards(df: DataFrame, params: CuckooParams, key_col: str = "url_key") -> DataFrame:
-    """Fully distributed build, mirroring ``build_bloom_shards``: rows are
-    routed to their shard by ``h1 mod n_shards`` and each shard's bucket
-    table + saturation bits are built in ONE Arrow-batched task. Returns
-    the (shard, table, sat) DataFrame WITHOUT collecting — at 10^10 keys
-    the filter (≈ 2.9 GB/shard at 32 shards, f=16, load 0.7) never
-    transits the driver; write it as parquet and probe cogrouped.
-    Shuffle volume = 16 bytes/key. The vectorized 2-choice placement is a
-    pure function of each shard's key SET (lexsort order), so the result
-    is bit-identical to the collected build."""
+    """Fully distributed build: rows are routed to their shard by
+    ``h1 mod n_shards`` and each shard's bucket table + saturation bits are
+    built in ONE Arrow-batched task. Returns the (shard, table, sat)
+    DataFrame WITHOUT collecting — at 10^10 keys the filter (≈ 2.9 GB/shard
+    at 32 shards, f=16, load 0.7) never transits the driver; write it as
+    parquet or probe it cogrouped. Shuffle volume = 16 bytes/key. The
+    vectorized 2-choice placement is a pure function of each shard's key
+    SET (lexsort order), so the result is bit-identical to the collected
+    build."""
     p = params
 
     def per_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -389,34 +288,17 @@ def build_cuckoo_shards(df: DataFrame, params: CuckooParams, key_col: str = "url
         return pd.DataFrame([_cuckoo_shard_to_row(key[0], table, sat)])
 
     return (
-        _cuckoo_hashed(df, p, key_col)
+        _cuckoo_routed(df, p, key_col)
         .groupBy("shard")
         .applyInPandas(per_shard, schema=_CUCKOO_SHARD_SCHEMA)
-    )
-
-
-def build_cuckoo(df: DataFrame, params: CuckooParams, key_col: str = "url_key") -> ShardedCuckoo:
-    """Broadcast-regime build: the distributed per-shard build, then
-    collect only the (small, fixed-size) shard tables — collected volume =
-    n_shards × (buckets × slots × 2 B + buckets/8 B) regardless of key
-    count; the key set itself never transits the driver (that was the old
-    ``toPandas()`` form, kept as ``build_cuckoo_collected`` for the parity
-    test only)."""
-    rows = build_cuckoo_shards(df, params, key_col).collect()
-    return ShardedCuckoo(
-        params,
-        {
-            int(r["shard"]): _cuckoo_row_to_shard(params, r["table"], r["sat"])
-            for r in rows
-        },
     )
 
 
 def build_cuckoo_collected(df: DataFrame, params: CuckooParams, key_col: str = "url_key") -> ShardedCuckoo:
     """Single-process reference build (collects every (h1, h2) pair to the
     driver). NOT a scale path — exists to pin distributed-build parity in
-    tests: ``build_cuckoo`` must produce bit-identical shard tables."""
-    pdf = _cuckoo_hashed(df, params, key_col).toPandas()
+    tests: ``build_cuckoo_shards`` must produce bit-identical shard tables."""
+    pdf = _cuckoo_routed(df, params, key_col).toPandas()
     return ShardedCuckoo.build(
         pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64), params
     )
@@ -429,36 +311,24 @@ def probe_cuckoo_cogrouped(
     key_col: str = "url_key",
     out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """The 10^10-key probe, mirroring ``probe_bloom_cogrouped``: candidates
-    are routed to their shard by the same hash and cogrouped with that
-    shard's (table, sat) row — each task holds exactly ONE shard table and
-    nothing is broadcast. Same lookup kernel as ``contains_vec``."""
+    """The 10^10-key probe: candidates are routed to their shard by
+    ``h1 mod n_shards`` (an evenly-distributed hash — no skew) and
+    cogrouped with that shard's (table, sat) row, so each task holds
+    exactly ONE shard table and nothing is broadcast. Candidate columns
+    pass through; a shard with no table row probes definitely-fresh. Same
+    lookup kernel as ``contains_vec``."""
     p = params
-    cols = df.columns
-    hashed = with_bloom_hashes(df, key_col).select(
-        *cols,
-        F.pmod(F.col("h1"), F.lit(1 << 62)).alias("_h1"),
-        F.pmod(F.col("h2"), F.lit(1 << 62)).alias("_h2"),
-        F.pmod(F.col("h1"), F.lit(p.n_shards)).cast("int").alias("shard"),
-    )
-    out_schema = hashed.drop("_h1", "_h2").schema.add(out_col, "boolean")
+    hashed = _cuckoo_routed(df, p, key_col, *df.columns)
+    out_schema = hashed.drop("h1", "h2").schema.add(out_col, "boolean")
 
     def probe(cands: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
-        if cands.empty:
-            return cands.drop(columns=["_h1", "_h2"]).assign(**{out_col: pd.Series(dtype=bool)})
-        h1 = cands["_h1"].to_numpy(np.int64)
-        h2 = cands["_h2"].to_numpy(np.int64)
-        if shard_rows.empty:
+        if cands.empty or shard_rows.empty:
             hit = np.zeros(len(cands), dtype=bool)  # shard absent → definitely fresh
         else:
-            sid = int(shard_rows["shard"].iloc[0])
-            table, sat = _cuckoo_row_to_shard(
-                p, shard_rows["table"].iloc[0], shard_rows["sat"].iloc[0]
+            hit = _one_shard(p, shard_rows).contains_vec(
+                cands["h1"].to_numpy(np.int64), cands["h2"].to_numpy(np.int64)
             )
-            hit = ShardedCuckoo(p, {sid: (table, sat)}).contains_vec(h1, h2)
-        out = cands.drop(columns=["_h1", "_h2"]).copy()
-        out[out_col] = hit
-        return out
+        return cands.drop(columns=["h1", "h2"]).assign(**{out_col: hit})
 
     return (
         hashed.groupBy("shard")
@@ -484,42 +354,29 @@ def delete_cuckoo_cogrouped(
     def apply_deletes(del_rows: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
         if shard_rows.empty:
             return pd.DataFrame(columns=["shard", "table", "sat"])
-        sid = int(shard_rows["shard"].iloc[0])
-        table, sat = _cuckoo_row_to_shard(
-            p, shard_rows["table"].iloc[0], shard_rows["sat"].iloc[0]
-        )
+        sub = _one_shard(p, shard_rows)
         if not del_rows.empty:
-            sub = ShardedCuckoo(p, {sid: (table, sat)})
             sub.delete_vec(
                 del_rows["h1"].to_numpy(np.int64), del_rows["h2"].to_numpy(np.int64)
             )
-        return pd.DataFrame([_cuckoo_shard_to_row(sid, table, sat)])
+        sid = int(shard_rows["shard"].iloc[0])
+        return pd.DataFrame([_cuckoo_shard_to_row(sid, *sub.shards[sid])])
 
     return (
-        _cuckoo_hashed(deletes, p, key_col)
+        _cuckoo_routed(deletes, p, key_col)
         .groupBy("shard")
         .cogroup(shards.groupBy("shard"))
         .applyInPandas(apply_deletes, schema=_CUCKOO_SHARD_SCHEMA)
     )
 
 
-def probe_cuckoo(
-    spark: SparkSession, df: DataFrame, cuckoo: ShardedCuckoo, key_col: str = "url_key",
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Arrow-vectorized broadcast membership probe: hashes JVM-side, only
-    the bucket lookup runs in numpy."""
-    bc = spark.sparkContext.broadcast(cuckoo)
-
-    @F.pandas_udf("boolean")
-    def _probe(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        c = bc.value
-        return pd.Series(c.contains_vec(h1.to_numpy(np.int64), h2.to_numpy(np.int64)))
-
-    hashed = with_bloom_hashes(df, key_col)
-    h1 = F.pmod(F.col("h1"), F.lit(1 << 62))
-    h2 = F.pmod(F.col("h2"), F.lit(1 << 62))
-    return hashed.withColumn(out_col, _probe(h1, h2)).drop("h1", "h2")
+@dataclass
+class CogroupedCuckoo:
+    """The partitioned-regime seen filter kept as a DataFrame — never
+    driver-held, never broadcast. ``shards`` is the (shard, table, sat)
+    table from ``build_cuckoo_shards`` (or read back from parquet)."""
+    params: CuckooParams
+    shards: DataFrame
 
 
 # ---------------------------------------------------------------------------
@@ -527,20 +384,20 @@ def probe_cuckoo(
 #
 # Spark's bloom_filter_agg is a declarative aggregate: every task builds a
 # partial filter over its partition and the partials OR-merge up the agg
-# tree, so the build is as distributed as the sharded numpy build. The
+# tree, so the build is as distributed as the sharded cuckoo build. The
 # probe (might_contain over a binary literal) is pure JVM — measured: a
 # pandas-UDF probe chained after the canonicalize UDF doubled the Python
 # worker pool (2 ArrowEvalPython nodes/stage → 2×cores processes) and
-# oversubscribed the box, INVERTING 8→32-core scaling. The sharded numpy
-# bitmaps remain the 10^10-key path where one filter exceeds a single
-# buffer (probe_bloom_cogrouped routes rows to shard bitmaps by hash).
+# oversubscribed the box, INVERTING 8→32-core scaling. The cogrouped cuckoo
+# remains the 10^10-key path where one filter exceeds a single buffer (its
+# probe runs in the cogroup's own stage, not chained after canonicalize).
 # ---------------------------------------------------------------------------
 
 def build_bloom_jvm(df: DataFrame, n_expected: int, fpp: float = 0.01,
                     key_col: str = "url_key") -> bytes:
     """Distributed JVM build over xxhash64(key): ``DataFrameStatFunctions.
     bloomFilter`` aggregates per-partition sketches and merges them (same
-    build topology as ``build_bloom_shards``), serialized to bytes so it
+    build topology as ``build_cuckoo_shards``), serialized to bytes so it
     rides the physical plan to every task."""
     hashed = df.select(F.xxhash64(F.col(key_col)).alias("h"))
     jbf = hashed._jdf.stat().bloomFilter("h", max(int(n_expected), 1), fpp)
@@ -572,11 +429,35 @@ def probe_bloom_jvm(df: DataFrame, bloom_bytes: bytes, key_col: str = "url_key",
     return df.withColumn(out_col, PyCol(eu.column(mc)))
 
 
+# seen-set filter per scale regime (FrontierCrawl's bloom_mode): the JVM
+# Bloom broadcast with the plan, or the cogrouped cuckoo whose shard tables
+# stay executor-side
+BLOOM_MODES = ("jvm", "cuckoo")
+BLOOM_FPP = 0.01
+FILTER_SHARDS = 32
+
+
+def check_bloom_mode(mode: str) -> str:
+    if mode not in BLOOM_MODES:
+        raise ValueError(f"bloom_mode must be one of {', '.join(BLOOM_MODES)}, got {mode!r}")
+    return mode
+
+
+def build_seen_filter(mode: str, seen: DataFrame, n_expected: int,
+                      key_col: str = "url_key") -> "bytes | CogroupedCuckoo":
+    """The ``mode`` filter over ``seen``, sized for ``n_expected`` keys, in
+    the form ``dedup_against_seen`` probes."""
+    if check_bloom_mode(mode) == "jvm":
+        return build_bloom_jvm(seen, n_expected, BLOOM_FPP, key_col)
+    params = CuckooParams.size(n_expected, FILTER_SHARDS)
+    return CogroupedCuckoo(params, build_cuckoo_shards(seen, params, key_col))
+
+
 def dedup_against_seen(
     spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: "CogroupedBloom | ShardedCuckoo | bytes | None",
+    bloom: "CogroupedCuckoo | bytes | None",
     key_col: str = "url_key",
     observation=None,
     cache_registry: "list[DataFrame] | None" = None,
@@ -589,6 +470,10 @@ def dedup_against_seen(
     false positives cannot drop URLs — exact semantics of the reference's
     ``fst.getID(url) != -1`` gate (ExtractLinksWac.java:159,177).
 
+    ``bloom``: JVM Bloom bytes (``build_bloom_jvm``), a ``CogroupedCuckoo``,
+    or None for the plain anti-join — ``build_seen_filter`` makes either
+    filter. ``spark`` is unused; it stays so positional callers keep working.
+
     ``observation``: optional pyspark.sql.Observation; when given, a
     ``bloom_hits`` metric (count of Bloom-positive rows) is attached to the
     probe pass so callers get the counter for free on their next action
@@ -599,40 +484,34 @@ def dedup_against_seen(
     ``spark.catalog.clearCache()``, which would drop caller-owned caches).
     """
 
-    def _observe_zero(df: DataFrame) -> DataFrame:
-        if observation is None:
-            return df
-        # null-safe: max() over ZERO rows is NULL, and a late-crawl round can
-        # legitimately produce zero candidates — coalesce so Observation.get
-        # yields 0, not None (callers int() the value)
-        return df.observe(
-            observation, F.coalesce(F.max(F.lit(0)), F.lit(0)).alias("bloom_hits")
-        )
-
-    if bloom is None:
-        return (
-            _observe_zero(candidates).join(seen.select(key_col), key_col, "left_anti"),
-            candidates.limit(0),
-        )
-
-    # Materialize the probe ONCE: both output branches consume it, and an
-    # uncached plan would re-run the whole canonicalize+probe lineage (all
-    # Arrow UDF passes) per branch.
-    if isinstance(bloom, (bytes, bytearray)):
+    probed = None
+    if isinstance(bloom, CogroupedCuckoo):
+        probed = probe_cuckoo_cogrouped(candidates, bloom.shards, bloom.params, key_col)
+    elif bloom is not None:
         try:
             probed = probe_bloom_jvm(candidates, bloom, key_col)
         except Exception:
             # JVM bridge unavailable (Spark Connect, or the 'classic'
             # internals moved in a future Spark) → exact anti-join, which is
             # always correct, just without the prefilter speedup.
-            return (
-                _observe_zero(candidates).join(seen.select(key_col), key_col, "left_anti"),
-                candidates.limit(0),
+            pass
+    if probed is None:
+        observed = candidates
+        if observation is not None:
+            # null-safe: max() over ZERO rows is NULL, and a late-crawl round
+            # can legitimately produce zero candidates — coalesce so
+            # Observation.get yields 0, not None (callers int() the value)
+            observed = candidates.observe(
+                observation, F.coalesce(F.max(F.lit(0)), F.lit(0)).alias("bloom_hits")
             )
-    elif isinstance(bloom, CogroupedBloom):
-        probed = probe_bloom_cogrouped(candidates, bloom.shards, bloom.params, key_col)
-    else:
-        probed = probe_cuckoo(spark, candidates, bloom, key_col)
+        return (
+            observed.join(seen.select(key_col), key_col, "left_anti"),
+            candidates.limit(0),
+        )
+
+    # Materialize the probe ONCE: both output branches consume it, and an
+    # uncached plan would re-run the whole canonicalize+probe lineage (all
+    # Arrow UDF passes) per branch.
     if observation is not None:
         probed = probed.observe(
             observation,
