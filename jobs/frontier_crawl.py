@@ -37,18 +37,22 @@ def main() -> None:
     ap.add_argument("--fresh", action="store_true", help="wipe state dir first")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkConf, SparkContext
 
     from warcbase_spark.fixtures import ensure_corpus
     from warcbase_spark.frontier.crawl import FrontierCrawl
+    from warcbase_spark.session import get_spark
 
     if args.gen_docs:
         ensure_corpus(args.corpus, n_docs=args.gen_docs)
     if args.fresh and os.path.exists(args.state):
         shutil.rmtree(args.state)
 
-    spark = SparkSession.builder.appName("frontier_crawl").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # the engine's session conf (codegen cache, AQE, Arrow, ...) on
+    # spark-submit's --master, which is in the JVM's conf: SparkConf() reads
+    # that conf only once Python is connected to the JVM
+    SparkContext._ensure_initialized()
+    spark = get_spark(app_name="frontier_crawl", master=SparkConf().get("spark.master"))
 
     t0 = time.time()
     fc = FrontierCrawl(

@@ -23,19 +23,31 @@ uncommitted directory that the resumed run simply overwrites — exactly-once
 without trusting ``_SUCCESS`` markers (SURVEY §7.3).
 
 Metrics (counter parity with ExtractLinksWac.java:77-79,479-482 and
-IngestFiles.java:68-71,277) are persisted per round in ``metrics/``.
+IngestFiles.java:68-71,277) are persisted per round in ``metrics/``: one
+row, one Parquet file, written driver-side with pyarrow (no Spark job)
+into ``metrics/round=r`` before the manifest swap, so it follows the same
+commit protocol as the Spark-written tables.
+
+A warm round pays only for its own rows: the static inputs (politeness
+budgets, aggregated robots rules, the keyed documents table) are read once
+per ``FrontierCrawl``, and the frontier and seen tables are read with a
+schema held on the object, so no round starts a footer-inference job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from warcbase_spark.frontier.robots import apply_robots
+from warcbase_spark.frontier.robots import drop_disallowed, robots_rules
 from warcbase_spark.functions.urls import canonical_cols
 from warcbase_spark.operators.extract import extract_links
 from warcbase_spark.operators.scheduler import schedule_round_combined
@@ -56,6 +68,20 @@ def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
         .withColumn("host", host)
         .withColumn("url_hash", F.xxhash64("url_key"))
     )
+
+
+# the seen deltas and base (url_key, xxhash64 of it, the round that scheduled
+# it) and the recrawl tombstones, as every writer in this module lays them out
+SEEN_SCHEMA = "url_key string, url_hash long, first_round int"
+TOMBSTONE_SCHEMA = "url_key string, ts_round int"
+
+
+def _in_driver(df: DataFrame) -> DataFrame:
+    """A small static table, collected once and served back from driver
+    memory: a DataFrame built from a pyarrow Table under Spark's
+    ``arrow.localRelationThreshold`` is a LocalRelation, so collecting it
+    runs no Spark job and broadcasting it rescans no file."""
+    return df.sparkSession.createDataFrame(df.toArrow())
 
 
 @dataclass
@@ -118,8 +144,13 @@ class FrontierCrawl:
         self.bloom_mode = check_bloom_mode(bloom_mode)
         os.makedirs(state_dir, exist_ok=True)
 
-        self.politeness = spark.read.parquet(f"{corpus_dir}/politeness.parquet")
-        self.robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
+        # static for the crawl: read once here, not once per round
+        self.politeness = _in_driver(spark.read.parquet(f"{corpus_dir}/politeness.parquet"))
+        self.robots_rules = _in_driver(
+            robots_rules(spark.read.parquet(f"{corpus_dir}/robots.parquet"))
+        )
+        self._docs: DataFrame | None = None
+        self._frontier_schema: StructType | None = None
 
     # ---------------- state paths ----------------
 
@@ -173,12 +204,26 @@ class FrontierCrawl:
     def _docs_keyed(self) -> DataFrame:
         """Documents with canonical url_key — the fetchable index. Derived
         once and persisted (at cluster scale this is the Iceberg documents
-        table's sort key, computed at ingest)."""
-        path = f"{self.state_dir}/docs_keyed"
-        if not os.path.exists(path):
-            docs = self.spark.read.parquet(f"{self.corpus_dir}/documents.parquet")
-            canonicalize_candidates(docs, "url").write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        table's sort key, computed at ingest), and read once per object."""
+        if self._docs is None:
+            path = f"{self.state_dir}/docs_keyed"
+            if not os.path.exists(path):
+                docs = self.spark.read.parquet(f"{self.corpus_dir}/documents.parquet")
+                canonicalize_candidates(docs, "url").write.mode("overwrite").parquet(path)
+            self._docs = self.spark.read.parquet(path)
+        return self._docs
+
+    def _frontier(self, rnd: int) -> DataFrame:
+        """Round ``rnd``'s frontier. The schema is inferred from the first
+        frontier this object reads — ``priority`` takes the seeds' type, int
+        or bigint — and reused after, so later rounds start no
+        footer-inference job."""
+        reader = self.spark.read
+        if self._frontier_schema is not None:
+            reader = reader.schema(self._frontier_schema)
+        frontier = reader.parquet(self._p("frontier", rnd))
+        self._frontier_schema = frontier.schema
+        return frontier
 
     def _seen(self, upto_round: int) -> DataFrame:
         """Seen set = compacted base (≤ seen_base_round) + per-round deltas
@@ -205,15 +250,15 @@ class FrontierCrawl:
             if os.path.exists(self._p("seen", r))
         ]
         if not paths:
-            return self.spark.createDataFrame([], "url_key string, url_hash long, first_round int")
-        seen = self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], SEEN_SCHEMA)
+        seen = self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)
         return self._apply_tombstones(seen)
 
     def _apply_tombstones(self, seen: DataFrame) -> DataFrame:
         tomb_dirs = self._tombstone_dirs()
         if tomb_dirs:
             tomb = (
-                self.spark.read.parquet(*tomb_dirs)
+                self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_dirs)
                 .groupBy("url_key")
                 .agg(F.max("ts_round").alias("ts_round"))
             )
@@ -266,7 +311,7 @@ class FrontierCrawl:
     def bootstrap(self) -> None:
         seeds = self.spark.read.parquet(f"{self.corpus_dir}/seeds.parquet")
         cand = canonicalize_candidates(seeds, "url").filter(F.col("url_key").isNotNull())
-        cand = apply_robots(cand, self.robots)
+        cand = drop_disallowed(cand, self.robots_rules)
         frontier = (
             cand.groupBy("url_key")
             .agg(
@@ -283,12 +328,20 @@ class FrontierCrawl:
     # ---------------- one round ----------------
 
     def run_round(self, rnd: int) -> RoundMetrics:
-        """One crawl round in THREE Spark actions (plus the tiny metrics
-        write): schedule write, seen-delta write, and the frontier write that
-        streams fetch→extract→canonicalize→robots→dedup→merge end-to-end.
-        Every counter is an ``observe()`` metric riding those passes — the
-        round-1 design ran ~10 extra ``.count()`` jobs per round, which at a
-        10k-round crawl is the dominant scheduler overhead.
+        """One crawl round in THREE write actions: schedule write, seen-delta
+        write, and the frontier write that streams fetch→extract→
+        canonicalize→robots→dedup→merge end-to-end. Every counter is an
+        ``observe()`` metric riding those passes — the round-1 design ran ~10
+        extra ``.count()`` jobs per round, which at a 10k-round crawl is the
+        dominant scheduler overhead — and the one-row metrics file is written
+        driver-side, not by a Spark job.
+
+        At the test config (local[8], 500 docs) a warm round runs 14 Spark
+        jobs: the scheduler's 3 eager jobs (range checkpoint, seq counts, the
+        politeness broadcast), the schedule write with its winner broadcast
+        (2), the seen write (1), the seen filter build (1), and the frontier
+        write with its 6 broadcasts (7). A compaction round adds the seen
+        base write.
 
         AQE is disabled for the round's actions (restored after): the round's
         stage graph is FIXED and its skew is handled explicitly (politeness
@@ -307,7 +360,7 @@ class FrontierCrawl:
     def _run_round_inner(self, rnd: int) -> RoundMetrics:
         spark = self.spark
         m = RoundMetrics(round=rnd)
-        frontier = spark.read.parquet(self._p("frontier", rnd))
+        frontier = self._frontier(rnd)
         to_unpersist: list[DataFrame] = []
 
         # one-pass politeness output: single winner broadcast; scheduled and
@@ -393,7 +446,7 @@ class FrontierCrawl:
         )
         cand = cand.filter(F.col("url_key").isNotNull())
         obs_robots = Observation()
-        cand = apply_robots(cand, self.robots).observe(
+        cand = drop_disallowed(cand, self.robots_rules).observe(
             obs_robots, F.count(F.lit(1)).alias("after_robots")
         )
 
@@ -459,9 +512,7 @@ class FrontierCrawl:
         m.bloom_hits = int(obs_dedup.get["bloom_hits"] or 0)
         n_frontier = int(obs_frontier.get["n_frontier"])
 
-        spark.createDataFrame([vars(m)]).coalesce(1).write.mode("overwrite").parquet(
-            self._p("metrics", rnd)
-        )
+        self._write_metrics(m)
         new_base = self._maybe_compact_seen(rnd)
         self._commit(rnd, n_frontier, seen_base=new_base, scheduled_delta=m.scheduled)
         if new_base is not None:
@@ -471,16 +522,30 @@ class FrontierCrawl:
             # AFTER the manifest commit so a crash before it cannot lose
             # deletes. Without pruning, every consumed tombstone dir is
             # re-read/re-joined on every round forever.
-            import shutil as _shutil
-
             for d in self._tombstone_dirs(upto_round=new_base):
-                _shutil.rmtree(d, ignore_errors=True)
+                shutil.rmtree(d, ignore_errors=True)
         # unpersist exactly this round's intermediates (winner set, joined,
         # probe pass) — never clearCache(), which would drop caller-owned
         # caches in the shared session
         for df in to_unpersist:
             df.unpersist()
         return m
+
+    def _write_metrics(self, m: RoundMetrics) -> None:
+        """Round ``m.round``'s metrics as one single-row Parquet file,
+        written driver-side (a Spark write of one row costs a Python-worker
+        job). Columns are sorted by name and all int64 — the schema
+        ``spark.createDataFrame([vars(m)])`` infers, which ``metrics()``
+        readers see. The directory is replaced whole, so a resumed round
+        leaves no file of its crashed attempt behind."""
+        row = vars(m)
+        out = self._p("metrics", m.round)
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        pq.write_table(
+            pa.table({k: pa.array([row[k]], pa.int64()) for k in sorted(row)}),
+            f"{out}/part-00000.parquet",
+        )
 
     # ---------------- full runs ----------------
 
@@ -509,7 +574,7 @@ class FrontierCrawl:
                 # recount once and refresh the manifest before deciding.
                 # (Counting only on the ==0 path keeps the hot loop free
                 # of an extra count() job per round.)
-                n = self.spark.read.parquet(self._p("frontier", rnd)).count()
+                n = self._frontier(rnd).count()
                 if n == 0:
                     break
                 self._commit(rnd - 1, n)  # rnd - 1 is the last committed round
@@ -588,9 +653,9 @@ class FrontierCrawl:
         self.unsee(urls, url_col)
         last = self.load_manifest()["last_committed_round"]
         nxt = last + 1
-        cand = apply_robots(
+        cand = drop_disallowed(
             canonicalize_candidates(urls, url_col).filter(F.col("url_key").isNotNull()),
-            self.robots,
+            self.robots_rules,
         )
         cand = cand.groupBy("url_key").agg(
             F.min(url_col).alias("url"),
@@ -601,7 +666,7 @@ class FrontierCrawl:
         )
         pending_path = self._p("frontier", nxt)
         if os.path.exists(pending_path):
-            pending = self.spark.read.parquet(pending_path)
+            pending = self._frontier(nxt)
             cand = (
                 pending.unionByName(cand)
                 .groupBy("url_key")
@@ -619,14 +684,12 @@ class FrontierCrawl:
         # BEFORE the slow Spark write completes, so a crash mid-write
         # leaves a partial/absent frontier the manifest still points at.
         # The tiny rmtree→rename window is covered by _heal_frontier.
-        import shutil as _shutil
-
         new = pending_path + ".new"
-        _shutil.rmtree(new, ignore_errors=True)
+        shutil.rmtree(new, ignore_errors=True)
         cand.write.mode("overwrite").parquet(new)
         n = self.spark.read.parquet(new).count()
         if os.path.exists(pending_path):
-            _shutil.rmtree(pending_path)
+            shutil.rmtree(pending_path)
         os.rename(new, pending_path)
         self._commit(last, n)
 

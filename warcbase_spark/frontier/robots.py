@@ -20,9 +20,17 @@ def key_path(url_key_col: str = "url_key"):
     return F.substring(c, F.instr(c, "/"), F.lit(1 << 30))
 
 
-def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
-    """Drop robots.txt targets and disallowed (host, path-prefix) URLs."""
-    rules = robots.groupBy("host").agg(F.collect_list("path_prefix").alias("prefixes"))
+def robots_rules(robots: DataFrame) -> DataFrame:
+    """The (host, path_prefix) rule table as one row per host with its
+    prefix array — the broadcast side of ``drop_disallowed``. A caller that
+    filters many batches against a static table (the crawl, every round)
+    builds this once."""
+    return robots.groupBy("host").agg(F.collect_list("path_prefix").alias("prefixes"))
+
+
+def drop_disallowed(candidates: DataFrame, rules: DataFrame) -> DataFrame:
+    """Drop robots.txt targets and URLs under a host's disallowed prefixes,
+    given the host's rules as ``robots_rules`` builds them."""
     path = key_path()
     joined = candidates.join(F.broadcast(rules), "host", "left")
     blocked = F.col("prefixes").isNotNull() & F.exists(
@@ -32,3 +40,8 @@ def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
         joined.filter(~F.col("url_key").endswith("/robots.txt") & ~blocked)
         .drop("prefixes")
     )
+
+
+def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+    """Drop robots.txt targets and disallowed (host, path-prefix) URLs."""
+    return drop_disallowed(candidates, robots_rules(robots))

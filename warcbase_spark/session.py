@@ -5,6 +5,19 @@ one we would ship to a real multi-executor cluster too (AQE on, skew-join on,
 Arrow on).  ``spark.sql.shuffle.partitions`` defaults to the core count in
 local mode — on a cluster it should be ~2-3x total cores; AQE coalesces the
 excess at runtime either way.
+
+The whole-stage codegen cache (``spark.sql.codegen.cache.maxEntries``, a
+static conf, so it is fixed here before the session starts) is sized well
+above one crawl round's working set. A ``FrontierCrawl`` round generates
+about 150 distinct classes; at Spark's default of 100 entries the LRU
+evicts them before the next round asks again, and every round would
+recompile them all in Janino (and JIT the new classes again). With room for them, a
+steady-state round compiles only the handful of classes that inline the
+round number as a literal.
+
+The driver heap defaults to 60% of the machine's memory (capped at 48g): in local mode the driver JVM is the whole engine, and a heap bigger
+than the machine lets it grow until the kernel's OOM killer ends it.
+``SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -12,6 +25,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 1000
+DRIVER_MEM_FRACTION = 0.6
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` sized to this machine: 60% of MemTotal,
+    capped at 48g, or the cap where ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(int(total_kb * DRIVER_MEM_FRACTION) // 1024, DRIVER_MEM_CAP_MB)}m"
 
 
 def get_spark(
@@ -35,7 +63,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
