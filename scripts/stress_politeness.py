@@ -13,10 +13,11 @@ Defaults 10_000_000 / 1_000_000. Prints one JSON line; paste into BENCH.md.
 
 Second mode (VERDICT r3 #9):  python scripts/stress_politeness.py seen [n] [n_hosts]
 — the combined URL-seen + recrawl stress: 10M candidates, a 3M-key seen
-set, 100k tombstones deleted from a DISTRIBUTED cuckoo filter (sharded
-build → cogrouped delete → cogrouped probe; the key set never transits
-the driver), scheduled one round, and checked for exact schedule parity
-against the jvm-bloom path over the anti-joined seen table.
+set with 100k tombstones, scheduled one round through both seen filters.
+As in the crawl, the tombstones are anti-joined out of the seen set and
+each filter is built from that live set (the cuckoo distributed: sharded
+build → cogrouped probe; the key set never transits the driver); the two
+schedules are checked for exact parity.
 """
 
 from __future__ import annotations
@@ -69,27 +70,20 @@ def _politeness(spark, n_hosts: int):
 
 def seen_recrawl_stress(n: int, n_hosts: int) -> None:
     """10M-candidate round against a 3M-key URL-seen set with 100k
-    tombstoned (recrawled) keys, run through BOTH seen structures:
+    tombstoned (recrawled) keys, run through BOTH seen filters the crawl's
+    way: an exact anti-join removes the tombstones from the seen table, and
+    ``build_seen_filter`` builds the mode's filter over that live set.
 
-    - jvm: exact anti-join removes tombstones from the seen table, then the
-      usual build_bloom_jvm prefilter + dedup_against_seen.
+    - jvm: the build_bloom_jvm prefilter + dedup_against_seen.
     - cuckoo, fully distributed: build_cuckoo_shards (sharded applyInPandas
-      build) → delete_cuckoo_cogrouped(100k tombstones) → dedup_against_seen
-      with the CogroupedCuckoo (cogrouped probe, positives verified by exact
-      anti-join) — the 10^10-key shape where neither the key set nor the
-      filter ever transits the driver.
+      build) → dedup_against_seen with the CogroupedCuckoo (cogrouped probe,
+      positives verified by exact anti-join) — the 10^10-key shape where
+      neither the key set nor the filter ever transits the driver.
 
     Both modes must schedule EXACTLY the same round (sampled-host seq
     parity + identical counts); tombstoned keys must come back fresh.
     """
-    from warcbase_spark.operators.seen import (
-        CogroupedCuckoo,
-        CuckooParams,
-        build_bloom_jvm,
-        build_cuckoo_shards,
-        dedup_against_seen,
-        delete_cuckoo_cogrouped,
-    )
+    from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="stress_seen_recrawl", master=f"local[{cpus}]")
@@ -115,16 +109,10 @@ def seen_recrawl_stress(n: int, n_hosts: int) -> None:
     }
     probe_hosts = ["hot0.org", "h3.org", "h999999.org", "h500001.org"]
     samples, counts = [], []
-    for mode in ("jvm", "cuckoo_distributed"):
+    for label, mode in (("jvm", "jvm"), ("cuckoo_distributed", "cuckoo")):
         t0 = time.monotonic()
         live_seen = seen.join(tomb, "url_key", "left_anti").localCheckpoint(eager=True)
-        if mode == "jvm":
-            bloom = build_bloom_jvm(live_seen, max(n_seen - n_tomb, 1), 0.01)
-        else:
-            p = CuckooParams.size(n_seen, n_shards=32)
-            shards = build_cuckoo_shards(seen, p).localCheckpoint(eager=True)
-            shards = delete_cuckoo_cogrouped(shards, tomb, p).localCheckpoint(eager=True)
-            bloom = CogroupedCuckoo(p, shards)
+        bloom = build_seen_filter(mode, live_seen, max(n_seen - n_tomb, 1))
         fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom)
         fresh = fresh.cache()
         n_fresh = fresh.count()
@@ -137,7 +125,7 @@ def seen_recrawl_stress(n: int, n_hosts: int) -> None:
         )
         samples.append(got)
         counts.append((n_fresh, n_sched))
-        out[mode] = {
+        out[label] = {
             "sec": round(dt, 2), "n_fresh": n_fresh, "n_scheduled": n_sched,
             "scheduled_per_sec": round(n_sched / dt, 1),
         }

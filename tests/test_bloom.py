@@ -116,34 +116,9 @@ def test_cuckoo_no_false_negatives_and_low_fpp(spark):
     assert fp / n < 0.01, fp
 
 
-def test_cuckoo_delete_unsees(spark):
-    """The capability Bloom lacks: deleting a key makes it probe-negative
-    again (recrawl-after-TTL semantics), without disturbing other keys."""
-    from warcbase_spark.operators.seen import build_cuckoo_collected, with_bloom_hashes
-
-    n = 2000
-    keys = spark.range(n).select(F.concat(F.lit("com.test/d/"), "id").alias("url_key"))
-    cuckoo = build_cuckoo_collected(keys, CuckooParams.size(n, n_shards=4))
-
-    hashed = with_bloom_hashes(keys).select(
-        F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
-        F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
-    ).toPandas()
-    h1 = hashed["h1"].to_numpy(np.int64)
-    h2 = hashed["h2"].to_numpy(np.int64)
-
-    # delete the first 100 keys
-    ok = cuckoo.delete_vec(h1[:100], h2[:100])
-    assert ok.all()  # load 0.7 → no saturated buckets in this corpus
-    after = cuckoo.contains_vec(h1, h2)
-    assert not after[:100].any()   # un-seen
-    assert after[100:].all()       # everyone else still present
-
-
 def test_cuckoo_saturation_stays_safe():
     """Overfilled filter: items that fit neither bucket saturate it —
-    membership stays 'maybe' (never a false negative), and deletes in
-    saturated buckets are refused."""
+    membership stays 'maybe' (never a false negative)."""
     from warcbase_spark.operators.seen import ShardedCuckoo
 
     rng = np.random.RandomState(3)
@@ -181,16 +156,12 @@ def test_cuckoo_distributed_build_parity(spark):
         assert np.array_equal(ds, rs), f"shard {sid} sat mismatch"
 
 
-def test_cuckoo_cogrouped_probe_and_delete_parity(spark):
-    """The 10^10-key cuckoo forms: DataFrame-resident shard tables probed
-    cogrouped (parity vs the reference's contains_vec) and deleted cogrouped
-    (parity vs the reference's delete_vec) — the key set and the filter
-    never transit the driver in this path except for the final assert
-    collects."""
-    from warcbase_spark.operators.seen import (
-        _cuckoo_row_to_shard, build_cuckoo_collected, delete_cuckoo_cogrouped,
-        with_bloom_hashes,
-    )
+def test_cuckoo_cogrouped_probe_parity(spark):
+    """The 10^10-key cuckoo form: DataFrame-resident shard tables probed
+    cogrouped, with parity vs the reference's contains_vec — the key set
+    and the filter never transit the driver in this path except for the
+    final assert collects."""
+    from warcbase_spark.operators.seen import build_cuckoo_collected, with_bloom_hashes
 
     def hashes(df):
         pdf = with_bloom_hashes(df).select(
@@ -208,35 +179,31 @@ def test_cuckoo_cogrouped_probe_and_delete_parity(spark):
     mem = build_cuckoo_collected(keys, p)
 
     # probe parity (present + absent) vs the in-memory reference lookup
-    for probe_set in (keys, absent):
-        cg = {
-            r["url_key"]: r["maybe_seen"]
-            for r in probe_cuckoo_cogrouped(probe_set, shards_df, p).collect()
-        }
-        url_keys, h1, h2 = hashes(probe_set)
-        assert cg == dict(zip(url_keys, mem.contains_vec(h1, h2).tolist()))
+    try:
+        for probe_set in (keys, absent):
+            cg = {
+                r["url_key"]: r["maybe_seen"]
+                for r in probe_cuckoo_cogrouped(probe_set, shards_df, p).collect()
+            }
+            url_keys, h1, h2 = hashes(probe_set)
+            assert cg == dict(zip(url_keys, mem.contains_vec(h1, h2).tolist()))
+    finally:
+        shards_df.unpersist()
 
-    # delete the first 200 keys cogrouped; compare vs in-memory delete_vec
-    dels = keys.limit(200)
-    new_shards = delete_cuckoo_cogrouped(shards_df, dels, p)
-    _, h1, h2 = hashes(dels)
-    mem.delete_vec(h1, h2)
-    got = {
-        int(r["shard"]): _cuckoo_row_to_shard(p, r["table"], r["sat"])
-        for r in new_shards.collect()
-    }
-    assert set(got) == set(mem.shards)
-    for sid in got:
-        assert np.array_equal(got[sid][0], mem.shards[sid][0]), sid
-        assert np.array_equal(got[sid][1], mem.shards[sid][1]), sid
 
-    # and the deleted keys really probe negative through the cogrouped path
-    gone = (
-        probe_cuckoo_cogrouped(dels, new_shards, p)
-        .filter(F.col("maybe_seen"))
-        .count()
-    )
-    assert gone == 0
+def test_jvm_bridge_failure_raises(spark, monkeypatch):
+    """A failing JVM Bloom probe is a bug on a supported (classic PySpark
+    >= 4.1) deployment: dedup_against_seen must raise, not silently fall
+    back to the unfiltered anti-join."""
+    from warcbase_spark.operators import seen as seen_mod
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("JVM bridge unavailable")
+
+    monkeypatch.setattr(seen_mod, "probe_bloom_jvm", broken)
+    seen = spark.range(10).select(F.concat(F.lit("com.test/b/"), "id").alias("url_key"))
+    with pytest.raises(RuntimeError, match="JVM bridge"):
+        dedup_against_seen(spark, seen, seen, _jvm(seen))
 
 
 def test_cuckoo_params_power_of_two_validation():

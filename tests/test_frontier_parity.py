@@ -277,17 +277,35 @@ def test_legacy_manifest_seen_rows_reseed(spark, corpus_dir):
         assert json.load(f) == m  # nothing was committed over it
 
 
-def test_broadcast_gate_crawl_parity(spark, corpus_dir, crawl):
-    """broadcast_row_limit=0 forces the shuffle-join fallbacks on BOTH gated
+def test_broadcast_gate_crawl_parity(spark, corpus_dir, crawl, monkeypatch):
+    """Gate limits of 0 force the shuffle-join fallbacks on BOTH gated
     joins (winner recovery in the scheduler, scheduled∩docs fetch): the
-    whole crawl must be bit-identical to the broadcast-path crawl."""
+    whole crawl must be bit-identical to the broadcast-path crawl. The
+    limits are read per round, so patching the module constants takes
+    effect: every round's winner join plans as a shuffled hash join."""
+    import re
+
+    from warcbase_spark.frontier import crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "WINNER_BROADCAST_ROW_LIMIT", 0)
+    monkeypatch.setattr(crawl_mod, "FETCH_BROADCAST_ROW_LIMIT", 0)
+    winner_plans = []
+    schedule = crawl_mod.schedule_round_combined
+
+    def spy(*args, **kwargs):
+        joined = schedule(*args, **kwargs)
+        winner_plans.append(joined._jdf.queryExecution().executedPlan().toString())
+        return joined
+
+    monkeypatch.setattr(crawl_mod, "schedule_round_combined", spy)
     state = "/tmp/warcbase_spark_testfix/crawlstate_nobc"
     shutil.rmtree(state, ignore_errors=True)
-    fc = FrontierCrawl(
-        spark, corpus_dir, state, max_rounds=50,
-        broadcast_row_limit=0, winner_broadcast_limit=0,
-    )
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
     fc.run()
+    assert winner_plans
+    for plan in winner_plans:
+        assert not re.search(r"BroadcastHashJoin \[url_key", plan), plan
+        assert re.search(r"ShuffledHashJoin \[url_key", plan), plan
     got = sorted((r["round"], r["seq"], r["url_key"]) for r in fc.schedule().collect())
     ref = sorted((r["round"], r["seq"], r["url_key"]) for r in crawl.schedule().collect())
     assert got == ref

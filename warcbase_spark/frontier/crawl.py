@@ -50,7 +50,10 @@ from pyspark.sql.types import StructType
 from warcbase_spark.frontier.robots import drop_disallowed, robots_rules
 from warcbase_spark.functions.urls import canonical_cols
 from warcbase_spark.operators.extract import extract_links
-from warcbase_spark.operators.scheduler import schedule_round_combined
+from warcbase_spark.operators.scheduler import (
+    DEFAULT_BROADCAST_ROW_LIMIT,
+    schedule_round_combined,
+)
 from warcbase_spark.operators.seen import (
     build_seen_filter,
     check_bloom_mode,
@@ -74,6 +77,29 @@ def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
 # it) and the recrawl tombstones, as every writer in this module lays them out
 SEEN_SCHEMA = "url_key string, url_hash long, first_round int"
 TOMBSTONE_SCHEMA = "url_key string, ts_round int"
+
+# fetch-side scheduled∩docs semi-join broadcast gate: an OOM guard
+# (10^10-frontier rounds can schedule millions of URLs); broadcast stays
+# right up to this limit because it spares the LARGE docs table a shuffle
+FETCH_BROADCAST_ROW_LIMIT = 2_000_000
+# scheduler winner-join gate: a measured perf crossover (see
+# scheduler.DEFAULT_BROADCAST_ROW_LIMIT) — the winner broadcast build is
+# driver-serial, so past ~100k winners the shuffle join is both faster and
+# the one that scales N→4N. Read per round, not bound as a default.
+WINNER_BROADCAST_ROW_LIMIT = DEFAULT_BROADCAST_ROW_LIMIT
+
+
+def _merge_frontier(rows: DataFrame) -> DataFrame:
+    """Frontier rows merged per url_key: min url, first host and url_hash,
+    max priority, earliest discovered_round. ``simulator.simulate`` applies
+    the same policy, so the crawl's parity with it depends on this."""
+    return rows.groupBy("url_key").agg(
+        F.min("url").alias("url"),
+        F.first("host").alias("host"),
+        F.first("url_hash").alias("url_hash"),
+        F.max("priority").alias("priority"),
+        F.min("discovered_round").alias("discovered_round"),
+    )
 
 
 def _in_driver(df: DataFrame) -> DataFrame:
@@ -111,8 +137,6 @@ class FrontierCrawl:
         salt_k: int = 16,
         bloom_mode: str = "jvm",
         compact_every: int = 8,
-        broadcast_row_limit: int = 2_000_000,
-        winner_broadcast_limit: int | None = None,
     ) -> None:
         self.spark = spark
         self.corpus_dir = corpus_dir
@@ -120,27 +144,10 @@ class FrontierCrawl:
         self.max_rounds = max_rounds
         self.salt_k = salt_k
         self.compact_every = compact_every
-        # fetch-side scheduled∩docs semi-join broadcast gate: an OOM guard
-        # (10^10-frontier rounds can schedule millions of URLs); broadcast
-        # stays right up to this limit because it spares the LARGE docs
-        # table a shuffle
-        self.broadcast_row_limit = broadcast_row_limit
-        # scheduler winner-join gate: a measured perf crossover (see
-        # scheduler.DEFAULT_BROADCAST_ROW_LIMIT) — the winner broadcast
-        # build is driver-serial, so past ~100k winners the shuffle join is
-        # both faster and the one that scales N→4N
-        from warcbase_spark.operators.scheduler import DEFAULT_BROADCAST_ROW_LIMIT
-
-        self.winner_broadcast_limit = (
-            DEFAULT_BROADCAST_ROW_LIMIT
-            if winner_broadcast_limit is None
-            else winner_broadcast_limit
-        )
         # the seen-set filter: "jvm" (bloom_filter_agg/might_contain, zero
-        # Python in the probe) or "cuckoo" (the 10^10-key path: the
-        # deletion-capable cuckoo's shard tables never transit the driver —
-        # candidates are routed to their shard's table by hash and probed
-        # cogrouped)
+        # Python in the probe) or "cuckoo" (the 10^10-key path: the cuckoo's
+        # shard tables never transit the driver — candidates are routed to
+        # their shard's table by hash and probed cogrouped)
         self.bloom_mode = check_bloom_mode(bloom_mode)
         os.makedirs(state_dir, exist_ok=True)
 
@@ -371,7 +378,7 @@ class FrontierCrawl:
             schedule_round_combined(
                 frontier, self.politeness, self.salt_k,
                 cache_registry=to_unpersist,
-                broadcast_row_limit=self.winner_broadcast_limit,
+                broadcast_row_limit=WINNER_BROADCAST_ROW_LIMIT,
             )
             .observe(
                 obs_round,
@@ -416,7 +423,7 @@ class FrontierCrawl:
         # the gate it degrades to a shuffle semi-join on url_key.
         docs = self._docs_keyed()
         sched_keys = scheduled.select("url_key")
-        if m.scheduled <= self.broadcast_row_limit:
+        if m.scheduled <= FETCH_BROADCAST_ROW_LIMIT:
             sched_keys = F.broadcast(sched_keys)
         obs_fetch = Observation()
         fetched = docs.join(sched_keys, "url_key", "left_semi").observe(
@@ -483,19 +490,10 @@ class FrontierCrawl:
         # next frontier = merge(spill, fresh); key-level merge keeps max
         # priority and the earliest discovery round
         obs_frontier = Observation()
-        merged = (
-            spilled.select("url_key", "url", "host", "url_hash", "priority", "discovered_round")
-            .unionByName(fresh.select("url_key", "url", "host", "url_hash", "priority", "discovered_round"))
-            .groupBy("url_key")
-            .agg(
-                F.min("url").alias("url"),
-                F.first("host").alias("host"),
-                F.first("url_hash").alias("url_hash"),
-                F.max("priority").alias("priority"),
-                F.min("discovered_round").alias("discovered_round"),
-            )
-            .observe(obs_frontier, F.count(F.lit(1)).alias("n_frontier"))
-        )
+        cols = ("url_key", "url", "host", "url_hash", "priority", "discovered_round")
+        merged = _merge_frontier(
+            spilled.select(*cols).unionByName(fresh.select(*cols))
+        ).observe(obs_frontier, F.count(F.lit(1)).alias("n_frontier"))
         # action 3 — frontier write; the whole chain above streams through
         # it once, firing obs_fetch/obs_cand/obs_robots/obs_uniq/obs_dedup/
         # obs_fresh/obs_frontier
@@ -666,18 +664,7 @@ class FrontierCrawl:
         )
         pending_path = self._p("frontier", nxt)
         if os.path.exists(pending_path):
-            pending = self._frontier(nxt)
-            cand = (
-                pending.unionByName(cand)
-                .groupBy("url_key")
-                .agg(
-                    F.min("url").alias("url"),
-                    F.first("host").alias("host"),
-                    F.first("url_hash").alias("url_hash"),
-                    F.max("priority").alias("priority"),
-                    F.min("discovered_round").alias("discovered_round"),
-                )
-            )
+            cand = _merge_frontier(self._frontier(nxt).unionByName(cand))
         # checkpoint-protocol-preserving swap: the merged frontier is fully
         # written to a sibling dir first, then swapped in with two metadata
         # ops — overwriting in place would delete the committed frontier

@@ -146,32 +146,15 @@ def schedule_round_combined(
     cache_registry: "list[DataFrame] | None" = None,
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
 ) -> DataFrame:
-    """One-pass variant: candidate columns + nullable ``seq`` (non-null =
-    scheduled this round). Consuming THIS frame once — e.g. a single
-    partitioned write, with counts taken via ``observe()`` — costs exactly
-    one winner-broadcast build and one streaming pass over the candidates;
-    materializing `scheduled` and `spilled` as separate queries builds the
-    broadcast twice (measured ~10s serial per round at 1M winners)."""
-    scheduled, _ = schedule_round(
-        candidates, politeness, salt_k, _combined=True,
-        cache_registry=cache_registry, broadcast_row_limit=broadcast_row_limit,
-    )
-    return scheduled
-
-
-def schedule_round(
-    candidates: DataFrame,
-    politeness: DataFrame,
-    salt_k: int = DEFAULT_SALT_K,
-    _combined: bool = False,
-    cache_registry: "list[DataFrame] | None" = None,
-    broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (scheduled, spilled).
+    """One-pass form: candidate columns + nullable ``seq`` (non-null =
+    scheduled this round, the deterministic global position within the
+    round). Consuming THIS frame once — e.g. a single partitioned write,
+    with counts taken via ``observe()`` — costs exactly one winner-broadcast
+    build and one pass over the candidates; materializing `scheduled` and
+    `spilled` as separate queries builds the broadcast twice (measured ~10s
+    serial per round at 1M winners).
 
     candidates: (url_key, url, host, url_hash, priority [, ...]).
-    scheduled keeps candidate columns + ``seq`` (deterministic global
-    position within the round). spilled = unscheduled, priority+1.
     """
     order = [F.desc("priority"), F.asc("url_key")]
 
@@ -220,7 +203,7 @@ def schedule_round(
     # ``broadcast_row_limit`` the join degrades to a shuffle join on
     # url_key instead (VERDICT r2 #4).
     # NOT cached: callers cache/materialize candidates, so each side is a
-    # streaming map-side join over that cache — caching `joined` would
+    # pipelined map-side join over that cache — caching `joined` would
     # re-write every wide row to the block store for no saved work.
     small = n_winners <= broadcast_row_limit
     if (
@@ -238,9 +221,22 @@ def schedule_round(
     # broadcast that the gate just ruled out, and hash beats sort-merge when
     # one side (winners) is the smaller of two large inputs
     right = F.broadcast(winners) if small else winners.hint("shuffle_hash")
-    joined = candidates.join(right, "url_key", "left")
-    if _combined:
-        return joined, joined.limit(0)
+    return candidates.join(right, "url_key", "left")
+
+
+def schedule_round(
+    candidates: DataFrame,
+    politeness: DataFrame,
+    salt_k: int = DEFAULT_SALT_K,
+    cache_registry: "list[DataFrame] | None" = None,
+    broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
+) -> tuple[DataFrame, DataFrame]:
+    """Returns (scheduled, spilled): ``schedule_round_combined`` split by
+    its ``seq``. scheduled keeps candidate columns + ``seq``; spilled =
+    unscheduled, priority+1."""
+    joined = schedule_round_combined(
+        candidates, politeness, salt_k, cache_registry, broadcast_row_limit
+    )
     scheduled = joined.filter(F.col("seq").isNotNull())
     spilled = (
         joined.filter(F.col("seq").isNull())

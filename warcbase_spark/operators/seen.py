@@ -13,12 +13,15 @@ round (``build_seen_filter`` picks one by mode):
 - JVM Bloom (``build_bloom_jvm``/``probe_bloom_jvm``, the default broadcast
   regime): Spark's own bloom_filter_agg and might_contain, zero Python.
 - Cogrouped sharded cuckoo (``build_cuckoo_shards``/``probe_cuckoo_cogrouped``,
-  the 10^10-key regime, deletion-capable via ``delete_cuckoo_cogrouped``):
-  the filter is SHARDED by ``h1 mod n_shards``, each executor builds only
-  its shard (one bucket table per shard via applyInPandas), and candidate
-  rows are routed to their shard's table by the same hash — a shuffle on an
-  evenly-distributed hash; the whole filter is never materialized in one
-  place, held by the driver, or broadcast.
+  the 10^10-key regime): the filter is SHARDED by ``h1 mod n_shards``, each
+  executor builds only its shard (one bucket table per shard via
+  applyInPandas), and candidate rows are routed to their shard's table by
+  the same hash — a shuffle on an evenly-distributed hash; the whole filter
+  is never materialized in one place, held by the driver, or broadcast.
+
+Neither filter deletes. Un-seeing a URL is a tombstone in the seen set
+(the reference deletes its HBase row); the next round's filter is rebuilt
+from the tombstone-filtered set, so an un-seen key never leaves a stale bit.
 
 Hashing: h1 = xxhash64(url_key), h2 = xxhash64(url_key, salt) — both
 computed JVM-side.
@@ -46,8 +49,8 @@ def with_bloom_hashes(df: DataFrame, key_col: str = "url_key") -> DataFrame:
 #
 # Fan et al., "Cuckoo Filter: Practically Better Than Bloom" (CoNEXT 2014):
 # b-slot buckets of f-bit fingerprints, two candidate buckets per item
-# (i2 = i1 XOR hash(fp)), supporting DELETION — the operation Bloom can't do
-# (a crawl that un-sees URLs, e.g. recrawl-after-TTL, needs it).
+# (i2 = i1 XOR hash(fp)). The paper's delete is not used: un-seeing is
+# tombstones, and every round rebuilds the filter from the live seen set.
 #
 # Engineering variant: displacement ("kicking") is an inherently sequential
 # pointer chase, so the build here is fully VECTORIZED 2-choice placement
@@ -88,8 +91,7 @@ class CuckooParams:
 
 def _cuckoo_parts(h1: np.ndarray, h2: np.ndarray, p: CuckooParams):
     """(shard, fp, i1, i2) from the two 64-bit hashes. fp is nonzero
-    (0 marks an empty slot); i2 is derivable from (i1, fp) alone, which is
-    what makes deletion and the saturation fallback work."""
+    (0 marks an empty slot); i2 is i1's partner bucket, i1 XOR h(fp)."""
     shard = np.mod(h1, p.n_shards).astype(np.int64)
     fp = (np.mod(h2, (1 << p.fp_bits) - 1) + 1).astype(np.uint16)
     m = p.buckets_per_shard
@@ -120,31 +122,6 @@ def _place(table: np.ndarray, sat: np.ndarray, fp: np.ndarray, idx: np.ndarray,
     if spill_mask is not None:
         sat[idx[overflow & spill_mask]] = True
     return overflow
-
-
-def _delete_one_copy(table: np.ndarray, fp: np.ndarray, idx: np.ndarray) -> np.ndarray:
-    """Vectorized single-bucket delete pass: remove one stored copy of
-    ``fp`` from bucket ``idx`` per request, serving duplicate requests for
-    the same (bucket, fp) from distinct slots. Returns per-request success.
-
-    Mechanics mirror ``_place``: lexsort groups identical (bucket, fp)
-    requests, rank-within-group r claims the r-th matching slot of a
-    PRE-PASS snapshot of the bucket, so the fancy-index zeroing is
-    race-free and each stored copy is consumed at most once."""
-    order = np.lexsort((fp, idx))
-    sidx, sfp = idx[order], fp[order]
-    first = np.ones(len(sidx), dtype=bool)
-    first[1:] = (sidx[1:] != sidx[:-1]) | (sfp[1:] != sfp[:-1])
-    group_start = np.maximum.accumulate(np.where(first, np.arange(len(sidx)), 0))
-    rank = np.arange(len(sidx)) - group_start
-    matches = table[sidx] == sfp[:, None]          # pre-pass snapshot
-    succ = rank < matches.sum(axis=1)
-    cum = np.cumsum(matches, axis=1)
-    slot = np.argmax(cum == (rank + 1)[:, None], axis=1)
-    table[sidx[succ], slot[succ]] = 0
-    out = np.zeros(len(fp), dtype=bool)
-    out[order[succ]] = True
-    return out
 
 
 @dataclass
@@ -188,46 +165,6 @@ class ShardedCuckoo:
             )
             out[mask] = hit
         return out
-
-    def delete_vec(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """Remove ONE stored copy of each item's fingerprint (the cuckoo
-        capability Bloom lacks). Returns per-item success. Deletes are exact
-        only while the touched buckets never saturated — a saturated bucket
-        may have dropped the fingerprint at build time, so removal there is
-        refused (stays conservatively 'maybe seen').
-
-        Fully vectorized (no per-row Python): requests are grouped by
-        (bucket, fp) with a lexsort, each group consumes up to its bucket's
-        stored-copy count in the primary pass, and only the remainder falls
-        through to the secondary bucket — the same try-i1-then-i2 order as
-        the scalar definition. The one divergence from a strictly
-        sequential scan: when two DIFFERENT requests share a fingerprint
-        and one's secondary bucket is the other's primary, which of them
-        claims the single stored copy can differ. Total copies removed is
-        identical, and the miss direction is conservative (the unserved
-        key stays 'maybe seen'; the exact anti-join still rules)."""
-        p = self.params
-        shard, fp, i1, i2 = _cuckoo_parts(h1, h2, p)
-        ok = np.zeros(len(h1), dtype=bool)
-        for sid in np.unique(shard):
-            entry = self.shards.get(int(sid))
-            if entry is None:
-                continue
-            table, sat = entry
-            mask = shard == sid
-            f = fp[mask].astype(table.dtype)
-            a, b = i1[mask], i2[mask]
-            valid = ~(sat[a] | sat[b])
-            succ = np.zeros(int(mask.sum()), dtype=bool)
-            if valid.any():
-                s1 = _delete_one_copy(table, f[valid], a[valid])
-                rem = ~s1
-                if rem.any():
-                    s2 = _delete_one_copy(table, f[valid][rem], b[valid][rem])
-                    s1[np.nonzero(rem)[0][s2]] = True
-                succ[valid] = s1
-            ok[mask] = succ
-        return ok
 
 
 def _cuckoo_routed(df: DataFrame, params: CuckooParams, key_col: str, *keep: str) -> DataFrame:
@@ -338,43 +275,12 @@ def probe_cuckoo_cogrouped(
     )
 
 
-def delete_cuckoo_cogrouped(
-    shards: DataFrame,
-    deletes: DataFrame,
-    params: CuckooParams,
-    key_col: str = "url_key",
-) -> DataFrame:
-    """Distributed deletion: route delete-keys to their shard, cogroup with
-    the shard's (table, sat) row, apply the vectorized ``delete_vec``
-    kernel inside the task, and emit the UPDATED shard row — the filter
-    stays a DataFrame end to end (write the result over the old shard
-    table). Shards receiving no deletes pass through unchanged."""
-    p = params
-
-    def apply_deletes(del_rows: pd.DataFrame, shard_rows: pd.DataFrame) -> pd.DataFrame:
-        if shard_rows.empty:
-            return pd.DataFrame(columns=["shard", "table", "sat"])
-        sub = _one_shard(p, shard_rows)
-        if not del_rows.empty:
-            sub.delete_vec(
-                del_rows["h1"].to_numpy(np.int64), del_rows["h2"].to_numpy(np.int64)
-            )
-        sid = int(shard_rows["shard"].iloc[0])
-        return pd.DataFrame([_cuckoo_shard_to_row(sid, *sub.shards[sid])])
-
-    return (
-        _cuckoo_routed(deletes, p, key_col)
-        .groupBy("shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(apply_deletes, schema=_CUCKOO_SHARD_SCHEMA)
-    )
-
-
 @dataclass
 class CogroupedCuckoo:
     """The partitioned-regime seen filter kept as a DataFrame — never
     driver-held, never broadcast. ``shards`` is the (shard, table, sat)
-    table from ``build_cuckoo_shards`` (or read back from parquet)."""
+    table from ``build_cuckoo_shards``, built over the tombstone-filtered
+    seen set; it is rebuilt, never updated in place."""
     params: CuckooParams
     shards: DataFrame
 
@@ -415,8 +321,8 @@ def probe_bloom_jvm(df: DataFrame, bloom_bytes: bytes, key_col: str = "url_key",
 
     Requires classic (non-Connect) PySpark 4.x: bridges through
     ``org.apache.spark.sql.classic.ExpressionUtils``, which is version-locked
-    internals. Callers (``dedup_against_seen``) catch failures and fall back
-    to the exact anti-join, so other deployments degrade, not crash."""
+    internals. A bridge failure raises: ``dedup_against_seen`` does not
+    fall back, since on a supported deployment it is a bug."""
     from pyspark.sql.column import Column as PyCol
 
     jvm = df.sparkSession._jvm
@@ -464,8 +370,8 @@ def dedup_against_seen(
 ) -> tuple[DataFrame, DataFrame]:
     """Exact URL-seen dedup with Bloom prefilter.
 
-    Returns (fresh, bloom_stats_df). ``fresh`` = candidates whose key is NOT
-    in seen. Bloom negatives skip the join entirely (the common case in a
+    Returns (fresh, maybe). ``fresh`` = candidates whose key is NOT in seen;
+    ``maybe`` = the filter-positive candidates (empty without a filter). Bloom negatives skip the join entirely (the common case in a
     growing crawl); Bloom positives are verified with a left_anti join so
     false positives cannot drop URLs — exact semantics of the reference's
     ``fst.getID(url) != -1`` gate (ExtractLinksWac.java:159,177).
@@ -473,6 +379,7 @@ def dedup_against_seen(
     ``bloom``: JVM Bloom bytes (``build_bloom_jvm``), a ``CogroupedCuckoo``,
     or None for the plain anti-join — ``build_seen_filter`` makes either
     filter. ``spark`` is unused; it stays so positional callers keep working.
+    A JVM-bridge failure in ``probe_bloom_jvm`` propagates.
 
     ``observation``: optional pyspark.sql.Observation; when given, a
     ``bloom_hits`` metric (count of Bloom-positive rows) is attached to the
@@ -484,18 +391,7 @@ def dedup_against_seen(
     ``spark.catalog.clearCache()``, which would drop caller-owned caches).
     """
 
-    probed = None
-    if isinstance(bloom, CogroupedCuckoo):
-        probed = probe_cuckoo_cogrouped(candidates, bloom.shards, bloom.params, key_col)
-    elif bloom is not None:
-        try:
-            probed = probe_bloom_jvm(candidates, bloom, key_col)
-        except Exception:
-            # JVM bridge unavailable (Spark Connect, or the 'classic'
-            # internals moved in a future Spark) → exact anti-join, which is
-            # always correct, just without the prefilter speedup.
-            pass
-    if probed is None:
+    if bloom is None:
         observed = candidates
         if observation is not None:
             # null-safe: max() over ZERO rows is NULL, and a late-crawl round
@@ -508,6 +404,11 @@ def dedup_against_seen(
             observed.join(seen.select(key_col), key_col, "left_anti"),
             candidates.limit(0),
         )
+
+    if isinstance(bloom, CogroupedCuckoo):
+        probed = probe_cuckoo_cogrouped(candidates, bloom.shards, bloom.params, key_col)
+    else:
+        probed = probe_bloom_jvm(candidates, bloom, key_col)
 
     # Materialize the probe ONCE: both output branches consume it, and an
     # uncached plan would re-run the whole canonicalize+probe lineage (all

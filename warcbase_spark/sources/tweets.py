@@ -2,7 +2,7 @@
 
 Reference: ``RecordLoader.loadTweets`` (RecordLoader.scala:48-50) is a
 three-step pipeline over a text file: (1) drop lines starting with
-``{"delete":`` (streaming-API tombstones), (2) parse each line as JSON,
+``{"delete":`` (the Twitter API's delete notices), (2) parse each line as JSON,
 (3) drop parse failures. Accessors live in TweetUtils.scala:9-18.
 
 Spark-first shape: the tombstone drop is a Column ``startswith`` predicate
