@@ -1,5 +1,6 @@
 """Politeness scheduler: budget enforcement, determinism, salt invariance."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.operators.scheduler import schedule_round, schedule_round_combined
@@ -159,6 +160,22 @@ def test_with_budgets_default_rows(spark):
     assert _budgets(spark, [("h0.org", 7)]) == {"h0.org": 7, "h1.org": 1}
     assert _budgets(spark, [("h0.org", 7), (None, 9), ("*", 2)]) == {"h0.org": 7, "h1.org": 2}
     assert _budgets(spark, []) == {"h0.org": 1, "h1.org": 1}
+    assert _budgets(spark, [(None, 9), (None, 8), ("*", 2)]) == {"h0.org": 2, "h1.org": 2}
+    # a duplicate row would rank a URL once per row, its budget left to
+    # row order: rejected, naming the host
+    with pytest.raises(ValueError, match="'h0.org'"):
+        _budgets(spark, [("h0.org", 7), ("h1.org", 3), ("h0.org", 5)])
+    with pytest.raises(ValueError, match=r"'\*'"):
+        _budgets(spark, [("*", 2), ("h0.org", 7), ("*", 4)])
+
+
+def test_winner_set_not_cached(spark):
+    """The winner set is read once, by the output join, from
+    add_global_seq's local checkpoint; a cache over it would pin a second
+    copy for one read. Over uncached candidates the plan holds no cache."""
+    out = schedule_round_combined(_mk_candidates(spark), _mk_politeness(spark))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_politeness_read_once(spark, tmp_path):

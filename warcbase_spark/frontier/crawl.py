@@ -53,6 +53,7 @@ from warcbase_spark.operators.extract import extract_links
 from warcbase_spark.operators.scheduler import (
     DEFAULT_BROADCAST_ROW_LIMIT,
     schedule_round_combined,
+    split_schedule,
 )
 from warcbase_spark.operators.seen import (
     build_seen_filter,
@@ -388,12 +389,7 @@ class FrontierCrawl:
             .cache()
         )
         to_unpersist.append(joined)
-        scheduled = joined.filter(F.col("seq").isNotNull())
-        spilled = (
-            joined.filter(F.col("seq").isNull())
-            .drop("seq")
-            .withColumn("priority", F.col("priority") + F.lit(1))
-        )
+        scheduled, spilled = split_schedule(joined)
 
         # action 1 — schedule write; materializes the cache, fires obs_round.
         # Written with NATURAL partitioning: Σ budgets can be millions of

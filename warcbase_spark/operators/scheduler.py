@@ -22,6 +22,8 @@ construction. AQE skew-join handling remains on as a backstop.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -96,8 +98,18 @@ def with_budgets(candidates: DataFrame, politeness: DataFrame) -> DataFrame:
     join, so the candidate side is never shuffled. Reading
     the table again as the broadcast side would rescan a parquet input, or
     start Python workers for a list-built one, every round. The driver holds
-    the whole table for the broadcast either way."""
+    the whole table for the broadcast either way.
+
+    A host listed twice, or more than one '*' row, raises ``ValueError``:
+    each duplicate row would fan out the budget join, ranking a URL once
+    per row, with the winning budget left to row order."""
     rows = politeness.select("host", "budget").collect()
+    for host, n in Counter(r["host"] for r in rows if r["host"] is not None).items():
+        if n > 1:
+            raise ValueError(
+                f"politeness table has {n} rows for host {host!r}; each host, "
+                "and the '*' default, may appear once"
+            )
     default_budget = next((r["budget"] for r in rows if r["host"] == "*"), 1)
     per_host = [r for r in rows if r["host"] is not None and r["host"] != "*"]
     budget_type = to_arrow_type(politeness.schema["budget"].dataType)
@@ -155,6 +167,11 @@ def schedule_round_combined(
     serial per round at 1M winners).
 
     candidates: (url_key, url, host, url_hash, priority [, ...]).
+
+    cache_registry receives nothing: the scheduler caches no frame of its
+    own. The winner set is read once, by the output join, straight from
+    ``add_global_seq``'s local checkpoint. The parameter stays so callers
+    can pass one list for every cache of a round.
     """
     order = [F.desc("priority"), F.asc("url_key")]
 
@@ -189,10 +206,8 @@ def schedule_round_combined(
     # rows per round at 10^10-frontier scale). Its counts job yields the
     # exact winner count as a side effect — free broadcast gate.
     tot: list[int] = []
-    winners = add_global_seq(winners, order, total_out=tot).select("url_key", "seq").cache()
+    winners = add_global_seq(winners, order, total_out=tot).select("url_key", "seq")
     n_winners = tot[0]
-    if cache_registry is not None:
-        cache_registry.append(winners)
 
     # winner set is Σ budgets rows — ONE left join over the full-width
     # candidates covers both outputs (matched → scheduled, unmatched →
@@ -202,9 +217,10 @@ def schedule_round_combined(
     # rows, where an unconditional broadcast OOMs the driver — past
     # ``broadcast_row_limit`` the join degrades to a shuffle join on
     # url_key instead (VERDICT r2 #4).
-    # NOT cached: callers cache/materialize candidates, so each side is a
-    # pipelined map-side join over that cache — caching `joined` would
-    # re-write every wide row to the block store for no saved work.
+    # NOT cached: callers cache/materialize candidates, and the winner set
+    # is already checkpointed, so each side is a pipelined map-side join —
+    # caching `joined` would re-write every wide row to the block store for
+    # no saved work.
     small = n_winners <= broadcast_row_limit
     if (
         not small
@@ -217,9 +233,9 @@ def schedule_round_combined(
         n_cand = candidates.count()
         small = n_cand > 0 and n_winners >= BROADCAST_WINNER_RATIO * n_cand
     # fallback pins shuffle_hash (not just "no broadcast hint"): the
-    # planner's size estimate of the cached winner set could still choose a
-    # broadcast that the gate just ruled out, and hash beats sort-merge when
-    # one side (winners) is the smaller of two large inputs
+    # planner's size estimate of the checkpointed winner set could still
+    # choose a broadcast that the gate just ruled out, and hash beats
+    # sort-merge when one side (winners) is the smaller of two large inputs
     right = F.broadcast(winners) if small else winners.hint("shuffle_hash")
     return candidates.join(right, "url_key", "left")
 
@@ -232,11 +248,18 @@ def schedule_round(
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (scheduled, spilled): ``schedule_round_combined`` split by
-    its ``seq``. scheduled keeps candidate columns + ``seq``; spilled =
-    unscheduled, priority+1."""
-    joined = schedule_round_combined(
+    ``split_schedule``."""
+    return split_schedule(schedule_round_combined(
         candidates, politeness, salt_k, cache_registry, broadcast_row_limit
-    )
+    ))
+
+
+def split_schedule(joined: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The spill policy, over ``schedule_round_combined``'s output:
+    scheduled = rows with a ``seq``, candidate columns + ``seq``; spilled =
+    rows without one, ``seq`` dropped and priority+1. Lazy: two filters
+    over ``joined``, so a caller that caches or observes ``joined`` keeps
+    both reading that one frame."""
     scheduled = joined.filter(F.col("seq").isNotNull())
     spilled = (
         joined.filter(F.col("seq").isNull())
