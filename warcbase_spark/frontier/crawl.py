@@ -378,7 +378,6 @@ class FrontierCrawl:
         joined = (
             schedule_round_combined(
                 frontier, self.politeness, self.salt_k,
-                cache_registry=to_unpersist,
                 broadcast_row_limit=WINNER_BROADCAST_ROW_LIMIT,
             )
             .observe(

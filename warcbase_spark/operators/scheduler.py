@@ -168,10 +168,8 @@ def schedule_round_combined(
 
     candidates: (url_key, url, host, url_hash, priority [, ...]).
 
-    cache_registry receives nothing: the scheduler caches no frame of its
-    own. The winner set is read once, by the output join, straight from
-    ``add_global_seq``'s local checkpoint. The parameter stays so callers
-    can pass one list for every cache of a round.
+    cache_registry: accepted and ignored (the scheduler caches nothing);
+    kept because bench.py and perfbench pass it.
     """
     order = [F.desc("priority"), F.asc("url_key")]
 
@@ -244,13 +242,13 @@ def schedule_round(
     candidates: DataFrame,
     politeness: DataFrame,
     salt_k: int = DEFAULT_SALT_K,
-    cache_registry: "list[DataFrame] | None" = None,
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (scheduled, spilled): ``schedule_round_combined`` split by
     ``split_schedule``."""
     return split_schedule(schedule_round_combined(
-        candidates, politeness, salt_k, cache_registry, broadcast_row_limit
+        candidates, politeness, salt_k,
+        broadcast_row_limit=broadcast_row_limit,
     ))
 
 

@@ -16,16 +16,21 @@ steady-state round compiles only the handful of classes that inline the
 round number as a literal.
 
 In-memory caches are stored uncompressed
-(``spark.sql.inMemoryColumnarStorage.compressed=false``). Every cache the
-engine and its callers build (the seen probe pass, the crawl's joined round
-frame, a round's candidates) is written once, read one to three times within
-the same second, and dropped. Compressing one runs a statistics pass over
-every column of every cached batch (``gatherCompressibilityStats``, 26% of
-the executor CPU samples of warm 340k-URL scheduler rounds), yet the wide
-columns (``url``, ``url_key``) are unique per row, so their dictionary is
-rejected and they are stored raw anyway: the 340k-row candidate cache is
-33.6 MB compressed against 38.5 MB uncompressed. ``extra_conf`` can still
-turn compression back on.
+(``spark.sql.inMemoryColumnarStorage.compressed=false``), a choice measured
+on the frontier round's caches (the seen probe pass, the crawl's joined
+round frame, a round's candidates and fresh rows). Each is written once,
+read one to three times within the same second, and dropped. Compressing
+one runs a statistics pass over every column of every cached batch
+(``gatherCompressibilityStats``, 26% of the executor CPU samples of warm
+340k-URL scheduler rounds), yet the wide columns (``url``, ``url_key``) are
+unique per row, so their dictionary is rejected and they are stored raw
+anyway: the 340k-row candidate cache is 33.6 MB compressed against 38.5 MB
+uncompressed. The session-wide default also reaches caches that are read
+many times or hold narrow id columns. PageRank's edges and BFS's links
+took no less CPU uncompressed at sf0.1 and grew 2.6-2.8x; the training
+pipeline's shingle and signature caches are not measured. ``extra_conf``,
+or setting this runtime conf while a cache is built, turns compression
+back on.
 
 The driver heap defaults to 60% of the machine's memory (capped at 48g): in local mode the driver JVM is the whole engine, and a heap bigger
 than the machine lets it grow until the kernel's OOM killer ends it.
