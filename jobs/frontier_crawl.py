@@ -3,12 +3,13 @@
 Usage:
     spark-submit --master local[N] --py-files warcbase_spark.zip \
         jobs/frontier_crawl.py --corpus <dir> --state <dir> \
-        [--max-rounds R] [--bloom-mode jvm|cuckoo] \
-        [--salt-k K] [--gen-docs N]
+        [--max-rounds R] [--salt-k K] [--gen-docs N]
 
 ``--gen-docs N`` synthesizes the deterministic fixture corpus (seed=42)
 into --corpus first, so the job is self-contained for benchmarking.
 Prints one JSON line with totals + throughput (scheduled URLs/sec).
+The URL-seen filter follows the seen set's size (a JVM Bloom up to
+``operators.seen.SEEN_BLOOM_MAX_KEYS`` keys, the cogrouped cuckoo past it).
 """
 
 from __future__ import annotations
@@ -26,13 +27,6 @@ def main() -> None:
     ap.add_argument("--state", required=True)
     ap.add_argument("--max-rounds", type=int, default=1000)
     ap.add_argument("--salt-k", type=int, default=16)
-    ap.add_argument(
-        "--bloom-mode",
-        default="jvm",
-        choices=["jvm", "cuckoo"],
-        help="URL-seen prefilter: broadcast JVM Bloom, or the partitioned "
-        "cogrouped cuckoo for seen sets too large to broadcast",
-    )
     ap.add_argument("--gen-docs", type=int, default=0)
     ap.add_argument("--fresh", action="store_true", help="wipe state dir first")
     args = ap.parse_args()
@@ -61,7 +55,6 @@ def main() -> None:
         args.state,
         max_rounds=args.max_rounds,
         salt_k=args.salt_k,
-        bloom_mode=args.bloom_mode,
     )
     metrics = fc.run()
     elapsed = time.time() - t0

@@ -11,13 +11,10 @@ per-round cardinalities scaled to one box — to empirically confirm
 Usage:  python scripts/stress_politeness.py [n_candidates] [n_hosts]
 Defaults 10_000_000 / 1_000_000. Prints one JSON line; paste into BENCH.md.
 
-Second mode (VERDICT r3 #9):  python scripts/stress_politeness.py seen [n] [n_hosts]
-— the combined URL-seen + recrawl stress: 10M candidates, a 3M-key seen
-set with 100k tombstones, scheduled one round through both seen filters.
-As in the crawl, the tombstones are anti-joined out of the seen set and
-each filter is built from that live set (the cuckoo distributed: sharded
-build → cogrouped probe; the key set never transits the driver); the two
-schedules are checked for exact parity.
+Second mode:  python scripts/stress_politeness.py seen [n_seen] [n] [n_hosts]
+— the URL-seen regime sweep: build/probe CPU-s and measured FPP of both
+seen filters over an n_seen-key seen set with recrawl tombstones (see
+``seen_recrawl_stress``). Defaults 3_000_000 / 2_000_000 / 1_000_000.
 """
 
 from __future__ import annotations
@@ -35,14 +32,16 @@ from warcbase_spark.operators.scheduler import schedule_round  # noqa: E402
 from warcbase_spark.session import get_spark  # noqa: E402
 
 
-def _candidates(spark, n: int, n_hosts: int):
+def _candidates(ids, n_hosts: int):
+    """Candidate rows for the ``id`` column of ``ids``; one in ten lands on
+    two hot hosts."""
     hot = F.col("id") % 10 == 0
     host = F.when(
         hot, F.concat(F.lit("hot"), (F.col("id") % 2).cast("string"), F.lit(".org"))
     ).otherwise(
         F.concat(F.lit("h"), (F.pmod(F.col("id") * 2654435761, F.lit(n_hosts))).cast("string"), F.lit(".org"))
     )
-    return spark.range(n).select(
+    return ids.select(
         F.col("id"),
         F.concat(F.lit("org."), host, F.lit("/p/"), F.col("id").cast("string")).alias("url_key"),
         F.concat(F.lit("http://"), host, F.lit("/p/"), F.col("id").cast("string")).alias("url"),
@@ -68,74 +67,127 @@ def _politeness(spark, n_hosts: int):
     )
 
 
-def seen_recrawl_stress(n: int, n_hosts: int) -> None:
-    """10M-candidate round against a 3M-key URL-seen set with 100k
-    tombstoned (recrawled) keys, run through BOTH seen filters the crawl's
-    way: an exact anti-join removes the tombstones from the seen table, and
-    ``build_seen_filter`` builds the mode's filter over that live set.
+def _tree_cpu_s() -> float:
+    """CPU seconds (user + system) of this process and every live
+    descendant (the JVM and its Python workers), plus the children each has
+    reaped."""
+    stats = {}
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        stats[int(pid)] = (int(fields[1]), sum(int(x) for x in fields[11:15]))
+    kids: dict[int, list[int]] = {}
+    for pid, (ppid, _) in stats.items():
+        kids.setdefault(ppid, []).append(pid)
+    ticks, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        ticks += stats.get(pid, (0, 0))[1]
+        todo += kids.get(pid, [])
+    return ticks / os.sysconf("SC_CLK_TCK")
 
-    - jvm: the build_bloom_jvm prefilter + dedup_against_seen.
-    - cuckoo, fully distributed: build_cuckoo_shards (sharded applyInPandas
-      build) → dedup_against_seen with the CogroupedCuckoo (cogrouped probe,
-      positives verified by exact anti-join) — the 10^10-key shape where
-      neither the key set nor the filter ever transits the driver.
 
-    Both modes must schedule EXACTLY the same round (sampled-host seq
-    parity + identical counts); tombstoned keys must come back fresh.
+def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
+    """One round of ``n`` candidates against an ``n_seen``-key URL-seen set
+    with 1% of the candidates tombstoned (recrawled), through BOTH seen
+    filters the crawl's way: an exact anti-join removes the tombstones from
+    the seen table, and each filter is built over that live set at
+    ``BLOOM_FPP`` / ``FILTER_SHARDS``.
+
+    - bloom: ``build_bloom_jvm`` + ``dedup_against_seen`` (JVM probe).
+    - cuckoo: ``build_cuckoo_shards`` (sharded applyInPandas build, cached
+      so its CPU is counted apart from the probe) → ``dedup_against_seen``
+      with the ``CogroupedCuckoo`` (cogrouped probe).
+
+    Seen key i is candidate 10i+1, so the seen set is generated, not held:
+    with n_seen > n/10 the keys past the candidates only grow the filter.
+    FPP = (filter positives − truly seen candidates) / truly fresh
+    candidates, both counted with a plain anti-join. Both regimes must
+    schedule EXACTLY the same round (sampled-host seq parity + identical
+    counts); tombstoned keys must come back fresh.
     """
-    from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
+    from pyspark.sql import Observation
+
+    from warcbase_spark.operators.seen import (
+        BLOOM_FPP,
+        FILTER_SHARDS,
+        CogroupedCuckoo,
+        CuckooParams,
+        build_bloom_jvm,
+        build_cuckoo_shards,
+        dedup_against_seen,
+    )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="stress_seen_recrawl", master=f"local[{cpus}]")
 
-    cand = _candidates(spark, n, n_hosts).localCheckpoint(eager=True)
-    seen = (
-        cand.filter(F.col("id") % 10 == 1)
-        .select("url_key", "url_hash")
-        .localCheckpoint(eager=True)
-    )
+    cand = _candidates(spark.range(n), n_hosts).localCheckpoint(eager=True)
+    seen_ids = spark.range(n_seen).select((F.col("id") * 10 + 1).alias("id"))
+    seen = _candidates(seen_ids, n_hosts).select("url_key", "url_hash")
     tomb = (
-        cand.filter((F.col("id") % 10 == 1) & (F.col("id") % 100 == 1))
+        cand.filter(F.col("id") % 100 == 1)
+        .join(seen.select("url_key"), "url_key", "left_semi")
         .select("url_key")
         .localCheckpoint(eager=True)
     )
-    n_seen, n_tomb = seen.count(), tomb.count()
-    pol = _politeness(spark, n_hosts)
+    n_tomb = tomb.count()
+    n_seen_cand = cand.join(seen, "url_key", "left_semi").count()
+    live_seen = seen.join(F.broadcast(tomb), "url_key", "left_anti")
+    n_live = n_seen - n_tomb
     cand_in = cand.drop("id")
+    n_exact_fresh = cand_in.join(live_seen, "url_key", "left_anti").count()
+    pol = _politeness(spark, n_hosts)
 
     out: dict = {
         "mode": "seen_recrawl", "n_candidates": n, "n_hosts": n_hosts,
-        "n_seen": n_seen, "n_tombstones": n_tomb, "cpus": cpus,
+        "n_seen": n_seen, "n_seen_candidates": n_seen_cand,
+        "n_tombstones": n_tomb, "n_fresh_exact": n_exact_fresh, "cpus": cpus,
     }
     probe_hosts = ["hot0.org", "h3.org", "h999999.org", "h500001.org"]
     samples, counts = [], []
-    for label, mode in (("jvm", "jvm"), ("cuckoo_distributed", "cuckoo")):
-        t0 = time.monotonic()
-        live_seen = seen.join(tomb, "url_key", "left_anti").localCheckpoint(eager=True)
-        bloom = build_seen_filter(mode, live_seen, max(n_seen - n_tomb, 1))
-        fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom)
-        fresh = fresh.cache()
-        n_fresh = fresh.count()
+    for regime in ("bloom", "cuckoo"):
+        for _rep in range(2):  # the second run is warm; it is the one kept
+            spark.catalog.clearCache()
+            cpu0, t0 = _tree_cpu_s(), time.monotonic()
+            if regime == "bloom":
+                bloom = build_bloom_jvm(live_seen, n_live, BLOOM_FPP)
+                size = len(bloom)
+            else:
+                params = CuckooParams.size(n_live, FILTER_SHARDS)
+                shards = build_cuckoo_shards(live_seen, params).cache()
+                size = shards.select(F.sum(F.length("table") + F.length("sat"))).first()[0]
+                bloom = CogroupedCuckoo(params, shards)
+            cpu1 = _tree_cpu_s()
+            obs = Observation()
+            fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom, observation=obs)
+            fresh = fresh.cache()
+            n_fresh = fresh.count()
+            cpu2, dt = _tree_cpu_s(), time.monotonic() - t0
+        positives = int(obs.get["bloom_hits"])
         sched, _sp = schedule_round(fresh, pol)
         n_sched = sched.count()
-        dt = time.monotonic() - t0
         got = sorted(
             (r["seq"], r["url_key"])
             for r in sched.filter(F.col("host").isin(probe_hosts)).collect()
         )
         samples.append(got)
         counts.append((n_fresh, n_sched))
-        out[label] = {
-            "sec": round(dt, 2), "n_fresh": n_fresh, "n_scheduled": n_sched,
-            "scheduled_per_sec": round(n_sched / dt, 1),
+        out[regime] = {
+            "filter_bytes": size,
+            "build_cpu_s": round(cpu1 - cpu0, 2), "probe_cpu_s": round(cpu2 - cpu1, 2),
+            "wall_s": round(dt, 2), "positives": positives,
+            "fpp": round((positives - (n - n_exact_fresh)) / max(n_exact_fresh, 1), 5),
+            "n_fresh": n_fresh, "n_scheduled": n_sched,
         }
-        spark.catalog.clearCache()
+    spark.catalog.clearCache()
     out["fresh_and_sched_counts_match"] = counts[0] == counts[1]
+    out["fresh_exact"] = counts[0][0] == n_exact_fresh
     out["sampled_schedule_parity"] = samples[0] == samples[1]
-    # tombstoned keys must be schedulable again in both modes
-    out["tombstones_back_fresh"] = (
-        counts[0][0] == n - n_seen + n_tomb == counts[1][0]
-    )
+    # tombstoned keys must be schedulable again in both regimes
+    out["tombstones_back_fresh"] = n_exact_fresh == n - n_seen_cand + n_tomb
     print(json.dumps(out))
 
 
@@ -216,8 +268,9 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "seen":
         seen_recrawl_stress(
-            int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000,
-            int(sys.argv[3]) if len(sys.argv) > 3 else 1_000_000,
+            int(sys.argv[2]) if len(sys.argv) > 2 else 3_000_000,
+            int(sys.argv[3]) if len(sys.argv) > 3 else 2_000_000,
+            int(sys.argv[4]) if len(sys.argv) > 4 else 1_000_000,
         )
         return
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
@@ -227,7 +280,7 @@ def main() -> None:
 
     # 10% of candidates on two hot hosts, the rest spread over n_hosts;
     # frozen so both modes see identical rows
-    cand = _candidates(spark, n, n_hosts).drop("id").localCheckpoint(eager=True)
+    cand = _candidates(spark.range(n), n_hosts).drop("id").localCheckpoint(eager=True)
     # ~1M-host politeness dimension: every 3rd host gets an explicit budget
     pol = _politeness(spark, n_hosts)
 

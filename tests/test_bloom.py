@@ -7,14 +7,29 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from warcbase_spark.operators import seen as seen_mod
 from warcbase_spark.operators.seen import (
+    BLOOM_CAP_CONFS,
     CogroupedCuckoo,
     CuckooParams,
+    ShardedCuckoo,
+    _cuckoo_routed,
     build_bloom_jvm,
     build_cuckoo_shards,
+    build_seen_filter,
     dedup_against_seen,
     probe_cuckoo_cogrouped,
 )
+
+
+def build_cuckoo_collected(df, params: CuckooParams) -> ShardedCuckoo:
+    """Single-process reference build: collects every (h1, h2) pair to the
+    driver. ``build_cuckoo_shards`` must produce bit-identical shard
+    tables."""
+    pdf = _cuckoo_routed(df, params, "url_key").toPandas()
+    return ShardedCuckoo.build(
+        pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64), params
+    )
 
 
 def _jvm(seen):
@@ -119,8 +134,6 @@ def test_cuckoo_no_false_negatives_and_low_fpp(spark):
 def test_cuckoo_saturation_stays_safe():
     """Overfilled filter: items that fit neither bucket saturate it —
     membership stays 'maybe' (never a false negative)."""
-    from warcbase_spark.operators.seen import ShardedCuckoo
-
     rng = np.random.RandomState(3)
     n = 4000
     h1 = rng.randint(0, 1 << 60, n).astype(np.int64)
@@ -138,7 +151,7 @@ def test_cuckoo_distributed_build_parity(spark):
     produce BIT-IDENTICAL (table, sat) rows to the single-process reference
     build that collects every (h1, h2) pair — the vectorized placement is a
     pure function of each shard's key set."""
-    from warcbase_spark.operators.seen import _cuckoo_row_to_shard, build_cuckoo_collected
+    from warcbase_spark.operators.seen import _cuckoo_row_to_shard
 
     n = 4000
     keys = spark.range(n).select(F.concat(F.lit("net.par/t/"), "id").alias("url_key"))
@@ -161,7 +174,7 @@ def test_cuckoo_cogrouped_probe_parity(spark):
     cogrouped, with parity vs the reference's contains_vec — the key set
     and the filter never transit the driver in this path except for the
     final assert collects."""
-    from warcbase_spark.operators.seen import build_cuckoo_collected, with_bloom_hashes
+    from warcbase_spark.operators.seen import with_bloom_hashes
 
     def hashes(df):
         pdf = with_bloom_hashes(df).select(
@@ -195,8 +208,6 @@ def test_jvm_bridge_failure_raises(spark, monkeypatch):
     """A failing JVM Bloom probe is a bug on a supported (classic PySpark
     >= 4.1) deployment: dedup_against_seen must raise, not silently fall
     back to the unfiltered anti-join."""
-    from warcbase_spark.operators import seen as seen_mod
-
     def broken(*args, **kwargs):
         raise RuntimeError("JVM bridge unavailable")
 
@@ -216,3 +227,32 @@ def test_cuckoo_params_power_of_two_validation():
         CuckooParams(n_shards=8, buckets_per_shard=48)
     p = CuckooParams.size(10_000, n_shards=10)  # size() rounds up to 16
     assert p.n_shards == 16
+
+
+def test_bloom_built_at_requested_size(spark):
+    """A 16M-key Bloom at 1% is the size the sizing asks for (optimum
+    153,360,934 bits, 19.17 MB), not clamped to the session's runtime-filter
+    caps (8,388,624 bytes), and the build leaves those confs as it found
+    them: unset ones unset, set ones at their value."""
+    keys = spark.range(10).select(F.concat(F.lit("com.test/z/"), "id").alias("url_key"))
+    before = {k: spark.conf.get(k, None) for k in BLOOM_CAP_CONFS}
+    assert len(build_bloom_jvm(keys, 16_000_000, 0.01)) >= 18_000_000
+    assert {k: spark.conf.get(k, None) for k in BLOOM_CAP_CONFS} == before
+
+    item_cap = BLOOM_CAP_CONFS[0]
+    spark.conf.set(item_cap, "5000000")
+    try:
+        build_bloom_jvm(keys, 16_000_000, 0.01)
+        assert spark.conf.get(item_cap, None) == "5000000"
+    finally:
+        spark.conf.unset(item_cap)
+
+
+def test_seen_filter_regime_follows_size(spark, monkeypatch):
+    """``build_seen_filter`` builds the JVM Bloom up to and at
+    SEEN_BLOOM_MAX_KEYS expected keys, and the cogrouped cuckoo one key
+    above it."""
+    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 100)
+    seen = spark.range(50).select(F.concat(F.lit("com.test/r/"), "id").alias("url_key"))
+    assert isinstance(build_seen_filter(seen, 100), bytes)
+    assert isinstance(build_seen_filter(seen, 101), CogroupedCuckoo)

@@ -10,6 +10,7 @@ import pytest
 
 from warcbase_spark.frontier.crawl import FrontierCrawl
 from warcbase_spark.frontier.simulator import simulate
+from warcbase_spark.operators import seen as seen_mod
 
 STATE = "/tmp/warcbase_spark_testfix/crawlstate"
 STATE_RESUME = "/tmp/warcbase_spark_testfix/crawlstate_resume"
@@ -152,21 +153,21 @@ def test_resume_exactness(spark, corpus_dir, crawl, sim):
     assert got_seen == sim.seen
 
 
-@pytest.mark.parametrize("mode", ["cuckoo"])
-def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
-    """Every bloom mode is only a PREFILTER — the exact anti-join fixes any
-    false positives — so the full crawl must be bit-identical across modes,
-    including across a crash after round 1 and a resume in a fresh object.
-    'cuckoo' is the 10^10-key path: the deletion-capable filter whose shard
-    tables never transit the driver, probed cogrouped."""
-    state = f"/tmp/warcbase_spark_testfix/crawlstate_{mode}"
+def test_cuckoo_regime_parity(spark, corpus_dir, crawl, monkeypatch):
+    """Either seen filter is only a PREFILTER — the exact anti-join fixes any
+    false positives — so the full crawl with the cogrouped cuckoo (the regime
+    past SEEN_BLOOM_MAX_KEYS, forced here by setting it to 0) must be
+    bit-identical to the default Bloom crawl, including across a crash after
+    round 1 and a resume in a fresh object."""
+    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
+    state = "/tmp/warcbase_spark_testfix/crawlstate_cuckoo"
     shutil.rmtree(state, ignore_errors=True)
-    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50, bloom_mode=mode)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
     fc.run(max_rounds=2)  # simulated crash after round 1
     assert fc.load_manifest()["last_committed_round"] == 1
     del fc
     # fresh object = fresh process; the filter must rebuild from committed state
-    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50, bloom_mode=mode)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
     fc.run()
     got = sorted(
         (r["round"], r["seq"], r["url_key"]) for r in fc.schedule().collect()
@@ -178,17 +179,6 @@ def test_bloom_mode_parity(spark, corpus_dir, crawl, mode):
     got_seen = {r["url_key"]: r["first_round"] for r in fc.url_seen().collect()}
     ref_seen = {r["url_key"]: r["first_round"] for r in crawl.url_seen().collect()}
     assert got_seen == ref_seen
-
-
-@pytest.mark.parametrize("mode", ["sharded", "cogrouped", "cukoo"])
-def test_unknown_bloom_mode_rejected(spark, corpus_dir, mode):
-    """A removed or misspelled bloom_mode must fail loudly, not silently run
-    some other filter."""
-    with pytest.raises(ValueError, match="jvm, cuckoo"):
-        FrontierCrawl(
-            spark, corpus_dir, "/tmp/warcbase_spark_testfix/crawlstate_badmode",
-            bloom_mode=mode,
-        )
 
 
 @pytest.fixture(scope="module")

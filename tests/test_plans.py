@@ -79,12 +79,15 @@ def test_dedup_probe_is_jvm_side(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_cuckoo_probe_is_cogrouped(spark):
-    """bloom_mode="cuckoo" probes its shard tables cogrouped: no filter is
+def test_cuckoo_probe_is_cogrouped(spark, monkeypatch):
+    """The cuckoo regime probes its shard tables cogrouped: no filter is
     broadcast and no pandas UDF is chained after the canonicalizer, so the
     canonicalizer stays the only ArrowEvalPython in the probe plan."""
     from warcbase_spark.frontier.crawl import canonicalize_candidates
+    from warcbase_spark.operators import seen as seen_mod
     from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
+
+    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
 
     urls = spark.range(100).select(
         F.concat(F.lit("http://h"), F.col("id").cast("string"), F.lit(".com/p.html")).alias("url")
@@ -95,7 +98,7 @@ def test_cuckoo_probe_is_cogrouped(spark):
     )
     reg = []
     _, probed = dedup_against_seen(
-        spark, cand, seen, build_seen_filter("cuckoo", seen, 100), cache_registry=reg
+        spark, cand, seen, build_seen_filter(seen, 100), cache_registry=reg
     )
     plan = plan_of(probed)  # the cached probe pass, shown as its inner plan
     for df in reg:

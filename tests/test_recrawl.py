@@ -1,7 +1,8 @@
 """Recrawl-after-TTL: unsee (tombstone deletes over the append-only seen
 set) + recrawl (re-seed the frontier) — the deletion semantics the
-reference gets implicitly from HBase row deletes, and the reason the
-cuckoo filter mode exists."""
+reference gets implicitly from HBase row deletes. The crawl here runs the
+cogrouped cuckoo seen filter (SEEN_BLOOM_MAX_KEYS forced to 0), the regime
+the default-sized parity crawl never reaches."""
 
 import shutil
 
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.frontier.crawl import FrontierCrawl
+from warcbase_spark.operators import seen as seen_mod
 
 STATE = "/tmp/warcbase_spark_testfix/crawlstate_recrawl"
 
@@ -16,9 +18,11 @@ STATE = "/tmp/warcbase_spark_testfix/crawlstate_recrawl"
 @pytest.fixture(scope="module")
 def crawl(spark, corpus_dir):
     shutil.rmtree(STATE, ignore_errors=True)
-    fc = FrontierCrawl(spark, corpus_dir, STATE, max_rounds=50, bloom_mode="cuckoo")
-    fc.run()
-    return fc
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
+        fc = FrontierCrawl(spark, corpus_dir, STATE, max_rounds=50)
+        fc.run()
+        yield fc
 
 
 def test_unsee_removes_and_rediscovery_readds(spark, crawl):

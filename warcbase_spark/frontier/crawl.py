@@ -55,11 +55,7 @@ from warcbase_spark.operators.scheduler import (
     schedule_round_combined,
     split_schedule,
 )
-from warcbase_spark.operators.seen import (
-    build_seen_filter,
-    check_bloom_mode,
-    dedup_against_seen,
-)
+from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
 
 
 def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -136,7 +132,6 @@ class FrontierCrawl:
         state_dir: str,
         max_rounds: int = 100,
         salt_k: int = 16,
-        bloom_mode: str = "jvm",
         compact_every: int = 8,
     ) -> None:
         self.spark = spark
@@ -145,11 +140,6 @@ class FrontierCrawl:
         self.max_rounds = max_rounds
         self.salt_k = salt_k
         self.compact_every = compact_every
-        # the seen-set filter: "jvm" (bloom_filter_agg/might_contain, zero
-        # Python in the probe) or "cuckoo" (the 10^10-key path: the cuckoo's
-        # shard tables never transit the driver — candidates are routed to
-        # their shard's table by hash and probed cogrouped)
-        self.bloom_mode = check_bloom_mode(bloom_mode)
         os.makedirs(state_dir, exist_ok=True)
 
         # static for the crawl: read once here, not once per round
@@ -469,11 +459,12 @@ class FrontierCrawl:
         # URL-seen gate: Bloom prefilter + exact anti-join (incl. this round)
         seen = self._seen(rnd)
         # Sizing comes from the manifest's running seen_rows counter (deltas
-        # are disjoint by the seen gate itself), not a per-round count() job.
-        # Every mode is a stateless per-round build over the committed seen
-        # deltas (checkpoint-friendly — resume needs no filter state).
-        n_expected = max((self.load_manifest()["seen_rows"] + m.scheduled) * 2, 4096)
-        bloom = build_seen_filter(self.bloom_mode, seen, n_expected)
+        # are disjoint by the seen gate itself), not a per-round count() job;
+        # the same count picks the filter's regime. Either filter is a
+        # stateless per-round build over the committed seen deltas
+        # (checkpoint-friendly — resume needs no filter state).
+        n_expected = max(self.load_manifest()["seen_rows"] + m.scheduled, 4096)
+        bloom = build_seen_filter(seen, n_expected)
         obs_dedup = Observation()
         fresh, _maybe = dedup_against_seen(
             spark, cand, seen, bloom,
@@ -544,8 +535,8 @@ class FrontierCrawl:
 
     def run(self, max_rounds: int | None = None) -> list[RoundMetrics]:
         """Run (or resume) to completion. Resumption reads the manifest and
-        continues from the first uncommitted round. Every filter mode rebuilds
-        its filter from the committed seen deltas each round, so no filter
+        continues from the first uncommitted round. The seen filter is
+        rebuilt from the committed seen deltas each round, so no filter
         state needs restoring."""
         max_rounds = max_rounds if max_rounds is not None else self.max_rounds
         manifest = self.load_manifest()
@@ -603,7 +594,8 @@ class FrontierCrawl:
         ``first_round`` ≤ the tombstone round die; a later re-discovery
         re-adds it. Idempotent (max-tombstone-round wins); the manifest's
         seen_rows counter becomes an upper bound, which only oversizes the
-        Bloom/cuckoo build (correctness lives in the exact anti-join).
+        seen filter or picks the cuckoo regime a little early (correctness
+        lives in the exact anti-join).
         Returns the number of tombstoned keys."""
         last = (self.load_manifest() or {}).get("last_committed_round", -1)
         keys = (

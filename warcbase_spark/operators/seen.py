@@ -8,12 +8,13 @@ every positive is verified with an exact anti-join against the seen table
 (SURVEY §7.1.2), so false positives can never drop a URL.
 
 Two filters, one per scale regime, each built fresh from the seen set every
-round (``build_seen_filter`` picks one by mode):
+round (``build_seen_filter`` picks one by the seen set's size):
 
-- JVM Bloom (``build_bloom_jvm``/``probe_bloom_jvm``, the default broadcast
-  regime): Spark's own bloom_filter_agg and might_contain, zero Python.
+- JVM Bloom (``build_bloom_jvm``/``probe_bloom_jvm``, up to
+  ``SEEN_BLOOM_MAX_KEYS`` keys): Spark's own bloom_filter_agg and
+  might_contain, zero Python; the filter rides the plan to every task.
 - Cogrouped sharded cuckoo (``build_cuckoo_shards``/``probe_cuckoo_cogrouped``,
-  the 10^10-key regime): the filter is SHARDED by ``h1 mod n_shards``, each
+  past that): the filter is SHARDED by ``h1 mod n_shards``, each
   executor builds only its shard (one bucket table per shard via
   applyInPandas), and candidate rows are routed to their shard's table by
   the same hash — a shuffle on an evenly-distributed hash; the whole filter
@@ -231,16 +232,6 @@ def build_cuckoo_shards(df: DataFrame, params: CuckooParams, key_col: str = "url
     )
 
 
-def build_cuckoo_collected(df: DataFrame, params: CuckooParams, key_col: str = "url_key") -> ShardedCuckoo:
-    """Single-process reference build (collects every (h1, h2) pair to the
-    driver). NOT a scale path — exists to pin distributed-build parity in
-    tests: ``build_cuckoo_shards`` must produce bit-identical shard tables."""
-    pdf = _cuckoo_routed(df, params, key_col).toPandas()
-    return ShardedCuckoo.build(
-        pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64), params
-    )
-
-
 def probe_cuckoo_cogrouped(
     df: DataFrame,
     shards: DataFrame,
@@ -286,7 +277,7 @@ class CogroupedCuckoo:
 
 
 # ---------------------------------------------------------------------------
-# JVM bloom path (default for the broadcast regime).
+# JVM bloom path (the regime up to SEEN_BLOOM_MAX_KEYS).
 #
 # Spark's bloom_filter_agg is a declarative aggregate: every task builds a
 # partial filter over its partition and the partials OR-merge up the agg
@@ -299,15 +290,42 @@ class CogroupedCuckoo:
 # probe runs in the cogroup's own stage, not chained after canonicalize).
 # ---------------------------------------------------------------------------
 
+# DataFrameStatFunctions.bloomFilter runs the runtime-filter aggregate, which
+# clamps every filter to these two session confs (4M items, 64 Mbit by
+# default): asked for 16M keys at 1% it returned 8,388,624 bytes, not the
+# 19,170,136 the sizing needs, and let ~49% of fresh keys through. The
+# optimizer's join-side runtime filters read the same caps, so they are
+# raised only around the build's own action, never session-wide.
+BLOOM_CAP_CONFS = (
+    "spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+    "spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
+)
+
+
 def build_bloom_jvm(df: DataFrame, n_expected: int, fpp: float = 0.01,
                     key_col: str = "url_key") -> bytes:
     """Distributed JVM build over xxhash64(key): ``DataFrameStatFunctions.
     bloomFilter`` aggregates per-partition sketches and merges them (same
     build topology as ``build_cuckoo_shards``), serialized to bytes so it
-    rides the physical plan to every task."""
+    rides the physical plan to every task. The filter is sized for
+    ``n_expected`` keys at ``fpp`` whatever the session's runtime-filter
+    caps; those confs read as before once the build returns."""
+    spark = df.sparkSession
+    jvm = spark._jvm
+    n = max(int(n_expected), 1)
+    bits = jvm.org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, float(fpp))
     hashed = df.select(F.xxhash64(F.col(key_col)).alias("h"))
-    jbf = hashed._jdf.stat().bloomFilter("h", max(int(n_expected), 1), fpp)
-    jvm = df.sparkSession._jvm
+    prev = {k: spark.conf.get(k, None) for k in BLOOM_CAP_CONFS}
+    for k, v in zip(BLOOM_CAP_CONFS, (n, bits)):
+        spark.conf.set(k, str(v))
+    try:
+        jbf = hashed._jdf.stat().bloomFilter("h", n, fpp)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     bos = jvm.java.io.ByteArrayOutputStream()
     jbf.writeTo(bos)
     return bytes(bos.toByteArray())
@@ -335,25 +353,24 @@ def probe_bloom_jvm(df: DataFrame, bloom_bytes: bytes, key_col: str = "url_key",
     return df.withColumn(out_col, PyCol(eu.column(mc)))
 
 
-# seen-set filter per scale regime (FrontierCrawl's bloom_mode): the JVM
-# Bloom broadcast with the plan, or the cogrouped cuckoo whose shard tables
-# stay executor-side
-BLOOM_MODES = ("jvm", "cuckoo")
+# The seen-set filter's regime follows the seen set's size: the JVM Bloom,
+# carried as a plan literal, up to SEEN_BLOOM_MAX_KEYS; the cogrouped cuckoo,
+# whose shard tables stay executor-side, past it. At BLOOM_FPP the largest
+# Bloom is ~38.3 MB. BENCH.md "Seen-filter regime sweep": the Bloom's build +
+# probe CPU was below the cuckoo's at every point from 1M to 32M seen keys
+# (236 vs 281 CPU-s at 32M), so the constant is the largest size measured;
+# past it the crossover is unmeasured.
+SEEN_BLOOM_MAX_KEYS = 32_000_000
 BLOOM_FPP = 0.01
 FILTER_SHARDS = 32
 
 
-def check_bloom_mode(mode: str) -> str:
-    if mode not in BLOOM_MODES:
-        raise ValueError(f"bloom_mode must be one of {', '.join(BLOOM_MODES)}, got {mode!r}")
-    return mode
-
-
-def build_seen_filter(mode: str, seen: DataFrame, n_expected: int,
+def build_seen_filter(seen: DataFrame, n_expected: int,
                       key_col: str = "url_key") -> "bytes | CogroupedCuckoo":
-    """The ``mode`` filter over ``seen``, sized for ``n_expected`` keys, in
-    the form ``dedup_against_seen`` probes."""
-    if check_bloom_mode(mode) == "jvm":
+    """The filter over ``seen`` for ``n_expected`` keys, in the form
+    ``dedup_against_seen`` probes: the JVM Bloom up to
+    ``SEEN_BLOOM_MAX_KEYS`` keys, the cogrouped cuckoo above."""
+    if n_expected <= SEEN_BLOOM_MAX_KEYS:
         return build_bloom_jvm(seen, n_expected, BLOOM_FPP, key_col)
     params = CuckooParams.size(n_expected, FILTER_SHARDS)
     return CogroupedCuckoo(params, build_cuckoo_shards(seen, params, key_col))
