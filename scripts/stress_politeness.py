@@ -95,7 +95,7 @@ def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
     with 1% of the candidates tombstoned (recrawled), through BOTH seen
     filters the crawl's way: an exact anti-join removes the tombstones from
     the seen table, and each filter is built over that live set at
-    ``BLOOM_FPP`` / ``FILTER_SHARDS``.
+    ``BLOOM_FPP`` / ``seen_cuckoo_params``.
 
     - bloom: ``build_bloom_jvm`` + ``dedup_against_seen`` (JVM probe).
     - cuckoo: ``build_cuckoo_shards`` (sharded applyInPandas build, cached
@@ -113,12 +113,11 @@ def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
 
     from warcbase_spark.operators.seen import (
         BLOOM_FPP,
-        FILTER_SHARDS,
         CogroupedCuckoo,
-        CuckooParams,
         build_bloom_jvm,
         build_cuckoo_shards,
         dedup_against_seen,
+        seen_cuckoo_params,
     )
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -156,7 +155,7 @@ def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
                 bloom = build_bloom_jvm(live_seen, n_live, BLOOM_FPP)
                 size = len(bloom)
             else:
-                params = CuckooParams.size(n_live, FILTER_SHARDS)
+                params = seen_cuckoo_params(n_live)
                 shards = build_cuckoo_shards(live_seen, params).cache()
                 size = shards.select(F.sum(F.length("table") + F.length("sat"))).first()[0]
                 bloom = CogroupedCuckoo(params, shards)

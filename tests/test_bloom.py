@@ -19,6 +19,7 @@ from warcbase_spark.operators.seen import (
     build_seen_filter,
     dedup_against_seen,
     probe_cuckoo_cogrouped,
+    seen_cuckoo_params,
 )
 
 
@@ -256,3 +257,23 @@ def test_seen_filter_regime_follows_size(spark, monkeypatch):
     seen = spark.range(50).select(F.concat(F.lit("com.test/r/"), "id").alias("url_key"))
     assert isinstance(build_seen_filter(seen, 100), bytes)
     assert isinstance(build_seen_filter(seen, 101), CogroupedCuckoo)
+
+
+def test_cuckoo_build_runs_a_partition_per_shard(spark):
+    """The sharded build shuffles into n_shards partitions, not the
+    session's 8, so a build task sorts the rows of the few shards hashed to
+    it rather than n_shards / 8 of them (8 of 32 per task at local[4] ran
+    out of execution memory at 32M keys)."""
+    p = CuckooParams.size(1000, n_shards=16)
+    keys = spark.range(1000).select(F.concat(F.lit("com.test/p/"), "id").alias("url_key"))
+    assert build_cuckoo_shards(keys, p).rdd.getNumPartitions() == 16
+
+
+def test_seen_cuckoo_shards_grow_with_size():
+    """The seen filter's cuckoo keeps at least 32 shards and about 2^20
+    keys a shard, so its per-task build stays bounded as the seen set
+    grows."""
+    assert seen_cuckoo_params(33_000_000).n_shards == 32
+    assert seen_cuckoo_params(40_000_000).n_shards == 64
+    p = seen_cuckoo_params(10**10)
+    assert p.n_shards == 16384 and 10**10 / p.n_shards <= 1 << 20

@@ -1,8 +1,9 @@
 """Recrawl-after-TTL: unsee (tombstone deletes over the append-only seen
 set) + recrawl (re-seed the frontier) — the deletion semantics the
-reference gets implicitly from HBase row deletes. The crawl here runs the
-cogrouped cuckoo seen filter (SEEN_BLOOM_MAX_KEYS forced to 0), the regime
-the default-sized parity crawl never reaches."""
+reference gets implicitly from HBase row deletes. The shared crawl and its
+recrawl round run the cogrouped cuckoo seen filter (SEEN_BLOOM_MAX_KEYS
+forced to 0), the regime the default-sized parity crawl never reaches; the
+tests with their own state run the default Bloom."""
 
 import shutil
 
@@ -22,7 +23,7 @@ def crawl(spark, corpus_dir):
         mp.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
         fc = FrontierCrawl(spark, corpus_dir, STATE, max_rounds=50)
         fc.run()
-        yield fc
+    return fc
 
 
 def test_unsee_removes_and_rediscovery_readds(spark, crawl):
@@ -37,7 +38,8 @@ def test_unsee_removes_and_rediscovery_readds(spark, crawl):
     assert crawl.url_seen().count() == n_before - 3
 
 
-def test_recrawl_fetches_again_exactly_once(spark, crawl):
+def test_recrawl_fetches_again_exactly_once(spark, crawl, monkeypatch):
+    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
     target = [r["url"] for r in crawl.schedule().orderBy("round", "seq").limit(2).collect()]
     urls = spark.createDataFrame([(u,) for u in target], "url string")
     last_before = crawl.load_manifest()["last_committed_round"]

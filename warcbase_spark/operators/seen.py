@@ -14,10 +14,10 @@ round (``build_seen_filter`` picks one by the seen set's size):
   ``SEEN_BLOOM_MAX_KEYS`` keys): Spark's own bloom_filter_agg and
   might_contain, zero Python; the filter rides the plan to every task.
 - Cogrouped sharded cuckoo (``build_cuckoo_shards``/``probe_cuckoo_cogrouped``,
-  past that): the filter is SHARDED by ``h1 mod n_shards``, each
-  executor builds only its shard (one bucket table per shard via
-  applyInPandas), and candidate rows are routed to their shard's table by
-  the same hash — a shuffle on an evenly-distributed hash; the whole filter
+  past that): the filter is SHARDED by ``h1 mod n_shards`` (about 2^20
+  keys a shard), each task builds the few shards hashed to its partition
+  (one bucket table per shard via applyInPandas), and candidate rows are
+  routed to their shard's table by the same hash — a shuffle on an evenly-distributed hash; the whole filter
   is never materialized in one place, held by the driver, or broadcast.
 
 Neither filter deletes. Un-seeing a URL is a tombstone in the seen set
@@ -208,14 +208,16 @@ _CUCKOO_SHARD_SCHEMA = "shard int, table binary, sat binary"
 
 def build_cuckoo_shards(df: DataFrame, params: CuckooParams, key_col: str = "url_key") -> DataFrame:
     """Fully distributed build: rows are routed to their shard by
-    ``h1 mod n_shards`` and each shard's bucket table + saturation bits are
-    built in ONE Arrow-batched task. Returns the (shard, table, sat)
-    DataFrame WITHOUT collecting — at 10^10 keys the filter (≈ 2.9 GB/shard
-    at 32 shards, f=16, load 0.7) never transits the driver; write it as
-    parquet or probe it cogrouped. Shuffle volume = 16 bytes/key. The
-    vectorized 2-choice placement is a pure function of each shard's key
-    SET (lexsort order), so the result is bit-identical to the collected
-    build."""
+    ``h1 mod n_shards`` into ``n_shards`` partitions, not the session's
+    shuffle partitions, so a task sorts a few shards' rows rather than
+    ``n_shards / spark.sql.shuffle.partitions`` of them (8 of 32 at local[4]
+    ran out of execution memory at 32M keys); each shard's bucket table +
+    saturation bits are built in ONE Arrow-batched group. Returns the
+    (shard, table, sat) DataFrame WITHOUT collecting — the filter never
+    transits the driver; write it as parquet or probe it cogrouped.
+    Shuffle volume = 16 bytes/key. The vectorized 2-choice placement is a
+    pure function of each shard's key SET (lexsort order), so the result is
+    bit-identical to the collected build."""
     p = params
 
     def per_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -227,6 +229,7 @@ def build_cuckoo_shards(df: DataFrame, params: CuckooParams, key_col: str = "url
 
     return (
         _cuckoo_routed(df, p, key_col)
+        .repartition(p.n_shards, "shard")
         .groupBy("shard")
         .applyInPandas(per_shard, schema=_CUCKOO_SHARD_SCHEMA)
     )
@@ -358,11 +361,19 @@ def probe_bloom_jvm(df: DataFrame, bloom_bytes: bytes, key_col: str = "url_key",
 # whose shard tables stay executor-side, past it. At BLOOM_FPP the largest
 # Bloom is ~38.3 MB. BENCH.md "Seen-filter regime sweep": the Bloom's build +
 # probe CPU was below the cuckoo's at every point from 1M to 32M seen keys
-# (236 vs 281 CPU-s at 32M), so the constant is the largest size measured;
-# past it the crossover is unmeasured.
+# (233 vs 297 CPU-s at 32M on local[4]), so the constant is the largest size
+# measured; past it the crossover is unmeasured.
 SEEN_BLOOM_MAX_KEYS = 32_000_000
 BLOOM_FPP = 0.01
+# The cuckoo keeps a shard near 2^20 keys (at least FILTER_SHARDS shards),
+# so a build task's sort stays a few million rows however large the seen set.
 FILTER_SHARDS = 32
+CUCKOO_SHARD_KEYS = 1 << 20
+
+
+def seen_cuckoo_params(n_expected: int) -> CuckooParams:
+    """The seen filter's cuckoo shape for ``n_expected`` keys."""
+    return CuckooParams.size(n_expected, max(FILTER_SHARDS, -(-n_expected // CUCKOO_SHARD_KEYS)))
 
 
 def build_seen_filter(seen: DataFrame, n_expected: int,
@@ -372,7 +383,7 @@ def build_seen_filter(seen: DataFrame, n_expected: int,
     ``SEEN_BLOOM_MAX_KEYS`` keys, the cogrouped cuckoo above."""
     if n_expected <= SEEN_BLOOM_MAX_KEYS:
         return build_bloom_jvm(seen, n_expected, BLOOM_FPP, key_col)
-    params = CuckooParams.size(n_expected, FILTER_SHARDS)
+    params = seen_cuckoo_params(n_expected)
     return CogroupedCuckoo(params, build_cuckoo_shards(seen, params, key_col))
 
 
