@@ -160,14 +160,13 @@ def test_ivf_cell_partitioned_store_prunes(spark):
     read), not a post-scan row filter."""
     import shutil
 
-    from warcbase_spark.operators.similarity import ivf_cell
+    from warcbase_spark.operators.similarity import ivf_cell_np_udf, ivf_centroids, quantize_q
 
     path = "/tmp/warcbase_spark_testfix/emb_by_cell"
     shutil.rmtree(path, ignore_errors=True)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    emb.withColumn("cell", ivf_cell(F.col("embedding"), 16, 64, 13)).write.partitionBy(
-        "cell"
-    ).parquet(path)
+    cell = ivf_cell_np_udf(ivf_centroids(16, 64, 13))(quantize_q(F.col("embedding")))
+    emb.withColumn("cell", cell).write.partitionBy("cell").parquet(path)
     try:
         store = spark.read.parquet(path)
         probe = store.where(F.col("cell").isin([3, 7]))

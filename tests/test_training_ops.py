@@ -76,19 +76,8 @@ def test_ann_topk_matches_numpy_within_bucket(spark):
         )[:5]
         return [(i, s) for s, i in sims]
 
-    # legacy sign-bucket path
-    got = ann_topk(e, query_id=0, k=5, n_bits=4, use_hyperplanes=False).collect()
-
-    def bucket(v):
-        return sum((1 << i) for i in range(4) if v[i] >= 0)
-
-    cands = [i for i in range(1, 40) if bucket(vecs[i]) == bucket(vecs[0])]
-    assert [(r["vec_id"], r["sim"]) for r in got] == cos_top5(cands)
-
     # seeded hyperplane path, 2-table multi-probe, numpy-mirrored buckets
-    got_hp = ann_topk(
-        e, query_id=0, k=5, n_bits=4, dim=8, seeds=(7, 101), use_hyperplanes=True
-    ).collect()
+    got_hp = ann_topk(e, query_id=0, k=5, n_bits=4, dim=8, seeds=(7, 101)).collect()
 
     def hp_bucket(v, seed):
         signs = hyperplane_signs(4, 8, seed)
@@ -519,8 +508,63 @@ def test_ivf_topk_matches_numpy(spark):
         return round(float(np.dot(v, q) / (np.linalg.norm(v) * np.linalg.norm(q))), 3)
 
     want = sorted(((cos(i), i) for i in cands), key=lambda t: (-t[0], t[1]))[:5]
-    got = ivf_topk(e, query_id=0, k=5, n_cells=4, nprobe=2, dim=8, seed=13).collect()
+    res = ivf_topk(e, query_id=0, k=5, n_cells=4, nprobe=2, dim=8, seed=13)
+    # the cell assignment runs the int64 numpy kernel, not a Column fold
+    assert "ArrowEvalPython" in res._jdf.queryExecution().executedPlan().toString()
+    got = res.collect()
     assert [(r["vec_id"], r["sim"]) for r in got] == [(i, s) for s, i in want]
+
+
+def test_ann_kernels_null_and_ragged_vectors(spark):
+    """A NULL or ragged (not ``dim`` long) vector gets a NULL bucket,
+    cell and probe list instead of failing its Arrow batch, never reaches
+    an ANN result, and moves no k-means centroid."""
+    from warcbase_spark.operators.similarity import (
+        ann_topk,
+        bucketed_neighbors,
+        hyperplane_np_udf,
+        ivf_cell_np_udf,
+        ivf_centroids,
+        ivf_probes_np_udf,
+        ivf_topk,
+        ivf_topk_batch,
+        ivf_train_kmeans,
+        quantize_q,
+    )
+
+    rng = np.random.RandomState(5)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(40)]
+    bad = {7, 9}
+    rows[7], rows[9] = (7, None), (9, [1.0, 2.0, 3.0])
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    good = e.filter(~F.col("vec_id").isin(*bad))
+
+    cents = ivf_centroids(4, 8, seed=13)
+    q = quantize_q(F.col("embedding"))
+    kernels = [hyperplane_np_udf(4, 8, 7)(q), ivf_cell_np_udf(cents)(q),
+               ivf_probes_np_udf(cents, 2)(q)]
+    for r in e.select("vec_id", *kernels).collect():
+        assert [x is None for x in r[1:]] == [r["vec_id"] in bad] * 3, r
+    # a batch holding only bad rows
+    assert e.filter(F.col("vec_id").isin(*bad)).select(*kernels).collect() == [(None,) * 3] * 2
+
+    def ids(df, *cols):
+        out = {r[c] for r in df.collect() for c in cols}
+        assert out, "empty result"
+        return out
+
+    assert not ids(bucketed_neighbors(e, n_bits=2, dim=8), "a", "b") & bad
+    assert not ids(ann_topk(e, query_id=0, k=40, n_bits=2, dim=8), "vec_id") & bad
+    ivf = dict(n_cells=4, nprobe=2, dim=8, seed=13)
+    assert not ids(ivf_topk(e, query_id=0, k=40, **ivf), "vec_id") & bad
+    batch = ivf_topk_batch(e, query_filter=F.col("vec_id").isin(0, 7, 9, 20), k=40, **ivf)
+    assert not ids(batch, "query_id", "vec_id") & bad
+    assert {r["query_id"] for r in batch.collect()} == {0, 20}
+    for qid in bad:  # a bad query probes no cell
+        assert ivf_topk(e, query_id=qid, k=40, **ivf).count() == 0
+    # the bad rows get no cell, so training skips them
+    km = dict(n_cells=4, iters=2, dim=8, seed=13)
+    assert ivf_train_kmeans(e, **km) == ivf_train_kmeans(good, **km)
 
 
 def test_ivf_batch_matches_per_query_and_no_collect(spark):

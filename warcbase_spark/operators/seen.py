@@ -59,8 +59,10 @@ def with_bloom_hashes(df: DataFrame, key_col: str = "url_key") -> DataFrame:
 # saturation bit on their secondary bucket, and lookups in a saturated
 # bucket always answer "maybe" — so false negatives remain impossible (the
 # exact anti-join verifies positives, same contract as the JVM Bloom).
-# At the sized load factor (0.7) saturation is rare, so fpp stays near the
-# theoretical 2b/2^f ≈ 1.2e-4 for b=4, f=16.
+# ``CuckooParams.size`` builds a load factor (keys per slot) of 0.175-0.35
+# (2-4x the buckets a 0.7 load needs: 5.7-11.4 bytes a key), where
+# saturation is rare, so fpp stays near the theoretical 2b/2^f ≈ 1.2e-4 for
+# b=4, f=16. A higher load raises saturation in this kick-free build.
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -83,10 +85,13 @@ class CuckooParams:
                 raise ValueError(f"CuckooParams.{f} must be a power of two, got {v}")
 
     @classmethod
-    def size(cls, n_expected: int, n_shards: int = 32, load: float = 0.7) -> "CuckooParams":
+    def size(cls, n_expected: int, n_shards: int = 32) -> "CuckooParams":
+        """Buckets a shard: twice the power of two at or above the count a
+        0.7 load would need, so the built load is 0.175-0.35 (e.g.
+        ``size(980000, 32)``: 32,768 buckets a shard, load 0.234)."""
         n_shards = 1 << max(0, (n_shards - 1).bit_length())
         per_shard = max(1, n_expected // n_shards)
-        m = 1 << max(3, (int(per_shard / (4 * load)) - 1).bit_length() + 1)
+        m = 1 << max(3, (int(per_shard / (4 * 0.7)) - 1).bit_length() + 1)
         return cls(n_shards=n_shards, buckets_per_shard=m)
 
 

@@ -3,24 +3,30 @@
 Brute-force cosine top-k is the baseline (queries.embedding_topk_cosine);
 these operators add the SCALE paths:
 
-- seeded random-hyperplane LSH (``hyperplane_bucket``): n_bits sign bits of
+- seeded random-hyperplane LSH (``hyperplane_np_udf``): n_bits sign bits of
   ±1-hyperplane projections (Charikar SimHash for cosine; Achlioptas-style
   ±1 entries so the projection is an integer dot product). Hyperplanes are
-  drawn from a seeded PRNG at plan-build time and embedded as literals, so
-  a DuckDB oracle mirrors the exact same planes; the dot products run in
-  integer fixed-point (round(x·1e6) per component) so the SIGN never
-  diverges between engines on floating-point fold order.
-  The legacy ``sign_bucket`` (signs of leading components) is kept for
-  comparison but is NOT the scale path: leading components of real
-  embeddings are correlated, so its 2^n buckets fill unevenly.
+  drawn from a seeded PRNG at plan-build time, so the DuckDB oracle
+  (``hyperplane_bucket_sql``) mirrors the exact same planes; the dot
+  products run in integer fixed-point (``quantize_q``: round(x·1e6) per
+  component) so the SIGN never diverges between engines on floating-point
+  fold order.
 - ``n_bits`` scales with n (bucket occupancy ≈ n/2^n_bits) and multi-table
   probing (``n_tables`` seeds) recovers recall lost to unlucky planes.
+- IVF: a vector's cell is its argmax integer centroid score
+  (``ivf_cell_np_udf``), a query searches its ``nprobe`` best cells
+  (``ivf_probes_np_udf``); centroids are seeded or trained
+  (``ivf_train_kmeans``).
 - hot-bucket guard: candidate joins drop (or cap) buckets above
   ``bucket_cap`` rows, so a degenerate corpus (everything in one bucket)
   can never go quadratic — the VERDICT-r1 100 TB scale requirement.
-- cosine kernels stay in JVM Column expressions (zip_with/aggregate dot
-  product) — no Python in the hot path; scores rounded at a fixed decimal
-  for engine-portable comparison.
+- one kernel per operator: the fixed-point vector is materialized once per
+  row in the JVM (the only rounding), and every bucket / cell / probe
+  kernel is one exact int64 numpy matmul per Arrow batch
+  (``_quantized_batch_udf``), bit-identical to the DuckDB mirrors. A row
+  whose vector is NULL or not ``dim`` long gets NULL, so it never joins.
+  The per-pair cosine stays a JVM Column fold (zip_with/aggregate), rounded
+  at a fixed decimal for engine-portable comparison.
 """
 
 from __future__ import annotations
@@ -41,68 +47,45 @@ def dot(a, b) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def cosine(a, b) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def quantize_q(emb) -> Column:
+    """The fixed-point embedding used for ALL integer bucket and centroid
+    arithmetic: round(x * 1e6) as long — exact 64-bit dots (|q| ≲ 5e6, dim
+    64 → dots ≤ ~1.6e15, inside both long and float64-exact-integer range,
+    so numpy int64 and DuckDB list_dot_product agree bit-for-bit)."""
+    return F.transform(emb, lambda x: F.round(x.cast("double") * 1e6, 0).cast("long"))
 
 
-def sign_bucket(emb, n_bits: int = 6) -> Column:
-    """Bucket id from the signs of the first n_bits components — a
-    deterministic coarse quantizer. Kept as the trivial baseline; use
-    ``hyperplane_bucket`` at scale (leading components are correlated for
-    real embeddings, so these buckets skew)."""
-    out = F.lit(0)
-    for i in range(n_bits):
-        out = out + F.when(F.element_at(emb, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return out
+def _quantized_batch_udf(dim: int, return_type: str, kernel):
+    """Arrow-vectorized kernel over pre-quantized (``quantize_q``) vectors,
+    one native numpy call per batch instead of an interpreted fold per row:
+    the batch's rows are stacked into one (rows, dim) int64 matrix and
+    ``kernel`` maps it to one result per row. A row whose vector is NULL or
+    not ``dim`` long gets NULL instead of failing the whole batch."""
+    import numpy as np
+
+    @F.pandas_udf(return_type)
+    def run(qs: pd.Series) -> pd.Series:
+        ok = np.fromiter((q is not None and len(q) == dim for q in qs), bool, len(qs))
+        out = np.full(len(qs), None, dtype=object)
+        if ok.any():
+            res = pd.Series(kernel(np.stack(qs[ok].to_numpy()).astype(np.int64, copy=False)))
+            if ok.all():
+                return res
+            out[ok] = res.to_numpy()
+        return pd.Series(out)
+
+    return run
 
 
 def hyperplane_signs(n_bits: int, dim: int, seed: int) -> list[list[int]]:
-    """The seeded ±1 hyperplane matrix — shared by the Spark expression and
-    any SQL oracle so both engines hash with identical planes."""
+    """The seeded ±1 hyperplane matrix — shared by the Spark kernel and
+    the SQL oracle so both engines hash with identical planes."""
     rng = random.Random(seed)
     return [[rng.choice((1, -1)) for _ in range(dim)] for _ in range(n_bits)]
 
 
-def hyperplane_bucket(emb, n_bits: int = 8, dim: int = 64, seed: int = 7) -> Column:
-    """Random-hyperplane LSH bucket id (engine-portable).
-
-    bit_i = 1 iff Σ_d round(emb[d]·1e6) · s_i[d] >= 0 with s_i ∈ {±1}^dim
-    seeded — integer arithmetic end-to-end, so the DuckDB mirror
-    (list_sum over list_transform with the same literals) is bit-exact.
-
-    Column-expression form: the quantization is INLINED per bit, so this
-    re-evaluates the round/cast transform n_bits times per row. Hot paths
-    materialize ``quantize_q`` as a column once and use
-    ``hyperplane_bucket_q`` instead (guide §1.2) — identical result (the
-    ±1 products become flat signed adds over the same longs, same
-    left-assoc order, exact integer arithmetic)."""
-    return hyperplane_bucket_q(quantize_q(emb), n_bits, dim, seed)
-
-
-def hyperplane_bucket_q(q, n_bits: int = 8, dim: int = 64, seed: int = 7) -> Column:
-    """``hyperplane_bucket`` over a pre-quantized (``quantize_q``) column:
-    the n_bits per-bit dots read the SAME materialized fixed-point array
-    instead of re-running the round/cast transform per bit (the old form's
-    cost). The dots stay aggregate(zip_with) folds on purpose: a flat
-    n_bits×dim expression tree exceeds janino's 64 KB method limit
-    ("Code grows beyond 64 KB"), and Spark's fallback — a failed multi-
-    second compile attempt plus interpreted evaluation of the giant tree —
-    measured strictly slower than the fold, whose per-element loop runs
-    natively over the array. (A flat 64-term tree was also A/B'd for the
-    per-pair cosine and LOST 7.2s vs 2.9s on 2M pairs — folds win in this
-    engine's evaluation mode across the board.)"""
-    out = F.lit(0)
-    for i, signs in enumerate(hyperplane_signs(n_bits, dim, seed)):
-        sv = F.array(*[F.lit(s) for s in signs])
-        d = F.aggregate(
-            F.zip_with(q, sv, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
-        )
-        out = out + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return out
-
-
 def hyperplane_bucket_sql(emb_sql: str, n_bits: int = 8, dim: int = 64, seed: int = 7) -> str:
-    """DuckDB mirror of ``hyperplane_bucket`` over the same seeded planes."""
+    """DuckDB mirror of ``hyperplane_np_udf`` over the same seeded planes."""
     parts = []
     for i, signs in enumerate(hyperplane_signs(n_bits, dim, seed)):
         lits = ", ".join(str(s) for s in signs)
@@ -115,24 +98,15 @@ def hyperplane_bucket_sql(emb_sql: str, n_bits: int = 8, dim: int = 64, seed: in
 
 
 def hyperplane_np_udf(n_bits: int, dim: int, seed: int):
-    """Arrow-vectorized hyperplane-bucket kernel over pre-quantized int64
-    arrays: bucket = Σ_i 2^i·[q·s_i ≥ 0] with the SAME seeded ±1 planes as
-    ``hyperplane_bucket_q``. Pure int64 matmul + sign test — exact, so the
-    bucket ids are bit-identical to the Column-expression form (and to the
-    DuckDB mirror). Replaces an interpreted ~n_bits×dim HOF fold per row."""
+    """Random-hyperplane LSH bucket of a pre-quantized vector:
+    bucket = Σ_i 2^i·[q·s_i ≥ 0] with s_i ∈ {±1}^dim the seeded planes.
+    Pure int64 matmul + sign test — exact, so the bucket ids are
+    bit-identical to the DuckDB mirror (``hyperplane_bucket_sql``)."""
     import numpy as np
 
     S = np.asarray(hyperplane_signs(n_bits, dim, seed), dtype=np.int64).T  # (dim, n_bits)
     W = (1 << np.arange(n_bits, dtype=np.int64))
-
-    @F.pandas_udf("int")
-    def bucket_np(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype="int32")
-        Q = np.stack(qs.to_numpy()).astype(np.int64, copy=False)
-        return pd.Series((((Q @ S) >= 0) @ W).astype("int32"))
-
-    return bucket_np
+    return _quantized_batch_udf(dim, "int", lambda Q: (((Q @ S) >= 0) @ W).astype("int32"))
 
 
 def _drop_hot_buckets(e: DataFrame, bucket_cap: int | None, key: str = "bkt") -> DataFrame:
@@ -160,29 +134,23 @@ def bucketed_neighbors(
     dim: int = 64,
     seed: int = 7,
     bucket_cap: int | None = None,
-    use_hyperplanes: bool = True,
 ) -> DataFrame:
     """All same-bucket pairs (a < b) with cosine — the LSH candidate join.
 
     r06 shape (result-identical): the scan is spread (single-rowgroup
     parquet = one task), the fixed-point vector is materialized ONCE per
-    row for the bucket bits (not re-quantized per bit), the vector norm
-    is computed once per VECTOR below the join instead of once per pair
-    (identical doubles — same ops, same order)."""
+    row for the bucket kernel, the vector norm is computed once per VECTOR
+    below the join instead of once per pair (identical doubles — same ops,
+    same order)."""
     from warcbase_spark.functions.layout import spread_scan
 
-    v = as_double(F.col(emb_col))
-    src = spread_scan(emb_df)
-    if use_hyperplanes:
-        base = src.select(
-            F.col(id_col).alias("id"), v.alias("v"),
-            quantize_q(F.col(emb_col)).alias("_q"),
-        )
-        e = base.select(
-            "id", "v", hyperplane_np_udf(n_bits, dim, seed)(F.col("_q")).alias("bkt")
-        )
-    else:
-        e = src.select(F.col(id_col).alias("id"), v.alias("v"), sign_bucket(v, n_bits).alias("bkt"))
+    base = spread_scan(emb_df).select(
+        F.col(id_col).alias("id"), as_double(F.col(emb_col)).alias("v"),
+        quantize_q(F.col(emb_col)).alias("_q"),
+    )
+    e = base.select(
+        "id", "v", hyperplane_np_udf(n_bits, dim, seed)(F.col("_q")).alias("bkt")
+    )
     e = e.select("id", "v", "bkt", F.sqrt(dot(F.col("v"), F.col("v"))).alias("_n"))
     e = _drop_hot_buckets(e, bucket_cap)
     a = e.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("_n").alias("na"), "bkt")
@@ -201,129 +169,47 @@ def bucketed_neighbors(
 
 def ivf_centroids(n_cells: int, dim: int, seed: int) -> list[list[int]]:
     """Seeded integer centroid matrix for the IVF coarse quantizer — shared
-    by the Spark expression and the SQL oracle (same literals, both
-    engines). Integer components in [-1000, 1000] so every assignment dot
-    product is exact 64-bit integer arithmetic."""
+    by the Spark kernels and the SQL oracle (same literals, both engines).
+    Integer components in [-1000, 1000] so every assignment dot product is
+    exact 64-bit integer arithmetic."""
     rng = random.Random(seed)
     return [[rng.randint(-1000, 1000) for _ in range(dim)] for _ in range(n_cells)]
 
 
-def quantize_q(emb) -> Column:
-    """The fixed-point embedding used for ALL integer centroid arithmetic:
-    round(x * 1e6) as long — exact 64-bit dots (|q| ≲ 5e6, dim 64 → dots
-    ≤ ~1.6e15, inside both long and float64-exact-integer range, so Spark
-    long math and DuckDB list_dot_product agree bit-for-bit)."""
-    return F.transform(emb, lambda x: F.round(x.cast("double") * 1e6, 0).cast("long"))
-
-
-def _ivf_scores_q(q, cents: list[list[int]]) -> list[Column]:
-    """Integer inner-product scores of a pre-quantized vector against each
-    centroid literal. Kept as aggregate(zip_with) folds: a flat
-    n_cells×dim expression tree blows janino's 64 KB method limit and the
-    failed-compile-plus-interpreted fallback is slower than the fold (see
-    hyperplane_bucket_q). Hot assignment paths use the Arrow-vectorized
-    ``ivf_cell_np_udf`` instead; this stays the portable Column form."""
-    out = []
-    for cv in cents:
-        sv = F.array(*[F.lit(s) for s in cv])
-        out.append(
-            F.aggregate(
-                F.zip_with(q, sv, lambda x, y: x * y),
-                F.lit(0).cast("long"),
-                lambda s, v: s + v,
-            )
-        )
-    return out
-
-
-def _ivf_scores(emb, cents: list[list[int]]) -> list[Column]:
-    """Integer inner-product score of the fixed-point embedding against each
-    centroid (spherical-k-means-style assignment — argmax inner product).
-
-    Column-expression form: the quantize transform is inlined once per
-    centroid. Hot paths materialize ``quantize_q`` as a column once and
-    call ``_ivf_scores_q`` so each element quantizes once per row, not
-    once per centroid."""
-    return _ivf_scores_q(quantize_q(emb), cents)
-
-
-def _argmax_cell(scores: list[Column]) -> Column:
-    """argmax-score cell id, earliest index on ties (struct array_max with a
-    reverse-index pref field — each score expression appears exactly once
-    in the plan)."""
-    n = len(scores)
-    structs = [
-        F.struct(s.alias("score"), F.lit(n - i).alias("pref"), F.lit(i).alias("cell"))
-        for i, s in enumerate(scores)
-    ]
-    return F.array_max(F.array(*structs)).getField("cell")
-
-
-def ivf_cell(emb, n_cells: int = 16, dim: int = 64, seed: int = 13,
-             centroids: "list[list[int]] | None" = None) -> Column:
-    """IVF cell id = argmax-centroid-score, earliest index on ties. At
-    cluster scale the cell is the PARTITION KEY of the vector table (write
-    partitioned/clustered by cell), so an nprobe query prunes to nprobe
-    partitions of the scan. ``centroids`` overrides the seeded random
-    quantizer with trained ones (ivf_train_kmeans)."""
-    cents = centroids if centroids is not None else ivf_centroids(n_cells, dim, seed)
-    return _argmax_cell(_ivf_scores(emb, cents))
-
-
-def ivf_cell_q(q, n_cells: int = 16, dim: int = 64, seed: int = 13,
-               centroids: "list[list[int]] | None" = None) -> Column:
-    """``ivf_cell`` over a pre-quantized (``quantize_q``) column — each
-    element quantizes once per row instead of once per centroid."""
-    cents = centroids if centroids is not None else ivf_centroids(n_cells, dim, seed)
-    return _argmax_cell(_ivf_scores_q(q, cents))
-
-
 def ivf_cell_np_udf(cents: list[list[int]]):
-    """Arrow-vectorized argmax-cell kernel over pre-quantized int64 arrays
-    (guide §4.2 — hand whole batches to a native vectorized library).
+    """IVF cell of a pre-quantized vector: argmax centroid score, earliest
+    cell on ties. At cluster scale the cell is the PARTITION KEY of the
+    vector table (write partitioned/clustered by cell), so an nprobe query
+    prunes to nprobe partitions of the scan.
 
     Bit-exact by construction: the ONLY rounding (quantize_q's
     round(x·1e6)) stays in the JVM; this kernel is a pure int64 matmul +
     argmax. numpy int64 @ int64 is exact at these magnitudes (|dot| ≲
     1.6e15 < 2^63), and ``argmax`` returns the FIRST max — the same
-    lowest-cell tie-break as ``_argmax_cell``'s pref field. Catalyst's
-    interpreted HOF fold costs ~5 ms/row for the 16×64 argmax (HOF
-    lambdas are CodegenFallback, and the flat expression alternative blows
-    janino's 64 KB method limit); the numpy batch kernel measures ~µs/row.
-    """
+    lowest-cell tie-break as the oracles' ``list_position``. A Catalyst
+    HOF fold costs ~5 ms/row for the 16×64 argmax (HOF lambdas are
+    CodegenFallback, and the flat expression alternative blows janino's
+    64 KB method limit); the numpy batch kernel measures ~µs/row."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.int64).T  # (dim, n_cells)
-
-    @F.pandas_udf("int")
-    def cell_np(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype="int32")
-        Q = np.stack(qs.to_numpy()).astype(np.int64, copy=False)
-        return pd.Series(np.argmax(Q @ C, axis=1).astype("int32"))
-
-    return cell_np
+    return _quantized_batch_udf(
+        C.shape[0], "int", lambda Q: np.argmax(Q @ C, axis=1).astype("int32")
+    )
 
 
 def ivf_probes_np_udf(cents: list[list[int]], nprobe: int):
-    """Arrow-vectorized probe-cell kernel: top-``nprobe`` cells per query,
+    """Probe cells of a pre-quantized query: its top-``nprobe`` cells,
     (score DESC, cell ASC) — ``argsort(-scores, kind='stable')`` keeps the
-    ascending-cell order on score ties, identical to the negated-score
-    struct sort of ``ivf_probe_cells``. Same exact-int64 argument as
-    ``ivf_cell_np_udf``."""
+    ascending-cell order on score ties, the oracles' ranking. Same
+    exact-int64 argument as ``ivf_cell_np_udf``."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.int64).T
-
-    @F.pandas_udf("array<int>")
-    def probes_np(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype=object)
-        Q = np.stack(qs.to_numpy()).astype(np.int64, copy=False)
-        idx = np.argsort(-(Q @ C), axis=1, kind="stable")[:, :nprobe].astype("int32")
-        return pd.Series(list(idx))
-
-    return probes_np
+    return _quantized_batch_udf(
+        C.shape[0], "array<int>",
+        lambda Q: list(np.argsort(-(Q @ C), axis=1, kind="stable")[:, :nprobe].astype("int32")),
+    )
 
 
 def ivf_topk(
@@ -339,30 +225,29 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: assign vectors to their argmax centroid cell,
     search only the query's ``nprobe`` best cells, brute-force cosine
-    within. The query's cell ranking comes from a ONE-ROW collect of its
-    integer centroid scores (exact — no float re-derivation on the driver),
+    within. The query's probe cells come from a ONE-ROW collect of
+    ``ivf_probes_np_udf`` (exact — no float re-derivation on the driver),
     then the candidate filter is a literal ``cell IN (...)`` — the shape
     that becomes partition pruning when the table is stored
-    partitioned-by-cell."""
+    partitioned-by-cell. A query whose vector is NULL or ragged probes no
+    cell: the result is empty."""
     from warcbase_spark.functions.layout import spread_scan
 
     cents = ivf_centroids(n_cells, dim, seed)
-    v = as_double(F.col(emb_col))
     base = spread_scan(emb_df).select(
-        F.col(id_col).alias("vec_id"), v.alias("v"),
+        F.col(id_col).alias("vec_id"), as_double(F.col(emb_col)).alias("v"),
         quantize_q(F.col(emb_col)).alias("_q"),
     )
     e = base.select(
         "vec_id", "v",
-        ivf_cell_q(F.col("_q"), n_cells, dim, seed).alias("cell"),
+        ivf_cell_np_udf(cents)(F.col("_q")).alias("cell"),
         F.sqrt(dot(F.col("v"), F.col("v"))).alias("_n"),
     )
-    qscores = (
+    probes = (
         emb_df.filter(F.col(id_col) == query_id)
-        .select(F.array(*_ivf_scores(F.col(emb_col), cents)).alias("s"))
-        .collect()[0]["s"]
-    )
-    probes = sorted(range(n_cells), key=lambda i: (-qscores[i], i))[:nprobe]
+        .select(ivf_probes_np_udf(cents, nprobe)(quantize_q(F.col(emb_col))).alias("p"))
+        .collect()[0]["p"]
+    ) or []
     q = e.filter(F.col("vec_id") == query_id).select(
         F.col("v").alias("qv"), F.col("_n").alias("qn")
     )
@@ -378,35 +263,6 @@ def ivf_topk(
         .orderBy(F.desc("sim"), "vec_id")
         .limit(k)
     )
-
-
-def ivf_probe_cells(emb, n_cells: int = 16, nprobe: int = 2, dim: int = 64,
-                    seed: int = 13,
-                    centroids: "list[list[int]] | None" = None) -> Column:
-    """Array of the embedding's ``nprobe`` best cells (score DESC, cell ASC
-    on ties), fully Catalyst-side: one struct per centroid with NEGATED
-    score so ``array_sort``'s ascending lexicographic order ranks best
-    first, sliced to nprobe. Each centroid-score expression appears exactly
-    once in the plan (same discipline as ``ivf_cell``)."""
-    cents = centroids if centroids is not None else ivf_centroids(n_cells, dim, seed)
-    return _probe_cells_from_scores(_ivf_scores(emb, cents), nprobe)
-
-
-def ivf_probe_cells_q(q, n_cells: int = 16, nprobe: int = 2, dim: int = 64,
-                      seed: int = 13,
-                      centroids: "list[list[int]] | None" = None) -> Column:
-    """``ivf_probe_cells`` over a pre-quantized (``quantize_q``) column."""
-    cents = centroids if centroids is not None else ivf_centroids(n_cells, dim, seed)
-    return _probe_cells_from_scores(_ivf_scores_q(q, cents), nprobe)
-
-
-def _probe_cells_from_scores(scores: list[Column], nprobe: int) -> Column:
-    structs = [
-        F.struct((-s).alias("nscore"), F.lit(i).alias("cell"))
-        for i, s in enumerate(scores)
-    ]
-    ranked = F.array_sort(F.array(*structs))
-    return F.transform(F.slice(ranked, 1, nprobe), lambda x: x.getField("cell"))
 
 
 def ivf_topk_batch(
@@ -425,7 +281,7 @@ def ivf_topk_batch(
     (retrieval for a FULL query set, not one point lookup): every vector
     gets its argmax cell, every query row (``query_filter``, a predicate
     over any column of ``emb_df``, selects them from the same table) gets
-    its nprobe best cells via ``ivf_probe_cells``
+    its nprobe best cells via ``ivf_probes_np_udf``
     (no driver collect anywhere), and candidates meet queries in ONE join
     on ``cell``. Per-query top-k is a window over (sim DESC, vec_id).
 
@@ -447,10 +303,9 @@ def ivf_topk_batch(
     )
     # fixed-point vector and norm are materialized ONCE per row; the cell
     # assignment / probe ranking run as Arrow-vectorized int64 matmul
-    # batches (bit-exact — see ivf_cell_np_udf) instead of interpreted
-    # HOF folds; and the per-pair cosine divides by per-VECTOR norms
-    # computed below the join — identical doubles (same ops, same order),
-    # ~3× fewer dots per pair (guide §1.2 / §4.2)
+    # batches (bit-exact — see ivf_cell_np_udf); and the per-pair cosine
+    # divides by per-VECTOR norms computed below the join — identical
+    # doubles (same ops, same order), ~3× fewer dots per pair
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim, seed)
     e = base.select(
         "vec_id", "v",
@@ -549,7 +404,7 @@ def ivf_oracle_sql(
 ) -> str:
     """DuckDB twin of ``ivf_topk`` over the same seeded centroids: cell =
     first index of the max score (list_position tie-breaks earliest, same
-    as the Spark pref field); probe cells ranked (score DESC, cell ASC)."""
+    as numpy's argmax); probe cells ranked (score DESC, cell ASC)."""
     cents = ivf_centroids(n_cells, dim, seed)
     scores = ", ".join(
         "list_sum(list_transform(list_zip(q, [" + ", ".join(str(c) for c in cv)
@@ -589,7 +444,6 @@ def ann_topk(
     emb_col: str = "embedding",
     dim: int = 64,
     seeds: tuple[int, ...] = (7, 101),
-    use_hyperplanes: bool = True,
 ) -> DataFrame:
     """Approximate top-k for one query: search the union of the query's
     buckets across ``len(seeds)`` independent hash tables (multi-table
@@ -597,30 +451,23 @@ def ann_topk(
     1-row query side."""
     from warcbase_spark.functions.layout import spread_scan
 
-    v = as_double(F.col(emb_col))
-    src = spread_scan(emb_df)
-    if use_hyperplanes:
-        base = src.select(
-            F.col(id_col).alias("vec_id"), v.alias("v"),
-            quantize_q(F.col(emb_col)).alias("_q"),
-        )
-        bkts = [
-            hyperplane_np_udf(n_bits, dim, s)(F.col("_q")).alias(f"bkt{t}")
-            for t, s in enumerate(seeds)
-        ]
-        e = base.select("vec_id", "v", *bkts)
-    else:
-        e = src.select(F.col(id_col).alias("vec_id"), v.alias("v"),
-                       sign_bucket(v, n_bits).alias("bkt0"))
-    n_tables = len(seeds) if use_hyperplanes else 1
+    base = spread_scan(emb_df).select(
+        F.col(id_col).alias("vec_id"), as_double(F.col(emb_col)).alias("v"),
+        quantize_q(F.col(emb_col)).alias("_q"),
+    )
+    bkts = [
+        hyperplane_np_udf(n_bits, dim, s)(F.col("_q")).alias(f"bkt{t}")
+        for t, s in enumerate(seeds)
+    ]
+    e = base.select("vec_id", "v", *bkts)
     e = e.select("*", F.sqrt(dot(F.col("v"), F.col("v"))).alias("_n"))
     q = e.filter(F.col("vec_id") == query_id).select(
         F.col("v").alias("qv"),
         F.col("_n").alias("qn"),
-        *[F.col(f"bkt{t}").alias(f"qbkt{t}") for t in range(n_tables)],
+        *[F.col(f"bkt{t}").alias(f"qbkt{t}") for t in range(len(seeds))],
     )
     cond = F.lit(False)
-    for t in range(n_tables):
+    for t in range(len(seeds)):
         cond = cond | (F.col(f"bkt{t}") == F.col(f"qbkt{t}"))
     return (
         e.join(F.broadcast(q), cond)
@@ -668,13 +515,15 @@ def ivf_train_kmeans(
     (``ivf_kmeans_oracle_sql``) agree bit-for-bit: assignment dots are
     exact int64, means are ``sum div count`` (truncation matches both
     engines), argmax ties break to the lowest cell, empty cells keep their
-    previous centroid.
+    previous centroid. A vector that is NULL or not ``dim`` long gets no
+    cell and moves no centroid.
 
     Scale shape: per iteration, one assignment pass (argmax over n_cells
     literal dots — map-only) + one (cell, dim)-keyed aggregate; the ONLY
     driver exchange is the n_cells×dim centroid matrix itself (16×64
     longs here), the irreducible k-means driver state. The quantized
-    vectors are localCheckpoint'ed once and reused across iterations.
+    vectors are cached once, reused across iterations and unpersisted on
+    return.
     """
     from warcbase_spark.functions.layout import spread_scan
 
@@ -689,8 +538,7 @@ def ivf_train_kmeans(
     v.count()
     cents = [list(cv) for cv in ivf_centroids(n_cells, dim, seed)]
     for _ in range(iters):
-        # Arrow-vectorized int64 argmax (bit-exact, see ivf_cell_np_udf) —
-        # the interpreted HOF fold costs ~5 ms/row here, paid per iteration
+        # one int64 argmax per Arrow batch (bit-exact, see ivf_cell_np_udf)
         assigned = v.select(ivf_cell_np_udf(cents)(F.col("vi")).alias("cell"), "vi")
         agg = (
             assigned.select("cell", F.posexplode("vi").alias("pos", "val"))
@@ -698,8 +546,12 @@ def ivf_train_kmeans(
             .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
+        # the NULL cell holds the bad vectors; skipped here, not by a
+        # Filter, which the optimizer would push below the Project and so
+        # run the kernel twice
         for r in agg:
-            cents[r["cell"]][r["pos"]] = _trunc_div(int(r["s"]), int(r["n"]))
+            if r["cell"] is not None:
+                cents[r["cell"]][r["pos"]] = _trunc_div(int(r["s"]), int(r["n"]))
     v.unpersist()
     return cents
 

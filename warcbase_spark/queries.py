@@ -1423,7 +1423,7 @@ def dedup_simhash(spark, sf_dir):
     )
 
 
-# seeded random-hyperplane LSH buckets (similarity.hyperplane_bucket):
+# seeded random-hyperplane LSH buckets (similarity.hyperplane_np_udf):
 # the SQL mirror embeds the SAME seeded ±1 planes, so Spark and DuckDB
 # bucket identically (integer fixed-point dot signs — no float divergence)
 from warcbase_spark.operators.similarity import hyperplane_bucket_sql as _hp_sql  # noqa: E402
@@ -1525,10 +1525,10 @@ def ann_ivf_batch(spark, sf_dir):
     """Batch ANN — the many-query form a training-data pipeline runs
     (retrieval for a full query set / corpus-vs-corpus dedup), vs
     ann_ivf_topk's single point lookup. Every 25th vector is a query; each
-    gets its nprobe=2 best cells Catalyst-side (array_sort over negated
-    centroid scores — no per-query driver collect), candidates meet
-    queries in one join on cell (= partition pruning when the table is
-    stored partitioned by cell), per-query top-5 by window."""
+    gets its nprobe=2 best cells from the int64 numpy probe kernel (no
+    per-query driver collect), candidates meet queries in one join on cell
+    (= partition pruning when the table is stored partitioned by cell),
+    per-query top-5 by window."""
     from warcbase_spark.operators.similarity import ivf_topk_batch
 
     return ivf_topk_batch(
