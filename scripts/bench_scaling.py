@@ -114,7 +114,7 @@ def main() -> None:
         "",
         "Notes:",
         "- Every stage is partition-parallel: no global windows (seq is a "
-        "range-partitioned monotonically_increasing_id rank), no driver-side "
+        "per-bucket rank over sampled bound literals), no driver-side "
         "loops, no per-row Python (single Arrow UDF for canonicalization; "
         "bloom probe is JVM BloomFilterMightContain).",
         "- The sandbox is one 32-core VM with visible co-tenant interference "

@@ -80,7 +80,7 @@ def main() -> None:
     out["decontam_sec"] = round(time.monotonic() - t0, 2)
 
     t0 = time.monotonic()
-    p = pack_sequences(docs, ctx_len=2048, bucket_width=8192)
+    p = pack_sequences(docs, ctx_len=2048)
     agg = p.agg(
         F.count("*").alias("rows"),
         F.max("tok_start").alias("max_start"),
@@ -127,7 +127,7 @@ def main() -> None:
     reg = []
     t0 = time.monotonic()
     e2e = training_pipeline(
-        wide, eval_mod=97, ctx_len=2048, bucket_width=8192, cache_registry=reg,
+        wide, eval_mod=97, ctx_len=2048, cache_registry=reg,
         minhash_hash_mode="md5",  # oracle-portable mode, explicit since the engine default is 'fast'
     ).collect()
     out["e2e_sec"] = round(time.monotonic() - t0, 2)
@@ -150,7 +150,7 @@ def main() -> None:
     reg = []
     t0 = time.monotonic()
     e2e_fast = training_pipeline(
-        wide, eval_mod=97, ctx_len=2048, bucket_width=8192,
+        wide, eval_mod=97, ctx_len=2048,
         minhash_hash_mode="fast", cache_registry=reg,
     ).collect()
     out["e2e_fast_sec"] = round(time.monotonic() - t0, 2)

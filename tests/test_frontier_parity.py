@@ -208,8 +208,8 @@ def test_round_job_budget(steady_round):
     design paid. Job ids come from DAGScheduler's counter."""
     spent, _ = steady_round
     # measured 14 at local[8] (AQE is off inside rounds, so no stage
-    # sub-jobs): the scheduler's 3 eager jobs (politeness broadcast, range
-    # checkpoint, seq counts), the schedule write and its winner broadcast,
+    # sub-jobs): the scheduler's 3 eager jobs (politeness broadcast, bounds
+    # sample, seq totals), the schedule write and its winner broadcast,
     # the seen write, the seen filter build, and the frontier write with its
     # 6 broadcasts. A footer-inference read or a Spark metrics write per
     # round would trip this bound.
@@ -223,6 +223,38 @@ def test_steady_round_reuses_codegen(steady_round):
     evicts its own classes and recompiles them all, every round."""
     _, compiled = steady_round
     assert compiled <= 10, f"round compiled {compiled} codegen classes"
+
+
+def test_scheduler_and_rounds_leave_no_persisted_rdd(spark, corpus_dir):
+    """Repeated scheduler calls and crawl rounds in one long-lived session
+    leave no cached block behind: 4 ``schedule_round_combined`` calls, each
+    followed by unpersisting its registry, then a 4-round crawl, end with
+    no more persisted RDDs than they started with (a persisted
+    intermediate the registry cannot reach would add one per call)."""
+    from pyspark.sql import functions as F
+
+    from warcbase_spark.operators.scheduler import schedule_round_combined
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    cand = spark.range(2000).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("url_key"),
+        F.concat(F.lit("h"), (F.col("id") % 20).cast("string")).alias("host"),
+        (F.col("id") % 3).cast("int").alias("priority"),
+    )
+    pol = spark.createDataFrame([("*", 5)], "host string, budget int")
+    for _ in range(4):
+        reg: list = []
+        schedule_round_combined(cand, pol, cache_registry=reg).write.mode(
+            "overwrite"
+        ).format("noop").save()
+        for df in reg:
+            df.unpersist()
+    state = "/tmp/warcbase_spark_testfix/crawlstate_leak"
+    shutil.rmtree(state, ignore_errors=True)
+    assert len(FrontierCrawl(spark, corpus_dir, state, max_rounds=4).run()) == 4
+    # ≤, not ==: the ContextCleaner may release an earlier test's RDD meanwhile
+    assert jsc.getPersistentRDDs().size() <= before
 
 
 def test_seen_compaction_transparent(crawl):

@@ -4,16 +4,17 @@ repetition stats, decontamination, sequence packing, weighted mixing."""
 from __future__ import annotations
 
 from collections import Counter
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from warcbase_spark.operators.pipeline import (
-    add_global_cumsum,
     decontaminate,
     pack_sequences,
     repetition_stats,
     weighted_sample,
 )
+from warcbase_spark.operators.scheduler import add_global_seq
 
 
 def _rep(spark, text):
@@ -105,25 +106,47 @@ def test_decontaminate_shuffle_fallback_parity(spark):
     assert a == b and len(a) > 0
 
 
-def test_add_global_cumsum_bucket_independence(spark):
+@contextmanager
+def _shuffle_partitions(spark, n):
+    """The bucket count of ``add_global_seq`` is the session's
+    ``spark.sql.shuffle.partitions``."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_global_running_sum_bucket_independence(spark):
+    """The running sum is the single-node one at every bucket count, from
+    one bucket to more buckets than rows have distinct sample keys."""
     rows = [(i, (i * 37) % 11 + 1) for i in range(200)]
     df = spark.createDataFrame(rows, ["doc_id", "w"])
     expect, acc = {}, 0
     for i, w in rows:
         acc += w
         expect[i] = acc
-    for bw in (1, 7, 64, 1 << 40):
-        got = {
-            r.doc_id: r.cum
-            for r in add_global_cumsum(df, "doc_id", F.col("w"), bucket_width=bw).collect()
-        }
-        assert got == expect, f"bucket_width={bw}"
+    for n in (1, 3, 7, 64):
+        with _shuffle_partitions(spark, n):
+            reg: list = []
+            total: list = []
+            got = {
+                r.doc_id: r.cum
+                for r in add_global_seq(
+                    df, ["doc_id"], "cum", weight=F.col("w"), total_out=total, cache_registry=reg
+                ).collect()
+            }
+            for d in reg:
+                d.unpersist()
+        assert got == expect, f"shuffle.partitions={n}"
+        assert total == [acc]
 
 
 def test_pack_sequences_invariants(spark):
     rows = [(i, " ".join(f"t{j}" for j in range((i * 13) % 40 + 1))) for i in range(100)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = sorted(pack_sequences(df, ctx_len=32, bucket_width=9).collect(), key=lambda r: r.doc_id)
+    out = sorted(pack_sequences(df, ctx_len=32).collect(), key=lambda r: r.doc_id)
     # token stream is contiguous: each doc starts where the previous ended
     pos = 0
     for r in out:
@@ -169,10 +192,11 @@ def test_global_shuffle_is_permutation_and_deterministic(spark):
     # a different seed yields a different permutation
     c = {r.doc_id: r.shuffle_pos for r in global_shuffle(df, seed="epoch1").collect()}
     assert c != a and sorted(c.values()) == list(range(1, 501))
-    # prefix_len (bucket count) never changes the permutation
-    for pl in (1, 3, 4):
-        d = {r.doc_id: r.shuffle_pos for r in global_shuffle(df, prefix_len=pl).collect()}
-        assert d == a, f"prefix_len={pl}"
+    # the bucket count never changes the permutation
+    for n in (1, 3, 7, 64):
+        with _shuffle_partitions(spark, n):
+            d = {r.doc_id: r.shuffle_pos for r in global_shuffle(df).collect()}
+        assert d == a, f"shuffle.partitions={n}"
 
 
 def test_pack_manifest_every_pack_full_but_last(spark):
@@ -182,7 +206,7 @@ def test_pack_manifest_every_pack_full_but_last(spark):
 
     rows = [(i, " ".join(f"t{j}" for j in range((i * 7) % 25 + 1))) for i in range(120)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    p = pack_sequences(df, ctx_len=32, bucket_width=11)
+    p = pack_sequences(df, ctx_len=32)
     tok_end = F.col("tok_start") + F.col("ntok")
     x = p.select(
         "tok_start", tok_end.alias("tok_end"),

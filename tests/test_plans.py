@@ -132,24 +132,44 @@ def test_no_per_row_python_anywhere(spark, name):
     assert "BatchEvalPython" not in plan
 
 
-def test_url_dictionary_no_single_task_window(spark):
-    """A10 dense-id assignment must NOT plan a partition-less WindowExec —
-    the reference's 1-reducer FST funnel (UrlMappingMapReduceBuilder.java:254)
-    that add_global_seq exists to replace. The plan must instead show a
-    range repartition (parallel sort) and zero Window operators."""
-    df = QUERIES["url_dictionary"](spark, SF)
+@pytest.mark.parametrize(
+    "name", ["url_dictionary", "pack_sequences", "global_shuffle_pos", "schedule_round_combined"]
+)
+def test_global_order_no_single_task_window(spark, name):
+    """Global order (dense ids, token offsets, shuffle positions, the crawl
+    seq) must NOT plan a partition-less WindowExec — the reference's
+    1-reducer FST funnel (UrlMappingMapReduceBuilder.java:254) — nor any
+    ``Exchange SinglePartition``: every Window is partitioned by its
+    bucket, and the bucket offsets come from the driver as literals."""
+    import re
+
+    if name == "schedule_round_combined":
+        from warcbase_spark.operators.scheduler import schedule_round_combined
+
+        cand = spark.range(200).select(
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias("url_key"),
+            F.concat(F.lit("h"), (F.col("id") % 5).cast("string")).alias("host"),
+            (F.col("id") % 3).cast("int").alias("priority"),
+        )
+        pol = spark.createDataFrame([("*", 7)], "host string, budget int")
+        df = schedule_round_combined(cand, pol)
+    else:
+        df = QUERIES[name](spark, SF)
+    df.collect()  # AQE: the final plan, with every stage it ran
     plan = plan_of(df)
-    assert "Window" not in plan
-    # the range-sorted intermediate is localCheckpoint'ed (lineage truncated
-    # so counts-pass and stamp-pass see identical row placement), so the
-    # final plan reads the checkpoint RDD rather than showing the
-    # rangepartitioning exchange — assert that shape
-    assert "Scan ExistingRDD" in plan
-    # ids are a dense 1..N permutation in url_key order
-    rows = df.orderBy("id").collect()
-    assert [r["id"] for r in rows] == list(range(1, len(rows) + 1))
-    keys = [r["url_key"] for r in rows]
-    assert keys == sorted(keys)
+    assert "SinglePartition" not in plan, plan
+    # WindowExec prints "Window [exprs], [partition spec], [order spec]",
+    # and drops the middle group when it is empty
+    windows = re.findall(r"Window \[.*", plan)
+    assert windows, plan
+    for w in windows:
+        assert re.fullmatch(r"Window \[[^\]]*\], \[[^\]]+\], \[[^\]]*\]", w.strip()), w
+    if name == "url_dictionary":
+        # ids are a dense 1..N permutation in url_key order
+        rows = df.orderBy("id").collect()
+        assert [r["id"] for r in rows] == list(range(1, len(rows) + 1))
+        keys = [r["url_key"] for r in rows]
+        assert keys == sorted(keys)
 
 
 def test_ivf_cell_partitioned_store_prunes(spark):

@@ -5,6 +5,7 @@ recrawl round run the cogrouped cuckoo seen filter (SEEN_BLOOM_MAX_KEYS
 forced to 0), the regime the default-sized parity crawl never reaches; the
 tests with their own state run the default Bloom."""
 
+import re
 import shutil
 
 import pytest
@@ -109,6 +110,41 @@ def test_recrawl_on_fresh_state_bootstraps(spark, corpus_dir):
     assert f0.count() > 1
     out = fc.run()
     assert len(out) >= 1
+
+
+def test_canonicalizer_runs_once_per_path(spark, corpus_dir, monkeypatch):
+    """Every frontier entry path — bootstrap seeds, unsee, recrawl and a
+    round's extracted links — plans the URL canonicalizer UDF once per
+    write: a url_key filter pushed below the UDF's Project would plan a
+    second ArrowEvalPython over the same URLs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list[tuple[str, str]] = []
+    path = ["bootstrap"]
+    write = DataFrameWriter.parquet
+
+    def spy(self, *args, **kwargs):
+        plans.append((path[0], self._df._jdf.queryExecution().executedPlan().toString()))
+        return write(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    state = "/tmp/warcbase_spark_testfix/crawlstate_one_udf"
+    shutil.rmtree(state, ignore_errors=True)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
+    fc.bootstrap()
+    path[0] = "round"
+    fc.run_round(0)
+    urls = fc.schedule().select("url").limit(2)
+    path[0] = "unsee"
+    fc.unsee(urls)
+    path[0] = "recrawl"
+    fc.recrawl(urls)
+    # distinct nodes: a cached plan is printed once per reference to it
+    udfs: dict[str, int] = {}
+    for name, plan in plans:
+        nodes = set(re.findall(r"ArrowEvalPython \[[^\]]*\], \[[^\]]*\]", plan))
+        udfs[name] = max(udfs.get(name, 0), len(nodes))
+    assert udfs == {"bootstrap": 1, "round": 1, "unsee": 1, "recrawl": 1}, udfs
 
 
 def test_run_recovers_stale_manifest_after_swap_crash(spark, corpus_dir):

@@ -169,13 +169,61 @@ def test_with_budgets_default_rows(spark):
         _budgets(spark, [("*", 2), ("h0.org", 7), ("*", 4)])
 
 
-def test_winner_set_not_cached(spark):
-    """The winner set is read once, by the output join, from
-    add_global_seq's local checkpoint; a cache over it would pin a second
-    copy for one read. Over uncached candidates the plan holds no cache."""
-    out = schedule_round_combined(_mk_candidates(spark), _mk_politeness(spark))
+def test_winner_set_cached_once_and_released(spark):
+    """The winner set is cached once, by add_global_seq, whose bounds
+    sample, totals collect and stamp all read that copy; the registry
+    releases it. Over uncached candidates the output plan holds that one
+    cache, and unpersisting the registry leaves no persisted RDD behind."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    reg: list = []
+    out = schedule_round_combined(
+        _mk_candidates(spark), _mk_politeness(spark), cache_registry=reg
+    )
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" not in plan, plan
+    assert plan.count("InMemoryRelation") == 1, plan
+    assert len(reg) == 1
+    out.write.mode("overwrite").format("noop").save()
+    for df in reg:
+        df.unpersist()
+    assert jsc.getPersistentRDDs().size() <= before
+
+
+def _stamps(spark, case, reg):
+    """One global-order stamp per caller of add_global_seq, over inputs
+    that are not cached themselves."""
+    from warcbase_spark.operators.pipeline import global_shuffle, pack_sequences
+
+    if case == "schedule":
+        out = schedule_round_combined(
+            _mk_candidates(spark, 700, hosts=3), _mk_politeness(spark), cache_registry=reg
+        )
+        return out.select("url_key", "seq")
+    docs = spark.range(300).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.array_repeat(F.lit("tok"), (F.col("id") % 9 + 1).cast("int")))
+        .alias("text"),
+    )
+    if case == "pack":
+        return pack_sequences(docs, ctx_len=16, cache_registry=reg)
+    return global_shuffle(docs, cache_registry=reg)
+
+
+@pytest.mark.parametrize("case", ["schedule", "pack", "shuffle"])
+def test_stamps_survive_cache_eviction(spark, case):
+    """The bucket bounds and offsets are plan literals, so a cached input
+    evicted before the final action is recomputed into the same stamps:
+    no checkpoint has to pin it."""
+    reg: list = []
+    ref = sorted(map(tuple, _stamps(spark, case, reg).collect()))
+    for df in reg:
+        df.unpersist()
+    reg = []
+    out = _stamps(spark, case, reg)  # bounds and totals collected from the cache
+    assert reg
+    for df in reg:
+        df.unpersist(blocking=True)  # evicted before the stamp runs
+    assert sorted(map(tuple, out.collect())) == ref
 
 
 def test_politeness_read_once(spark, tmp_path):

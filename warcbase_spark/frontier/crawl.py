@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from warcbase_spark.frontier.robots import drop_disallowed, robots_rules
-from warcbase_spark.functions.urls import canonical_cols
+from warcbase_spark.functions.urls import canon_struct_udf, canonical_cols
 from warcbase_spark.operators.extract import extract_links
 from warcbase_spark.operators.scheduler import (
     DEFAULT_BROADCAST_ROW_LIMIT,
@@ -68,6 +68,28 @@ def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
         .withColumn("host", host)
         .withColumn("url_hash", F.xxhash64("url_key"))
     )
+
+
+def _valid_candidates(
+    df: DataFrame, url_col: str = "url", observation: Observation | None = None
+) -> DataFrame:
+    """``canonicalize_candidates``' rows whose URL is valid (non-null
+    url_key), with the canonicalizer UDF planned once. A filter on url_key
+    over a Project would be pushed below it, onto a second evaluation of
+    the UDF; the struct is unpacked by ``inline`` instead, and a filter
+    cannot move below the generator that produces its column.
+    ``observation``, when given, records ``links`` (rows in) and
+    ``invalid`` (rows dropped)."""
+    cand = df.select("*", F.inline(F.array(canon_struct_udf(F.col(url_col))))).withColumn(
+        "url_hash", F.xxhash64("url_key")
+    )
+    if observation is not None:
+        cand = cand.observe(
+            observation,
+            F.count(F.lit(1)).alias("links"),
+            F.coalesce(F.sum(F.col("url_key").isNull().cast("long")), F.lit(0)).alias("invalid"),
+        )
+    return cand.filter(F.col("url_key").isNotNull())
 
 
 # the seen deltas and base (url_key, xxhash64 of it, the round that scheduled
@@ -308,18 +330,8 @@ class FrontierCrawl:
 
     def bootstrap(self) -> None:
         seeds = self.spark.read.parquet(f"{self.corpus_dir}/seeds.parquet")
-        cand = canonicalize_candidates(seeds, "url").filter(F.col("url_key").isNotNull())
-        cand = drop_disallowed(cand, self.robots_rules)
-        frontier = (
-            cand.groupBy("url_key")
-            .agg(
-                F.min("url").alias("url"),
-                F.first("host").alias("host"),
-                F.first("url_hash").alias("url_hash"),
-                F.max("priority").alias("priority"),
-                F.lit(0).alias("discovered_round"),
-            )
-        )
+        cand = drop_disallowed(_valid_candidates(seeds), self.robots_rules)
+        frontier = _merge_frontier(cand.withColumn("discovered_round", F.lit(0)))
         frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
         self._commit(-1, frontier.count())
 
@@ -335,7 +347,7 @@ class FrontierCrawl:
         driver-side, not by a Spark job.
 
         At the test config (local[8], 500 docs) a warm round runs 14 Spark
-        jobs: the scheduler's 3 eager jobs (range checkpoint, seq counts, the
+        jobs: the scheduler's 3 eager jobs (bounds sample, seq totals, the
         politeness broadcast), the schedule write with its winner broadcast
         (2), the seen write (1), the seen filter build (1), and the frontier
         write with its 6 broadcasts (7). A compaction round adds the seen
@@ -367,7 +379,7 @@ class FrontierCrawl:
         obs_round = Observation()
         joined = (
             schedule_round_combined(
-                frontier, self.politeness, self.salt_k,
+                frontier, self.politeness, self.salt_k, cache_registry=to_unpersist,
                 broadcast_row_limit=WINNER_BROADCAST_ROW_LIMIT,
             )
             .observe(
@@ -427,16 +439,7 @@ class FrontierCrawl:
         links = extract_links(fetched.drop("url_key", "host", "url_hash"))
 
         obs_cand = Observation()
-        cand = canonicalize_candidates(
-            links.select(F.col("dst_url").alias("url")), "url"
-        ).observe(
-            obs_cand,
-            F.count(F.lit(1)).alias("links"),
-            F.coalesce(F.sum(F.col("url_key").isNull().cast("long")), F.lit(0)).alias(
-                "invalid"
-            ),
-        )
-        cand = cand.filter(F.col("url_key").isNotNull())
+        cand = _valid_candidates(links.select(F.col("dst_url").alias("url")), observation=obs_cand)
         obs_robots = Observation()
         cand = drop_disallowed(cand, self.robots_rules).observe(
             obs_robots, F.count(F.lit(1)).alias("after_robots")
@@ -599,8 +602,7 @@ class FrontierCrawl:
         Returns the number of tombstoned keys."""
         last = (self.load_manifest() or {}).get("last_committed_round", -1)
         keys = (
-            canonicalize_candidates(urls, url_col)
-            .filter(F.col("url_key").isNotNull())
+            _valid_candidates(urls, url_col)
             .select("url_key")
             .distinct()
             .withColumn("ts_round", F.lit(last))
@@ -638,20 +640,14 @@ class FrontierCrawl:
         self.unsee(urls, url_col)
         last = self.load_manifest()["last_committed_round"]
         nxt = last + 1
-        cand = drop_disallowed(
-            canonicalize_candidates(urls, url_col).filter(F.col("url_key").isNotNull()),
-            self.robots_rules,
-        )
-        cand = cand.groupBy("url_key").agg(
-            F.min(url_col).alias("url"),
-            F.first("host").alias("host"),
-            F.first("url_hash").alias("url_hash"),
-            F.lit(priority).alias("priority"),
-            F.lit(nxt).alias("discovered_round"),
+        cand = drop_disallowed(_valid_candidates(urls, url_col), self.robots_rules).select(
+            "url_key", F.col(url_col).alias("url"), "host", "url_hash",
+            F.lit(priority).alias("priority"), F.lit(nxt).alias("discovered_round"),
         )
         pending_path = self._p("frontier", nxt)
         if os.path.exists(pending_path):
-            cand = _merge_frontier(self._frontier(nxt).unionByName(cand))
+            cand = self._frontier(nxt).unionByName(cand)
+        cand = _merge_frontier(cand)
         # checkpoint-protocol-preserving swap: the merged frontier is fully
         # written to a sibling dir first, then swapped in with two metadata
         # ops — overwriting in place would delete the committed frontier

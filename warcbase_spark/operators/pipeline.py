@@ -12,10 +12,10 @@ ExtractLinks/DetectLanguage pipelines). Design rules, per north rule:
   functions over the document's own token array: a narrow, map-only plan
   with ZERO shuffle. At 100 TB this is the difference between a pure scan
   and an explode that multiplies the shuffle volume by tokens-per-doc.
-- Corpus-wide coordinates (sequence packing) use a two-level prefix sum
-  (per-bucket window + tiny bucket-offset window + broadcast join) instead
-  of a global Window.orderBy, which would funnel every row through one
-  task.
+- Corpus-wide coordinates (sequence packing, the global shuffle) use
+  ``scheduler.add_global_seq``: per-bucket windows over sampled bucket
+  bounds plus driver-collected bucket offsets, instead of a global
+  Window.orderBy, which would funnel every row through one task.
 - Cross-corpus membership (decontamination) is a semi-join on shingle
   keys with the small side broadcast, falling back to a shuffled join
   past a row gate — same shape as the URL-seen operator (seen.py).
@@ -23,8 +23,10 @@ ExtractLinks/DetectLanguage pipelines). Design rules, per north rule:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from warcbase_spark.operators.scheduler import add_global_seq
 
 # ---------------------------------------------------------------------------
 # Repetition / quality statistics (Gopher-style rules, token-gram variant)
@@ -252,65 +254,12 @@ def decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def _bucket_offsets(d: DataFrame, total: Column) -> DataFrame:
-    """(_bkt, _off): the exclusive running sum of each ``_bkt`` bucket's
-    ``total`` in bucket order — level 2 of the two-level prefix sums below.
-    The table has one row per bucket; its window has no partition key, so
-    Spark plans it as one task behind an ``Exchange SinglePartition`` and
-    logs a "No Partition Defined for Window" warning (a constant partition
-    key such as ``lit(0)`` is optimized away and does not avoid either)."""
-    prev = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    return (
-        d.groupBy("_bkt")
-        .agg(total.alias("_btot"))
-        .select(
-            "_bkt",
-            F.coalesce(F.sum("_btot").over(prev), F.lit(0)).cast("long").alias("_off"),
-        )
-    )
-
-
-def add_global_cumsum(
-    df: DataFrame,
-    order_col: str,
-    weight: Column,
-    out_col: str = "cum",
-    bucket_width: int = 1 << 16,
-) -> DataFrame:
-    """Deterministic global running sum of ``weight`` in ``order_col``
-    order, without a global single-task window: two-level prefix sum.
-
-    Level 1: bucket = order_col div bucket_width (VALUE-based bucketing —
-    deterministic across re-evaluations, unlike repartitionByRange's
-    sampled boundaries) and a per-bucket window cumsum (shuffle keyed by
-    bucket). Level 2: per-bucket totals get their own cumulative offsets
-    (``_bucket_offsets``: a window over the tiny bucket table, n_buckets
-    rows — single-task but trivially small), broadcast-joined back. No
-    collect, no sampled boundaries, fully in-plan; at 1000 executors each
-    bucket is an independent task and the offset table stays KB-sized.
-
-    Requires ``order_col`` to be unique non-negative integers (doc ids).
-    """
-    bucket = (F.col(order_col) / bucket_width).cast("long").alias("_bkt")
-    d = df.withColumn("_w", weight.cast("long")).withColumn("_bkt", bucket)
-    local = d.withColumn(
-        "_lcum",
-        F.sum("_w").over(Window.partitionBy("_bkt").orderBy(order_col)),
-    )
-    offsets = _bucket_offsets(d, F.sum("_w"))
-    return (
-        local.join(F.broadcast(offsets), "_bkt")
-        .withColumn(out_col, (F.col("_off") + F.col("_lcum")).cast("long"))
-        .drop("_bkt", "_w", "_lcum", "_off")
-    )
-
-
 def pack_sequences(
     df: DataFrame,
     ctx_len: int = 128,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bucket_width: int = 1 << 16,
+    cache_registry: "list[DataFrame] | None" = None,
 ) -> DataFrame:
     """Concatenate-and-chunk sequence packing (the GPT-style pretraining
     layout): documents are concatenated in ``id_col`` order into one token
@@ -320,12 +269,16 @@ def pack_sequences(
     The output is the pack manifest a tokenizer/loader shards on: every
     row knows its global coordinates, so downstream can
     ``partitionBy(pack_first)`` and materialize training sequences without
-    any further global coordination. Built on :func:`add_global_cumsum`
-    (two-level prefix sum — no single-task global window, no collect).
+    any further global coordination. ``tok_end`` is the running token sum
+    of ``scheduler.add_global_seq`` over ``id_col`` (no single-task global
+    window; two small driver collects, the bucket bounds and totals). Its
+    cache of the (id, ntok) rows goes to ``cache_registry`` when given.
     """
     ntok = F.size(_tokens(F.col(text_col))).cast("long")
     d = df.select(F.col(id_col), ntok.alias("ntok")).where(F.col("ntok") > 0)
-    c = add_global_cumsum(d, id_col, F.col("ntok"), out_col="tok_end", bucket_width=bucket_width)
+    c = add_global_seq(
+        d, [id_col], "tok_end", weight=F.col("ntok"), cache_registry=cache_registry
+    )
     return c.select(
         id_col,
         "ntok",
@@ -398,40 +351,27 @@ def global_shuffle(
     df: DataFrame,
     seed: str = "shuf0",
     id_col: str = "doc_id",
-    prefix_len: int = 2,
+    cache_registry: "list[DataFrame] | None" = None,
 ) -> DataFrame:
-    """Assign every row its position in a deterministic pseudo-random
-    permutation (the training-order shuffle): order by
-    ``md5(seed || ':' || id)`` with the id as tie-break, positions 1..N.
+    """(``id_col``, ``shuffle_pos``): every row's position in a
+    deterministic pseudo-random permutation (the training-order shuffle),
+    ordered by ``md5(seed || ':' || id)`` with the id as tie-break,
+    positions 1..N.
 
     Same reproducibility argument as :func:`weighted_sample` — the
     permutation is a pure function of (seed, id), identical across
     retries, partitionings, and cluster sizes, unlike ``orderBy(rand())``.
 
-    Scale shape: a global ``row_number`` without the single-task global
-    window — the hash's first ``prefix_len`` hex chars are a uniform
-    ``16^prefix_len``-way bucket (bucket order == hash order, since the
-    bucket is a hash prefix), positions are (tiny cumulative bucket
-    offsets, broadcast-joined) + (per-bucket window rank); each bucket is
-    an independent task. Size ``prefix_len`` so a bucket's rows fit one
-    task: 2 (256 buckets) for up to ~10^8 rows, 4 (65,536) at 10^10+ —
-    the offsets table stays KB-to-MB-sized either way. Changing ``seed``
-    reshuffles every epoch.
+    Scale shape: the rank of ``scheduler.add_global_seq`` over (hash, id) —
+    a per-bucket window rank plus driver-collected bucket offsets, with
+    bucket bounds sampled from the data, so no single-task global window
+    and no bucket-size knob. Its cache of the (id, hash) rows goes to
+    ``cache_registry`` when given. Changing ``seed`` reshuffles every
+    epoch.
     """
-    if not 1 <= prefix_len <= 8:
-        raise ValueError(f"prefix_len must be in 1..8, got {prefix_len}")
     h = F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(id_col).cast("string")))
-    d = df.withColumn("_h", h).withColumn(
-        "_bkt", F.conv(F.substring("_h", 1, prefix_len), 16, 10).cast("long")
-    )
-    local = d.withColumn(
-        "_lpos", F.row_number().over(Window.partitionBy("_bkt").orderBy("_h", id_col))
-    )
-    offsets = _bucket_offsets(d, F.count("*"))
-    return (
-        local.join(F.broadcast(offsets), "_bkt")
-        .withColumn("shuffle_pos", (F.col("_off") + F.col("_lpos")).cast("long"))
-        .drop("_h", "_bkt", "_lpos", "_off")
+    return add_global_seq(
+        df.select(id_col), [h, id_col], "shuffle_pos", cache_registry=cache_registry
     )
 
 
@@ -444,7 +384,6 @@ def training_pipeline(
     docs: DataFrame,
     eval_mod: int = 37,
     ctx_len: int = 128,
-    bucket_width: int = 1 << 16,
     cc_iters: int = 8,
     minhash_hash_mode: str = "fast",
     cache_registry: "list[DataFrame] | None" = None,
@@ -473,11 +412,12 @@ def training_pipeline(
     Composition is the surface this function exists to test: every stage
     is green in isolation; chaining them exercises column contracts,
     re-used shingle normalization, and that no stage forces a driver
-    round-trip beyond the documented scalar gates (decontaminate's
-    broadcast gate count, the components loop counter). Scale shape is
-    inherited stage-by-stage: per-row keep Column, gated gram join,
-    bucketed LSH with hot-bucket guard, fixed-iteration label propagation,
-    two-level prefix sums — no single-task window, no data collect.
+    round-trip beyond the documented small ones (decontaminate's
+    broadcast gate count, the components loop counter, and the bucket
+    bounds and totals of packing and shuffling). Scale shape is inherited
+    stage-by-stage: per-row keep Column, gated gram join, bucketed LSH with
+    hot-bucket guard, fixed-iteration label propagation, bucketed global
+    running sums — no single-task window.
     """
     from warcbase_spark.functions.layout import spread_scan
     from warcbase_spark.operators.components import connected_components
@@ -532,10 +472,8 @@ def training_pipeline(
     )
     s3 = s2.join(near_dups, "doc_id", "left_anti")
 
-    packed = pack_sequences(s3, ctx_len=ctx_len, bucket_width=bucket_width)
-    shuf = global_shuffle(packed.select("doc_id"), seed="shuf0").select(
-        "doc_id", "shuffle_pos"
-    )
+    packed = pack_sequences(s3, ctx_len=ctx_len, cache_registry=cache_registry)
+    shuf = global_shuffle(packed.select("doc_id"), seed="shuf0", cache_registry=cache_registry)
 
     return (
         s3.select("doc_id", "source")

@@ -18,6 +18,12 @@ top-budget, since a row's global in-host rank bounds its in-salt rank);
 stage 2 re-ranks the ≤ K×budget survivors per host. Stage 1 bounds any
 single task's window to ~|host|/K rows; stage 2's input is tiny by
 construction. AQE skew-join handling remains on as a backstop.
+
+The round's global ``seq`` comes from ``add_global_seq``, the engine's one
+global-order primitive (also behind ``url_dictionary``'s dense ids, packed
+token offsets and the training shuffle): the reference's 1-reducer funnel
+replaced by per-bucket windows over bound literals sampled from the data,
+plus bucket offsets collected to the driver.
 """
 
 from __future__ import annotations
@@ -25,66 +31,94 @@ from __future__ import annotations
 from collections import Counter
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import ArrayType
 
 DEFAULT_SALT_K = 16
+# bottom-k sample rows per bucket bound: enough that a bucket holds about
+# n / B rows (Spark's RangePartitioner draws 20 per partition the same way)
+SAMPLE_PER_BUCKET = 20
 
 
 def add_global_seq(
     df: DataFrame,
     order: list,
     out_col: str = "seq",
+    weight: "Column | None" = None,
     total_out: "list[int] | None" = None,
+    cache_registry: "list[DataFrame] | None" = None,
 ) -> DataFrame:
-    """Deterministic global 1-based sequence by ``order`` WITHOUT a
-    single-task window: range-partition + sort on the key, stamp
-    ``monotonically_increasing_id`` (= partition_id<<33 | row-in-partition,
-    so it encodes the global order), then add the collected cumulative
-    per-partition counts as an array-literal lookup. One wide shuffle, one
-    tiny counts job, no second window shuffle, no join — a global
-    ``Window.orderBy`` would funnel every row into one task.
+    """``df`` plus ``out_col``: the global running sum of ``weight`` over the
+    ascending order of the ``order`` Columns (names or expressions), or the
+    1-based rank without a weight — a bigint, WITHOUT a single-task window.
+    ``order`` must be a strict total order (no two rows share a key).
 
-    Requires the order to be a strict total order (here url_key is unique
-    within a round), so the result is independent of partition boundaries.
+    1. ``df`` with its key and weight is cached once (appended to
+       ``cache_registry`` when given), so the three passes below read one
+       copy of the input.
+    2. Bounds: a bottom-k sample ordered by ``xxhash64(key)`` (ties broken
+       by the key) is collected and sorted on the driver; B-1 of its keys,
+       B = ``spark.sql.shuffle.partitions``, become an array literal, and a
+       row's bucket is the number of bounds ``<=`` its key.
+    3. Totals: one tiny collect of the per-bucket sums gives the exclusive
+       bucket offsets, folded back as an array literal. The grand total
+       goes to ``total_out`` when given.
+    4. Stamp: offset + the running sum (``row_number`` without a weight)
+       over ``Window.partitionBy(bucket).orderBy(key)``, one bucket per
+       shuffle partition.
 
-    The ranged intermediate is localCheckpoint'ed, not cache()'d:
-    range-boundary sampling (and AQE coalescing) are not stable across
-    re-evaluations, so the counts pass and the final pass must see the SAME
-    physical row placement. A cache can be silently evicted and recomputed
-    with different boundaries → wrong/duplicate seq values; a checkpoint
-    truncates lineage so recomputation is impossible (on executor loss the
-    job fails loudly and retries rather than mis-stamping). On a real
-    cluster the durable variant is a checkpoint dir / parquet round-trip —
-    the production crawl loop already persists rounds to parquet.
-    """
-    ranged = (
-        df.repartitionByRange(*order)
-        .sortWithinPartitions(*order)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        # eager=False: the checkpoint is MARKED now and the blocks persist
-        # during the first action (the counts job below) — one pass instead
-        # of eager's separate materialization job, same recompute-proofness
-        .localCheckpoint(eager=False)
+    The bounds and offsets are plan literals and every step is a pure
+    function of the rows, so a cache evicted and recomputed stamps the same
+    values: no checkpoint, no sampled range re-partition, and no window
+    without a partition key (the reference's 1-reducer funnel,
+    UrlMappingMapReduceBuilder.java:254)."""
+    key = F.struct(*[
+        (F.col(c) if isinstance(c, str) else c).alias(f"_{i}") for i, c in enumerate(order)
+    ])
+    w = F.lit(1) if weight is None else weight
+    cached = df.select(*df.columns, key.alias("_key"), w.cast("long").alias("_w")).cache()
+    if cache_registry is not None:
+        cache_registry.append(cached)
+
+    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    rows = (
+        cached.select("_key").orderBy(F.xxhash64("_key"), "_key")
+        .limit(SAMPLE_PER_BUCKET * n_buckets).collect()
     )
-    pid = F.shiftright("_mid", 33).cast("int")
-    counts = {
-        r["_pid"]: r["count"]
-        for r in ranged.groupBy(pid.alias("_pid")).count().collect()
-    }
-    n_parts = (max(counts) + 1) if counts else 1
+    # Spark's ascending order: NULL first; str compares as its UTF-8 bytes do
+    sample = sorted((tuple(r["_key"]) for r in rows), key=lambda k: [(v is not None, v) for v in k])
+    picks = [sample[len(sample) * i // n_buckets] for i in range(1, n_buckets)] if sample else []
+    key_type = cached.schema["_key"].dataType
+    bounds = F.array(*[
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(b, key_type.fields)])
+        for b in picks
+    ]).cast(ArrayType(key_type))
+    bucket = F.size(F.filter(bounds, lambda b: b <= F.col("_key")))
+
+    totals = dict(cached.groupBy(bucket).agg(F.sum("_w")).collect())
     offsets, acc = [], 0
-    for p in range(n_parts):
+    for b in range(n_buckets):
         offsets.append(acc)
-        acc += counts.get(p, 0)
+        acc += totals.get(b, 0)
     if total_out is not None:
-        # the exact row count falls out of the counts job for free — callers
-        # (schedule_round) use it to size-gate the winner broadcast
         total_out.append(acc)
-    off = F.get(F.array(*[F.lit(o) for o in offsets]), pid)
-    local = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-    return ranged.withColumn(out_col, (off + local + 1).cast("int")).drop("_mid")
+
+    in_bucket = Window.partitionBy("_bkt").orderBy("_key")
+    running = (
+        F.row_number().over(in_bucket) if weight is None
+        else F.sum("_w").over(in_bucket.rowsBetween(Window.unboundedPreceding, 0))
+    )
+    off = F.get(F.array(*[F.lit(o).cast("long") for o in offsets]), F.col("_bkt"))
+    return (
+        cached.withColumn("_bkt", bucket)
+        # bucket b to partition b: hashing the ids 0..B-1 would pile
+        # several buckets into one task (at B = 4, three of them)
+        .repartitionById(n_buckets, "_bkt")
+        .withColumn(out_col, off + running)
+        .drop("_key", "_w", "_bkt")
+    )
 
 
 def with_budgets(candidates: DataFrame, politeness: DataFrame) -> DataFrame:
@@ -168,8 +202,8 @@ def schedule_round_combined(
 
     candidates: (url_key, url, host, url_hash, priority [, ...]).
 
-    cache_registry: accepted and ignored (the scheduler caches nothing);
-    kept because bench.py and perfbench pass it.
+    cache_registry: the winner set's cache (``add_global_seq``'s) is
+    appended to it; unpersist it once the returned frame has been consumed.
     """
     order = [F.desc("priority"), F.asc("url_key")]
 
@@ -196,15 +230,20 @@ def schedule_round_combined(
     winners = (
         survivors.withColumn("rn", F.row_number().over(w2))
         .filter(F.col("rn") <= F.col("budget"))
-        .select("url_key", "host", "priority")
+        .select("url_key", "priority")
     )
 
-    # deterministic global sequence — parity artifact; range-partitioned
-    # rank, never a single-task global window (Σ budgets can be millions of
-    # rows per round at 10^10-frontier scale). Its counts job yields the
-    # exact winner count as a side effect — free broadcast gate.
+    # deterministic global sequence — parity artifact; bucketed on sampled
+    # bound literals, never a single-task global window (Σ budgets can be
+    # millions of rows per round at 10^10-frontier scale). The winner set is
+    # computed once, into add_global_seq's cache, which the bounds sample,
+    # the totals collect and the output join all read; the totals give the
+    # exact winner count for the broadcast gate.
     tot: list[int] = []
-    winners = add_global_seq(winners, order, total_out=tot).select("url_key", "seq")
+    winners = add_global_seq(
+        winners, [-F.col("priority"), "url_key"],
+        total_out=tot, cache_registry=cache_registry,
+    ).select("url_key", F.col("seq").cast("int").alias("seq"))
     n_winners = tot[0]
 
     # winner set is Σ budgets rows — ONE left join over the full-width
@@ -215,10 +254,6 @@ def schedule_round_combined(
     # rows, where an unconditional broadcast OOMs the driver — past
     # ``broadcast_row_limit`` the join degrades to a shuffle join on
     # url_key instead (VERDICT r2 #4).
-    # NOT cached: callers cache/materialize candidates, and the winner set
-    # is already checkpointed, so each side is a pipelined map-side join —
-    # caching `joined` would re-write every wide row to the block store for
-    # no saved work.
     small = n_winners <= broadcast_row_limit
     if (
         not small
@@ -231,7 +266,7 @@ def schedule_round_combined(
         n_cand = candidates.count()
         small = n_cand > 0 and n_winners >= BROADCAST_WINNER_RATIO * n_cand
     # fallback pins shuffle_hash (not just "no broadcast hint"): the
-    # planner's size estimate of the checkpointed winner set could still
+    # planner's size estimate of the cached winner set could still
     # choose a broadcast that the gate just ruled out, and hash beats
     # sort-merge when one side (winners) is the smaller of two large inputs
     right = F.broadcast(winners) if small else winners.hint("shuffle_hash")
@@ -245,7 +280,9 @@ def schedule_round(
     broadcast_row_limit: int = DEFAULT_BROADCAST_ROW_LIMIT,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (scheduled, spilled): ``schedule_round_combined`` split by
-    ``split_schedule``."""
+    ``split_schedule``. The winner set's cache is not registered, so it
+    stays until ``clearCache``; a caller that schedules repeatedly uses
+    ``schedule_round_combined`` with a ``cache_registry``."""
     return split_schedule(schedule_round_combined(
         candidates, politeness, salt_k,
         broadcast_row_limit=broadcast_row_limit,

@@ -318,13 +318,15 @@ def url_dictionary(spark, sf_dir):
     (UrlMappingBuilder.java:72,119-136). The reference funnels this through
     ONE reducer (UrlMappingMapReduceBuilder.java:254); a naive
     row_number().over(Window.orderBy(...)) is the same funnel reborn. This
-    uses add_global_seq: range-partition + sort on url_key, stamp
-    monotonically_increasing_id, add broadcast per-partition offsets — the
-    sort stays parallel at 10^10 keys (scheduler.py:31-97)."""
+    uses scheduler.add_global_seq: url_key-ordered ranks per bucket of
+    sampled bounds, plus driver-collected bucket offsets — the sort stays
+    parallel at 10^10 keys."""
     from warcbase_spark.operators.scheduler import add_global_seq
 
     w = web_docs(spark, sf_dir).select("url_key").distinct()
-    return add_global_seq(w, ["url_key"], out_col="id")
+    return add_global_seq(w, ["url_key"], out_col="id").withColumn(
+        "id", F.col("id").cast("int")
+    )
 
 
 @query(
@@ -2803,13 +2805,13 @@ def decontam_eval3(spark, sf_dir):
 )
 def pack_sequences_q(spark, sf_dir):
     """Concatenate-and-chunk sequence packing (GPT-style pretraining
-    layout): global token offsets per doc via a two-level prefix sum (no
-    single-task global window; operators/pipeline.py:add_global_cumsum),
-    ctx_len=128 pack coordinates. The oracle's plain window cumsum is the
-    single-node equivalent."""
+    layout): global token offsets per doc via scheduler.add_global_seq's
+    bucketed running sum (no single-task global window;
+    operators/pipeline.py:pack_sequences), ctx_len=128 pack coordinates.
+    The oracle's plain window cumsum is the single-node equivalent."""
     from warcbase_spark.operators.pipeline import pack_sequences
 
-    return pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=128, bucket_width=64)
+    return pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=128)
 
 
 _HEXP = "(strpos('0123456789abcdef', substr(h,{i},1))-1)"
@@ -2888,7 +2890,7 @@ def pack_manifest(spark, sf_dir):
     further global coordination."""
     from warcbase_spark.operators.pipeline import pack_sequences
 
-    p = pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=128, bucket_width=64)
+    p = pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=128)
     tok_end = F.col("tok_start") + F.col("ntok")
     x = p.select(
         "tok_start",
@@ -2920,15 +2922,15 @@ def pack_manifest(spark, sf_dir):
 )
 def global_shuffle_pos(spark, sf_dir):
     """Deterministic training-order permutation: global row_number over
-    md5(seed:id) WITHOUT a single-task global window — the hash's first
-    byte buckets 256 ways, per-bucket window ranks + broadcast cumulative
-    offsets (operators/pipeline.py:global_shuffle). Reproducible across
+    md5(seed:id) WITHOUT a single-task global window — per-bucket window
+    ranks over sampled (hash, id) bounds + driver-collected bucket offsets
+    (operators/pipeline.py:global_shuffle). Reproducible across
     retries/cluster sizes unlike orderBy(rand()); reseeding reshuffles
     per epoch. The oracle's plain window row_number is the single-node
     equivalent."""
     from warcbase_spark.operators.pipeline import global_shuffle
 
-    return global_shuffle(_t(spark, sf_dir, "documents")).select("doc_id", "shuffle_pos")
+    return global_shuffle(_t(spark, sf_dir, "documents"))
 
 
 def _pipeline_e2e_sql(cc_iters: int = 8) -> str:
@@ -3031,8 +3033,7 @@ def pipeline_e2e(spark, sf_dir):
     # DuckDB twin hashes with md5); training_pipeline's engine default is
     # the fast xxhash64 kernel (r5-measured 2.6x at 1M docs)
     return training_pipeline(
-        _t(spark, sf_dir, "documents"), eval_mod=37, ctx_len=128, bucket_width=64,
-        minhash_hash_mode="md5",
+        _t(spark, sf_dir, "documents"), eval_mod=37, ctx_len=128, minhash_hash_mode="md5",
     )
 
 
