@@ -8,8 +8,8 @@ Usage:
 ``--gen-docs N`` synthesizes the deterministic fixture corpus (seed=42)
 into --corpus first, so the job is self-contained for benchmarking.
 Prints one JSON line with totals + throughput (scheduled URLs/sec).
-The URL-seen filter follows the seen set's size (a JVM Bloom up to
-``operators.seen.SEEN_BLOOM_MAX_KEYS`` keys, the cogrouped cuckoo past it).
+Each round's URL-seen gate is ``operators.seen.anti_join_seen``: the
+round's candidates' Bloom, built inside the plan, prunes one seen scan.
 """
 
 from __future__ import annotations

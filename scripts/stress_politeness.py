@@ -12,9 +12,11 @@ Usage:  python scripts/stress_politeness.py [n_candidates] [n_hosts]
 Defaults 10_000_000 / 1_000_000. Prints one JSON line; paste into BENCH.md.
 
 Second mode:  python scripts/stress_politeness.py seen [n_seen] [n] [n_hosts]
-— the URL-seen regime sweep: build/probe CPU-s and measured FPP of both
-seen filters over an n_seen-key seen set with recrawl tombstones (see
-``seen_recrawl_stress``). Defaults 3_000_000 / 2_000_000 / 1_000_000.
+— the URL-seen sweep: CPU-s of the crawl's seen layer (the candidates'
+in-plan Bloom, the pruned seen scan, the exact anti-join) over an
+n_seen-key seen set with recrawl tombstones, checked exact against a plain
+anti-join (see ``seen_recrawl_stress``). Defaults 3_000_000 / 2_000_000 /
+1_000_000.
 """
 
 from __future__ import annotations
@@ -90,42 +92,53 @@ def _tree_cpu_s() -> float:
     return ticks / os.sysconf("SC_CLK_TCK")
 
 
+def _largest_stored_plan(spark) -> int:
+    """Characters of the largest SQL execution the status store keeps:
+    its plan description plus its plan-graph node descriptions."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    most = 0
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        nodes = store.planGraph(e.executionId()).allNodes()
+        most = max(most, len(e.physicalPlanDescription())
+                   + sum(len(nodes.apply(k).desc()) for k in range(nodes.size())))
+    return most
+
+
 def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
-    """One round of ``n`` candidates against an ``n_seen``-key URL-seen set
-    with 1% of the candidates tombstoned (recrawled), through BOTH seen
-    filters the crawl's way: an exact anti-join removes the tombstones from
-    the seen table, and each filter is built over that live set at
-    ``BLOOM_FPP`` / ``seen_cuckoo_params``.
+    """One round's URL-seen gate as the crawl builds it: ``n`` candidates
+    through ``anti_join_seen`` against an ``n_seen``-key seen set, written
+    as parquet like the crawl's, with 1% of the candidates tombstoned
+    (recrawled) and removed from it by an anti-join, as ``_seen`` does. The
+    measured layer is the whole primitive in one query: the Bloom over the
+    candidates (a scalar subquery), the pruned seen scan and the exact
+    anti-join, sized as the crawl sizes it (``bloom_size``, caps raised
+    around the action), with AQE off as inside a round.
 
-    - bloom: ``build_bloom_jvm`` + ``dedup_against_seen`` (JVM probe).
-    - cuckoo: ``build_cuckoo_shards`` (sharded applyInPandas build, cached
-      so its CPU is counted apart from the probe) → ``dedup_against_seen``
-      with the ``CogroupedCuckoo`` (cogrouped probe).
-
-    Seen key i is candidate 10i+1, so the seen set is generated, not held:
-    with n_seen > n/10 the keys past the candidates only grow the filter.
-    FPP = (filter positives − truly seen candidates) / truly fresh
-    candidates, both counted with a plain anti-join. Both regimes must
-    schedule EXACTLY the same round (sampled-host seq parity + identical
-    counts); tombstoned keys must come back fresh.
+    Seen key i is candidate 10i+1, so with n_seen > n/10 the keys past the
+    candidates only grow the seen scan. ``fresh`` must equal a plain
+    anti-join's count at every point, and tombstoned keys come back fresh;
+    ``bloom_hits`` is the seen rows that pass the Bloom, and ``fpp`` their
+    share of the live seen rows no candidate matches. Prints the largest
+    stored plan (description + node descriptions), which holds no filter.
     """
+    import shutil
+
     from pyspark.sql import Observation
 
-    from warcbase_spark.operators.seen import (
-        BLOOM_FPP,
-        CogroupedCuckoo,
-        build_bloom_jvm,
-        build_cuckoo_shards,
-        dedup_against_seen,
-        seen_cuckoo_params,
-    )
+    from warcbase_spark.operators.seen import anti_join_seen, bloom_caps, bloom_size
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="stress_seen_recrawl", master=f"local[{cpus}]")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     cand = _candidates(spark.range(n), n_hosts).localCheckpoint(eager=True)
+    path = os.path.join(os.environ.get("SPARK_LOCAL_DIRS", "/tmp"), f"stress_seen_{n_seen}")
+    shutil.rmtree(path, ignore_errors=True)
     seen_ids = spark.range(n_seen).select((F.col("id") * 10 + 1).alias("id"))
-    seen = _candidates(seen_ids, n_hosts).select("url_key", "url_hash")
+    _candidates(seen_ids, n_hosts).select("url_key", "url_hash").write.parquet(path)
+    seen = spark.read.parquet(path)
     tomb = (
         cand.filter(F.col("id") % 100 == 1)
         .join(seen.select("url_key"), "url_key", "left_semi")
@@ -138,56 +151,34 @@ def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
     n_live = n_seen - n_tomb
     cand_in = cand.drop("id")
     n_exact_fresh = cand_in.join(live_seen, "url_key", "left_anti").count()
-    pol = _politeness(spark, n_hosts)
 
     out: dict = {
         "mode": "seen_recrawl", "n_candidates": n, "n_hosts": n_hosts,
         "n_seen": n_seen, "n_seen_candidates": n_seen_cand,
         "n_tombstones": n_tomb, "n_fresh_exact": n_exact_fresh, "cpus": cpus,
     }
-    probe_hosts = ["hot0.org", "h3.org", "h999999.org", "h500001.org"]
-    samples, counts = [], []
-    for regime in ("bloom", "cuckoo"):
-        for _rep in range(2):  # the second run is warm; it is the one kept
-            spark.catalog.clearCache()
-            cpu0, t0 = _tree_cpu_s(), time.monotonic()
-            if regime == "bloom":
-                bloom = build_bloom_jvm(live_seen, n_live, BLOOM_FPP)
-                size = len(bloom)
-            else:
-                params = seen_cuckoo_params(n_live)
-                shards = build_cuckoo_shards(live_seen, params).cache()
-                size = shards.select(F.sum(F.length("table") + F.length("sat"))).first()[0]
-                bloom = CogroupedCuckoo(params, shards)
-            cpu1 = _tree_cpu_s()
-            obs = Observation()
-            fresh, _ = dedup_against_seen(spark, cand_in, live_seen, bloom, observation=obs)
-            fresh = fresh.cache()
-            n_fresh = fresh.count()
-            cpu2, dt = _tree_cpu_s(), time.monotonic() - t0
-        positives = int(obs.get["bloom_hits"])
-        sched, _sp = schedule_round(fresh, pol)
-        n_sched = sched.count()
-        got = sorted(
-            (r["seq"], r["url_key"])
-            for r in sched.filter(F.col("host").isin(probe_hosts)).collect()
-        )
-        samples.append(got)
-        counts.append((n_fresh, n_sched))
-        out[regime] = {
-            "filter_bytes": size,
-            "build_cpu_s": round(cpu1 - cpu0, 2), "probe_cpu_s": round(cpu2 - cpu1, 2),
-            "wall_s": round(dt, 2), "positives": positives,
-            "fpp": round((positives - (n - n_exact_fresh)) / max(n_exact_fresh, 1), 5),
-            "n_fresh": n_fresh, "n_scheduled": n_sched,
-        }
-    spark.catalog.clearCache()
-    out["fresh_and_sched_counts_match"] = counts[0] == counts[1]
-    out["fresh_exact"] = counts[0][0] == n_exact_fresh
-    out["sampled_schedule_parity"] = samples[0] == samples[1]
-    # tombstoned keys must be schedulable again in both regimes
+    n_items, n_bits = bloom_size(n, n_live)
+    runs = []
+    for _rep in range(2):  # the second run is warm
+        cpu0, t0 = _tree_cpu_s(), time.monotonic()
+        obs = Observation()
+        with bloom_caps(spark, n_items, n_bits):
+            n_fresh = anti_join_seen(cand_in, live_seen, n, n_live, observation=obs).count()
+        runs.append({"cpu_s": round(_tree_cpu_s() - cpu0, 2),
+                     "wall_s": round(time.monotonic() - t0, 2), "n_fresh": n_fresh})
+    hits = int(obs.get["bloom_hits"])
+    matches = n_seen_cand - n_tomb
+    out["seen_layer"] = {
+        "bloom_bytes": n_bits // 8, "cold": runs[0], "warm": runs[1], "bloom_hits": hits,
+        "fpp": round((hits - matches) / max(n_live - matches, 1), 5),
+    }
+    out["fresh_exact"] = all(r["n_fresh"] == n_exact_fresh for r in runs)
+    # tombstoned keys must be schedulable again
     out["tombstones_back_fresh"] = n_exact_fresh == n - n_seen_cand + n_tomb
+    out["largest_stored_plan_chars"] = _largest_stored_plan(spark)
+    shutil.rmtree(path, ignore_errors=True)
     print(json.dumps(out))
+    assert out["fresh_exact"] and out["tombstones_back_fresh"], out
 
 
 def _zipf_candidates(spark, n: int, n_hosts: int, s: float = 1.1):

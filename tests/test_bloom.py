@@ -1,53 +1,46 @@
-"""URL-seen filters: exactness guarantees.
+"""URL-seen gate: exactness guarantees.
 
 Membership truth-table style mirrors UrlMappingTest.java:57-137
 (present→hit, absent→usually miss; never a false negative)."""
 
-import numpy as np
+import math
+
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from warcbase_spark.operators import seen as seen_mod
 from warcbase_spark.operators.seen import (
     BLOOM_CAP_CONFS,
-    CogroupedCuckoo,
-    CuckooParams,
-    ShardedCuckoo,
-    _cuckoo_routed,
+    _bloom_agg,
+    _bloom_capacity,
+    anti_join_seen,
+    bloom_caps,
+    bloom_size,
     build_bloom_jvm,
-    build_cuckoo_shards,
-    build_seen_filter,
     dedup_against_seen,
-    probe_cuckoo_cogrouped,
-    seen_cuckoo_params,
+    probe_bloom_jvm,
 )
-
-
-def build_cuckoo_collected(df, params: CuckooParams) -> ShardedCuckoo:
-    """Single-process reference build: collects every (h1, h2) pair to the
-    driver. ``build_cuckoo_shards`` must produce bit-identical shard
-    tables."""
-    pdf = _cuckoo_routed(df, params, "url_key").toPandas()
-    return ShardedCuckoo.build(
-        pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64), params
-    )
 
 
 def _jvm(seen):
     return build_bloom_jvm(seen, 400)
 
 
-def _cuckoo(seen):
-    params = CuckooParams.size(400, n_shards=8)
-    return CogroupedCuckoo(params, build_cuckoo_shards(seen, params))
+def _keys(spark, prefix, *range_args):
+    return spark.range(*range_args).select(F.concat(F.lit(prefix), "id").alias("url_key"))
 
 
-@pytest.mark.parametrize("build", [_jvm, _cuckoo], ids=["jvm", "cuckoo"])
+# "cuckoo" names the case without a caller filter: the round's in-plan
+# Bloom, the path that took over the seen sets the cogrouped cuckoo served.
+@pytest.mark.parametrize("build", [_jvm, lambda seen: None], ids=["jvm", "cuckoo"])
 def test_dedup_exact_semantics(spark, build):
-    """Every filter is a prefilter only: the result equals the plain
-    anti-join exactly (the reference's fst.getID != -1 gate,
-    ExtractLinksWac.java:159,177)."""
-    cand = spark.range(1000).select(F.concat(F.lit("com.test/c/"), "id").alias("url_key"))
+    """Either path is exact: the result equals the plain anti-join (the
+    reference's fst.getID != -1 gate, ExtractLinksWac.java:159,177), and
+    every candidate column passes through unchanged."""
+    cand = spark.range(1000).select(
+        F.concat(F.lit("com.test/c/"), "id").alias("url_key"), F.col("id").alias("extra")
+    )
     seen = spark.range(0, 1000, 3).select(
         F.concat(F.lit("com.test/c/"), "id").alias("url_key"),
         F.xxhash64(F.concat(F.lit("com.test/c/"), "id")).alias("url_hash"),
@@ -56,153 +49,133 @@ def test_dedup_exact_semantics(spark, build):
     reg = []
     fresh, _ = dedup_against_seen(spark, cand, seen, build(seen), cache_registry=reg)
     expected = cand.join(seen.select("url_key"), "url_key", "left_anti")
-    got = sorted(r["url_key"] for r in fresh.collect())
-    exp = sorted(r["url_key"] for r in expected.collect())
+    got = sorted((r["url_key"], r["extra"]) for r in fresh.collect())
+    exp = sorted((r["url_key"], r["extra"]) for r in expected.collect())
     for df in reg:
         df.unpersist()
     assert got == exp
 
 
-def test_cogrouped_probe_missing_shard_and_passthrough(spark):
-    """probe_cuckoo_cogrouped (the 10^10-key path: shard tables cogrouped by
-    hash route, nothing broadcast): a shard with no table row probes
-    definitely-fresh, every other present key probes positive, and extra
-    candidate columns pass through unchanged."""
-    n = 4000
-    present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    params = CuckooParams.size(n, n_shards=8)
-    shards = build_cuckoo_shards(present, params).cache()
-    try:
-        dropped = sorted(r["shard"] for r in shards.select("shard").collect())[0]
-        partial = shards.filter(F.col("shard") != dropped)
-        # "extra" (the key's id) and "s" (its shard route) must pass through
-        cand = spark.range(2 * n).select(
-            F.concat(F.lit("org.example/k/"), "id").alias("url_key"),
-            F.col("id").alias("extra"),
-        ).withColumn("s", F.pmod(F.xxhash64("url_key"), F.lit(params.n_shards)))
-        rows = probe_cuckoo_cogrouped(cand, partial, params).collect()
-    finally:
-        shards.unpersist()
-    assert sorted(r["extra"] for r in rows) == list(range(2 * n))
-    assert all(r["url_key"] == f"org.example/k/{r['extra']}" for r in rows)
-    in_dropped = [r for r in rows if r["s"] == dropped]
-    assert in_dropped and not any(r["maybe_seen"] for r in in_dropped)
-    kept_present = [r for r in rows if r["s"] != dropped and r["extra"] < n]
-    assert kept_present and all(r["maybe_seen"] for r in kept_present)
-
-
 def test_observation_null_safe_on_empty_candidates(spark):
     """A late-crawl round can produce ZERO candidate links; every
     dedup_against_seen path must still deliver a non-None bloom_hits metric
-    (max()/sum() over zero rows is NULL without coalesce — ADVICE r2)."""
-    from pyspark.sql import Observation
-
+    (max()/sum() over zero rows is NULL without coalesce — ADVICE r2), and
+    the empty side's NULL Bloom lets no seen row through."""
     empty = spark.createDataFrame([], "url_key string, url string")
     seen = spark.range(10).select(
         F.concat(F.lit("com.test/s/"), "id").alias("url_key"),
         F.lit(0).alias("url_hash"),
         F.lit(0).alias("first_round"),
     )
-    for bloom in (None, _jvm(seen), _cuckoo(seen)):
+    for bloom in (None, _jvm(seen)):
         obs = Observation()
-        fresh, _ = dedup_against_seen(spark, empty, seen, bloom, observation=obs)
+        reg = []
+        fresh, _ = dedup_against_seen(spark, empty, seen, bloom, observation=obs, cache_registry=reg)
         assert fresh.count() == 0
-        assert int(obs.get["bloom_hits"] or 0) == 0
+        assert obs.get["bloom_hits"] == 0
+        for df in reg:
+            df.unpersist()
 
 
-# ---------------------------------------------------------------------------
-# Cuckoo filter (north rule's named Bloom alternative)
-# ---------------------------------------------------------------------------
-
-def test_cuckoo_no_false_negatives_and_low_fpp(spark):
-    n = 5000
-    present = spark.range(n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    absent = spark.range(n, 2 * n).select(F.concat(F.lit("org.example/k/"), "id").alias("url_key"))
-    p = CuckooParams.size(n, n_shards=8)
-    shards = build_cuckoo_shards(present, p).cache()
-    try:
-        probed_in = probe_cuckoo_cogrouped(present, shards, p)
-        assert probed_in.filter(~F.col("maybe_seen")).count() == 0  # zero false negatives
-
-        fp = probe_cuckoo_cogrouped(absent, shards, p).filter(F.col("maybe_seen")).count()
-    finally:
-        shards.unpersist()
-    # 16-bit fingerprints, 2×4 slots → theoretical ~1.2e-4 plus rare
-    # saturation; 1% is a very generous bound
-    assert fp / n < 0.01, fp
+def test_in_plan_bloom_no_false_negatives_and_low_fpp(spark):
+    """Every seen row that matches a candidate passes the candidates'
+    Bloom (no false negative), and about fpp of the others do: with 5,000
+    candidates over 50,000 seen keys the sizing picks fpp = 1%."""
+    cand = _keys(spark, "org.example/k/", 0, 10_000, 2)
+    seen = _keys(spark, "org.example/k/", 0, 50_000)
+    obs = Observation()
+    fresh = anti_join_seen(cand, seen, 5_000, 50_000, observation=obs)
+    assert fresh.count() == 0
+    hits = obs.get["bloom_hits"]
+    assert hits >= 5_000  # every match
+    assert (hits - 5_000) / 45_000 < 0.02, hits
 
 
-def test_cuckoo_saturation_stays_safe():
-    """Overfilled filter: items that fit neither bucket saturate it —
-    membership stays 'maybe' (never a false negative)."""
-    rng = np.random.RandomState(3)
-    n = 4000
-    h1 = rng.randint(0, 1 << 60, n).astype(np.int64)
-    h2 = rng.randint(0, 1 << 60, n).astype(np.int64)
-    # tiny table: 1 shard × 64 buckets × 4 slots = 256 capacity for 4000 keys
-    p = CuckooParams(n_shards=1, buckets_per_shard=64)
-    c = ShardedCuckoo.build(h1, h2, p)
-    assert c.contains_vec(h1, h2).all()  # saturation → still all positive
-    sat = c.shards[0][1]
-    assert sat.any()
+def test_overfilled_bloom_stays_exact(spark):
+    """A Bloom sized for one key over 5,000 (a misestimate, or a clamp by
+    the runtime-filter caps) lets almost every seen row through, never
+    drops a match: the anti-join stays exact."""
+    cand = _keys(spark, "net.over/p/", 5_000)
+    seen = _keys(spark, "net.over/p/", 0, 20_000, 3)
+    obs = Observation()
+    got = {r["url_key"] for r in anti_join_seen(cand, seen, 1, 1, observation=obs).collect()}
+    exp = {r["url_key"] for r in cand.join(seen, "url_key", "left_anti").collect()}
+    assert got == exp
+    assert obs.get["bloom_hits"] > 5_000  # the overfull filter passes non-matches
+
+
+def test_cogrouped_probe_missing_shard_and_passthrough(spark):
+    """Candidates in a part of the key space the seen side does not cover
+    (once a cuckoo shard with no table row; here an empty seen side, whose
+    Bloom probe scans nothing) all come back, with every column unchanged."""
+    cand = spark.range(200).select(
+        F.concat(F.lit("com.pass/p/"), "id").alias("url_key"),
+        F.col("id").alias("extra"),
+        F.lit("x").alias("tag"),
+    )
+    empty = spark.createDataFrame([], "url_key string")
+    got = sorted(tuple(r) for r in anti_join_seen(cand, empty, 200, 0).collect())
+    assert got == sorted(tuple(r) for r in cand.collect())
+    seen = _keys(spark, "com.pass/p/", 100, 1_000)
+    got = sorted(tuple(r) for r in anti_join_seen(cand, seen, 200, 900).collect())
+    assert got == sorted(tuple(r) for r in cand.filter("extra < 100").collect())
 
 
 def test_cuckoo_distributed_build_parity(spark):
-    """`build_cuckoo_shards` (distributed per-shard applyInPandas) must
-    produce BIT-IDENTICAL (table, sat) rows to the single-process reference
-    build that collects every (h1, h2) pair — the vectorized placement is a
-    pure function of each shard's key set."""
-    from warcbase_spark.operators.seen import _cuckoo_row_to_shard
-
-    n = 4000
-    keys = spark.range(n).select(F.concat(F.lit("net.par/t/"), "id").alias("url_key"))
-    p = CuckooParams.size(n, n_shards=8)
-    dist = {
-        int(r["shard"]): _cuckoo_row_to_shard(p, r["table"], r["sat"])
-        for r in build_cuckoo_shards(keys, p).collect()
-    }
-    ref = build_cuckoo_collected(keys, p)
-    assert set(dist) == set(ref.shards)
-    for sid in ref.shards:
-        dt, ds = dist[sid]
-        rt, rs = ref.shards[sid]
-        assert np.array_equal(dt, rt), f"shard {sid} table mismatch"
-        assert np.array_equal(ds, rs), f"shard {sid} sat mismatch"
+    """The distributed build that replaced the cuckoo shard build, the
+    subquery's aggregate, writes byte for byte the filter
+    ``build_bloom_jvm`` serializes over the same keys at the same size."""
+    cand = _keys(spark, "org.cg/d/", 0, 6_000, 2)
+    n_items, n_bits = bloom_size(3_000, 30_000)
+    assert n_bits == spark._jvm.org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n_items, 0.01)
+    in_plan = bytes(cand.select(_bloom_agg(spark, "url_key", n_items, n_bits)).first()[0])
+    assert in_plan == build_bloom_jvm(cand, n_items, 0.01)
 
 
 def test_cuckoo_cogrouped_probe_parity(spark):
-    """The 10^10-key cuckoo form: DataFrame-resident shard tables probed
-    cogrouped, with parity vs the reference's contains_vec — the key set
-    and the filter never transit the driver in this path except for the
-    final assert collects."""
-    from warcbase_spark.operators.seen import with_bloom_hashes
+    """Probe parity for the filter that replaced the cogrouped cuckoo: the
+    seen rows the subquery's Bloom passes are exactly the seen rows the
+    serialized filter from ``build_bloom_jvm`` probes positive."""
+    cand = _keys(spark, "org.cg/d/", 0, 6_000, 2)
+    seen = _keys(spark, "org.cg/d/", 0, 30_000)
+    n_items, _ = bloom_size(3_000, 30_000)
+    obs = Observation()
+    anti_join_seen(cand, seen, 3_000, 30_000, observation=obs).count()
+    bytes_bloom = build_bloom_jvm(cand, n_items, 0.01)
+    positives = probe_bloom_jvm(seen, bytes_bloom).filter("maybe_seen").count()
+    assert obs.get["bloom_hits"] == positives
 
-    def hashes(df):
-        pdf = with_bloom_hashes(df).select(
-            "url_key",
-            F.pmod(F.col("h1"), F.lit(1 << 62)).alias("h1"),
-            F.pmod(F.col("h2"), F.lit(1 << 62)).alias("h2"),
-        ).toPandas()
-        return pdf["url_key"], pdf["h1"].to_numpy(np.int64), pdf["h2"].to_numpy(np.int64)
 
-    n = 3000
-    keys = spark.range(n).select(F.concat(F.lit("org.cg/d/"), "id").alias("url_key"))
-    absent = spark.range(n, 2 * n).select(F.concat(F.lit("org.cg/d/"), "id").alias("url_key"))
-    p = CuckooParams.size(n, n_shards=8)
-    shards_df = build_cuckoo_shards(keys, p).cache()
-    mem = build_cuckoo_collected(keys, p)
+def test_seen_cuckoo_shards_grow_with_size():
+    """The seen filter stays bounded as the seen set grows (the cuckoo did
+    it with more shards; the Bloom by following the candidates): over 2M
+    candidates the Bloom stays the candidates' size as the seen set grows
+    from 1M to 40M keys (the seen-layer sweep's range); past 100× the
+    candidates it grows by 1/ln 2 bits a key per doubling of seen, never
+    with the seen set's own size."""
+    sizes = {bloom_size(2_000_000, s * 1_000_000) for s in (1, 2, 4, 8, 16, 32, 40)}
+    assert len(sizes) == 1
+    ((n, bits),) = sizes
+    assert n == 2_000_000 and bits / n < 9.6
+    n, more = bloom_size(2_000_000, 400_000_000)
+    n, most = bloom_size(2_000_000, 800_000_000)
+    assert abs((most - more) / n - 1 / math.log(2)) < 0.01
 
-    # probe parity (present + absent) vs the in-memory reference lookup
-    try:
-        for probe_set in (keys, absent):
-            cg = {
-                r["url_key"]: r["maybe_seen"]
-                for r in probe_cuckoo_cogrouped(probe_set, shards_df, p).collect()
-            }
-            url_keys, h1, h2 = hashes(probe_set)
-            assert cg == dict(zip(url_keys, mem.contains_vec(h1, h2).tolist()))
-    finally:
-        shards_df.unpersist()
+
+def test_seen_filter_regime_follows_size(spark):
+    """One regime at every size, the Bloom following the small side, not
+    the seen set: fpp is 1% until the seen set passes 100× the candidates,
+    then falls so the false positives stay near the candidates' count; a
+    caller's serialized Bloom reports the key count it was sized for."""
+    assert bloom_size(2_000_000, 8_000_000) == bloom_size(2_000_000, 40_000_000)
+    n, bits = bloom_size(2_000_000, 40_000_000)
+    assert n == 2_000_000 and 9.5 < bits / n < 9.6  # 1%: 9.585 bits a key
+    n, bits = bloom_size(1_000, 10**10)  # fpp 1e-7: ~33.5 bits a key
+    assert n == 1_000 and 33 < bits / n < 34
+    assert bloom_size(0, 0) == bloom_size(1, 1)
+    keys = _keys(spark, "com.test/z/", 10)
+    for n in (4_096, 102_000):
+        assert abs(_bloom_capacity(build_bloom_jvm(keys, n)) - n) / n < 0.1
 
 
 def test_jvm_bridge_failure_raises(spark, monkeypatch):
@@ -216,18 +189,6 @@ def test_jvm_bridge_failure_raises(spark, monkeypatch):
     seen = spark.range(10).select(F.concat(F.lit("com.test/b/"), "id").alias("url_key"))
     with pytest.raises(RuntimeError, match="JVM bridge"):
         dedup_against_seen(spark, seen, seen, _jvm(seen))
-
-
-def test_cuckoo_params_power_of_two_validation():
-    """Hand-built CuckooParams must reject non-power-of-two shapes: the JVM
-    shard route pmod(raw_h1, n_shards) only agrees with the numpy route
-    mod(pmod(raw_h1, 2^62), n_shards) when n_shards divides 2^62."""
-    with pytest.raises(ValueError):
-        CuckooParams(n_shards=10, buckets_per_shard=64)
-    with pytest.raises(ValueError):
-        CuckooParams(n_shards=8, buckets_per_shard=48)
-    p = CuckooParams.size(10_000, n_shards=10)  # size() rounds up to 16
-    assert p.n_shards == 16
 
 
 def test_bloom_built_at_requested_size(spark):
@@ -245,35 +206,7 @@ def test_bloom_built_at_requested_size(spark):
     try:
         build_bloom_jvm(keys, 16_000_000, 0.01)
         assert spark.conf.get(item_cap, None) == "5000000"
+        with bloom_caps(spark, 100, 1000):  # a cap above the request stays
+            assert spark.conf.get(item_cap, None) == "5000000"
     finally:
         spark.conf.unset(item_cap)
-
-
-def test_seen_filter_regime_follows_size(spark, monkeypatch):
-    """``build_seen_filter`` builds the JVM Bloom up to and at
-    SEEN_BLOOM_MAX_KEYS expected keys, and the cogrouped cuckoo one key
-    above it."""
-    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 100)
-    seen = spark.range(50).select(F.concat(F.lit("com.test/r/"), "id").alias("url_key"))
-    assert isinstance(build_seen_filter(seen, 100), bytes)
-    assert isinstance(build_seen_filter(seen, 101), CogroupedCuckoo)
-
-
-def test_cuckoo_build_runs_a_partition_per_shard(spark):
-    """The sharded build shuffles into n_shards partitions, not the
-    session's 8, so a build task sorts the rows of the few shards hashed to
-    it rather than n_shards / 8 of them (8 of 32 per task at local[4] ran
-    out of execution memory at 32M keys)."""
-    p = CuckooParams.size(1000, n_shards=16)
-    keys = spark.range(1000).select(F.concat(F.lit("com.test/p/"), "id").alias("url_key"))
-    assert build_cuckoo_shards(keys, p).rdd.getNumPartitions() == 16
-
-
-def test_seen_cuckoo_shards_grow_with_size():
-    """The seen filter's cuckoo keeps at least 32 shards and about 2^20
-    keys a shard, so its per-task build stays bounded as the seen set
-    grows."""
-    assert seen_cuckoo_params(33_000_000).n_shards == 32
-    assert seen_cuckoo_params(40_000_000).n_shards == 64
-    p = seen_cuckoo_params(10**10)
-    assert p.n_shards == 16384 and 10**10 / p.n_shards <= 1 << 20

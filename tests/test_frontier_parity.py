@@ -139,7 +139,7 @@ def test_resume_exactness(spark, corpus_dir, crawl, sim):
     fc1.bootstrap()
     for r in range(3):
         fc1.run_round(r)  # simulated crash after round 2
-    # fresh object = fresh process; bloom must rebuild from committed state
+    # fresh object = fresh process; the round's Bloom is built from committed state
     fc2 = FrontierCrawl(spark, corpus_dir, STATE_RESUME, max_rounds=50)
     fc2.run()
     got_sched = sorted(
@@ -153,20 +153,19 @@ def test_resume_exactness(spark, corpus_dir, crawl, sim):
     assert got_seen == sim.seen
 
 
-def test_cuckoo_regime_parity(spark, corpus_dir, crawl, monkeypatch):
-    """Either seen filter is only a PREFILTER — the exact anti-join fixes any
-    false positives — so the full crawl with the cogrouped cuckoo (the regime
-    past SEEN_BLOOM_MAX_KEYS, forced here by setting it to 0) must be
-    bit-identical to the default Bloom crawl, including across a crash after
-    round 1 and a resume in a fresh object."""
-    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
-    state = "/tmp/warcbase_spark_testfix/crawlstate_cuckoo"
+def test_undersized_bloom_crawl_parity(spark, corpus_dir, crawl, monkeypatch):
+    """The round's Bloom only prunes the seen scan — the exact anti-join
+    decides — so a crawl whose Bloom is sized for one key (nearly every
+    seen row passes it) is bit-identical to the default crawl, including
+    across a crash after round 1 and a resume in a fresh object."""
+    monkeypatch.setattr(seen_mod, "bloom_size", lambda n_small, n_seen: (1, 8))
+    state = "/tmp/warcbase_spark_testfix/crawlstate_undersized"
     shutil.rmtree(state, ignore_errors=True)
     fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
     fc.run(max_rounds=2)  # simulated crash after round 1
     assert fc.load_manifest()["last_committed_round"] == 1
     del fc
-    # fresh object = fresh process; the filter must rebuild from committed state
+    # fresh object = fresh process; the Bloom is rebuilt from committed state
     fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=50)
     fc.run()
     got = sorted(
@@ -179,6 +178,36 @@ def test_cuckoo_regime_parity(spark, corpus_dir, crawl, monkeypatch):
     got_seen = {r["url_key"]: r["first_round"] for r in fc.url_seen().collect()}
     ref_seen = {r["url_key"]: r["first_round"] for r in crawl.url_seen().collect()}
     assert got_seen == ref_seen
+
+    def hits(c):
+        return sum(r["bloom_hits"] for r in c.metrics().collect())
+
+    assert hits(fc) > hits(crawl)  # the overfull Bloom let non-matches through
+
+
+def test_bloom_hits_count_pruned_seen_rows(crawl):
+    """``bloom_hits`` counts the seen rows that pass the round's Bloom:
+    every seen key a candidate matches (``dedup_hits``), plus the few false
+    positives."""
+    for r in crawl.metrics().collect():
+        assert r["dedup_hits"] <= r["bloom_hits"] <= r["dedup_hits"] + max(10, r["links"] // 10), r
+
+
+def test_bootstrap_counts_by_observation(spark, corpus_dir):
+    """Bootstrap counts the frontier it writes with an observation on the
+    write, not a count() that re-runs the seeds read, the canonicalizer,
+    the robots join and the merge."""
+    state = "/tmp/warcbase_spark_testfix/crawlstate_bootstrap"
+    shutil.rmtree(state, ignore_errors=True)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=1)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    fc.bootstrap()
+    # measured 4 at local[8]: the seeds' schema read, the write and its two
+    # broadcasts; the count() of the frontier it wrote added one more
+    assert dag.nextJobId() - before <= 4
+    n = spark.read.parquet(fc._p("frontier", 0)).count()
+    assert n > 0 and fc.load_manifest()["next_frontier_rows"] == n
 
 
 @pytest.fixture(scope="module")
@@ -207,11 +236,11 @@ def test_round_job_budget(steady_round):
     handful of Spark jobs, never the ~10 extra count() actions the round-1
     design paid. Job ids come from DAGScheduler's counter."""
     spent, _ = steady_round
-    # measured 14 at local[8] (AQE is off inside rounds, so no stage
+    # measured 11 at local[8] (AQE is off inside rounds, so no stage
     # sub-jobs): the scheduler's 3 eager jobs (politeness broadcast, bounds
     # sample, seq totals), the schedule write and its winner broadcast,
-    # the seen write, the seen filter build, and the frontier write with its
-    # 6 broadcasts. A footer-inference read or a Spark metrics write per
+    # the seen write, and the frontier write with its Bloom subquery and
+    # 3 broadcasts. A footer-inference read or a Spark metrics write per
     # round would trip this bound.
     assert spent <= 16, f"round used {spent} jobs — observe() metrics regressed?"
 

@@ -79,33 +79,104 @@ def test_dedup_probe_is_jvm_side(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_cuckoo_probe_is_cogrouped(spark, monkeypatch):
-    """The cuckoo regime probes its shard tables cogrouped: no filter is
-    broadcast and no pandas UDF is chained after the canonicalizer, so the
-    canonicalizer stays the only ArrowEvalPython in the probe plan."""
-    from warcbase_spark.frontier.crawl import canonicalize_candidates
-    from warcbase_spark.operators import seen as seen_mod
-    from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
+@pytest.fixture(scope="module")
+def crawl_rounds(spark, corpus_dir):
+    """A bootstrap and two crawl rounds: each frontier write's executed
+    plan (the JVM tree), and the SQL executions the status store kept for
+    the rounds."""
+    import shutil
 
-    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    urls = spark.range(100).select(
-        F.concat(F.lit("http://h"), F.col("id").cast("string"), F.lit(".com/p.html")).alias("url")
-    )
-    cand = canonicalize_candidates(urls)
-    seen = spark.range(0, 100, 3).select(
-        F.concat(F.lit("com.h"), F.col("id").cast("string"), F.lit(")/p.html")).alias("url_key")
-    )
-    reg = []
-    _, probed = dedup_against_seen(
-        spark, cand, seen, build_seen_filter(seen, 100), cache_registry=reg
-    )
-    plan = plan_of(probed)  # the cached probe pass, shown as its inner plan
-    for df in reg:
-        df.unpersist()
-    assert "FlatMapCoGroupsInPandas" in plan
-    assert plan.count("ArrowEvalPython") == 1  # still just the canonicalizer
-    assert "BatchEvalPython" not in plan
+    from warcbase_spark.frontier.crawl import FrontierCrawl
+
+    plans = []
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if "/frontier/round=" in path:
+            plans.append(self._df._jdf.queryExecution().executedPlan())
+        return write(self, path, *args, **kwargs)
+
+    state = "/tmp/warcbase_spark_testfix/crawlstate_plans"
+    shutil.rmtree(state, ignore_errors=True)
+    fc = FrontierCrawl(spark, corpus_dir, state, max_rounds=2)
+    fc.bootstrap()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():  # the store keeps the last 1,000, so select by id
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", spy)
+        fc.run_round(0)
+        fc.run_round(1)
+    stored = []
+    for e in executions():
+        if e.executionId() > last:
+            nodes = store.planGraph(e.executionId()).allNodes()
+            stored.append([e.physicalPlanDescription()]
+                          + [nodes.apply(k).desc() for k in range(nodes.size())])
+    return plans, stored
+
+
+def _paths_to_leaves(node, above=()):
+    """(leaf, its ancestors from the root down) for every leaf of a JVM
+    physical plan (subqueries are expressions, not children)."""
+    kids = node.children()
+    if kids.size() == 0:
+        yield node, above
+    for i in range(kids.size()):
+        yield from _paths_to_leaves(kids.apply(i), above + (node,))
+
+
+def test_round_seen_scan_under_in_plan_bloom(crawl_rounds):
+    """The round's URL-seen gate is one primitive: every scan of the seen
+    set sits under a ``might_contain`` whose filter is a scalar subquery
+    (the candidates' Bloom, built inside the plan), with nothing that
+    sorts or shuffles the unfiltered seen rows below it, and the plan holds
+    no binary filter literal."""
+    import re
+
+    plans, _ = crawl_rounds
+    assert len(plans) == 2
+    for plan in plans:
+        text = plan.toString()
+        assert not re.search(r"[0-9A-Fa-f]{64}", text), "a binary literal rides the plan"
+        seen_scans = [
+            (leaf, above) for leaf, above in _paths_to_leaves(plan)
+            if re.search(r"/seen(_base)?/round=", leaf.toString())
+        ]
+        assert seen_scans, text
+        for _leaf, above in seen_scans:
+            pruned = False
+            for node in reversed(above):  # from the scan upwards
+                name = node.nodeName()
+                if name == "Filter" and "might_contain" in node.toString():
+                    assert "scalar-subquery" in node.toString(), node.toString()
+                    pruned = True
+                    break
+                assert "Exchange" not in name and name != "Sort", text
+            assert pruned, text
+
+
+def test_round_plans_hold_no_filter_bytes(crawl_rounds):
+    """No SQL execution the status store keeps for the rounds holds filter
+    bytes: a Bloom carried as a plan literal is stored as hex in the plan
+    description and in two plan-graph node descriptions of every execution
+    that reads it (1,000 of them by default, UI on or off), so the retained
+    text grows with the filter: 9.4M characters for the 1.17 MB Bloom over
+    1M seen keys (BENCH.md "One seen primitive")."""
+    import re
+
+    _, stored = crawl_rounds
+    assert any("might_contain" in texts[0] for texts in stored)
+    for texts in stored:
+        for t in texts:
+            m = re.search(r"[0-9A-Fa-f]{64,}", t)
+            assert m is None, f"{len(m.group())}-char hex run in a stored plan"
 
 
 def test_scheduler_broadcasts_politeness_and_winners(spark):

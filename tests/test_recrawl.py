@@ -1,9 +1,6 @@
 """Recrawl-after-TTL: unsee (tombstone deletes over the append-only seen
 set) + recrawl (re-seed the frontier) — the deletion semantics the
-reference gets implicitly from HBase row deletes. The shared crawl and its
-recrawl round run the cogrouped cuckoo seen filter (SEEN_BLOOM_MAX_KEYS
-forced to 0), the regime the default-sized parity crawl never reaches; the
-tests with their own state run the default Bloom."""
+reference gets implicitly from HBase row deletes."""
 
 import re
 import shutil
@@ -12,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from warcbase_spark.frontier.crawl import FrontierCrawl
-from warcbase_spark.operators import seen as seen_mod
 
 STATE = "/tmp/warcbase_spark_testfix/crawlstate_recrawl"
 
@@ -20,10 +16,8 @@ STATE = "/tmp/warcbase_spark_testfix/crawlstate_recrawl"
 @pytest.fixture(scope="module")
 def crawl(spark, corpus_dir):
     shutil.rmtree(STATE, ignore_errors=True)
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
-        fc = FrontierCrawl(spark, corpus_dir, STATE, max_rounds=50)
-        fc.run()
+    fc = FrontierCrawl(spark, corpus_dir, STATE, max_rounds=50)
+    fc.run()
     return fc
 
 
@@ -39,8 +33,7 @@ def test_unsee_removes_and_rediscovery_readds(spark, crawl):
     assert crawl.url_seen().count() == n_before - 3
 
 
-def test_recrawl_fetches_again_exactly_once(spark, crawl, monkeypatch):
-    monkeypatch.setattr(seen_mod, "SEEN_BLOOM_MAX_KEYS", 0)
+def test_recrawl_fetches_again_exactly_once(spark, crawl):
     target = [r["url"] for r in crawl.schedule().orderBy("round", "seq").limit(2).collect()]
     urls = spark.createDataFrame([(u,) for u in target], "url string")
     last_before = crawl.load_manifest()["last_committed_round"]

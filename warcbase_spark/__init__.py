@@ -8,8 +8,6 @@ partitioning/skew strategy designed for a 1000-executor, 100 TB deployment.
 
 Layout:
 - ``session``    — tuned SparkSession factory
-- ``schema``     — StructType definitions (interleaved-span documents, seeds,
-                   politeness, robots, frontier state)
 - ``fixtures``   — deterministic synthetic web corpus generators (seed=42)
 - ``functions``  — scalar surface: URL canonicalization (urlToKey), matchbox
                    re-implementations, text analysis, hashing

@@ -9,8 +9,8 @@ round is one deterministic micro-batch:
     schedule_r --> seen += schedule_r                    (append-only delta)
     schedule_r ⋈ documents --> fetched docs
     fetched --explode link spans--> outlinks --canonicalize+hash-->
-      --robots--> --batch dedup--> --Bloom prefilter + exact anti-join vs seen-->
-      fresh candidates
+      --robots--> --batch dedup--> --anti-join vs seen, its scan pruned by the
+      candidates' Bloom--> fresh candidates
     frontier_{r+1} = merge(spill, fresh)
 
 Checkpoint protocol (Iceberg-snapshot semantics without the Iceberg jars,
@@ -55,7 +55,7 @@ from warcbase_spark.operators.scheduler import (
     schedule_round_combined,
     split_schedule,
 )
-from warcbase_spark.operators.seen import build_seen_filter, dedup_against_seen
+from warcbase_spark.operators.seen import anti_join_seen, bloom_caps, bloom_size
 
 
 def canonicalize_candidates(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -136,6 +136,8 @@ class RoundMetrics:
     html_pages: int = 0
     links: int = 0
     dedup_hits: int = 0
+    # seen rows that pass the round's Bloom (every match plus its false
+    # positives): the rows that reach the exact anti-join
     bloom_hits: int = 0
     scheduled: int = 0
     spilled: int = 0
@@ -187,18 +189,21 @@ class FrontierCrawl:
         frontier_rows: int,
         seen_base: int | None = None,
         scheduled_delta: int = 0,
+        candidate_rows: int | None = None,
     ) -> None:
         m = self.load_manifest() or {}
         if seen_base is None:
             seen_base = m.get("seen_base_round", -1)
         # running total of seen rows (per-round deltas are disjoint because
-        # the seen gate never re-schedules a key) — sizes the filter build
-        # without a count() job per round
+        # the seen gate never re-schedules a key) and the last round's
+        # unique-candidate count: they size the next round's seen Bloom
+        # without a count() job
         manifest = {
             "last_committed_round": rnd,
             "next_frontier_rows": frontier_rows,
             "seen_base_round": seen_base,
             "seen_rows": m.get("seen_rows", 0) + scheduled_delta,
+            "candidate_rows": m.get("candidate_rows", 0) if candidate_rows is None else candidate_rows,
         }
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
@@ -213,7 +218,7 @@ class FrontierCrawl:
         if "seen_rows" not in m:
             # every commit writes the counter; a manifest without it was not
             # written by this code, and a guessed total would missize the
-            # seen filter for the rest of the crawl
+            # seen Bloom for the rest of the crawl
             raise ValueError(
                 f"{self._manifest_path} has no 'seen_rows' key; not a crawl state dir this code wrote"
             )
@@ -331,9 +336,12 @@ class FrontierCrawl:
     def bootstrap(self) -> None:
         seeds = self.spark.read.parquet(f"{self.corpus_dir}/seeds.parquet")
         cand = drop_disallowed(_valid_candidates(seeds), self.robots_rules)
-        frontier = _merge_frontier(cand.withColumn("discovered_round", F.lit(0)))
+        obs = Observation()
+        frontier = _merge_frontier(cand.withColumn("discovered_round", F.lit(0))).observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        )
         frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
-        self._commit(-1, frontier.count())
+        self._commit(-1, int(obs.get["rows"]))
 
     # ---------------- one round ----------------
 
@@ -346,11 +354,11 @@ class FrontierCrawl:
         dominant scheduler overhead — and the one-row metrics file is written
         driver-side, not by a Spark job.
 
-        At the test config (local[8], 500 docs) a warm round runs 14 Spark
+        At the test config (local[8], 500 docs) a warm round runs 11 Spark
         jobs: the scheduler's 3 eager jobs (bounds sample, seq totals, the
         politeness broadcast), the schedule write with its winner broadcast
-        (2), the seen write (1), the seen filter build (1), and the frontier
-        write with its 6 broadcasts (7). A compaction round adds the seen
+        (2), the seen write (1), and the frontier write with its seen-Bloom
+        subquery and 3 broadcasts (5). A compaction round adds the seen
         base write.
 
         AQE is disabled for the round's actions (restored after): the round's
@@ -445,7 +453,9 @@ class FrontierCrawl:
             obs_robots, F.count(F.lit(1)).alias("after_robots")
         )
 
-        # batch-level dedup (per-page + cross-page within the round)
+        # batch-level dedup (per-page + cross-page within the round), cached:
+        # the seen gate's Bloom subquery and its anti-join both read it, so
+        # the canonicalizer runs once
         obs_uniq = Observation()
         cand = (
             cand.groupBy("url_key")
@@ -457,22 +467,22 @@ class FrontierCrawl:
             .withColumn("priority", F.lit(0))
             .withColumn("discovered_round", F.lit(rnd + 1))
             .observe(obs_uniq, F.count(F.lit(1)).alias("unique"))
+            .cache()
         )
+        to_unpersist.append(cand)
 
-        # URL-seen gate: Bloom prefilter + exact anti-join (incl. this round)
-        seen = self._seen(rnd)
-        # Sizing comes from the manifest's running seen_rows counter (deltas
-        # are disjoint by the seen gate itself), not a per-round count() job;
-        # the same count picks the filter's regime. Either filter is a
-        # stateless per-round build over the committed seen deltas
-        # (checkpoint-friendly — resume needs no filter state).
-        n_expected = max(self.load_manifest()["seen_rows"] + m.scheduled, 4096)
-        bloom = build_seen_filter(seen, n_expected)
+        # URL-seen gate (operators/seen.py): the candidates' Bloom, built
+        # inside the frontier write's plan, prunes the one scan of the seen
+        # set (this round's delta included) before the exact anti-join. It
+        # is sized from the manifest — the last round's unique candidates
+        # and the running seen_rows — not a count() job; a misestimate
+        # changes only how many seen rows reach the join. Nothing of it is
+        # kept between rounds, so resume needs no filter state.
+        manifest = self.load_manifest()
+        n_cand = max(manifest.get("candidate_rows", 0), 4096)
+        n_seen = manifest["seen_rows"] + m.scheduled
         obs_dedup = Observation()
-        fresh, _maybe = dedup_against_seen(
-            spark, cand, seen, bloom,
-            observation=obs_dedup, cache_registry=to_unpersist,
-        )
+        fresh = anti_join_seen(cand, self._seen(rnd), n_cand, n_seen, observation=obs_dedup)
         obs_fresh = Observation()
         fresh = fresh.observe(obs_fresh, F.count(F.lit(1)).alias("n_fresh"))
 
@@ -483,10 +493,13 @@ class FrontierCrawl:
         merged = _merge_frontier(
             spilled.select(*cols).unionByName(fresh.select(*cols))
         ).observe(obs_frontier, F.count(F.lit(1)).alias("n_frontier"))
-        # action 3 — frontier write; the whole chain above streams through
-        # it once, firing obs_fetch/obs_cand/obs_robots/obs_uniq/obs_dedup/
-        # obs_fresh/obs_frontier
-        merged.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
+        # action 3 — frontier write; its Bloom subquery job runs the chain
+        # above into the candidates' cache, and the write reads it, firing
+        # obs_fetch/obs_cand/obs_robots/obs_uniq/obs_dedup/obs_fresh/
+        # obs_frontier. The runtime-filter caps are raised for this action
+        # only, so a round past them still builds its Bloom at full size.
+        with bloom_caps(spark, *bloom_size(n_cand, n_seen)):
+            merged.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
 
         m.records = int(obs_fetch.get["records"])
         m.html_pages = int(obs_fetch.get["html_pages"])
@@ -496,12 +509,13 @@ class FrontierCrawl:
             m.links - m.invalid_urls - int(obs_robots.get["after_robots"])
         )
         m.dedup_hits = int(obs_uniq.get["unique"]) - int(obs_fresh.get["n_fresh"])
-        m.bloom_hits = int(obs_dedup.get["bloom_hits"] or 0)
+        m.bloom_hits = int(obs_dedup.get["bloom_hits"])
         n_frontier = int(obs_frontier.get["n_frontier"])
 
         self._write_metrics(m)
         new_base = self._maybe_compact_seen(rnd)
-        self._commit(rnd, n_frontier, seen_base=new_base, scheduled_delta=m.scheduled)
+        self._commit(rnd, n_frontier, seen_base=new_base, scheduled_delta=m.scheduled,
+                     candidate_rows=int(obs_uniq.get["unique"]))
         if new_base is not None:
             # tombstones ≤ the committed base round are fully reflected in
             # the base snapshot (and idempotent against any later delta:
@@ -512,7 +526,7 @@ class FrontierCrawl:
             for d in self._tombstone_dirs(upto_round=new_base):
                 shutil.rmtree(d, ignore_errors=True)
         # unpersist exactly this round's intermediates (winner set, joined,
-        # probe pass) — never clearCache(), which would drop caller-owned
+        # candidates) — never clearCache(), which would drop caller-owned
         # caches in the shared session
         for df in to_unpersist:
             df.unpersist()
@@ -538,9 +552,8 @@ class FrontierCrawl:
 
     def run(self, max_rounds: int | None = None) -> list[RoundMetrics]:
         """Run (or resume) to completion. Resumption reads the manifest and
-        continues from the first uncommitted round. The seen filter is
-        rebuilt from the committed seen deltas each round, so no filter
-        state needs restoring."""
+        continues from the first uncommitted round. A round's seen Bloom is
+        built over its own candidates, so no filter state needs restoring."""
         max_rounds = max_rounds if max_rounds is not None else self.max_rounds
         manifest = self.load_manifest()
         if manifest is None:
@@ -596,9 +609,8 @@ class FrontierCrawl:
         TOMBSTONE delta honored by ``_seen``: the key's seen rows with
         ``first_round`` ≤ the tombstone round die; a later re-discovery
         re-adds it. Idempotent (max-tombstone-round wins); the manifest's
-        seen_rows counter becomes an upper bound, which only oversizes the
-        seen filter or picks the cuckoo regime a little early (correctness
-        lives in the exact anti-join).
+        seen_rows counter becomes an upper bound, which only lowers the seen
+        Bloom's fpp a little (correctness lives in the exact anti-join).
         Returns the number of tombstoned keys."""
         last = (self.load_manifest() or {}).get("last_committed_round", -1)
         keys = (
