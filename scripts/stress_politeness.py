@@ -15,8 +15,10 @@ Second mode:  python scripts/stress_politeness.py seen [n_seen] [n] [n_hosts]
 — the URL-seen sweep: CPU-s of the crawl's seen layer (the candidates'
 in-plan Bloom, the pruned seen scan, the exact anti-join) over an
 n_seen-key seen set with recrawl tombstones, checked exact against a plain
-anti-join (see ``seen_recrawl_stress``). Defaults 3_000_000 / 2_000_000 /
-1_000_000.
+anti-join (see ``seen_recrawl_stress``), then of the caller-Bloom path
+(``build_bloom_jvm`` + ``dedup_against_seen``) on the same seen set cached,
+next to a plain anti-join's CPU-s (see ``caller_bloom_stress``). Defaults
+3_000_000 / 2_000_000 / 1_000_000.
 """
 
 from __future__ import annotations
@@ -176,9 +178,51 @@ def seen_recrawl_stress(n_seen: int, n: int, n_hosts: int) -> None:
     # tombstoned keys must be schedulable again
     out["tombstones_back_fresh"] = n_exact_fresh == n - n_seen_cand + n_tomb
     out["largest_stored_plan_chars"] = _largest_stored_plan(spark)
+    out["caller_bloom"] = caller_bloom_stress(spark, cand_in, live_seen, n_live, n_exact_fresh)
     shutil.rmtree(path, ignore_errors=True)
     print(json.dumps(out))
     assert out["fresh_exact"] and out["tombstones_back_fresh"], out
+    assert out["caller_bloom"]["fresh_exact"], out
+
+
+def caller_bloom_stress(spark, cand, seen, n_seen: int, n_exact_fresh: int) -> dict:
+    """``dedup_against_seen`` with a caller's Bloom (``build_bloom_jvm``
+    over the seen keys at 1%, as ``bench.py`` and perfbench call it) against
+    ``seen`` cached, and a plain anti-join of the same inputs; each runs
+    twice (the second warm). Reports which verify form ran, the one-pass
+    broadcast anti-join (the seen keys' size estimate at most
+    ``spark.sql.autoBroadcastJoinThreshold``) or the probe with the
+    positives' verify above it, and asserts that both counts equal
+    ``n_exact_fresh``."""
+    from warcbase_spark.operators.seen import build_bloom_jvm, dedup_against_seen
+
+    cached = seen.cache()
+    cached.count()
+    out: dict = {"broadcast_threshold": spark.conf.get("spark.sql.autoBroadcastJoinThreshold")}
+    cpu0 = _tree_cpu_s()
+    bloom = build_bloom_jvm(cached, n_seen, 0.01)
+    out["bloom_build_cpu_s"] = round(_tree_cpu_s() - cpu0, 2)
+    counts = []
+    for name in ("caller_bloom", "plain_anti_join"):
+        runs = []
+        for _rep in range(2):
+            reg: list = []
+            cpu0 = _tree_cpu_s()
+            if name == "caller_bloom":
+                fresh, _ = dedup_against_seen(spark, cand, cached, bloom, cache_registry=reg)
+            else:
+                fresh = cand.join(cached.select("url_key"), "url_key", "left_anti")
+            counts.append(fresh.count())
+            runs.append(round(_tree_cpu_s() - cpu0, 2))
+            if name == "caller_bloom":
+                plan = fresh._jdf.queryExecution().executedPlan().toString()
+                out["form"] = "probe_and_verify" if "Subquery" in plan else "broadcast_anti_join"
+            for df in reg:
+                df.unpersist()
+        out[name] = {"cold_cpu_s": runs[0], "warm_cpu_s": runs[1]}
+    cached.unpersist()
+    out["fresh_exact"] = all(c == n_exact_fresh for c in counts)
+    return out
 
 
 def _zipf_candidates(spark, n: int, n_hosts: int, s: float = 1.1):

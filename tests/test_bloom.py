@@ -4,6 +4,8 @@ Membership truth-table style mirrors UrlMappingTest.java:57-137
 (present→hit, absent→usually miss; never a false negative)."""
 
 import math
+import re
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Observation
@@ -31,11 +33,32 @@ def _keys(spark, prefix, *range_args):
     return spark.range(*range_args).select(F.concat(F.lit(prefix), "id").alias("url_key"))
 
 
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """``spark.sql.autoBroadcastJoinThreshold`` at ``value`` inside the
+    block (unchanged for None), as before once it ends."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 # "cuckoo" names the case without a caller filter: the round's in-plan
 # Bloom, the path that took over the seen sets the cogrouped cuckoo served.
-@pytest.mark.parametrize("build", [_jvm, lambda seen: None], ids=["jvm", "cuckoo"])
-def test_dedup_exact_semantics(spark, build):
-    """Either path is exact: the result equals the plain anti-join (the
+# "jvm" runs a caller's Bloom under the session's broadcast threshold (the
+# one-pass broadcast anti-join), "jvm_over_threshold" with broadcasts off
+# (the probe, its cache and the positives' verify).
+@pytest.mark.parametrize(
+    "build,threshold",
+    [(_jvm, None), (_jvm, "-1"), (lambda seen: None, None)],
+    ids=["jvm", "jvm_over_threshold", "cuckoo"],
+)
+def test_dedup_exact_semantics(spark, build, threshold):
+    """Every path is exact: the result equals the plain anti-join (the
     reference's fst.getID != -1 gate, ExtractLinksWac.java:159,177), and
     every candidate column passes through unchanged."""
     cand = spark.range(1000).select(
@@ -47,13 +70,46 @@ def test_dedup_exact_semantics(spark, build):
         F.lit(0).alias("first_round"),
     )
     reg = []
-    fresh, _ = dedup_against_seen(spark, cand, seen, build(seen), cache_registry=reg)
     expected = cand.join(seen.select("url_key"), "url_key", "left_anti")
-    got = sorted((r["url_key"], r["extra"]) for r in fresh.collect())
+    with _broadcast_threshold(spark, threshold):
+        fresh, _ = dedup_against_seen(spark, cand, seen, build(seen), cache_registry=reg)
+        got = sorted((r["url_key"], r["extra"]) for r in fresh.collect())
     exp = sorted((r["url_key"], r["extra"]) for r in expected.collect())
     for df in reg:
         df.unpersist()
     assert got == exp
+    assert fresh.columns == cand.columns
+
+
+def test_caller_bloom_form_follows_broadcast_threshold(spark):
+    """A caller's Bloom is verified by the size rule Spark's planner uses
+    for a broadcast side. Under the threshold ``fresh`` is one broadcast
+    left-anti pass: no probe cache, no in-plan Bloom subquery, nothing in
+    the registry, with ``bloom_hits`` (the candidates the caller's Bloom
+    probes positive) observed on that pass. Over it (broadcasts off) the
+    probe is cached and the positives go through the in-plan Bloom."""
+    cand = _keys(spark, "com.form/f/", 2_000)
+    seen = _keys(spark, "com.form/f/", 0, 4_000, 4)
+    bloom = build_bloom_jvm(seen, 1_000)
+    positives = probe_bloom_jvm(cand, bloom).filter("maybe_seen").count()
+    obs, reg = Observation(), []
+    fresh, maybe = dedup_against_seen(spark, cand, seen, bloom, observation=obs, cache_registry=reg)
+    assert fresh.count() == 1_500
+    plan = fresh._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastHashJoin \[url_key#\d+\], \[url_key#\d+\], LeftAnti", plan), plan
+    assert "InMemory" not in plan and "Subquery" not in plan, plan
+    assert reg == []
+    assert obs.get["bloom_hits"] == positives == maybe.count()
+
+    with _broadcast_threshold(spark, "-1"):
+        fresh, _ = dedup_against_seen(spark, cand, seen, bloom, cache_registry=reg)
+        plan = fresh._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in plan and "Subquery subquery" in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan
+        assert fresh.count() == 1_500
+    assert len(reg) == 1
+    for df in reg:
+        df.unpersist()
 
 
 def test_observation_null_safe_on_empty_candidates(spark):

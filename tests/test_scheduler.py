@@ -114,6 +114,35 @@ def test_broadcast_gate_shape_aware_high_ratio(spark):
     cand.unpersist()
 
 
+def test_ratio_gate_starts_no_job(spark):
+    """The shape-aware gate reads its candidate count from an Observation
+    that arrives with the winner cache's bounds sample: past the row limit
+    over cached candidates, scheduling starts no more jobs than under it,
+    and the winner join is still the broadcast the ratio picks."""
+    import re
+
+    pol = spark.createDataFrame([("*", 50)], "host string, budget int")
+    cand = _mk_candidates(spark, 400, hosts=4).cache()
+    cand.count()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(limit):
+        reg: list = []
+        before = dag.nextJobId()
+        out = schedule_round_combined(cand, pol, cache_registry=reg, broadcast_row_limit=limit)
+        spent = dag.nextJobId() - before
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        for df in reg:
+            df.unpersist()
+        return spent, plan
+
+    under, _ = jobs(10_000)  # 200 winners: no gate
+    past, plan = jobs(10)  # 200/400 ≥ ratio: the gate picks broadcast
+    cand.unpersist()
+    assert past == under, (past, under)
+    assert re.search(r"BroadcastHashJoin \[url_key", plan), plan
+
+
 def test_newline_urls_through_politeness_and_robots(spark):
     """'\\n'-bearing raw URLs (r2 canonicalizer fix) must keep flowing
     through the HOST-keyed joins: politeness budgets and robots rules match

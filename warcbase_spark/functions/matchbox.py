@@ -14,79 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from warcbase_spark.functions.urls import host_col
-
-
-def extract_domain(url: Column, source: Column | None = None) -> Column:
-    """Host of url, falling back to host(source) on parse failure
-    (ExtractDomain.scala:22-36; null-safe)."""
-    h = host_col(url)
-    if source is not None:
-        h = F.coalesce(F.nullif(h, F.lit("")), host_col(source))
-    return F.nullif(h, F.lit(""))
-
-
-def remove_prefix_www(host: Column) -> Column:
-    """Strip a leading ``www.`` (StringUtils.scala:22-25 *intended*
-    semantics; RecordRDD.scala:94 has a literal-string bug we do not copy)."""
-    return F.regexp_replace(host, r"^\s*www\.", "")
-
 
 def extract_urls(text: Column) -> Column:
     """All http(s) URLs in text (ExtractUrls.scala:19-22 regex)."""
     return F.regexp_extract_all(text, F.lit(r"https?://[^ ]+"), 0)
-
-
-def extract_at_mentions(text: Column) -> Column:
-    """(ExtractAtMentions.scala:19-22)."""
-    return F.regexp_extract_all(text, F.lit(r"@[A-Za-z_0-9]+"), 0)
-
-
-def extract_hashtags(text: Column) -> Column:
-    """(ExtractHashtags.scala:19-22)."""
-    return F.regexp_extract_all(text, F.lit(r"#[^ ]+"), 0)
-
-
-def extract_date(date_str: Column, component: str) -> Column:
-    """Substring of a YYYYMMDD string date (ExtractDate.scala:21-29).
-
-    component ∈ {YYYY, MM, DD, YYYYMM, YYYYMMDD}.
-    """
-    spans = {"YYYY": (1, 4), "MM": (5, 2), "DD": (7, 2), "YYYYMM": (1, 6), "YYYYMMDD": (1, 8)}
-    if component not in spans:
-        raise ValueError(f"bad date component {component!r}")
-    start, length = spans[component]
-    return F.substring(date_str, start, length)
-
-
-def remove_http_header(content: Column) -> Column:
-    """Strip through the first CRLFCRLF when content starts with ``HTTP/``
-    (RemoveHttpHeader.scala:8-20)."""
-    sep = "\r\n\r\n"
-    idx = F.instr(content, sep)
-    return F.when(
-        content.startswith("HTTP/") & (idx > 0),
-        F.substring(content, idx + F.lit(len(sep)), F.lit(1 << 30)),
-    ).otherwise(content)
-
-
-def compute_md5(col: Column) -> Column:
-    """MD5 hex digest (ComputeMD5.scala:16-18 returns a raw-byte string;
-    we return hex — divergence documented, identity semantics identical)."""
-    return F.md5(col)
-
-
-def tab_delimit(*cols: Column) -> Column:
-    """TupleFormatter.tabDelimit (TupleFormatter.scala:19-32): struct
-    flattening is ``select('s.*')`` in our model; tab-join is concat_ws."""
-    return F.concat_ws("\t", *cols)
-
-
-def page_hash(url: Column) -> Column:
-    """64-bit page/vertex id. Reference uses ``url.hashCode.toLong``
-    (ExtractGraph.scala:35-37, 32-bit, collision-prone at 10^10); we use
-    xxhash64 per the north rule."""
-    return F.xxhash64(url)
 
 
 def detect_mime_magic(payload: Column) -> Column:

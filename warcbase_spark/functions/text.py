@@ -34,11 +34,6 @@ def token_count(text: Column) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, " "))).cast("long")
 
 
-def word_tokens(text: Column) -> Column:
-    """BPE-ish subword-friendly tokens: words, numbers, and punctuation runs."""
-    return F.regexp_extract_all(F.lower(text), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]+"), 0)
-
-
 def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are common-English stopwords."""
     sw = stopwords or ["the", "a", "and", "of", "to", "in", "is"]

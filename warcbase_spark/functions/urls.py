@@ -192,19 +192,6 @@ def get_file_type(url: str | None) -> str | None:
     return ext.lower()
 
 
-# ---------------------------------------------------------------------------
-# Column-expression helpers (JVM-side, codegen'd) for domain extraction
-# ---------------------------------------------------------------------------
-
-def strip_scheme_col(url: Column) -> Column:
-    return F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://", "")
-
-
-def host_col(url: Column) -> Column:
-    """Host of a URL, JVM-side (reference ExtractDomain, ExtractDomain.scala:22-36)."""
-    return F.lower(F.split(strip_scheme_col(url), "[/:?#]").getItem(0))
-
-
 _CANON_STRUCT = T.StructType(
     [T.StructField("url_key", T.StringType()), T.StructField("host", T.StringType())]
 )
@@ -275,4 +262,3 @@ def canonical_cols(url: Column) -> tuple[Column, Column]:
     """
     s = canon_struct_udf(url)
     return s["url_key"], s["host"]
-

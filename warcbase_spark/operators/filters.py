@@ -5,14 +5,9 @@ Reference: implicit class WARecordRDD
 single Catalyst predicate — pushed to the Parquet scan when the column
 layout allows — and composes with ``df.transform(...)``.
 
-Known reference divergences (intentional, documented):
-- keepDomains (RecordRDD.scala:94) calls String.replace with a regex
-  *literal* — a no-op bug.  We implement the intended regex www-strip
-  (StringUtils.scala:22-25).
-- keepUrlPatterns uses Scala full-match semantics (RecordRDD.scala:84-91)
-  → our rlike patterns are anchored by the caller; helper anchors here.
-- keepContent uses find/substring semantics (RecordRDD.scala:101-108)
-  → unanchored rlike.
+Known reference divergence (intentional, documented): keepUrlPatterns
+uses Scala full-match semantics (RecordRDD.scala:84-91) → our rlike
+patterns are anchored by the caller; helper anchors here.
 """
 
 from __future__ import annotations
@@ -22,16 +17,13 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from warcbase_spark.functions.matchbox import remove_prefix_www
-
 HTML_MIMES = ["text/html", "application/xhtml+xml"]
 
 
-def _any_rlike(col: Column, patterns: Sequence[str], anchored: bool) -> Column:
+def _any_full_match(col: Column, patterns: Sequence[str]) -> Column:
     pred = F.lit(False)
     for p in patterns:
-        pat = f"^(?:{p})$" if anchored else p
-        pred = pred | col.rlike(pat)
+        pred = pred | col.rlike(f"^(?:{p})$")
     return pred
 
 
@@ -67,10 +59,6 @@ def keep_mime_types(df: DataFrame, mimes: Sequence[str]) -> DataFrame:
     return df.filter(F.col("mime_type").isin(list(mimes)))
 
 
-def discard_mime_types(df: DataFrame, mimes: Sequence[str]) -> DataFrame:
-    return df.filter(~F.col("mime_type").isin(list(mimes)))
-
-
 def keep_date(df: DataFrame, value: str) -> DataFrame:
     """Granularity inferred from len(value) ∈ {4,6,8} like ExtractDate
     (ExtractDate.scala:21-29): YYYY / YYYYMM / YYYYMMDD prefix match —
@@ -78,47 +66,9 @@ def keep_date(df: DataFrame, value: str) -> DataFrame:
     return df.filter(F.substring("crawl_date", 1, len(value)) == value)
 
 
-def discard_date(df: DataFrame, value: str) -> DataFrame:
-    """Reference discardDate is exact != on the full string (RecordRDD.scala:114-116)."""
-    return df.filter(F.col("crawl_date") != value)
-
-
-def keep_urls(df: DataFrame, urls: Sequence[str]) -> DataFrame:
-    """isin for small sets; callers with large sets should broadcast-semi-join."""
-    return df.filter(F.col("url").isin(list(urls)))
-
-
-def discard_urls(df: DataFrame, urls: Sequence[str]) -> DataFrame:
-    return df.filter(~F.col("url").isin(list(urls)))
-
-
 def keep_url_patterns(df: DataFrame, patterns: Sequence[str]) -> DataFrame:
-    return df.filter(_any_rlike(F.col("url"), patterns, anchored=True))
+    return df.filter(_any_full_match(F.col("url"), patterns))
 
 
 def discard_url_patterns(df: DataFrame, patterns: Sequence[str]) -> DataFrame:
-    return df.filter(~_any_rlike(F.col("url"), patterns, anchored=True))
-
-
-def keep_domains(df: DataFrame, domains: Sequence[str]) -> DataFrame:
-    return df.filter(remove_prefix_www(F.col("domain")).isin(list(domains)))
-
-
-def discard_domains(df: DataFrame, domains: Sequence[str]) -> DataFrame:
-    """Reference discardDomains uses the raw domain, no www-strip
-    (RecordRDD.scala:131-133) — kept as-is."""
-    return df.filter(~F.col("domain").isin(list(domains)))
-
-
-def keep_content(df: DataFrame, patterns: Sequence[str], text_col: str = "text") -> DataFrame:
-    return df.filter(_any_rlike(F.col(text_col), patterns, anchored=False))
-
-
-def discard_content(df: DataFrame, patterns: Sequence[str], text_col: str = "text") -> DataFrame:
-    return df.filter(~_any_rlike(F.col(text_col), patterns, anchored=False))
-
-
-def keep_languages(df: DataFrame, langs: Sequence[str], lang_col: str = "lang") -> DataFrame:
-    """Reference runs Tika language-ID inline (RecordRDD.scala:97-99);
-    our model pre-computes/detects a lang column (functions.text.detect_language)."""
-    return df.filter(F.col(lang_col).isin(list(langs)))
+    return df.filter(~_any_full_match(F.col("url"), patterns))

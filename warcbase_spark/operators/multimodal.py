@@ -27,8 +27,6 @@ DECODED_SCHEMA = (
     "doc_id string, n_bytes int, width int, height int, head_sum int"
 )
 
-RESIZED_SCHEMA = "doc_id string, width int, height int, scale_milli int"
-
 
 def _fake_decode(buf: bytes) -> tuple[int, int, int]:
     """Deterministic stand-in for an image decoder: dimensions derived from

@@ -31,7 +31,7 @@ from __future__ import annotations
 from collections import Counter
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType
@@ -177,10 +177,11 @@ DEFAULT_BROADCAST_ROW_LIMIT = 100_000
 # best-of-3; the r5 Zipf stress measured broadcast 1.6× at 1.16M winners /
 # 70% schedulable; while 206k/4M and 827k/16M (≈5% schedulable) stay
 # shuffle wins. So: past the row limit, broadcast iff winners ≥
-# RATIO × candidates AND under the hard byte-safety cap. The ratio probe
-# needs a candidate count, which is only cheap when the caller has already
-# materialized the candidates — both the bench round and the crawl loop
-# cache them — so it runs only against a persisted input.
+# RATIO × candidates AND under the hard byte-safety cap. The gate runs only
+# against a persisted input (both the bench round and the crawl loop cache
+# their candidates), and takes the candidate count from an Observation on
+# the narrow projection: it arrives when add_global_seq's bounds sample
+# materializes the winner cache, so the gate starts no job of its own.
 BROADCAST_WINNER_RATIO = 0.5
 BROADCAST_HARD_CAP_ROWS = 4_000_000
 
@@ -213,6 +214,10 @@ def schedule_round_combined(
     # memory-bandwidth-bound; full rows are recovered at the end with a
     # broadcast join of the (Σ budgets)-sized winner set.
     narrow = candidates.select("url_key", "host", "priority")
+    # the ratio gate's candidate count (see BROADCAST_WINNER_RATIO)
+    counted = Observation() if candidates.storageLevel.useMemory else None
+    if counted is not None:
+        narrow = narrow.observe(counted, F.count(F.lit(1)).alias("n"))
     c = with_budgets(narrow, politeness)
 
     # stage 1: salted partial rank — bounds window size on hot hosts
@@ -259,11 +264,11 @@ def schedule_round_combined(
         not small
         and broadcast_row_limit > 0
         and n_winners <= BROADCAST_HARD_CAP_ROWS
-        and candidates.storageLevel.useMemory
+        and counted is not None
     ):
-        # shape-aware gate (see BROADCAST_WINNER_RATIO above): the count is
-        # one cheap job over the caller's candidate cache
-        n_cand = candidates.count()
+        # shape-aware gate (see BROADCAST_WINNER_RATIO above): the count
+        # arrived with the bounds sample
+        n_cand = counted.get["n"]
         small = n_cand > 0 and n_winners >= BROADCAST_WINNER_RATIO * n_cand
     # fallback pins shuffle_hash (not just "no broadcast hint"): the
     # planner's size estimate of the cached winner set could still

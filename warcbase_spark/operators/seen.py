@@ -22,8 +22,12 @@ the small side, not by the seen set.
 
 The crawl's small side is the round's deduplicated candidates. A caller
 that brings its own Bloom bytes (``build_bloom_jvm``) to
-``dedup_against_seen`` probes them first and verifies the positives through
-the same primitive.
+``dedup_against_seen`` is verified in one of two forms, picked by the size
+rule Spark's planner applies to a broadcast join side: while the seen keys'
+size estimate is at most ``spark.sql.autoBroadcastJoinThreshold``, one pass
+anti-joins the candidates with the broadcast seen keys, and the Bloom only
+counts its positives (nothing is cached); above it, the candidates are
+probed and cached, and the positives are verified through the primitive.
 
 Nothing deletes from a filter: un-seeing a URL is a tombstone in the seen
 set (the reference deletes its HBase row), applied to the seen rows the
@@ -197,17 +201,26 @@ def dedup_against_seen(
     ``maybe`` is empty and ``bloom_hits`` is 0 (no candidate probes a
     caller's filter).
 
-    ``bloom`` bytes (``build_bloom_jvm`` over seen): the candidates are
-    probed with them; negatives are fresh, and the positives (``maybe``)
-    are verified through ``anti_join_seen``, sized from the caller Bloom's
-    capacity. ``bloom_hits`` counts the positive candidates.
+    ``bloom`` bytes (``build_bloom_jvm`` over seen) is verified in one of
+    two forms, by the size rule Spark's planner applies to the same join:
 
-    Either path caches the frame both of its branches read (so the caller's
-    lineage, UDFs included, runs once), appended to ``cache_registry`` when
-    given so the caller can unpersist exactly this call's intermediates.
-    ``observation``, when given, gets its ``bloom_hits`` on the caller's
-    next action, with no job of its own. ``spark`` is unused; it stays so
-    positional callers keep working."""
+    - the seen keys' plan size estimate is at or below
+      ``spark.sql.autoBroadcastJoinThreshold``: ``fresh`` is one pass,
+      the candidates anti-joined with the broadcast seen keys. The Bloom
+      only feeds ``bloom_hits`` (observed on that pass) and the lazy
+      ``maybe``; nothing is cached. Probing first would prune nothing the
+      broadcast does not already skip.
+    - above it: the candidates are probed with the Bloom and cached (so
+      the caller's lineage, UDFs included, runs once); negatives are
+      fresh, and the positives (``maybe``) are verified through
+      ``anti_join_seen``, sized from the caller Bloom's capacity. The
+      cache is appended to ``cache_registry`` when given, so the caller
+      can unpersist exactly this call's intermediates.
+
+    ``bloom_hits`` counts the positive candidates. The no-Bloom path caches
+    its candidates as the second form does. ``observation``, when given,
+    gets its ``bloom_hits`` on the caller's next action, with no job of its
+    own. ``spark`` is unused; it stays so positional callers keep working."""
     if bloom is None:
         small = candidates.cache()
         n = int(small.sparkSession.conf.get(_DEFAULT_ITEMS_CONF))
@@ -220,13 +233,18 @@ def dedup_against_seen(
             )
         maybe = candidates.limit(0)
     else:
-        small = probe_bloom_jvm(candidates, bloom, key_col)
-        if observation is not None:
-            small = small.observe(
-                observation,
-                F.coalesce(F.sum(F.col("maybe_seen").cast("long")), F.lit(0)).alias("bloom_hits"),
-            )
-        small = small.cache()
+        probed = probe_bloom_jvm(candidates, bloom, key_col)
+        observed = probed if observation is None else probed.observe(
+            observation,
+            F.coalesce(F.sum(F.col("maybe_seen").cast("long")), F.lit(0)).alias("bloom_hits"),
+        )
+        seen_keys = seen.select(key_col)
+        if _fits_broadcast(seen_keys):
+            src = candidates if observation is None else observed
+            fresh = src.join(F.broadcast(seen_keys), key_col, "left_anti")
+            maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+            return fresh.select(*candidates.columns), maybe
+        small = observed.cache()
         maybe = small.filter(F.col("maybe_seen")).drop("maybe_seen")
         n = _bloom_capacity(bloom)
         fresh = small.filter(~F.col("maybe_seen")).drop("maybe_seen").unionByName(
@@ -235,3 +253,11 @@ def dedup_against_seen(
     if cache_registry is not None:
         cache_registry.append(small)
     return fresh, maybe
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Spark's planner test for a broadcast join side: the optimized plan's
+    size estimate is at most ``spark.sql.autoBroadcastJoinThreshold`` (a
+    negative threshold broadcasts nothing)."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
